@@ -26,6 +26,14 @@ object BenchExtra {
     "q21_dedup_simhash", "q22_knn_brute", "q23_knn_lsh", "q24_embed_pairs",
     "q25_windowed_events", "q31_mentions", "q32_triples")
 
+  /** Median of a non-empty sample: the mean of the two middle values for an
+    * even count. */
+  private[graft] def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    val m = s.size / 2
+    if (s.size % 2 == 1) s(m) else (s(m - 1) + s(m)) / 2
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -66,7 +74,7 @@ object BenchExtra {
           java.nio.file.Files.writeString(planDir.resolve(s"${name}_$tag.txt"), plan)
         } catch { case e: Throwable => System.err.println(s"[benchextra] plan $name failed: $e") }
       }
-      val times = (0 until reps).map { r =>
+      val all = (0 until reps).map { r =>
         spark.sparkContext.setJobDescription(s"$name rep=$r")
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
@@ -74,14 +82,16 @@ object BenchExtra {
         val sec = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
         spark.sparkContext.setJobDescription(null)
         sec
-      }.filter(_ >= 0)
+      }
+      val times = all.filter(_ >= 0)
+      val failed = all.size - times.size
       val mn = if (times.nonEmpty) times.min else -1.0
-      val md = if (times.nonEmpty) times.sorted.apply(times.size / 2) else -1.0
-      System.err.println(f"[benchextra] $name min=$mn%.3f median=$md%.3f reps=${times.map(t => f"$t%.3f").mkString(",")}")
-      name -> (mn, md, times)
+      val md = if (times.nonEmpty) median(times) else -1.0
+      System.err.println(f"[benchextra] $name min=$mn%.3f median=$md%.3f failed=$failed reps=${times.map(t => f"$t%.3f").mkString(",")}")
+      name -> (mn, md, failed, times)
     }
-    val json = results.map { case (n, (mn, md, ts)) =>
-      s""""$n":{"min":${f"$mn%.3f"},"median":${f"$md%.3f"},"reps":[${ts.map(t => f"$t%.3f").mkString(",")}]}"""
+    val json = results.map { case (n, (mn, md, failed, ts)) =>
+      s""""$n":{"min":${f"$mn%.3f"},"median":${f"$md%.3f"},"failed":$failed,"reps":[${ts.map(t => f"$t%.3f").mkString(",")}]}"""
     }.mkString("{", ",", "}")
     println(s"""{"benchextra":$json,"sf":"$sfDir","cpus":$cpus,"tag":"$tag"}""")
     spark.stop()

@@ -126,12 +126,14 @@ object SparkEntry {
     }),
     "q08_sessionize_events" -> ((s, d) => {
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
+      // fractional epoch seconds, computed like DuckDB's epoch(ts):
+      // double(micros) / 1e6 (a whole-second cast flips gaps in (1799, 1801))
+      def epoch(c: Column) = unix_micros(c.cast("timestamp_ltz")).cast("double") / 1e6
       t(s, d, "events")
         .withColumn("prev_ts", lag(col("ts"), 1).over(w))
         .withColumn("new_session",
           when(col("prev_ts").isNull ||
-            col("ts").cast("timestamp_ltz").cast("long") -
-              col("prev_ts").cast("timestamp_ltz").cast("long") > 1800, 1).otherwise(0))
+            epoch(col("ts")) - epoch(col("prev_ts")) > 1800, 1).otherwise(0))
         .groupBy(col("user_id"))
         .agg(sum(col("new_session")).as("n_sessions"), count(lit(1)).as("n_events"))
     }),

@@ -103,19 +103,30 @@ object Crf {
         }
         g += 1
       }
+      // Level g holds the sums over groups 0..g of every suffix of g+1
+      // labels: level(e) = level_{g-1}(e % C^g) + groupScore(g)(e), built in
+      // place, with the index into the previous level wrapping at C^g instead
+      // of a division per cell. Each cell adds the groups in the order
+      // 0.0 + g0 + g1 + ..., so the last level is the full table.
       val table = new Array[Double](full)
-      var enc = 0
-      while (enc < full) {
-        var s = 0.0
-        var g = 0
-        var mod = C
-        while (g < w) {
-          s += groupScore(g)(enc % mod)
-          mod *= C
-          g += 1
+      var prev: Array[Double] = null
+      g = 0
+      while (g < w) {
+        val gs = groupScore(g)
+        val level = if (g == w - 1) table else gs
+        var e = 0
+        if (prev == null) while (e < gs.length) { level(e) = 0.0 + gs(e); e += 1 }
+        else {
+          var i = 0
+          while (e < gs.length) {
+            level(e) = prev(i) + gs(e)
+            i += 1
+            if (i == prev.length) i = 0
+            e += 1
+          }
         }
-        table(enc) = s
-        enc += 1
+        prev = level
+        g += 1
       }
       out(pos) = table
       pos += 1

@@ -11,6 +11,16 @@ package graft.ner
   * strings, no sets, no boxing. Byte-identity with the string path is pinned
   * by a property test (FeatureParitySpec); training and model serialization
   * keep using the string path.
+  *
+  * Templates that read exactly one token (the default-preset n-grams, WORD,
+  * PW, NW, TYPE, PTYPE, NTYPE, DISJN, DISJP and the single-token PSEQ/TPS2/
+  * TNS1 sequence templates) are hashed and resolved once per distinct token
+  * into a `Unary`, kept in a per-dictionary `UnaryMemo` (bounded by the total
+  * number of hash slots it stores). `idsAt` emits each cached hash and id at
+  * the same point of its sequence as the template it stands for, so ids and
+  * their order match the string path. A token sits in up to nine window
+  * positions of a document, and its words repeat across documents, so
+  * hashing these templates per position would repeat the same work.
   */
 object NerFeaturesFast {
   import NerFeatures.Tok
@@ -92,18 +102,147 @@ object NerFeaturesFast {
     */
   final class Scratch {
     var hashes = new Array[Long](4096)
+    // id of hashes(i) when it came resolved from a Unary, else Unresolved
+    var hids = new Array[Int](4096)
     val ids = Array.tabulate(3)(_ => new Array[Int](4096))
+
+    private[NerFeaturesFast] def reserve(n: Int): Unit =
+      if (hashes.length < n) {
+        val cap = Integer.highestOneBit(n - 1) << 1
+        hashes = new Array[Long](cap); hids = new Array[Int](cap)
+      }
+  }
+
+  private final val Unresolved = -2
+
+  // Unary.hs / Unary.ids slots: one per single-token template, then the
+  // token's default-preset n-grams from NgramStart on
+  private final val UWord = 0
+  private final val UPw = 1
+  private final val UNw = 2
+  private final val UType = 3
+  private final val UPType = 4
+  private final val UNType = 5
+  private final val UDisjN = 6
+  private final val UDisjP = 7
+  private final val UPseqW = 8
+  private final val UPseqPW = 9
+  private final val UPseqPS = 10
+  private final val UPseqCS = 11
+  private final val UPseqPDS = 12
+  private final val UPseqCDS = 13
+  private final val UTps2 = 14
+  private final val UTns1 = 15
+  private final val NgramStart = 16
+
+  /** One token's single-token template hashes and their dictionary ids
+    * (-1 = unseen), in the slots above; the n-grams follow, deduplicated in
+    * emission order. Immutable, so safely shared across task threads.
+    */
+  final class Unary private[NerFeaturesFast] (val hs: Array[Long], val ids: Array[Int])
+
+  /** Hashes every single-token template of `t` (the bytes of the string
+    * path's feature) and resolves them in `dict`.
+    */
+  private def unary(t: Tok, dict: LongIntHash): Unary = {
+    val w = t.word
+    val shapeGS = if (t.shape == null) "" else t.shape
+    var hs = new Array[Long](NgramStart + 2 * w.length + 1)
+    hs(UWord) = h(h(h(FnvOffset, w), "-WORD"), suffixC)
+    hs(UPw) = h(h(h(FnvOffset, w), "-PW"), suffixC)
+    hs(UNw) = h(h(h(FnvOffset, w), "-NW"), suffixC)
+    hs(UType) = h(h(h(FnvOffset, shapeGS), "-TYPE"), suffixC)
+    hs(UPType) = h(h(hShapeGet(FnvOffset, t), "-PTYPE"), suffixC)
+    hs(UNType) = h(h(hShapeGet(FnvOffset, t), "-NTYPE"), suffixC)
+    hs(UDisjN) = h(h(h(FnvOffset, w), "-DISJN"), suffixC)
+    hs(UDisjP) = h(h(h(FnvOffset, w), "-DISJP"), suffixC)
+    hs(UPseqW) = h(h(h(FnvOffset, w), "-PSEQW"), suffixCpC)
+    hs(UPseqPW) = h(h(h(FnvOffset, w), "-PSEQpW"), suffixCpC)
+    hs(UPseqPS) = h(h(h(FnvOffset, shapeGS), "-PSEQpS"), suffixCpC)
+    hs(UPseqCS) = h(h(h(FnvOffset, shapeGS), "-PSEQcS"), suffixCpC)
+    hs(UPseqPDS) = h(h(hDsGS(FnvOffset, t), "-PSEQpDS"), suffixCpC)
+    hs(UPseqCDS) = h(h(hDsGS(FnvOffset, t), "-PSEQcDS"), suffixCpC)
+    hs(UTps2) = h(h(hShapeGet(FnvOffset, t), "-TPS2"), suffixCpC)
+    hs(UTns1) = h(h(hShapeGet(FnvOffset, t), "-TNS1"), suffixCpC)
+    // default-preset n-grams over <word> (virtual < > padding): prefixes and
+    // suffixes only (noMidNGrams), deduplicated like `idsAt`'s emit
+    var n = NgramStart
+    val wLen = w.length + 2
+    var i0 = 0
+    while (i0 < wLen) {
+      var j = i0 + 2
+      while (j <= wLen) {
+        if (i0 == 0 || j == wLen) {
+          var x = hc(FnvOffset, '#')
+          var k = i0
+          while (k < j) {
+            x = hc(x, if (k == 0) '<' else if (k == wLen - 1) '>' else w.charAt(k - 1))
+            k += 1
+          }
+          x = h(hc(x, '#'), suffixC)
+          var dup = false
+          k = NgramStart
+          while (k < n && !dup) { dup = hs(k) == x; k += 1 }
+          if (!dup) { hs(n) = x; n += 1 }
+        }
+        j += 1
+      }
+      i0 += 1
+    }
+    if (n < hs.length) hs = java.util.Arrays.copyOf(hs, n)
+    val ids = new Array[Int](n)
+    var k = 0
+    while (k < n) { ids(k) = dict.get(hs(k)); k += 1 }
+    new Unary(hs, ids)
+  }
+
+  /** Token → `Unary` memo for ONE dictionary (a model holds its own, so ids
+    * of one dictionary never reach another). Growth stops once the stored
+    * entries hold `UnaryMemo.MaxSlots` hashes; tokens past the bound are
+    * hashed per document instead. Entries go in through `putIfAbsent` of a
+    * concurrent map, so task threads share them safely.
+    */
+  final class UnaryMemo(val dict: LongIntHash) {
+    private val map = new java.util.concurrent.ConcurrentHashMap[Tok, Unary]()
+    private val used = new java.util.concurrent.atomic.AtomicLong()
+    /** The entry of the padding token read outside the document. */
+    val pad: Unary = unary(NerFeatures.Pad, dict)
+
+    def apply(t: Tok): Unary = {
+      val hit = map.get(t)
+      if (hit != null) return hit
+      val u = unary(t, dict)
+      val n = u.hs.length
+      if (used.addAndGet(n) <= UnaryMemo.MaxSlots) {
+        val prev = map.putIfAbsent(t, u)
+        if (prev == null) return u
+        used.addAndGet(-n)
+        prev
+      } else { used.addAndGet(-n); u }
+    }
+
+    /** The entries of a document's tokens, aligned with it (`idsAt`'s `un`). */
+    def row(toks: IndexedSeq[Tok]): Array[Unary] = {
+      val out = new Array[Unary](toks.length)
+      var i = 0
+      while (i < out.length) { out(i) = apply(toks(i)); i += 1 }
+      out
+    }
+
+    def size: Int = map.size
+    /** Hash slots held by the stored entries (never above `MaxSlots`). */
+    def slots: Long = used.get
+  }
+
+  object UnaryMemo {
+    /** 4M slots: ~50 MB of arrays, ~140k words of ordinary length. */
+    final val MaxSlots: Long = 1L << 22
   }
 
   private val suffixC = "|C"
   private val suffixCpC = "|CpC"
   private val suffixCpCp2C = "|CpCp2C"
 
-  /** Compute deduplicated feature IDS per clique group at `loc`, mirroring
-    * NerFeatures.featuresAt + dictionary lookup. Unseen features (id -1) are
-    * dropped, matching CRFClassifier.java:200-207.
-    * Returns per-group arrays sliced from scratch.
-    */
   // precomputed hashes for the occurrence-pattern constants (closed set of 9)
   private val occHash: java.util.HashMap[String, java.lang.Long] = {
     val m = new java.util.HashMap[String, java.lang.Long]()
@@ -115,34 +254,6 @@ object NerFeaturesFast {
       m.put(s, java.lang.Long.valueOf(fnv(s)))
     m
   }
-
-  def idsAt(toks: IndexedSeq[Tok], loc: Int, dict: LongIntHash, scratch: Scratch): Array[Array[Int]] =
-    idsAt(toks, loc, dict, scratch, Gazette.empty, occPatterns = false)
-
-  def idsAt(toks: IndexedSeq[Tok], loc: Int, dict: LongIntHash, scratch: Scratch,
-      gaz: Gazette): Array[Array[Int]] =
-    idsAt(toks, loc, dict, scratch, gaz, occPatterns = false)
-
-  def idsAt(toks: IndexedSeq[Tok], loc: Int, dict: LongIntHash, scratch: Scratch,
-      gaz: Gazette, occPatterns: Boolean): Array[Array[Int]] =
-    idsAt(toks, loc, dict, scratch, gaz, occPatterns, useDistSim = false)
-
-  def idsAt(toks: IndexedSeq[Tok], loc: Int, dict: LongIntHash, scratch: Scratch,
-      gaz: Gazette, occPatterns: Boolean, useDistSim: Boolean): Array[Array[Int]] =
-    idsAt(toks, loc, dict, scratch, gaz, occPatterns, useDistSim,
-      useTags = false, useTaggySeq = false)
-
-  def idsAt(toks: IndexedSeq[Tok], loc: Int, dict: LongIntHash, scratch: Scratch,
-      gaz: Gazette, occPatterns: Boolean, useDistSim: Boolean,
-      useTags: Boolean, useTaggySeq: Boolean): Array[Array[Int]] =
-    idsAt(toks, loc, dict, scratch, gaz, occPatterns, useDistSim, useTags, useTaggySeq,
-      reverse = false)
-
-  def idsAt(toks: IndexedSeq[Tok], loc: Int, dict: LongIntHash, scratch: Scratch,
-      gaz: Gazette, occPatterns: Boolean, useDistSim: Boolean,
-      useTags: Boolean, useTaggySeq: Boolean, reverse: Boolean): Array[Array[Int]] =
-    idsAt(toks, loc, dict, scratch, gaz, occPatterns, useDistSim, useTags, useTaggySeq,
-      reverse, parenMatching = false)
 
   private val hParenCpC = fnv("PAREN-MATCH|CpC")
   private val hParenCp2C = fnv("PAREN-MATCH|Cp2C")
@@ -167,6 +278,9 @@ object NerFeaturesFast {
     "null-null-ETSEQ|CpC", "null-null-URLSEQ|CpC",
     "null-null-P2ABBRANS|Cp2C", "null-null-P2AP2CABB|Cp2C",
     "null-HW|C", "null-GW|C", "null-null-HW_GW|C").map(f => f -> fnv(f)).toMap
+  private val hPseq = fnv("PSEQ|CpC")
+  private val hPpseq = fnv("PPSEQ|CpCp2C")
+  private val hBndryPpseq = fnv("BNDRY-SPAN-PPSEQ|CpCp2C")
   private val hNseq = fnv("NSEQ|CnC")
   private val hPnseq = fnv("PNSEQ|CpCnC")
 
@@ -383,59 +497,60 @@ object NerFeaturesFast {
     }
   }
 
-  def idsAt(toks: IndexedSeq[Tok], loc: Int, dict: LongIntHash, scratch: Scratch,
-      gaz: Gazette, occPatterns: Boolean, useDistSim: Boolean,
-      useTags: Boolean, useTaggySeq: Boolean, reverse: Boolean,
-      parenMatching: Boolean,
+  /** Compute deduplicated feature IDS per clique group at `loc`, mirroring
+    * NerFeatures.featuresAt + dictionary lookup. Unseen features (id -1) are
+    * dropped, matching CRFClassifier.java:200-207.
+    * `un` holds the memo entries of `toks` (`memo.row`, or the row of tokens
+    * with the same word, shape and cluster); tokens outside the document
+    * read `memo.pad`. Returns per-group arrays sliced from scratch.
+    */
+  def idsAt(toks: IndexedSeq[Tok], un: Array[Unary], loc: Int, memo: UnaryMemo, scratch: Scratch,
+      gaz: Gazette = Gazette.empty, occPatterns: Boolean = false, useDistSim: Boolean = false,
+      useTags: Boolean = false, useTaggySeq: Boolean = false, reverse: Boolean = false,
+      parenMatching: Boolean = false,
       ngram: NerFeatures.NgramOpts = NerFeatures.NgramOpts.default,
       disjWidth: Int = 4,
       misc: NerFeatures.MiscOpts = NerFeatures.MiscOpts.default): Array[Array[Int]] = {
     @inline def at(i: Int): Tok = if (i >= 0 && i < toks.length) toks(i) else NerFeatures.Pad
+    @inline def u(i: Int): Unary = if (i >= 0 && i < un.length) un(i) else memo.pad
     val c = at(loc); val p = at(loc - 1); val p2 = at(loc - 2)
     val nt = at(loc + 1); val n2 = at(loc + 2)
     val cWord = c.word; val pWord = p.word; val nWord = nt.word
+    val cU = u(loc); val pU = u(loc - 1); val nU = u(loc + 1)
 
+    // ngrams over <word>: under the default preset the first emissions of
+    // group 0 are the token's memoized n-gram block, already deduplicated
+    val ngramMemo = ngram == NerFeatures.NgramOpts.default
+    var hn = if (ngramMemo) cU.hs.length - NgramStart else 0
+    scratch.reserve(hn)
     var hb = scratch.hashes
-    var hn = 0
-    @inline def emit(x: Long): Unit = {
+    var hi = scratch.hids
+    if (ngramMemo) {
+      System.arraycopy(cU.hs, NgramStart, hb, 0, hn)
+      System.arraycopy(cU.ids, NgramStart, hi, 0, hn)
+    }
+    def push(x: Long, id: Int): Unit = {
       // dedup: linear scan (feature sets are small); preserves set semantics
       var i = 0
       var dup = false
       while (i < hn && !dup) { if (hb(i) == x) dup = true; i += 1 }
       if (!dup) {
-        if (hn == hb.length) { hb = java.util.Arrays.copyOf(hb, hb.length << 1); scratch.hashes = hb }
-        hb(hn) = x; hn += 1
+        if (hn == hb.length) {
+          hb = java.util.Arrays.copyOf(hb, hb.length << 1); scratch.hashes = hb
+          hi = java.util.Arrays.copyOf(hi, hi.length << 1); scratch.hids = hi
+        }
+        hb(hn) = x; hi(hn) = id; hn += 1
       }
     }
+    def emit(x: Long): Unit = push(x, Unresolved)
+    def emitU(e: Unary, slot: Int): Unit = push(e.hs(slot), e.ids(slot))
     val miscOn = misc != NerFeatures.MiscOpts.default
     val emitF: Long => Unit = if (miscOn) x => emit(x) else null
 
     // ---- group 0 ----
-    // ngrams over <word>: default preset shape stays zero-alloc (virtual
-    // < > padding); non-default NgramOpts take the generic branch over the
-    // transformed padded word (one small string per token, options only)
-    if (ngram == NerFeatures.NgramOpts.default) {
-      val wLen = cWord.length + 2
-      var i0 = 0
-      while (i0 < wLen) {
-        var j = i0 + 2
-        while (j <= wLen) {
-          if (i0 == 0 || j == wLen) {
-            var x = hc(FnvOffset, '#')
-            var k = i0
-            while (k < j) {
-              val ch = if (k == 0) '<' else if (k == wLen - 1) '>' else cWord.charAt(k - 1)
-              x = hc(x, ch)
-              k += 1
-            }
-            x = hc(x, '#')
-            emit(h(x, suffixC))
-          }
-          j += 1
-        }
-        i0 += 1
-      }
-    } else {
+    // non-default NgramOpts take the generic branch over the transformed
+    // padded word (one small string per token, options only)
+    if (!ngramMemo) {
       var w0 = "<" + cWord + ">"
       if (ngram.lowercase) w0 = w0.toLowerCase
       if (ngram.dehyphenate) w0 = NerFeatures.dehyphenate(w0)
@@ -461,23 +576,23 @@ object NerFeaturesFast {
         i0 += 1
       }
     }
-    emit(h(h(h(FnvOffset, cWord), "-WORD"), suffixC)) // useWord (default true)
+    emitU(cU, UWord) // useWord (default true)
     if (miscOn) emitMiscG0A(misc, c, p, nt, cWord, useTags, useDistSim, emitF)
     if (useDistSim) emit(h(h(hDsGet(FnvOffset, c), "-DISTSIM"), suffixC))
     if (useTags) emit(h(h(hTagGS(FnvOffset, c), "-TAG"), suffixC))
-    emit(h(h(h(FnvOffset, pWord), "-PW"), suffixC))
+    emitU(pU, UPw)
     if (useTags) emit(h(h(hTagGS(FnvOffset, p), "-PTAG"), suffixC))
     if (useDistSim) emit(h(h(hDsGet(FnvOffset, p), "-PDISTSIM"), suffixC))
-    emit(h(h(h(FnvOffset, nWord), "-NW"), suffixC))
+    emitU(nU, UNw)
     if (useTags) emit(h(h(hTagGS(FnvOffset, nt), "-NTAG"), suffixC))
     // reference bug mirrored: NDISTSIM reads the PREVIOUS token's cluster
     if (useDistSim) emit(h(h(hDsGet(FnvOffset, p), "-NDISTSIM"), suffixC))
     emit(h(h(h(hc(h(FnvOffset, cWord), '-'), pWord), "-W-PW"), suffixC))
     emit(h(h(h(hc(h(FnvOffset, cWord), '-'), nWord), "-W-NW"), suffixC))
     val cShapeGS = if (c.shape == null) "" else c.shape
-    emit(h(h(h(FnvOffset, cShapeGS), "-TYPE"), suffixC))
-    emit(h(h(hShapeGet(FnvOffset, p), "-PTYPE"), suffixC))
-    emit(h(h(hShapeGet(FnvOffset, nt), "-NTYPE"), suffixC))
+    emitU(cU, UType)
+    emitU(pU, UPType)
+    emitU(nU, UNType)
     emit(h(h(h(h(h(FnvOffset, pWord), "..."), cShapeGS), "-PW_CTYPE"), suffixC))
     emit(h(h(h(h(h(FnvOffset, cShapeGS), "..."), nWord), "-NW_CTYPE"), suffixC))
     emit(h(h(h(h(hShapeGet(FnvOffset, p), "..."), cShapeGS), "-PCTYPE"), suffixC))
@@ -493,10 +608,10 @@ object NerFeaturesFast {
       NerFeatures.occurrenceFeatures(toks, loc, reverse, s => emit(occHash.get(s).longValue))
     var d = 1
     while (d <= disjWidth) {
-      emit(h(h(h(FnvOffset, at(loc + d).word), "-DISJN"), suffixC))
+      emitU(u(loc + d), UDisjN)
       if (misc.useDisjunctiveShapeInteraction)
         emit(h(h(h(hc(h(FnvOffset, at(loc + d).word), '-'), cShapeGS), "-DISJN-CS"), suffixC))
-      emit(h(h(h(FnvOffset, at(loc - d).word), "-DISJP"), suffixC))
+      emitU(u(loc - d), UDisjP)
       if (misc.useDisjunctiveShapeInteraction)
         emit(h(h(h(hc(h(FnvOffset, at(loc - d).word), '-'), cShapeGS), "-DISJP-CS"), suffixC))
       d += 1
@@ -525,7 +640,7 @@ object NerFeaturesFast {
         }
       }
     }
-    val g0n = resolve(0, dict, scratch, hn)
+    val g0n = resolve(0, memo.dict, scratch, hn)
 
     // ---- group 1: CpC ----
     hn = 0
@@ -537,21 +652,21 @@ object NerFeaturesFast {
       if (NerFeatures.isOrdinal(toks, loc - 1)) emit(h(h(FnvOffset, "P_ORDINAL"), suffixCpC))
     }
     val pShapeGS = if (p.shape == null) "" else p.shape
-    emit(h(h(FnvOffset, "PSEQ"), suffixCpC))
-    emit(h(h(h(FnvOffset, cWord), "-PSEQW"), suffixCpC))
+    emit(hPseq)
+    emitU(cU, UPseqW)
     emit(h(h(h(hc(h(FnvOffset, pWord), '-'), cWord), "-PSEQW2"), suffixCpC))
-    emit(h(h(h(FnvOffset, pWord), "-PSEQpW"), suffixCpC))
-    emit(h(h(hDsGS(FnvOffset, p), "-PSEQpDS"), suffixCpC))
-    emit(h(h(hDsGS(FnvOffset, c), "-PSEQcDS"), suffixCpC))
+    emitU(pU, UPseqPW)
+    emitU(pU, UPseqPDS)
+    emitU(cU, UPseqCDS)
     emit(h(h(hDsGS(hc(hDsGS(FnvOffset, p), '-'), c), "-PSEQpcDS"), suffixCpC))
-    emit(h(h(h(FnvOffset, pShapeGS), "-PSEQpS"), suffixCpC))
-    emit(h(h(h(FnvOffset, cShapeGS), "-PSEQcS"), suffixCpC))
+    emitU(pU, UPseqPS)
+    emitU(cU, UPseqCS)
     emit(h(h(h(hc(h(FnvOffset, pShapeGS), '-'), cShapeGS), "-PSEQpcS"), suffixCpC))
     emit(h(h(h(hc(h(FnvOffset, pShapeGS), '-'), cShapeGS), "-TYPES"), suffixCpC))
     if (misc.useTypeSeqs3) // pShape(gs)-cShape(gs)-nShape(GET)-PCNSHAPES
       emit(h(h(hShapeGet(hc(h(hc(h(FnvOffset, pShapeGS), '-'), cShapeGS), '-'), nt), "-PCNSHAPES"), suffixCpC))
-    emit(h(h(hShapeGet(FnvOffset, c), "-TPS2"), suffixCpC))
-    emit(h(h(hShapeGet(FnvOffset, nt), "-TNS1"), suffixCpC))
+    emitU(cU, UTps2)
+    emitU(nU, UTns1)
     if (useTaggySeq && useTags)
       emit(h(h(hTagGS(hc(hTagGS(FnvOffset, p), '-'), c), "-TS"), suffixCpC))
     if (useTaggySeq && useDistSim) // DISTSIM_TS1 (:1586-1587; was missing)
@@ -571,15 +686,15 @@ object NerFeaturesFast {
       emit(hNseq)
       emit(h(h(h(FnvOffset, pWord), "-NSEQW"), suffixCnC))
     }
-    val g1n = resolve(1, dict, scratch, hn)
+    val g1n = resolve(1, memo.dict, scratch, hn)
 
     // ---- group 2: CpCp2C ----
     hn = 0
     if (misc.useAbbr) emit(h2Pabbrans) // (:1789-1791)
     if (misc.useChunks) // useChunks (:1792-1794)
       emit(h(h(hChunkGet(hc(hChunkGet(hc(hChunkGet(FnvOffset, p2), '-'), p), '-'), c), "-2PCHUNKS"), suffixCpCp2C))
-    emit(h(h(FnvOffset, "PPSEQ"), suffixCpCp2C))
-    if (pWord == NerFeatures.Boundary) emit(h(h(FnvOffset, "BNDRY-SPAN-PPSEQ"), suffixCpCp2C))
+    emit(hPpseq)
+    if (pWord == NerFeatures.Boundary) emit(hBndryPpseq)
     if (useTaggySeq && useTags) {
       val tts = hTagGS(hc(hTagGS(hc(hTagGS(FnvOffset, p2), '-'), p), '-'), c)
       emit(h(h(tts, "-TTS"), suffixCpCp2C))
@@ -607,7 +722,7 @@ object NerFeaturesFast {
       emit(hPnseq)
       emit(h(h(h(FnvOffset, pWord), "-PNSEQW"), suffixCpCnC))
     }
-    val g2n = resolve(2, dict, scratch, hn)
+    val g2n = resolve(2, memo.dict, scratch, hn)
 
     Array(
       java.util.Arrays.copyOf(scratch.ids(0), g0n),
@@ -615,7 +730,8 @@ object NerFeaturesFast {
       java.util.Arrays.copyOf(scratch.ids(2), g2n))
   }
 
-  /** Drain scratch.hashes(0 until hn) through the dict into scratch.ids(g). */
+  /** Drain scratch.hashes(0 until hn) into scratch.ids(g): memoized ids as
+    * they are, the other hashes through the dict. */
   private def resolve(g: Int, dict: LongIntHash, scratch: Scratch, hn: Int): Int = {
     if (scratch.ids(g).length < hn)
       scratch.ids(g) = new Array[Int](Integer.highestOneBit(hn - 1) << 1)
@@ -623,7 +739,8 @@ object NerFeaturesFast {
     var n = 0
     var i = 0
     while (i < hn) {
-      val id = dict.get(scratch.hashes(i))
+      val known = scratch.hids(i)
+      val id = if (known == Unresolved) dict.get(scratch.hashes(i)) else known
       if (id >= 0) { out(n) = id; n += 1 }
       i += 1
     }

@@ -103,8 +103,14 @@ final class NerModel(
   /** word → preprocessed token memo (shape strings are pure functions of the
     * word under a frozen knownLCWords set, so they are vocabulary-cacheable —
     * the reference memoizes ngrams the same way, NERFeatureFactory.java:1198-1200).
+    * Bounded at 2M words. Its tokens key `unaryMemo`, which holds each word's
+    * single-token feature hashes and their ids in THIS model's dictionary
+    * (n-grams, WORD, PW, NW, TYPE, ...; see NerFeaturesFast), computed once
+    * per distinct word; that memo stops growing at
+    * `NerFeaturesFast.UnaryMemo.MaxSlots` stored hashes.
     */
   @transient lazy val tokCache = new java.util.concurrent.ConcurrentHashMap[String, NerFeatures.Tok]()
+  @transient lazy val unaryMemo = new NerFeaturesFast.UnaryMemo(hashIndex)
   @transient private lazy val scratch = new ThreadLocal[NerFeaturesFast.Scratch] {
     override def initialValue(): NerFeaturesFast.Scratch = new NerFeaturesFast.Scratch
   }
@@ -125,16 +131,32 @@ final class NerModel(
     */
   def encodeFast(words: IndexedSeq[String]): Crf.EncodedDoc = {
     val toks = words.map(tok)
+    encodeToks(toks, toks)
+  }
+
+  /** The fast encode loop of every entry point. `toks(i)` is the token the
+    * templates read; `keys(i)` is its word-only token from `tok` (same word,
+    * shape and cluster), which keys the unary memo.
+    */
+  private def encodeToks(toks: IndexedSeq[NerFeatures.Tok],
+      keys: IndexedSeq[NerFeatures.Tok]): Crf.EncodedDoc = {
+    val memo = unaryMemo
+    val un = memo.row(keys)
     val s = scratch.get()
-    val n = toks.length
-    val out = new Array[Array[Array[Int]]](n)
+    val out = new Array[Array[Array[Int]]](toks.length)
     var pos = 0
-    while (pos < n) {
-      out(pos) = NerFeaturesFast.idsAt(toks, pos, hashIndex, s, gazette, useOccurrencePatterns,
+    while (pos < out.length) {
+      out(pos) = NerFeaturesFast.idsAt(toks, un, pos, memo, s, gazette, useOccurrencePatterns,
         distSim.isDefined, useTags, useTaggySequences, useReverse, useParenMatching, ngramOpts, disjunctionWidth, miscOpts)
       pos += 1
     }
     out
+  }
+
+  /** Viterbi labels of an encoded (possibly reversed) document, in word order. */
+  private def decode(enc: Crf.EncodedDoc): Array[String] = {
+    val out = Crf.viterbi(Crf.logPotentials(enc, params), params).map(classIndex)
+    if (useReverse) out.reverse else out
   }
 
   /** Preprocess raw token words: shape from the ORIGINAL word (with frozen
@@ -232,32 +254,21 @@ final class NerModel(
     val inU = if (useReverse) unknowns.reverse else unknowns
     val inG = if (useReverse) generics.reverse else generics
     val gKey = genericKey.orNull
-    val toks = inW.indices.map { i =>
-      val w = inW(i)
-      val fixed = fix(w)
-      NerFeatures.Tok(fixed, WordShape.dan2(w, knownLC.contains),
-        distSim.map(_.clusterOf(fixed)).orNull, inT(i),
-        if (inL.isEmpty) null else inL(i),
-        if (inC.isEmpty) null else inC(i),
-        if (inU.isEmpty) null else inU(i),
-        if (inG.isEmpty) null else inG(i) + "-" + gKey)
+    val keys = inW.map(tok)
+    val toks = keys.indices.map { i =>
+      keys(i).copy(tag = inT(i),
+        lemma = if (inL.isEmpty) null else inL(i),
+        chunk = if (inC.isEmpty) null else inC(i),
+        unknown = if (inU.isEmpty) null else inU(i),
+        generic = if (inG.isEmpty) null else inG(i) + "-" + gKey)
     }
-    val s = scratch.get()
-    val enc: Crf.EncodedDoc = Array.tabulate(toks.length)(pos =>
-      NerFeaturesFast.idsAt(toks, pos, hashIndex, s, gazette, useOccurrencePatterns,
-        distSim.isDefined, useTags, useTaggySequences, useReverse, useParenMatching, ngramOpts, disjunctionWidth, miscOpts))
-    val out = Crf.viterbi(Crf.logPotentials(enc, params), params).map(classIndex)
-    if (useReverse) out.reverse else out
+    decode(encodeToks(toks, keys))
   }
 
   /** Viterbi-tag one document of raw words; returns a label per token. */
   def tag(words: IndexedSeq[String]): Array[String] = {
     if (words.isEmpty) return Array.empty
-    val in = if (useReverse) words.reverse else words
-    val enc = encodeFast(in)
-    val pots = Crf.logPotentials(enc, params)
-    val out = Crf.viterbi(pots, params).map(classIndex)
-    if (useReverse) out.reverse else out
+    decode(encodeFast(if (useReverse) words.reverse else words))
   }
 
   /** Tag an over-long document after the reference's maxDocSize split

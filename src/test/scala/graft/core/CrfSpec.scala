@@ -205,4 +205,54 @@ class CrfSpec extends AnyFunSuite {
     val total = (0 until p.fullSize).map(e => math.exp(cal.logMarginals(0)(e))).sum
     assert(math.abs(total - 1.0) < 1e-9)
   }
+
+  test("potential tables are bit-identical to the per-cell modulo build") {
+    // reference build: every cell adds the groups' scores at enc % C^(g+1)
+    def moduloTables(doc: Crf.EncodedDoc, p: Crf.Params): Array[Array[Double]] = {
+      val C = p.numClasses
+      doc.map { byGroup =>
+        val gs = Array.tabulate(p.windowSize) { g =>
+          Array.tabulate(Crf.pow(C, g + 1)) { e =>
+            val col = p.weightCol(g)(e)
+            if (col < 0) Double.NegativeInfinity
+            else {
+              var s = 0.0
+              for (f <- byGroup(g)) s += p.weights(f)(col)
+              s
+            }
+          }
+        }
+        Array.tabulate(p.fullSize) { enc =>
+          var s = 0.0
+          var mod = C
+          for (g <- 0 until p.windowSize) { s += gs(g)(enc % mod); mod *= C }
+          s
+        }
+      }
+    }
+    val rng = new scala.util.Random(17)
+    var disallowed = 0
+    for (w <- 2 to 4; c <- 2 to 5; rep <- 0 until 3) {
+      // roughly one window in six disallowed (column -1), never a whole group
+      val weightCol = Array.tabulate(w) { g =>
+        var next = 0
+        Array.tabulate(Crf.pow(c, g + 1)) { e =>
+          if (e > 0 && rng.nextInt(6) == 0) { disallowed += 1; -1 } else { next += 1; next - 1 }
+        }
+      }
+      val nCols = weightCol.map(_.max + 1).max
+      val nFeat = 12
+      val weights = Array.fill(nFeat, nCols)(rng.nextGaussian() * math.pow(10, rng.nextInt(7) - 3))
+      val p = new Crf.Params(c, w, 0, weightCol, weights)
+      val doc: Crf.EncodedDoc = Array.fill(1 + rng.nextInt(6)) {
+        Array.fill(w)(Array.fill(rng.nextInt(5))(rng.nextInt(nFeat)))
+      }
+      val got = Crf.logPotentials(doc, p)
+      val want = moduloTables(doc, p)
+      for (pos <- doc.indices; enc <- 0 until p.fullSize)
+        assert(java.lang.Double.doubleToRawLongBits(got(pos)(enc)) ==
+          java.lang.Double.doubleToRawLongBits(want(pos)(enc)), s"w=$w c=$c pos=$pos enc=$enc")
+    }
+    assert(disallowed > 0)
+  }
 }

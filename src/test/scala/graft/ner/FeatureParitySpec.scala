@@ -1,12 +1,40 @@
 package graft.ner
 
+import graft.core.Crf
 import graft.pipeline.{SparkTestSession, Transcripts}
+import graft.train.WeightLayout
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins byte-identity between the string feature path (training) and the
   * hashing fast path (inference): same feature ids, same order, same tags.
   */
 class FeatureParitySpec extends AnyFunSuite {
+
+  /** A fresh instance of `m` (empty memos); `permute` reverses its feature
+    * ids (rows and groups follow), so it tags like `m` with other ids. */
+  private def copyOf(m: NerModel, permute: Boolean = false): NerModel = {
+    val n = m.featureIndex.size
+    def perm(f: Int) = if (permute) n - 1 - f else f
+    val fi = new java.util.HashMap[String, Integer](n * 2)
+    m.featureIndex.forEach((k, v) => fi.put(k, Integer.valueOf(perm(v.intValue))))
+    val featGroup = new Array[Int](n)
+    val weights = new Array[Array[Double]](n)
+    for (f <- 0 until n) { featGroup(perm(f)) = m.layout.featGroup(f); weights(perm(f)) = m.weights(f) }
+    val l = m.layout
+    new NerModel(m.classIndex, m.backgroundIndex, fi,
+      new WeightLayout(l.numClasses, l.windowSize, l.backgroundIndex, featGroup, l.weightCol, l.numCols),
+      weights, m.knownLC, m.gazette, m.normalizeTerms, m.useOccurrencePatterns, m.useReverse,
+      m.distSim, m.useTags, m.useTaggySequences, m.useParenMatching, m.ngramOpts,
+      m.disjunctionWidth, m.miscOpts, m.genericKey)
+  }
+
+  private def assertParity(m: NerModel, words: IndexedSeq[String]): Unit = {
+    val slow = m.encode(m.preprocess(words))
+    val fast = m.encodeFast(words)
+    assert(slow.length == fast.length)
+    for (pos <- slow.indices; g <- 0 until 3)
+      assert(slow(pos)(g).toSeq == fast(pos)(g).toSeq, s"pos=$pos g=$g words=$words")
+  }
 
   test("fnv streaming hash equals whole-string hash") {
     for (s <- Seq("", "a", "#<Alice>#|C", "WT-Xx-...-PCNTYPE|C", "--PSEQpcDS|CpC"))
@@ -102,10 +130,12 @@ class FeatureParitySpec extends AnyFunSuite {
       val hash = new NerFeaturesFast.LongIntHash(dict.size)
       dict.forEach((k, v) => hash.put(NerFeaturesFast.fnv(k), v.intValue))
       val scratch = new NerFeaturesFast.Scratch
+      val memo = new NerFeaturesFast.UnaryMemo(hash)
+      val un = memo.row(toks2)
       for (pos <- words.indices) {
         val slow = NerFeatures.featuresAt(toks2, pos, Gazette.empty, false, false, false, false, false, false, opt)
           .map(_.map(f => dict.get(f).intValue))
-        val fast = NerFeaturesFast.idsAt(toks2, pos, hash, scratch, Gazette.empty,
+        val fast = NerFeaturesFast.idsAt(toks2, un, pos, memo, scratch, Gazette.empty,
           occPatterns = false, useDistSim = false, useTags = false, useTaggySeq = false,
           reverse = false, parenMatching = false, ngram = opt)
         for (g <- 0 until 3)
@@ -236,10 +266,12 @@ class FeatureParitySpec extends AnyFunSuite {
     val hash = new NerFeaturesFast.LongIntHash(dict.size)
     dict.forEach((k, v) => hash.put(NerFeaturesFast.fnv(k), v.intValue))
     val scratch = new NerFeaturesFast.Scratch
+    val memo = new NerFeaturesFast.UnaryMemo(hash)
+    val un = memo.row(toks)
     for (pos <- words.indices; g <- 0 until 3) {
       val slow = NerFeatures.featuresAt(toks, pos, Gazette.empty, false, true, true, true,
         false, false, NerFeatures.NgramOpts.default, 4, misc)(g).map(f => dict.get(f).intValue).toSeq
-      val fast = NerFeaturesFast.idsAt(toks, pos, hash, scratch, Gazette.empty,
+      val fast = NerFeaturesFast.idsAt(toks, un, pos, memo, scratch, Gazette.empty,
         occPatterns = false, useDistSim = true, useTags = true, useTaggySeq = true,
         reverse = false, parenMatching = false, ngram = NerFeatures.NgramOpts.default,
         disjWidth = 4, misc = misc)(g).toSeq
@@ -265,9 +297,11 @@ class FeatureParitySpec extends AnyFunSuite {
     val hash = new NerFeaturesFast.LongIntHash(dict.size)
     dict.forEach((k, v) => hash.put(NerFeaturesFast.fnv(k), v.intValue))
     val scratch = new NerFeaturesFast.Scratch
+    val memo = new NerFeaturesFast.UnaryMemo(hash)
+    val un = memo.row(toks)
     for (pos <- toks.indices; g <- 0 until 3) {
       val slow = NerFeatures.featuresAt(toks, pos, gaz)(g).map(f => dict.get(f).intValue).toSeq
-      val fast = NerFeaturesFast.idsAt(toks, pos, hash, scratch, gaz)(g).toSeq
+      val fast = NerFeaturesFast.idsAt(toks, un, pos, memo, scratch, gaz)(g).toSeq
       assert(slow == fast, s"pos=$pos g=$g")
     }
 
@@ -309,5 +343,81 @@ class FeatureParitySpec extends AnyFunSuite {
       for (i <- words.indices) { if (got(i) == labels(i)) correct += 1; total += 1 }
     }
     assert(correct.toDouble / total >= 0.97, s"$correct/$total")
+  }
+
+  test("unary memo: two models that see the same words each get their own ids") {
+    val m0 = NerModels.default(SparkTestSession.spark).value
+    val a = copyOf(m0)
+    val b = copyOf(m0, permute = true)
+    var differ = 0
+    for (conv <- 0L until 40L; t <- 0 until Transcripts.numTurns(9L, conv)) {
+      val (words, _) = Transcripts.turnTokens(9L, conv, t)
+      assertParity(a, words)
+      assertParity(b, words)
+      if (a.encodeFast(words).flatten.flatten.toSeq != b.encodeFast(words).flatten.flatten.toSeq)
+        differ += 1
+      assert(a.tag(words).toSeq == b.tag(words).toSeq)
+    }
+    assert(differ > 0, "the permuted dictionary must give other ids")
+  }
+
+  test("unary memo: 8 threads tagging the same turns at once == one thread") {
+    val m0 = NerModels.default(SparkTestSession.spark).value
+    val turns = (for (conv <- 0L until 80L; t <- 0 until Transcripts.numTurns(11L, conv))
+      yield Transcripts.turnTokens(11L, conv, t)._1).toVector
+    val single = copyOf(m0)
+    val want = turns.map(w => single.tag(w).toSeq)
+    val shared = copyOf(m0) // empty memo: the threads fill it concurrently
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val go = new java.util.concurrent.CountDownLatch(1)
+      val jobs = (0 until 8).map { k =>
+        pool.submit(new java.util.concurrent.Callable[Vector[Seq[String]]] {
+          def call(): Vector[Seq[String]] = {
+            go.await()
+            val out = new Array[Seq[String]](turns.length)
+            // each thread starts at its own offset; odd threads use the POS
+            // entry point (this model reads no tags, so labels are the same)
+            for (j <- turns.indices) {
+              val i = (j + k * turns.length / 8) % turns.length
+              val w = turns(i)
+              out(i) = (if (k % 2 == 0) shared.tag(w) else shared.tag(w, w.map(_ => "NN"))).toSeq
+            }
+            out.toVector
+          }
+        })
+      }
+      go.countDown()
+      jobs.foreach(j => assert(j.get(300, java.util.concurrent.TimeUnit.SECONDS) == want))
+    } finally pool.shutdownNow()
+    assert(shared.unaryMemo.size > 0)
+  }
+
+  test("unary memo: giant, non-BMP and empty tokens keep parity with the string path") {
+    val m = copyOf(NerModels.default(SparkTestSession.spark).value)
+    val words = Vector("", "Alice", "\uD835\uDC9C\uD835\uDCB7", "\uD83D\uDE00", "x" * 2500 + "7f" * 10,
+      "", "Zo\u00EB", "\uD800", "Johnson", ".")
+    assertParity(m, words) // fills the memo
+    assertParity(m, words) // reads it back
+    assertParity(m, words.reverse)
+    assert(m.tag(words).length == words.length)
+  }
+
+  test("unary memo: growth stops at its bound; ids and tags stay exact past it") {
+    val m = copyOf(NerModels.default(SparkTestSession.spark).value)
+    val bound = NerFeaturesFast.UnaryMemo.MaxSlots
+    // distinct 9-char words, 35 hash slots an entry: 150k of them overfill it
+    def doc(d: Int) = (0 until 100).map(i => f"W$d%05d$i%03d")
+    for (d <- 0 until 1500) m.encodeFast(doc(d))
+    val full = m.unaryMemo.size
+    assert(m.unaryMemo.slots <= bound && m.unaryMemo.slots > bound - 35, s"${m.unaryMemo.slots}")
+    for (d <- 1500 until 1520) {
+      assertParity(m, doc(d)) // words past the bound: hashed per document
+      val words = doc(d) :+ "Alice" :+ "Johnson" :+ "."
+      val slow = m.encode(m.preprocess(words))
+      assert(m.tag(words).toSeq ==
+        Crf.viterbi(Crf.logPotentials(slow, m.params), m.params).map(m.classIndex).toSeq)
+    }
+    assert(m.unaryMemo.size == full, "growth did not stop")
   }
 }
