@@ -15,12 +15,15 @@ package graft.ner
   * Templates that read exactly one token (the default-preset n-grams, WORD,
   * PW, NW, TYPE, PTYPE, NTYPE, DISJN, DISJP and the single-token PSEQ/TPS2/
   * TNS1 sequence templates) are hashed and resolved once per distinct token
-  * into a `Unary`, kept in a per-dictionary `UnaryMemo` (bounded by the total
-  * number of hash slots it stores). `idsAt` emits each cached hash and id at
-  * the same point of its sequence as the template it stands for, so ids and
-  * their order match the string path. A token sits in up to nine window
-  * positions of a document, and its words repeat across documents, so
-  * hashing these templates per position would repeat the same work.
+  * into a `Unary`, kept in a per-dictionary `UnaryMemo` (bounded by the heap
+  * its entries take; emptied when full). `idsAt` emits each cached hash and
+  * id at the same point of its sequence as the template it stands for, so
+  * ids and their order match the string path. The memo pays off when words
+  * repeat ACROSS documents: on the benchmark's conversations (a closed
+  * vocabulary of a few hundred words, about nine tokens a turn) over 99.9%
+  * of lookups hit it, while only 0.3% of tokens repeat within their own
+  * document, and a per-document memo tagged no faster than hashing per
+  * position. Open-vocabulary traffic has not been measured.
   */
 object NerFeaturesFast {
   import NerFeatures.Tok
@@ -142,12 +145,13 @@ object NerFeaturesFast {
   final class Unary private[NerFeaturesFast] (val hs: Array[Long], val ids: Array[Int])
 
   /** Hashes every single-token template of `t` (the bytes of the string
-    * path's feature) and resolves them in `dict`.
+    * path's feature), plus its default-preset n-grams when `ngrams`, and
+    * resolves them in `dict`.
     */
-  private def unary(t: Tok, dict: LongIntHash): Unary = {
+  private def unary(t: Tok, dict: LongIntHash, ngrams: Boolean): Unary = {
     val w = t.word
     val shapeGS = if (t.shape == null) "" else t.shape
-    var hs = new Array[Long](NgramStart + 2 * w.length + 1)
+    var hs = new Array[Long](if (ngrams) NgramStart + 2 * w.length + 1 else NgramStart)
     hs(UWord) = h(h(h(FnvOffset, w), "-WORD"), suffixC)
     hs(UPw) = h(h(h(FnvOffset, w), "-PW"), suffixC)
     hs(UNw) = h(h(h(FnvOffset, w), "-NW"), suffixC)
@@ -167,7 +171,7 @@ object NerFeaturesFast {
     // default-preset n-grams over <word> (virtual < > padding): prefixes and
     // suffixes only (noMidNGrams), deduplicated like `idsAt`'s emit
     var n = NgramStart
-    val wLen = w.length + 2
+    val wLen = if (ngrams) w.length + 2 else 0
     var i0 = 0
     while (i0 < wLen) {
       var j = i0 + 2
@@ -197,28 +201,29 @@ object NerFeaturesFast {
   }
 
   /** Token → `Unary` memo for ONE dictionary (a model holds its own, so ids
-    * of one dictionary never reach another). Growth stops once the stored
-    * entries hold `UnaryMemo.MaxSlots` hashes; tokens past the bound are
-    * hashed per document instead. Entries go in through `putIfAbsent` of a
-    * concurrent map, so task threads share them safely.
+    * of one dictionary never reach another). `ngrams` (the model's
+    * `NgramOpts` is the default) adds the n-gram block; other models never
+    * read it. The entries' heap, charged per entry by `UnaryMemo.cost`, stays
+    * under `UnaryMemo.MaxBytes`: an entry that would pass it empties the
+    * memo first, so words that keep coming back return after one-off tokens
+    * (IDs, numbers, URLs) have filled it. Entries go in through
+    * `putIfAbsent` of a concurrent map, so task threads share them safely.
     */
-  final class UnaryMemo(val dict: LongIntHash) {
+  final class UnaryMemo(val dict: LongIntHash, val ngrams: Boolean = true) {
     private val map = new java.util.concurrent.ConcurrentHashMap[Tok, Unary]()
     private val used = new java.util.concurrent.atomic.AtomicLong()
     /** The entry of the padding token read outside the document. */
-    val pad: Unary = unary(NerFeatures.Pad, dict)
+    val pad: Unary = unary(NerFeatures.Pad, dict, ngrams)
 
     def apply(t: Tok): Unary = {
       val hit = map.get(t)
       if (hit != null) return hit
-      val u = unary(t, dict)
-      val n = u.hs.length
-      if (used.addAndGet(n) <= UnaryMemo.MaxSlots) {
-        val prev = map.putIfAbsent(t, u)
-        if (prev == null) return u
-        used.addAndGet(-n)
-        prev
-      } else { used.addAndGet(-n); u }
+      val u = unary(t, dict, ngrams)
+      val n = UnaryMemo.cost(u)
+      if (n > UnaryMemo.MaxBytes) return u
+      if (used.addAndGet(n) > UnaryMemo.MaxBytes) { map.clear(); used.set(n) }
+      val prev = map.putIfAbsent(t, u)
+      if (prev == null) u else { used.addAndGet(-n); prev }
     }
 
     /** The entries of a document's tokens, aligned with it (`idsAt`'s `un`). */
@@ -230,13 +235,23 @@ object NerFeaturesFast {
     }
 
     def size: Int = map.size
-    /** Hash slots held by the stored entries (never above `MaxSlots`). */
-    def slots: Long = used.get
+    /** Heap charged to the stored entries: at most `MaxBytes`. An entry put
+      * by one thread while another empties the memo may go uncharged until
+      * the next emptying. */
+    def bytes: Long = used.get
   }
 
   object UnaryMemo {
-    /** 4M slots: ~50 MB of arrays, ~140k words of ordinary length. */
-    final val MaxSlots: Long = 1L << 22
+    /** Heap of one entry besides its slots, as measured on JDK 17 with
+      * compressed oops: 124 bytes for the map node, the `Unary` and its two
+      * arrays' headers, plus 155 for a key of a 9-char word that
+      * `NerModel.tokCache` does not share (Tok, word and shape strings). */
+    final val EntryBytes = 280L
+    /** 64 MiB: about 95k words of 9 chars (35 slots, 700 bytes charged). */
+    final val MaxBytes: Long = 64L << 20
+    /** Heap charged to `u`: `EntryBytes` plus 12 bytes a slot (a hash and an
+      * id; measured 11.8). */
+    def cost(u: Unary): Long = EntryBytes + 12L * u.hs.length
   }
 
   private val suffixC = "|C"
@@ -520,7 +535,7 @@ object NerFeaturesFast {
 
     // ngrams over <word>: under the default preset the first emissions of
     // group 0 are the token's memoized n-gram block, already deduplicated
-    val ngramMemo = ngram == NerFeatures.NgramOpts.default
+    val ngramMemo = memo.ngrams && ngram == NerFeatures.NgramOpts.default
     var hn = if (ngramMemo) cU.hs.length - NgramStart else 0
     scratch.reserve(hn)
     var hb = scratch.hashes

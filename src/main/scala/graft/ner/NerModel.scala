@@ -105,12 +105,13 @@ final class NerModel(
     * the reference memoizes ngrams the same way, NERFeatureFactory.java:1198-1200).
     * Bounded at 2M words. Its tokens key `unaryMemo`, which holds each word's
     * single-token feature hashes and their ids in THIS model's dictionary
-    * (n-grams, WORD, PW, NW, TYPE, ...; see NerFeaturesFast), computed once
-    * per distinct word; that memo stops growing at
-    * `NerFeaturesFast.UnaryMemo.MaxSlots` stored hashes.
+    * (n-grams under the default NgramOpts, WORD, PW, NW, TYPE, ...; see
+    * NerFeaturesFast), computed once per distinct word; that memo empties
+    * itself rather than pass `NerFeaturesFast.UnaryMemo.MaxBytes` of heap.
     */
   @transient lazy val tokCache = new java.util.concurrent.ConcurrentHashMap[String, NerFeatures.Tok]()
-  @transient lazy val unaryMemo = new NerFeaturesFast.UnaryMemo(hashIndex)
+  @transient lazy val unaryMemo =
+    new NerFeaturesFast.UnaryMemo(hashIndex, ngramOpts == NerFeatures.NgramOpts.default)
   @transient private lazy val scratch = new ThreadLocal[NerFeaturesFast.Scratch] {
     override def initialValue(): NerFeaturesFast.Scratch = new NerFeaturesFast.Scratch
   }

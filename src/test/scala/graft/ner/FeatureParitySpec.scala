@@ -130,17 +130,23 @@ class FeatureParitySpec extends AnyFunSuite {
       val hash = new NerFeaturesFast.LongIntHash(dict.size)
       dict.forEach((k, v) => hash.put(NerFeaturesFast.fnv(k), v.intValue))
       val scratch = new NerFeaturesFast.Scratch
-      val memo = new NerFeaturesFast.UnaryMemo(hash)
-      val un = memo.row(toks2)
-      for (pos <- words.indices) {
-        val slow = NerFeatures.featuresAt(toks2, pos, Gazette.empty, false, false, false, false, false, false, opt)
-          .map(_.map(f => dict.get(f).intValue))
-        val fast = NerFeaturesFast.idsAt(toks2, un, pos, memo, scratch, Gazette.empty,
-          occPatterns = false, useDistSim = false, useTags = false, useTaggySeq = false,
-          reverse = false, parenMatching = false, ngram = opt)
-        for (g <- 0 until 3)
-          assert(slow(g).toSeq == fast(g).toSeq, s"opt=$opt pos=$pos g=$g word=${words(pos)}")
+      // a model with these options builds its memo without n-grams
+      // (ngrams = false); a memo that holds them must give the same ids
+      for (ngrams <- Seq(false, true)) {
+        val memo = new NerFeaturesFast.UnaryMemo(hash, ngrams)
+        val un = memo.row(toks2)
+        for (pos <- words.indices) {
+          val slow = NerFeatures.featuresAt(toks2, pos, Gazette.empty, false, false, false, false, false, false, opt)
+            .map(_.map(f => dict.get(f).intValue))
+          val fast = NerFeaturesFast.idsAt(toks2, un, pos, memo, scratch, Gazette.empty,
+            occPatterns = false, useDistSim = false, useTags = false, useTaggySeq = false,
+            reverse = false, parenMatching = false, ngram = opt)
+          for (g <- 0 until 3)
+            assert(slow(g).toSeq == fast(g).toSeq, s"opt=$opt ngrams=$ngrams pos=$pos g=$g word=${words(pos)}")
+        }
       }
+      assert(new NerFeaturesFast.UnaryMemo(hash, false).pad.hs.length <
+        new NerFeaturesFast.UnaryMemo(hash).pad.hs.length, "n-grams hashed without use")
     }
   }
 
@@ -403,21 +409,29 @@ class FeatureParitySpec extends AnyFunSuite {
     assert(m.tag(words).length == words.length)
   }
 
-  test("unary memo: growth stops at its bound; ids and tags stay exact past it") {
+  test("unary memo: stays under its bound; ids and tags stay exact past it") {
     val m = copyOf(NerModels.default(SparkTestSession.spark).value)
-    val bound = NerFeaturesFast.UnaryMemo.MaxSlots
-    // distinct 9-char words, 35 hash slots an entry: 150k of them overfill it
+    val memo = m.unaryMemo
+    val bound = NerFeaturesFast.UnaryMemo.MaxBytes
+    // distinct 9-char words (35 hash slots an entry): 300k of them pass the
+    // bound more than once
     def doc(d: Int) = (0 until 100).map(i => f"W$d%05d$i%03d")
-    for (d <- 0 until 1500) m.encodeFast(doc(d))
-    val full = m.unaryMemo.size
-    assert(m.unaryMemo.slots <= bound && m.unaryMemo.slots > bound - 35, s"${m.unaryMemo.slots}")
-    for (d <- 1500 until 1520) {
-      assertParity(m, doc(d)) // words past the bound: hashed per document
-      val words = doc(d) :+ "Alice" :+ "Johnson" :+ "."
+    var emptied = 0
+    var last = 0
+    for (d <- 0 until 3000) {
+      m.encodeFast(doc(d))
+      assert(memo.bytes <= bound, s"${memo.bytes} after document $d")
+      if (memo.size < last) emptied += 1
+      last = memo.size
+    }
+    assert(emptied >= 2, s"the memo emptied $emptied times")
+    for (d <- 0 until 20) {
+      assertParity(m, doc(d)) // words of the first fill: gone, hashed again
+      val words = doc(3000 + d) :+ "Alice" :+ "Johnson" :+ "."
       val slow = m.encode(m.preprocess(words))
       assert(m.tag(words).toSeq ==
         Crf.viterbi(Crf.logPotentials(slow, m.params), m.params).map(m.classIndex).toSeq)
     }
-    assert(m.unaryMemo.size == full, "growth did not stop")
+    assert(memo.bytes <= bound)
   }
 }
