@@ -2,7 +2,7 @@ package graft
 
 import graft.kg.{ConnectedComponents, EntityLink, KgPipeline, TripleRules}
 import graft.ner.{NerModels, Tagger}
-import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.ops.{Dedup, Hashing, Multimodal, Similarity, TextAnalysis}
 import graft.pipeline.Transcripts
 import graft.streaming.StreamingIngest
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -25,15 +25,33 @@ object SparkEntry {
     * invocation and serialized (q02 touches five tables = ~0.3 s before any
     * execution). The memo caches only the resolved DataFrame HANDLE (logical
     * plan + schema — metadata, not data): every execution still scans the
-    * parquet inputs from disk, so this is not result caching. Entries are
-    * plan-sized and keyed by (session, dir, name); sessions per JVM are few
-    * and short-lived entries die with the process.
+    * parquet inputs from disk, so this is not result caching. An entry is
+    * kept with its table's listing (every file's path, length and mtime) and
+    * read again when the listing differs, so a table rewritten mid-session is
+    * never read from its old files; entries of a stopped session are dropped.
     */
-  private val tableMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    tableMemo.computeIfAbsent((s, dir, name),
-      _ => s.read.parquet(s"$dir/$name.parquet"))
+  private final case class Handle(listing: Long, df: DataFrame)
+  private val tableMemo = new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Handle]()
+  private def t(s: SparkSession, dir: String, name: String): DataFrame = {
+    tableMemo.keySet.removeIf(_._1.sparkContext.isStopped)
+    val path = s"$dir/$name.parquet"
+    val now = listing(s, path)
+    tableMemo.compute((s, path),
+      (_, h) => if (h != null && h.listing == now) h else Handle(now, s.read.parquet(path))).df
+  }
+
+  /** Hash of every file under `path` (path, length, modification time).
+    * `listStatus` reads no permissions, so a local listing forks nothing. */
+  private def listing(s: SparkSession, path: String): Long = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    def walk(p: org.apache.hadoop.fs.Path): Iterator[String] =
+      fs.listStatus(p).iterator.flatMap { st =>
+        if (st.isDirectory) walk(st.getPath)
+        else Iterator(s"${st.getPath}\t${st.getLen}\t${st.getModificationTime}")
+      }
+    if (!fs.exists(root)) 0L else Hashing.fnv1a64(walk(root).toSeq.sorted.mkString("\n"))
+  }
 
   /** Conversation count scales with the sf directory (sandbox stand-in for
     * the 10^12-turn Iceberg table).

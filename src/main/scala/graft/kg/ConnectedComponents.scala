@@ -47,7 +47,13 @@ object ConnectedComponents {
     // cached relation — round-1 review finding) and the ContextCleaner frees
     // the blocks once the returned result becomes unreachable.
     val raw = edges.toDF("u", "v").localCheckpoint()
-    if (localMaxEdges >= 0 && raw.count() <= localMaxEdges) return runLocal(spark, raw)
+    if (localMaxEdges >= 0) {
+      // size gate and collect in one bounded probe (one job, a single task
+      // that stops after `cap` rows): a graph that fits arrives whole
+      val cap = math.min(localMaxEdges, Int.MaxValue - 1L).toInt + 1
+      val probe = raw.coalesce(1).limit(cap).as[(Long, Long)].collect()
+      if (probe.length < cap) return runLocal(spark, probe)
+    }
     var e: DataFrame = raw
       .where($"u" =!= $"v")
       .select(least($"u", $"v").as("v"), greatest($"u", $"v").as("u"))
@@ -96,9 +102,7 @@ object ConnectedComponents {
     * local-vs-distributed agreement; q19/q44/q64 hash-gate it against the
     * oracle's recursive closure.
     */
-  private def runLocal(spark: SparkSession, raw: DataFrame): DataFrame = {
-    import spark.implicits._
-    val es = raw.as[(Long, Long)].collect()
+  private def runLocal(spark: SparkSession, es: Array[(Long, Long)]): DataFrame = {
     val parent = scala.collection.mutable.LongMap.empty[Long]
     def find(x0: Long): Long = {
       var x = x0

@@ -1,5 +1,6 @@
 package graft.kg
 
+import graft.io.NioLocalFileSystem
 import graft.pipeline.Triple
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -145,6 +146,9 @@ object GraphMaterializer {
 
   /** Write `df` partitioned by `partCols` with per-partition lineage.
     * Returns the per-partition counts written (or previously recorded).
+    * Both writes use `NioLocalFileSystem.WriteOptions`: without the native
+    * Hadoop library, every file and directory of a local write would cost a
+    * `chmod` fork.
     */
   private def writeWithLineage(df: DataFrame, tableDir: String, partCols: Seq[String],
       outDir: String, stage: String, fingerprint: String): Map[String, Long] = {
@@ -157,7 +161,7 @@ object GraphMaterializer {
         // selective repair: recompute ONLY the damaged partitions; dynamic
         // overwrite replaces just the partitions present in the written data
         df.where(partPath.isin(missing.toSeq: _*))
-          .write.mode(SaveMode.Overwrite)
+          .write.mode(SaveMode.Overwrite).options(NioLocalFileSystem.WriteOptions)
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy(partCols: _*)
           .parquet(tableDir)
@@ -171,7 +175,7 @@ object GraphMaterializer {
         // from parquet metadata, so no stage recompute and no data columns.
         val obs = org.apache.spark.sql.Observation(s"lineage-$stage-${System.nanoTime()}")
         df.observe(obs, count(lit(1)).as("rows"))
-          .write.mode(SaveMode.Overwrite)
+          .write.mode(SaveMode.Overwrite).options(NioLocalFileSystem.WriteOptions)
           .partitionBy(partCols: _*)
           .parquet(tableDir)
         val written = obs.get.apply("rows").asInstanceOf[Long]

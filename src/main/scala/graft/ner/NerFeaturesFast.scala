@@ -201,27 +201,48 @@ object NerFeaturesFast {
   }
 
   /** Token → `Unary` memo for ONE dictionary (a model holds its own, so ids
-    * of one dictionary never reach another). `ngrams` (the model's
-    * `NgramOpts` is the default) adds the n-gram block; other models never
-    * read it. The entries' heap, charged per entry by `UnaryMemo.cost`, stays
-    * under `UnaryMemo.MaxBytes`: an entry that would pass it empties the
-    * memo first, so words that keep coming back return after one-off tokens
-    * (IDs, numbers, URLs) have filled it. Entries go in through
-    * `putIfAbsent` of a concurrent map, so task threads share them safely.
+    * of one dictionary never reach another), together with the word → `Tok`
+    * cache whose tokens key it. `ngrams` (the model's `NgramOpts` is the
+    * default) adds the n-gram block; other models never read it. The heap of
+    * both maps' entries, charged per entry by `UnaryMemo.tokCost` and
+    * `UnaryMemo.cost`, stays under `UnaryMemo.MaxBytes`: an entry that would
+    * pass it empties both maps first, so words that keep coming back return
+    * after one-off tokens (IDs, numbers, URLs) have filled them, and the
+    * memo's keys stay the cache's own tokens. Entries go in through
+    * `putIfAbsent` of concurrent maps, so task threads share them safely.
     */
   final class UnaryMemo(val dict: LongIntHash, val ngrams: Boolean = true) {
+    private val toks = new java.util.concurrent.ConcurrentHashMap[String, Tok]()
     private val map = new java.util.concurrent.ConcurrentHashMap[Tok, Unary]()
     private val used = new java.util.concurrent.atomic.AtomicLong()
     /** The entry of the padding token read outside the document. */
     val pad: Unary = unary(NerFeatures.Pad, dict, ngrams)
+
+    /** Charges `n` bytes, emptying both maps first if they would pass the
+      * bound; false when one entry alone would pass it (not stored). */
+    private def charge(n: Long): Boolean =
+      n <= UnaryMemo.MaxBytes && {
+        if (used.addAndGet(n) > UnaryMemo.MaxBytes) { toks.clear(); map.clear(); used.set(n) }
+        true
+      }
+
+    /** The cached token of word `w`, made by `make` on a miss. */
+    def tok(w: String, make: String => Tok): Tok = {
+      val hit = toks.get(w)
+      if (hit != null) return hit
+      val t = make(w)
+      val n = UnaryMemo.tokCost(w, t)
+      if (!charge(n)) return t
+      val prev = toks.putIfAbsent(w, t)
+      if (prev == null) t else { used.addAndGet(-n); prev }
+    }
 
     def apply(t: Tok): Unary = {
       val hit = map.get(t)
       if (hit != null) return hit
       val u = unary(t, dict, ngrams)
       val n = UnaryMemo.cost(u)
-      if (n > UnaryMemo.MaxBytes) return u
-      if (used.addAndGet(n) > UnaryMemo.MaxBytes) { map.clear(); used.set(n) }
+      if (!charge(n)) return u
       val prev = map.putIfAbsent(t, u)
       if (prev == null) u else { used.addAndGet(-n); prev }
     }
@@ -235,23 +256,32 @@ object NerFeaturesFast {
     }
 
     def size: Int = map.size
+    def tokens: Int = toks.size
     /** Heap charged to the stored entries: at most `MaxBytes`. An entry put
-      * by one thread while another empties the memo may go uncharged until
+      * by one thread while another empties the maps may go uncharged until
       * the next emptying. */
     def bytes: Long = used.get
   }
 
   object UnaryMemo {
-    /** Heap of one entry besides its slots, as measured on JDK 17 with
-      * compressed oops: 124 bytes for the map node, the `Unary` and its two
-      * arrays' headers, plus 155 for a key of a 9-char word that
-      * `NerModel.tokCache` does not share (Tok, word and shape strings). */
-    final val EntryBytes = 280L
-    /** 64 MiB: about 95k words of 9 chars (35 slots, 700 bytes charged). */
+    /** Heap of one `Unary` entry besides its slots, as measured on JDK 17
+      * with compressed oops: the map node, the `Unary` and its two arrays'
+      * headers. Its key is charged with its word (`tokCost`). */
+    final val EntryBytes = 124L
+    /** Heap of one cached token besides its strings' characters: the map
+      * node, the `Tok` and the word and shape strings' headers. Measured on
+      * JDK 17, a 9-char word's token retains 176-194 bytes (charged 196). */
+    final val TokBytes = 150L
+    /** 64 MiB: about 90k words of 9 chars (35 slots; 740 bytes charged for
+      * the entry and its token). */
     final val MaxBytes: Long = 64L << 20
     /** Heap charged to `u`: `EntryBytes` plus 12 bytes a slot (a hash and an
       * id; measured 11.8). */
     def cost(u: Unary): Long = EntryBytes + 12L * u.hs.length
+    /** Heap charged to the token `t` of word `w`: `TokBytes` plus two bytes
+      * a char of its strings (the fixed word counted even when it is `w`). */
+    def tokCost(w: String, t: Tok): Long =
+      TokBytes + 2L * (w.length + t.word.length + t.shape.length)
   }
 
   private val suffixC = "|C"

@@ -100,32 +100,32 @@ final class NerModel(
     t
   }
 
-  /** word → preprocessed token memo (shape strings are pure functions of the
-    * word under a frozen knownLCWords set, so they are vocabulary-cacheable —
-    * the reference memoizes ngrams the same way, NERFeatureFactory.java:1198-1200).
-    * Bounded at 2M words. Its tokens key `unaryMemo`, which holds each word's
-    * single-token feature hashes and their ids in THIS model's dictionary
-    * (n-grams under the default NgramOpts, WORD, PW, NW, TYPE, ...; see
-    * NerFeaturesFast), computed once per distinct word; that memo empties
-    * itself rather than pass `NerFeaturesFast.UnaryMemo.MaxBytes` of heap.
+  /** Each word's single-token feature hashes and their ids in THIS model's
+    * dictionary (n-grams under the default NgramOpts, WORD, PW, NW, TYPE,
+    * ...; see NerFeaturesFast), computed once per distinct word, and the
+    * word → preprocessed token cache whose tokens key them (shape strings are
+    * pure functions of the word under a frozen knownLCWords set, so they are
+    * vocabulary-cacheable — the reference memoizes ngrams the same way,
+    * NERFeatureFactory.java:1198-1200). Both empty together rather than pass
+    * `NerFeaturesFast.UnaryMemo.MaxBytes` of heap.
     */
-  @transient lazy val tokCache = new java.util.concurrent.ConcurrentHashMap[String, NerFeatures.Tok]()
   @transient lazy val unaryMemo =
     new NerFeaturesFast.UnaryMemo(hashIndex, ngramOpts == NerFeatures.NgramOpts.default)
   @transient private lazy val scratch = new ThreadLocal[NerFeaturesFast.Scratch] {
     override def initialValue(): NerFeaturesFast.Scratch = new NerFeaturesFast.Scratch
   }
 
-  private def tok(w: String): NerFeatures.Tok = {
-    var t = tokCache.get(w)
-    if (t == null) {
-      val fixed = fix(w)
-      t = NerFeatures.Tok(fixed, WordShape.dan2(w, knownLC.contains),
-        distSim.map(_.clusterOf(fixed)).orNull)
-      if (tokCache.size < 2000000) tokCache.put(w, t) // bound executor memory
-    }
-    t
+  /** Preprocess one raw word: shape from the ORIGINAL word (with frozen
+    * knownLCWords), then timex word fix — matching ObjectBankWrapper.doBasicStuff
+    * ordering (ObjectBankWrapper.java:131-155).
+    */
+  private def mkTok(w: String): NerFeatures.Tok = {
+    val fixed = fix(w)
+    NerFeatures.Tok(fixed, WordShape.dan2(w, knownLC.contains), distSim.map(_.clusterOf(fixed)).orNull)
   }
+  @transient private lazy val mkTokF: String => NerFeatures.Tok = mkTok
+
+  private def tok(w: String): NerFeatures.Tok = unaryMemo.tok(w, mkTokF)
 
   /** Fast encode: feature hashing, no string materialization (parity with
     * `encode` pinned by FeatureParitySpec).
@@ -160,16 +160,8 @@ final class NerModel(
     if (useReverse) out.reverse else out
   }
 
-  /** Preprocess raw token words: shape from the ORIGINAL word (with frozen
-    * knownLCWords), then timex word fix — matching ObjectBankWrapper.doBasicStuff
-    * ordering (ObjectBankWrapper.java:131-155).
-    */
-  def preprocess(words: IndexedSeq[String]): IndexedSeq[NerFeatures.Tok] =
-    words.map { w =>
-      val fixed = fix(w)
-      NerFeatures.Tok(fixed, WordShape.dan2(w, knownLC.contains),
-        distSim.map(_.clusterOf(fixed)).orNull)
-    }
+  /** Preprocess raw token words (see `mkTok`). */
+  def preprocess(words: IndexedSeq[String]): IndexedSeq[NerFeatures.Tok] = words.map(mkTok)
 
   /** Encode a preprocessed document; features unseen at train time are dropped
     * (reference semantic: CRFClassifier.java:200-207).

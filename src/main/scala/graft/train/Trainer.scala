@@ -3,6 +3,7 @@ package graft.train
 import breeze.linalg.DenseVector
 import breeze.optimize.{DiffFunction, LBFGS}
 import graft.core.Crf
+import graft.io.NioLocalFileSystem
 import graft.ner.{Gazette, NerFeatures, NerModel}
 import graft.text.WordShape
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
@@ -450,7 +451,8 @@ object Trainer {
         for (dir <- cfg.processedDataDir) {
         encoded.map { case (e, l) =>
           (e.map(_.map(_.toSeq).toSeq).toSeq, l.toSeq)
-        }.write.mode("overwrite").parquet(s"$dir/encoded.parquet")
+        }.write.mode("overwrite").options(NioLocalFileSystem.WriteOptions)
+          .parquet(s"$dir/encoded.parquet")
         saveProcessedMeta(dir, ProcessedMeta(featureFlags(cfg), knownLC, classIndex,
           sorted, observedPairs))
         System.err.println(s"[trainer] processed-data artifact written to $dir (${sorted.length} features)")

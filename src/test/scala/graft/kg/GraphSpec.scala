@@ -5,6 +5,7 @@ import graft.pipeline.{SparkTestSession, Transcripts}
 import graft.ner.Tagger
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 
 class GraphSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -76,5 +77,38 @@ class GraphSpec extends AnyFunSuite {
     // repaired table has the full recorded row count
     val total = spark.read.parquet(s"$out/nodes").count()
     assert(total == counts.values.sum, s"rows $total != recorded ${counts.values.sum}")
+  }
+
+  test("graph tables get the same file and directory modes as a write through Hadoop's stock local file system") {
+    val model = NerModels.default(spark)
+    val turns = Transcripts.synth(spark, 60L)
+    val triples = KgPipeline.triples(turns, model)
+    val linked = EntityLink.link(Tagger.mentions(turns, model))
+    val out = Files.createTempDirectory("kgmodes").toString
+    val plain = Files.createTempDirectory("kgmodes-plain").toString
+    // each table is also written from the same DataFrame without the
+    // engine's writer options, so both trees have the same layout
+    val both = new GraphMaterializer.GraphSink {
+      def write(df: org.apache.spark.sql.DataFrame, tableDir: String, partCols: Seq[String],
+          outDir: String, stage: String, fingerprint: String): Map[String, Long] = {
+        df.write.partitionBy(partCols: _*).parquet(s"$plain/$stage")
+        GraphMaterializer.ParquetBucketSink.write(df, tableDir, partCols, outDir, stage, fingerprint)
+      }
+    }
+    GraphMaterializer.materialize(triples, linked, out, fingerprint = "modes", sink = both)
+    // path (part-file ids dropped) -> mode, for the table dir and all below it
+    def modes(root: String): Map[String, Int] = {
+      val r = Paths.get(root)
+      val walk = Files.walk(r)
+      try walk.iterator().asScala.map { p =>
+        r.relativize(p).toString.replaceAll("part-(\\d+)-[0-9a-f-]{36}", "part-$1") ->
+          (Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff)
+      }.toMap finally walk.close()
+    }
+    for (table <- Seq("nodes", "edges")) {
+      val got = modes(s"$out/$table")
+      assert(got.keys.exists(_.endsWith(".parquet.crc")) && got.keys.exists(_.contains("=")), got.keys)
+      assert(got == modes(s"$plain/$table"), table)
+    }
   }
 }

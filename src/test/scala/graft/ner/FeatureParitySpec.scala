@@ -434,4 +434,31 @@ class FeatureParitySpec extends AnyFunSuite {
     }
     assert(memo.bytes <= bound)
   }
+
+  test("token cache: empties with the unary memo under one bound; tags stay exact") {
+    val m = copyOf(NerModels.default(SparkTestSession.spark).value)
+    val memo = m.unaryMemo
+    val bound = NerFeaturesFast.UnaryMemo.MaxBytes
+    // distinct 12-char words; 120k of them pass the shared bound
+    def doc(d: Int) = (0 until 100).map(i => f"Tok$d%05d$i%04d")
+    var emptied = 0
+    var last = (0, 0)
+    for (d <- 0 until 1200) {
+      val words = doc(d)
+      val slow = m.encode(m.preprocess(words))
+      assert(m.tag(words).toSeq ==
+        Crf.viterbi(Crf.logPotentials(slow, m.params), m.params).map(m.classIndex).toSeq, s"document $d")
+      assert(memo.bytes <= bound, s"${memo.bytes} after document $d")
+      val now = (memo.tokens, memo.size)
+      // the two maps empty together: in a document that empties one, the
+      // other shrinks too
+      if (now._1 < last._1 || now._2 < last._2) {
+        assert(now._1 < last._1 && now._2 < last._2, s"$last -> $now after document $d")
+        emptied += 1
+      }
+      last = now
+    }
+    assert(emptied >= 1, s"the token cache emptied $emptied times")
+    assertParity(m, doc(0)) // words of the first fill: gone, made again
+  }
 }
