@@ -1,6 +1,6 @@
 package graft
 
-import graft.kg.{ConnectedComponents, EntityLink, KgPipeline, TripleRules}
+import graft.kg.{ConnectedComponents, EntityLink, GraphMaterializer, KgPipeline, TripleRules}
 import graft.ner.{NerModels, Tagger}
 import graft.ops.{Dedup, Hashing, Multimodal, Similarity, TextAnalysis}
 import graft.pipeline.Transcripts
@@ -213,7 +213,7 @@ object SparkEntry {
     "q17_dedup_prefix" -> ((s, d) => Dedup.prefixKey(t(s, d, "documents"), k = 2)),
     // skew guard ON (maxShingleFreq=200): stop-shingles above the cap are
     // dropped from candidate generation — without it a hot boilerplate
-    // shingle fans out quadratically in the self-join (round-1 bench: q18 was
+    // shingle fans out quadratically in the pair loop (round-1 bench: q18 was
     // 332s of the 403s total at sf0.1 with the cap disabled; the oracle CTE
     // mirrors the cap exactly so the row stays hash-green).
     "q18_jaccard_pairs" -> ((s, d) =>
@@ -232,7 +232,7 @@ object SparkEntry {
     "q22_knn_brute" -> ((s, d) => Similarity.bruteForceTopK(t(s, d, "embeddings"), k = 5, queryMod = 50)),
     "q23_knn_lsh" -> ((s, d) => Similarity.lshTopK(t(s, d, "embeddings"), k = 5, queryMod = 50)),
     "q26_knn_ivf" -> ((s, d) => Similarity.ivfTopK(t(s, d, "embeddings"), k = 5, queryMod = 50)),
-    // blocked exact all-pairs (tile equi-join), NOT the broadcast cartesian:
+    // blocked exact all-pairs (tile pair loop), NOT the broadcast cartesian:
     // same rows as the brute baseline, but distributed O(n^2/p) with no
     // driver-side materialization (round-1 review finding)
     "q24_embed_pairs" -> ((s, d) => Similarity.cosinePairsBlocked(t(s, d, "embeddings"), tau = 0.4)),
@@ -251,29 +251,18 @@ object SparkEntry {
     "q33_entity_link" -> ((s, d) =>
       EntityLink.link(Tagger.mentions(turns(s, d), NerModels.default(s)))),
     "q34_graph_nodes" -> ((s, d) => {
-      val linked = EntityLink.link(Tagger.mentions(turns(s, d), NerModels.default(s)))
-      linked.groupBy(col("entity_id"), col("etype"))
-        .agg(sum(col("n_mentions")).as("n_mentions"),
-          max(struct(col("n_mentions").as("c"), col("canonical_surface").as("s")))
-            .getField("s").as("canonical_surface"),
-          count(lit(1)).as("n_surfaces"))
+      GraphMaterializer.rollupNodes(EntityLink.link(Tagger.mentions(turns(s, d), NerModels.default(s))))
     }),
     "q35_graph_edges" -> ((s, d) => {
       val model = NerModels.default(s)
       // ONE tagging pass feeds both triples and mentions (pinned per-turn
       // rows, KgPipeline.triplesAndMentions); the linking result is pinned
-      // too, so surfaceMap's size guard and both joins replay blocks instead
-      // of re-running tag -> link (round-2 review finding: 4x recompute)
+      // too, so the surface map's size guard and both joins replay blocks
+      // instead of re-running tag -> link (round-2 review finding: 4x
+      // recompute)
       val (tps, ments) = KgPipeline.triplesAndMentions(turns(s, d), model)
       val linked = EntityLink.link(ments).localCheckpoint()
-      // size-guarded broadcast of the vocabulary-sized surface map
-      val surfMap = graft.kg.GraphMaterializer.surfaceMap(linked)
-        .drop("canonical_surface")
-      tps.toDF()
-        .join(surfMap.withColumnRenamed("etype", "subj_type").withColumnRenamed("surface", "subj")
-          .withColumnRenamed("entity_id", "subj_id"), Seq("subj_type", "subj"))
-        .join(surfMap.withColumnRenamed("etype", "obj_type").withColumnRenamed("surface", "obj")
-          .withColumnRenamed("entity_id", "obj_id"), Seq("obj_type", "obj"))
+      GraphMaterializer.joinEndpoints(tps.toDF(), linked)
         .groupBy(col("subj_id"), col("pred"), col("obj_id"))
         .agg(count(lit(1)).as("weight"))
     }),
@@ -367,21 +356,12 @@ object SparkEntry {
     // the hash-CRF streams, via the REAL EntityLink/GraphMaterializer code —
     // the last KG stage under the driver's hash gate
     "q45_graph_nodes" -> ((s, d) => {
-      EntityLink.link(hashCrfMentions(s, d))
-        .groupBy(col("entity_id"), col("etype"))
-        .agg(sum(col("n_mentions")).as("n_mentions"),
-          max(struct(col("n_mentions").as("c"), col("canonical_surface").as("s")))
-            .getField("s").as("canonical_surface"),
-          count(lit(1)).as("n_surfaces"))
+      GraphMaterializer.rollupNodes(EntityLink.link(hashCrfMentions(s, d)))
     }),
     "q46_graph_edges" -> ((s, d) => {
       val tps = hashCrfTriples(s, d)
       val linked = EntityLink.link(hashCrfMentions(s, d)).localCheckpoint()
-      val surfMap = graft.kg.GraphMaterializer.surfaceMap(linked).drop("canonical_surface")
-      tps.join(surfMap.withColumnRenamed("etype", "subj_type").withColumnRenamed("surface", "subj")
-          .withColumnRenamed("entity_id", "subj_id"), Seq("subj_type", "subj"))
-        .join(surfMap.withColumnRenamed("etype", "obj_type").withColumnRenamed("surface", "obj")
-          .withColumnRenamed("entity_id", "obj_id"), Seq("obj_type", "obj"))
+      GraphMaterializer.joinEndpoints(tps.toDF(), linked)
         .groupBy(col("subj_id"), col("pred"), col("obj_id"))
         .agg(count(lit(1)).as("weight"))
     }),
@@ -511,23 +491,13 @@ object SparkEntry {
     }),
     "q60_trained_transcripts_nodes" -> ((s, d) => {
       val bc = s.sparkContext.broadcast(TrainedTranscriptsCrf.model(s))
-      EntityLink.link(Tagger.mentions(turns(s, d), bc))
-        .groupBy(col("entity_id"), col("etype"))
-        .agg(sum(col("n_mentions")).as("n_mentions"),
-          max(struct(col("n_mentions").as("c"), col("canonical_surface").as("s")))
-            .getField("s").as("canonical_surface"),
-          count(lit(1)).as("n_surfaces"))
+      GraphMaterializer.rollupNodes(EntityLink.link(Tagger.mentions(turns(s, d), bc)))
     }),
     "q61_trained_transcripts_edges" -> ((s, d) => {
       val bc = s.sparkContext.broadcast(TrainedTranscriptsCrf.model(s))
       val (tps, ments) = KgPipeline.triplesAndMentions(turns(s, d), bc)
       val linked = EntityLink.link(ments).localCheckpoint()
-      val surfMap = graft.kg.GraphMaterializer.surfaceMap(linked).drop("canonical_surface")
-      tps.toDF()
-        .join(surfMap.withColumnRenamed("etype", "subj_type").withColumnRenamed("surface", "subj")
-          .withColumnRenamed("entity_id", "subj_id"), Seq("subj_type", "subj"))
-        .join(surfMap.withColumnRenamed("etype", "obj_type").withColumnRenamed("surface", "obj")
-          .withColumnRenamed("entity_id", "obj_id"), Seq("obj_type", "obj"))
+      GraphMaterializer.joinEndpoints(tps.toDF(), linked)
         .groupBy(col("subj_id"), col("pred"), col("obj_id"))
         .agg(count(lit(1)).as("weight"))
     }),
@@ -550,22 +520,13 @@ object SparkEntry {
     }),
     "q52_trained_graph_nodes" -> ((s, d) => {
       val (docs, bc) = trainedOver(s, d)
-      EntityLink.link(crfMentionsOf(s, docs, bc))
-        .groupBy(col("entity_id"), col("etype"))
-        .agg(sum(col("n_mentions")).as("n_mentions"),
-          max(struct(col("n_mentions").as("c"), col("canonical_surface").as("s")))
-            .getField("s").as("canonical_surface"),
-          count(lit(1)).as("n_surfaces"))
+      GraphMaterializer.rollupNodes(EntityLink.link(crfMentionsOf(s, docs, bc)))
     }),
     "q53_trained_graph_edges" -> ((s, d) => {
       val (docs, bc) = trainedOver(s, d)
       val tps = crfTriplesOf(s, docs, bc)
       val linked = EntityLink.link(crfMentionsOf(s, docs, bc)).localCheckpoint()
-      val surfMap = graft.kg.GraphMaterializer.surfaceMap(linked).drop("canonical_surface")
-      tps.join(surfMap.withColumnRenamed("etype", "subj_type").withColumnRenamed("surface", "subj")
-          .withColumnRenamed("entity_id", "subj_id"), Seq("subj_type", "subj"))
-        .join(surfMap.withColumnRenamed("etype", "obj_type").withColumnRenamed("surface", "obj")
-          .withColumnRenamed("entity_id", "obj_id"), Seq("obj_type", "obj"))
+      GraphMaterializer.joinEndpoints(tps.toDF(), linked)
         .groupBy(col("subj_id"), col("pred"), col("obj_id"))
         .agg(count(lit(1)).as("weight"))
     }),

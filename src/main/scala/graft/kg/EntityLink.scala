@@ -1,34 +1,32 @@
 package graft.kg
 
-import graft.ops.Hashing
+import graft.ops.{BucketPairs, Hashing}
 import graft.pipeline.Mention
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Entity linking + surface-form canonicalization (north rule): MinHash-LSH
-  * blocking over character-shingled normalized surfaces, a batched
-  * candidate-pair scoring join, then iterative connected components to form
+  * blocking over character-shingled normalized surfaces, exact-Jaccard
+  * verification of the candidate pairs, then connected components to form
   * canonical entity clusters.
   *
   * Scale design:
   *  - blocking works on DISTINCT (etype, surface) pairs, not raw mentions —
   *    the groupBy collapses the 10^12-turn mention stream to the vocabulary
-  *    of surface forms before any pairwise work (the only full shuffle).
-  *  - candidate generation is an equi-join on (etype, band, bandKey); hot
-  *    buckets (stop-word-like surfaces) are handled by AQE skew-join
-  *    splitting plus a per-bucket cap; pairs are scored partition-locally
-  *    with exact Jaccard (no second shuffle).
+  *    of surface forms before any pairwise work.
+  *  - candidate pairs come from each (etype, band, bandKey) bucket's run of
+  *    surfaces (BucketPairs); a bucket of more than `MaxBucketSize` surfaces
+  *    (stop-word-like) is dropped whole, so a hot key costs O(cap) memory and
+  *    no pairs.
   *  - clustering uses ConnectedComponents (log-round star contraction).
   */
 object EntityLink {
 
-  final case class Config(
-      shingleSize: Int = 3,
-      numHashes: Int = 32,
-      bands: Int = 8, // rows = numHashes / bands = 4
-      minJaccard: Double = 0.55,
-      maxBucketSize: Int = 64 // cap candidate bucket fan-out (skew guard)
-  )
+  private val ShingleSize = 3
+  private val NumHashes = 32
+  private val Bands = 8 // rows = NumHashes / Bands = 4
+  private val MinJaccard = 0.55
+  private val MaxBucketSize = 64
 
   private val titleTokens = Set("dr.", "mr.", "ms.", "mrs.", "prof.", "sen.", "miss", "sir")
 
@@ -54,63 +52,28 @@ object EntityLink {
       .withColumn("surface_id", sid($"etype", $"surface"))
   }
 
-  /** Similarity edges between surface ids of the same entity type.
-    * r6 (guide §2.4, same rewrite as Dedup.minHashPairs): candidate pairs
-    * come straight from each (etype, band, key) bucket's posting list — the
-    * old self-join evaluated the banded minhash flatMap TWICE (probe +
-    * broadcast build) at any scale and needed a separate window pass for the
-    * bucket-size cap. One explicit-count shuffle (AQE would coalesce an
-    * ENSURE_REQUIREMENTS exchange at small sizes), streamed run-grouping; a
-    * bucket above maxBucketSize emits nothing, exactly like the old
-    * `bsz <= cap` filter which dropped the whole bucket before pairing.
+  /** Similarity edges between surface ids of the same entity type: pairs
+    * sharing a (etype, band, key) bucket whose Jaccard reaches MinJaccard.
     */
-  def similarityEdges(surfaces: DataFrame, cfg: Config = Config()): Dataset[(Long, Long)] = {
+  def similarityEdges(surfaces: DataFrame): Dataset[(Long, Long)] = {
     val spark = surfaces.sparkSession
     import spark.implicits._
-    val shSize = cfg.shingleSize; val k = cfg.numHashes; val bands = cfg.bands
-    val rows = k / bands
-    val p = spark.sparkContext.defaultParallelism
-    val maxBucket = cfg.maxBucketSize
+    val rows = NumHashes / Bands
     // one row per (etype, band, bandKey, surface_id, norm)
     val banded = surfaces.select($"etype", $"surface_id", $"norm").as[(String, Long, String)]
       .flatMap { case (etype, sid, norm) =>
-        val sig = Hashing.minHash(Hashing.charShingles(norm, shSize), k)
-        Hashing.bandKeys(sig, bands, rows).iterator.zipWithIndex.map { case (bk, b) =>
+        val sig = Hashing.minHash(Hashing.charShingles(norm, ShingleSize), NumHashes)
+        Hashing.bandKeys(sig, Bands, rows).iterator.zipWithIndex.map { case (bk, b) =>
           (etype, b, bk, sid, norm)
         }
       }.toDF("etype", "band", "key", "sid", "norm")
-    val tau = cfg.minJaccard
     val jac = udf((a: String, b: String) =>
-      Hashing.jaccard(Hashing.charShingles(a, shSize), Hashing.charShingles(b, shSize)))
-    banded.repartition(p, $"etype", $"band", $"key")
-      .sortWithinPartitions($"etype", $"band", $"key")
-      .select($"etype", $"band", $"key", $"sid", $"norm").as[(String, Int, Long, Long, String)]
-      .mapPartitions { it =>
-        val buf = it.buffered
-        new Iterator[(Long, Long, String, String)] {
-          private var pending: Iterator[(Long, Long, String, String)] = Iterator.empty
-          private def advance(): Unit =
-            while (!pending.hasNext && buf.hasNext) {
-              val key = (buf.head._1, buf.head._2, buf.head._3)
-              val rowsB = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
-              var over = false
-              while (buf.hasNext && (buf.head._1, buf.head._2, buf.head._3) == key) {
-                val r = buf.next()
-                if (!over) { rowsB += ((r._4, r._5)); if (rowsB.length > maxBucket) { over = true; rowsB.clear() } }
-              }
-              if (!over && rowsB.length >= 2) {
-                val a = rowsB.sortBy(_._1).toArray
-                pending = a.indices.iterator.flatMap(i =>
-                  Iterator.range(i + 1, a.length).map(j =>
-                    (a(i)._1, a(j)._1, a(i)._2, a(j)._2)))
-              }
-            }
-          def hasNext: Boolean = { advance(); pending.hasNext }
-          def next(): (Long, Long, String, String) = { advance(); pending.next() }
-        }
-      }
-      .toDF("sid1", "sid2", "norm1", "norm2").distinct()
-      .where(jac($"norm1", $"norm2") >= tau || $"norm1" === $"norm2")
+      Hashing.jaccard(Hashing.charShingles(a, ShingleSize), Hashing.charShingles(b, ShingleSize)))
+    BucketPairs(banded, Seq("etype", "band", "key"), MaxBucketSize)(
+        (r: (String, Int, Long, Long, String)) => (r._1, r._2, r._3)) { run =>
+      BucketPairs.pairs(run)(_._4).map { case (a, b) => (a._4, b._4, a._5, b._5) }
+    }.toDF("sid1", "sid2", "norm1", "norm2").distinct()
+      .where(jac($"norm1", $"norm2") >= MinJaccard || $"norm1" === $"norm2")
       .select($"sid1".as("_1"), $"sid2".as("_2")).as[(Long, Long)]
   }
 
@@ -119,14 +82,14 @@ object EntityLink {
     * (ties: lexicographically smallest surface).
     * Output: (etype, surface, surface_id, n_mentions, entity_id, canonical_surface).
     */
-  def link(mentions: Dataset[Mention], cfg: Config = Config()): DataFrame = {
+  def link(mentions: Dataset[Mention]): DataFrame = {
     val spark = mentions.sparkSession
     import spark.implicits._
     // localCheckpoint, not cache(): one eager scan of the mention stream, no
     // entry left in the cacheManager after link() (round-1 review finding);
     // blocks are freed by the ContextCleaner when the result is dropped.
     val surf = surfaces(mentions).localCheckpoint()
-    val edges = similarityEdges(surf, cfg)
+    val edges = similarityEdges(surf)
     val cc = ConnectedComponents.run(edges) // (id, component)
     val assigned = surf.join(cc.withColumnRenamed("id", "surface_id"), Seq("surface_id"), "left")
       .withColumn("entity_id", coalesce($"component", $"surface_id"))

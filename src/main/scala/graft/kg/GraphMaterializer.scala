@@ -2,7 +2,7 @@ package graft.kg
 
 import graft.io.NioLocalFileSystem
 import graft.pipeline.Triple
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -59,26 +59,43 @@ object GraphMaterializer {
       !read(outDir, stage).exists(_._1 == fingerprint)
   }
 
-  final case class Config(
-      nodeBuckets: Int = 16,
-      edgeBuckets: Int = 16,
-      // Above this many surface rows the surface->entity map no longer gets a
-      // broadcast hint: a blind broadcast of an unbounded vocabulary OOMs the
-      // driver/executors at 100TB scale; past the cap the joins fall back to
-      // shuffle joins with AQE (the triple stream shuffles — unavoidable once
-      // the map exceeds executor memory).
-      maxBroadcastSurfaces: Long = 5000000L)
+  private val NodeBuckets = 16
+  private val EdgeBuckets = 16
+  // Above this many surface rows the surface->entity map no longer gets a
+  // broadcast hint: a blind broadcast of an unbounded vocabulary OOMs the
+  // driver/executors at 100TB scale; past the cap the joins fall back to
+  // shuffle joins with AQE (the triple stream shuffles — unavoidable once
+  // the map exceeds executor memory).
+  private val MaxBroadcastSurfaces = 5000000L
 
-  /** Surface->entity map with a size-guarded broadcast hint (see Config).
-    * Callers that already know the surface count pass it via `knownCount` so
-    * the guard is free; otherwise `linked` should be pinned (localCheckpoint)
-    * before calling, or the count re-runs its whole lineage.
+  /** Per-entity node rollup of a linking result: total mentions, the
+    * canonical surface of the highest-count member (max-struct pick) and the
+    * number of member surfaces.
+    * Output: (entity_id, etype, n_mentions, canonical_surface, n_surfaces).
     */
-  def surfaceMap(linked: DataFrame, maxBroadcastSurfaces: Long = 5000000L,
-      knownCount: Option[Long] = None): DataFrame = {
+  def rollupNodes(linked: DataFrame): DataFrame = {
+    import linked.sparkSession.implicits._
+    linked.groupBy($"entity_id", $"etype")
+      .agg(
+        sum($"n_mentions").as("n_mentions"),
+        max(struct($"n_mentions".as("c"), $"canonical_surface".as("s"))).getField("s").as("canonical_surface"),
+        count(lit(1)).as("n_surfaces"))
+  }
+
+  /** Triples joined on both endpoints to the surface->entity map of a
+    * linking result: adds subj_id, subj_canonical, obj_id and obj_canonical.
+    * The map gets a broadcast hint up to MaxBroadcastSurfaces rows, so the
+    * triple stream itself is not shuffled. `linked` should be pinned
+    * (localCheckpoint) before calling, or the size count re-runs its whole
+    * lineage.
+    */
+  def joinEndpoints(triples: DataFrame, linked: DataFrame): DataFrame = {
     import linked.sparkSession.implicits._
     val sel = linked.select($"etype", $"surface", $"entity_id", $"canonical_surface")
-    if (knownCount.getOrElse(linked.count()) <= maxBroadcastSurfaces) broadcast(sel) else sel
+    val surfMap = if (linked.count() <= MaxBroadcastSurfaces) broadcast(sel) else sel
+    def side(end: String) = surfMap.select($"etype".as(s"${end}_type"), $"surface".as(end),
+      $"entity_id".as(s"${end}_id"), $"canonical_surface".as(s"${end}_canonical"))
+    triples.join(side("subj"), Seq("subj_type", "subj")).join(side("obj"), Seq("obj_type", "obj"))
   }
 
   /** Sink abstraction for the graph tables: write `df` partitioned by
@@ -203,7 +220,6 @@ object GraphMaterializer {
       linked: DataFrame,
       outDir: String,
       fingerprint: String,
-      cfg: Config = Config(),
       sink: GraphSink = ParquetBucketSink): (DataFrame, DataFrame) = {
     val spark = triples.sparkSession
     import spark.implicits._
@@ -212,36 +228,18 @@ object GraphMaterializer {
     // both edge joins (4 consumers); vocabulary-sized, so cheap to pin
     val linkedM = linked.localCheckpoint()
 
-    val nodes = linkedM
-      .groupBy($"entity_id", $"etype")
-      .agg(
-        sum($"n_mentions").as("n_mentions"),
-        max(struct($"n_mentions".as("c"), $"canonical_surface".as("s"))).getField("s").as("canonical_surface"),
-        count(lit(1)).as("n_surfaces"))
-      .withColumn("bucket", pmod(hash($"entity_id"), lit(cfg.nodeBuckets)))
+    val nodes = rollupNodes(linkedM).withColumn("bucket", pmod(hash($"entity_id"), lit(NodeBuckets)))
 
     sink.write(nodes, s"$outDir/nodes", Seq("etype", "bucket"), outDir, "nodes", fingerprint)
 
-    // surface -> entity map is vocabulary-sized: broadcast it into both joins
-    // (size-guarded) so the triple stream itself is never shuffled.
-    val surfMap = surfaceMap(linkedM, cfg.maxBroadcastSurfaces)
-
-    val edges = triples.toDF()
-      .join(surfMap
-          .withColumnRenamed("etype", "subj_type").withColumnRenamed("surface", "subj")
-          .withColumnRenamed("entity_id", "subj_id").withColumnRenamed("canonical_surface", "subj_canonical"),
-        Seq("subj_type", "subj"))
-      .join(surfMap
-          .withColumnRenamed("etype", "obj_type").withColumnRenamed("surface", "obj")
-          .withColumnRenamed("entity_id", "obj_id").withColumnRenamed("canonical_surface", "obj_canonical"),
-        Seq("obj_type", "obj"))
+    val edges = joinEndpoints(triples.toDF(), linkedM)
       .groupBy($"subj_id", $"pred", $"obj_id")
       .agg(
         count(lit(1)).as("weight"),
         first($"subj_canonical").as("subj_canonical"),
         first($"obj_canonical").as("obj_canonical"),
         min($"conv_id").as("sample_conv_id"))
-      .withColumn("bucket", pmod(hash($"subj_id"), lit(cfg.edgeBuckets)))
+      .withColumn("bucket", pmod(hash($"subj_id"), lit(EdgeBuckets)))
 
     sink.write(edges, s"$outDir/edges", Seq("bucket"), outDir, "edges", fingerprint)
     (nodes, edges)

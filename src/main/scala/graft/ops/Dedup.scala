@@ -1,13 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for training-data pipelines, from exact through
   * near-dup. Scale notes per operator are inline; the common theme: collapse
   * to keys/signatures FIRST (map-side, no data movement), shuffle only the
-  * small derived relations, and guard every self-join against skew.
+  * small derived relations, and pair candidates within buckets
+  * (BucketPairs) instead of through self-joins.
   */
 object Dedup {
 
@@ -39,79 +40,39 @@ object Dedup {
       .select(col("doc_id"), col("dup_key"), col("keep_doc_id"), col("group_size"))
   }
 
-  /** Exact n-gram Jaccard pairs >= tau via the classic explode + self-join
-    * formulation (this is also the DuckDB-oracle-checkable reference for the
+  /** Exact n-gram Jaccard pairs >= tau (this is also the reference for the
     * MinHash path). Blocking: only pairs sharing at least one shingle are
-    * generated; `maxShingleFreq` drops stop-shingles that would otherwise
-    * produce quadratic hot-key blowup (the skew lever at 100 TB).
+    * generated, from each shingle's posting list; `maxShingleFreq` drops
+    * stop-shingles that would otherwise produce quadratic hot-key blowup
+    * (the skew lever at 100 TB).
     */
   def ngramJaccardPairs(docs: DataFrame, n: Int = 3, tau: Double = 0.5,
       maxShingleFreq: Int = 200): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     graft.functions.GraftFunctions.register(spark)
-    val p = spark.sparkContext.defaultParallelism
     // Distinct word n-gram shingles per doc via the native codegen'd
-    // expression (empty array for docs with < n tokens — round-1 review
-    // finding: the interpreted sequence/slice formulation both CRASHED on
-    // short docs and cost ~10s/5000 docs). fan: the shingle pass is otherwise
-    // ONE scan task (single parquet split).
+    // expression (empty array for docs with < n tokens). fan: the shingle
+    // pass is otherwise ONE scan task (single parquet split).
     val grams = graft.ops.Par.fan(docs.select(col("doc_id"), col("text")))
       .select(col("doc_id"),
         graft.functions.GraftFunctions.graft_shingles(col("text"), n).as("shingles"))
-    // r6 rewrite (guide §2.4): candidate pairs straight from each shingle's
-    // posting list instead of the window-freq filter + shingle self-join. The
-    // old plan evaluated the exploded+window subtree TWICE (probe + broadcast
-    // build of ~500k shingle rows) and pushed every intersection row through
-    // join machinery. Here the exploded stream shuffles ONCE, partitioned by
-    // shingle (explicit partition count — an ENSURE_REQUIREMENTS exchange
-    // would be AQE-coalesced to one partition at these sizes), and each
-    // posting list above the freq cap emits nothing — identical semantics to
-    // the freq-window filter (shingles are distinct per doc, so rows per
-    // shingle == containing docs). Streaming run-grouping keeps memory
-    // O(cap). Each posting entry CARRIES its doc's shingle count, so the
-    // jaccard denominator is available at aggregation time and the old
-    // sizes relation (an eager localCheckpoint + TWO joins over the ~1.1M
-    // intersection rows at sf0.1) disappears entirely; (n1, n2) are
-    // functions of (doc_id_1, doc_id_2), so the group set is unchanged.
-    // explode_outer + isNotNull (row-identical to explode: element arrays
-    // carry no nulls, so null `sh` marks only empty/null-array docs): a plain
-    // explode makes InferFiltersFromGenerate push `size(graft_shingles(text))
-    // > 0 AND isnotnull(...)` into the SINGLE-TASK scan, evaluating the
-    // shingle expression two extra times per doc before the fan (seen in the
-    // r6 plan); the outer variant admits empty arrays so nothing is inferred,
-    // and the output-attribute filter cannot be pushed below the Generate.
-    val pairs = grams
+    // Candidate pairs come from each shingle's posting list (BucketPairs).
+    // Shingles are distinct per doc, so a list's length is the shingle's
+    // document frequency and the cap drops stop-shingles. Each posting entry
+    // carries its doc's shingle count, so the Jaccard denominator is at hand
+    // when the intersections are counted.
+    // explode_outer + isNotNull is row-identical to explode (element arrays
+    // carry no nulls), but a plain explode makes InferFiltersFromGenerate
+    // push `size(graft_shingles(text)) > 0` into the single-task scan, which
+    // evaluates the shingle expression twice more per doc before the fan.
+    val postings = grams
       .select(col("doc_id"), size(col("shingles")).as("n_sh"), explode_outer(col("shingles")).as("sh"))
       .where(col("sh").isNotNull)
-      .repartition(p, col("sh"))
-      .sortWithinPartitions(col("sh"))
-      .select(col("sh"), col("doc_id"), col("n_sh")).as[(String, Long, Int)]
-      .mapPartitions { it =>
-        val buf = it.buffered
-        new Iterator[(Long, Int, Long, Int)] {
-          private var pending: Iterator[(Long, Int, Long, Int)] = Iterator.empty
-          private def advance(): Unit =
-            while (!pending.hasNext && buf.hasNext) {
-              val key = buf.head._1
-              val ids = scala.collection.mutable.ArrayBuffer.empty[(Long, Int)]
-              var over = false
-              while (buf.hasNext && buf.head._1 == key) {
-                val r = buf.next()
-                if (!over) { ids += ((r._2, r._3)); if (ids.length > maxShingleFreq) { over = true; ids.clear() } }
-              }
-              if (!over && ids.length >= 2) {
-                val a = ids.sortBy(_._1).toArray
-                pending = a.indices.iterator.flatMap(i =>
-                  Iterator.range(i + 1, a.length).map(j =>
-                    (a(i)._1, a(i)._2, a(j)._1, a(j)._2)))
-              }
-            }
-          def hasNext: Boolean = { advance(); pending.hasNext }
-          def next(): (Long, Int, Long, Int) = { advance(); pending.next() }
-        }
-      }
-      .toDF("doc_id_1", "n1", "doc_id_2", "n2")
+      .select(col("sh"), col("doc_id"), col("n_sh"))
+    val pairs = BucketPairs(postings, Seq("sh"), maxShingleFreq)((r: (String, Long, Int)) => r._1) { run =>
+      BucketPairs.pairs(run)(_._2).map { case (a, b) => (a._2, a._3, b._2, b._3) }
+    }.toDF("doc_id_1", "n1", "doc_id_2", "n2")
     pairs.groupBy(col("doc_id_1"), col("doc_id_2"), col("n1"), col("n2"))
       .agg(count(lit(1)).as("inter"))
       .withColumn("jaccard", round(col("inter").cast("double") /
@@ -120,17 +81,17 @@ object Dedup {
       .select(col("doc_id_1"), col("doc_id_2"), col("jaccard"))
   }
 
-  /** MinHash + LSH banding near-dup pairs: signatures map-side, candidates via
-    * a band-bucket equi-join, verified with exact Jaccard partition-locally.
-    * The scale path: cost is O(docs * k) for signatures + candidate buckets,
-    * never all-pairs. Verified against `ngramJaccardPairs` in DedupSpec.
+  /** MinHash + LSH banding near-dup pairs: signatures map-side, candidate
+    * pairs from each (band, key) bucket's run of docs (BucketPairs, no cap),
+    * verified with exact Jaccard. The scale path: cost is O(docs * k) for
+    * signatures + candidate buckets, never all-pairs. Verified against
+    * `ngramJaccardPairs` in DedupSpec.
     */
   def minHashPairs(docs: DataFrame, n: Int = 3, numHashes: Int = 64, bands: Int = 16,
       tau: Double = 0.5): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val rows = numHashes / bands
-    val p = spark.sparkContext.defaultParallelism
     // fan: the shingle+minhash pass is otherwise ONE scan task (single
     // parquet split — guide §2.5). localCheckpoint, not cache(): 3 consumers
     // (banding + both verify-join sides) replay pinned blocks, and nothing
@@ -148,36 +109,10 @@ object Dedup {
       val sig = Hashing.minHash(sh, numHashes)
       Hashing.bandKeys(sig, bands, rows).iterator.zipWithIndex.map { case (k, b) => (id, b, k) }
     }.toDF("doc_id", "band", "key")
-    // r6 rewrite (guide §2.4): candidate pairs from each band bucket's
-    // posting list instead of the banded SELF-JOIN — the old plan evaluated
-    // the banded flatMap (64 minhashes per doc) TWICE, once per join side,
-    // and broadcast one full copy. One explicit-count shuffle by (band, key),
-    // then streamed run-grouping emits the same (d1 < d2) pairs.
-    val cand = banded.repartition(p, col("band"), col("key"))
-      .sortWithinPartitions(col("band"), col("key"))
-      .select(col("band"), col("key"), col("doc_id")).as[(Int, Long, Long)]
-      .mapPartitions { it =>
-        val buf = it.buffered
-        new Iterator[(Long, Long)] {
-          private var pending: Iterator[(Long, Long)] = Iterator.empty
-          private def advance(): Unit =
-            while (!pending.hasNext && buf.hasNext) {
-              val key = (buf.head._1, buf.head._2)
-              val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-              while (buf.hasNext && (buf.head._1, buf.head._2) == key) ids += buf.next()._3
-              if (ids.length >= 2) {
-                val a = ids.toArray
-                java.util.Arrays.sort(a)
-                pending = a.indices.iterator.flatMap(i =>
-                  Iterator.range(i + 1, a.length).map(j => (a(i), a(j))))
-              }
-            }
-          def hasNext: Boolean = { advance(); pending.hasNext }
-          def next(): (Long, Long) = { advance(); pending.next() }
-        }
-      }
-      .toDF("doc_id_1", "doc_id_2")
-      .distinct()
+    val cand = BucketPairs(banded.select(col("band"), col("key"), col("doc_id")), Seq("band", "key"))(
+        (r: (Int, Long, Long)) => (r._1, r._2)) { run =>
+      BucketPairs.pairs(run)(_._3).map { case (a, b) => (a._3, b._3) }
+    }.toDF("doc_id_1", "doc_id_2").distinct()
     cand
       .join(withSh.withColumnRenamed("doc_id", "doc_id_1").withColumnRenamed("shingles", "sh1"), "doc_id_1")
       .join(withSh.withColumnRenamed("doc_id", "doc_id_2").withColumnRenamed("shingles", "sh2"), "doc_id_2")
@@ -200,11 +135,8 @@ object Dedup {
   def simHashPairs(docs: DataFrame, maxHamming: Int = 3): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val p = spark.sparkContext.defaultParallelism
     // fan: the shingle+simhash pass is otherwise ONE scan task (guide §2.5).
-    // No localCheckpoint any more: the r6 bucket rewrite consumes sigs ONCE
-    // (the old self-join read chunked twice, which is also why the old plan
-    // computed the signature MapPartitions twice).
+    // Read once, by the bucket pairing, so it is not pinned.
     val sigs = graft.ops.Par.fan(docs.select(col("doc_id"), col("text")))
       .select(col("doc_id"), lower(col("text")).as("t"))
       .as[(Long, String)]
@@ -213,39 +145,16 @@ object Dedup {
     val chunked = sigs.as[(Long, Long)].flatMap { case (id, s) =>
       (0 until 4).iterator.map(c => (id, s, c, (s >>> (c * 16)) & 0xffffL))
     }.toDF("doc_id", "sim", "chunk", "key")
-    // r6 rewrite (guide §2.4): pairs from each (chunk, key) bucket instead of
-    // the chunked self-join; same explicit-count shuffle + streamed
-    // run-grouping as minHashPairs. The exact-Hamming check moves INSIDE the
-    // pair loop (java bitCount == bit_count, a pure pair function, so
-    // filter-then-distinct == distinct-then-filter) — the dedup exchange then
-    // carries only true near-dup pairs instead of every bucket pair.
-    chunked.repartition(p, col("chunk"), col("key"))
-      .sortWithinPartitions(col("chunk"), col("key"))
-      .select(col("chunk"), col("key"), col("doc_id"), col("sim")).as[(Int, Long, Long, Long)]
-      .mapPartitions { it =>
-        val buf = it.buffered
-        new Iterator[(Long, Long, Long, Long)] {
-          private var pending: Iterator[(Long, Long, Long, Long)] = Iterator.empty
-          private def advance(): Unit =
-            while (!pending.hasNext && buf.hasNext) {
-              val key = (buf.head._1, buf.head._2)
-              val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-              while (buf.hasNext && (buf.head._1, buf.head._2) == key) {
-                val r = buf.next(); rows += ((r._3, r._4))
-              }
-              if (rows.length >= 2) {
-                val a = rows.sortBy(_._1).toArray
-                pending = a.indices.iterator.flatMap(i =>
-                  Iterator.range(i + 1, a.length).iterator
-                    .filter(j => java.lang.Long.bitCount(a(i)._2 ^ a(j)._2) <= maxHamming)
-                    .map(j => (a(i)._1, a(j)._1, a(i)._2, a(j)._2)))
-              }
-            }
-          def hasNext: Boolean = { advance(); pending.hasNext }
-          def next(): (Long, Long, Long, Long) = { advance(); pending.next() }
-        }
+    // The exact Hamming check runs inside the pair loop (java bitCount ==
+    // bit_count, a pure pair function, so filter-then-distinct ==
+    // distinct-then-filter): the dedup exchange carries only true near-dup
+    // pairs instead of every bucket pair.
+    BucketPairs(chunked.select(col("chunk"), col("key"), col("doc_id"), col("sim")), Seq("chunk", "key"))(
+        (r: (Int, Long, Long, Long)) => (r._1, r._2)) { run =>
+      BucketPairs.pairs(run)(_._3).collect {
+        case (a, b) if java.lang.Long.bitCount(a._4 ^ b._4) <= maxHamming => (a._3, b._3, a._4, b._4)
       }
-      .toDF("doc_id_1", "doc_id_2", "s1", "s2")
+    }.toDF("doc_id_1", "doc_id_2", "s1", "s2")
       .distinct()
       .withColumn("hamming", bit_count(col("s1").bitwiseXOR(col("s2"))))
       .where(col("hamming") <= maxHamming)
@@ -253,7 +162,7 @@ object Dedup {
   }
 
   /** Embedding cosine near-dup pairs >= tau, exact via the blocked tile
-    * self-join (see Similarity.cosinePairsBlocked for the scale analysis).
+    * pair loop (see Similarity.cosinePairsBlocked for the scale analysis).
     */
   def embeddingPairs(embeddings: DataFrame, tau: Double = 0.95): DataFrame =
     Similarity.cosinePairsBlocked(embeddings, tau)

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.collection.mutable.ArrayBuffer
 
 /** Similarity search over an embedding column (`Array[Float]`).
   *
@@ -219,21 +220,6 @@ object Similarity {
       .select(col("vec_id_1"), col("vec_id_2"), col("sim"))
   }
 
-  /** All pairs with cosine >= tau, computed EXACTLY via a blocked tile
-    * self-join (the scale path for exact low-threshold all-pairs, where no
-    * LSH family reaches recall 1.0 — at tau=0.4 the qualifying pairs sit at
-    * ~66 deg, indistinguishable from the random-pair bulk by any sketch).
-    *
-    * Scheme: vectors are hashed into B blocks; the unordered block pairs
-    * (i <= j) index B(B+1)/2 "tiles". The left side replicates each vector to
-    * tiles (b, b..B-1), the right side to tiles (0..b, b); every vector pair
-    * meets in EXACTLY one tile (min-block, max-block), diagonal tiles dedup
-    * by id order. The tile key turns the cross product into a shuffle
-    * EQUI-join: O(n^2/p) compute spread over all executors, per-task memory
-    * O(n/B), replication factor (B+1)/2 per side, no driver materialization,
-    * no BroadcastNestedLoopJoin (asserted by PlanSpec). Pick B ~ sqrt(2 x
-    * total cores) so every core gets a tile.
-    */
   /** Spark's Round(double, 6): HALF_UP over BigDecimal.valueOf, NaN/Inf pass
     * through — replicated so closure-side sims stay bit-identical to the
     * previous `round(col, 6)` column (and to the DuckDB oracle).
@@ -242,23 +228,26 @@ object Similarity {
     if (java.lang.Double.isNaN(d) || java.lang.Double.isInfinite(d)) d
     else java.math.BigDecimal.valueOf(d).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
 
+  /** All pairs with cosine >= tau, computed EXACTLY via a blocked tile
+    * pair loop (the scale path for exact low-threshold all-pairs, where no
+    * LSH family reaches recall 1.0 — at tau=0.4 the qualifying pairs sit at
+    * ~66 deg, indistinguishable from the random-pair bulk by any sketch).
+    *
+    * Scheme: vectors are hashed into B blocks; the unordered block pairs
+    * (i <= j) index B(B+1)/2 "tiles". A vector of block b is routed to tiles
+    * (b, b..B-1) as LEFT and to tiles (0..b-1, b) as RIGHT; every vector pair
+    * meets in EXACTLY one tile (min-block, max-block), diagonal tiles dedup
+    * by id order. The routed stream is shuffled by tile and each tile's
+    * pairs are computed in one loop (BucketPairs, no cap): O(n^2/p) compute
+    * spread over all executors, per-task memory O(n/B), replication factor
+    * (B+1)/2, no driver materialization, no BroadcastNestedLoopJoin
+    * (asserted by PlanSpec). Pick B ~ sqrt(2 x total cores) so every core
+    * gets a tile.
+    */
   def cosinePairsBlocked(embeddings: DataFrame, tau: Double, nBlocks: Int = 16): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val B = nBlocks
-    val p = spark.sparkContext.defaultParallelism
-    // r6 rewrite (guide §1.2 step 1 / §2.4): the former tile EQUI-JOIN planned
-    // as a BroadcastHashJoin whose probe side was ONE scan task, so all
-    // O(n^2/2) joined rows (2M at sf0.1) were materialized through the join
-    // machinery single-threaded (measured 2.75 s). Same tile scheme, but the
-    // replicated streams are repartitioned BY TILE (explicit partition count —
-    // an ENSURE_REQUIREMENTS exchange would be AQE-coalesced back to one
-    // partition at these byte sizes) and each tile's pair loop runs inside
-    // mapPartitions: no joined-row materialization, per-vector norms hoisted,
-    // and the BigDecimal round is gated to near-threshold pairs (round can
-    // raise a sim by < 5e-7, so raw < tau - 1e-6 can never round to >= tau).
-    // Every unordered pair still meets in EXACTLY one tile (min-block,
-    // max-block); per-task memory stays O(n/B); no BNLJ (PlanSpec).
     val base = Par.fan(embeddings.select(col("vec_id"), col("embedding")))
       .select(col("vec_id"), col("embedding"), pmod(hash(col("vec_id")), lit(B)).as("b"))
       .as[(Long, Array[Float], Int)]
@@ -268,45 +257,32 @@ object Similarity {
       Iterator.range(b, B).map(j => (b * B + j, true, id, e)) ++
         Iterator.range(0, b).map(i => (i * B + b, false, id, e))
     }.toDF("tile", "is_l", "vec_id", "embedding")
-    routed.repartition(p, col("tile"))
-      .sortWithinPartitions(col("tile"))
-      .as[(Int, Boolean, Long, Array[Float])]
-      .mapPartitions { it =>
-        val buf = it.buffered
-        new Iterator[(Long, Long, Double)] {
-          private var pending: Iterator[(Long, Long, Double)] = Iterator.empty
-          private def tilePairs(tile: Int,
-              rows: scala.collection.mutable.ArrayBuffer[(Boolean, Long, Array[Float])]) = {
-            val diag = tile / B == tile % B
-            val lefts = rows.filter(r => r._1 || diag)
-            val rights = if (diag) lefts else rows.filter(!_._1)
-            val ln = lefts.map(r => math.sqrt(normSq(r._3)))
-            val rn = if (diag) ln else rights.map(r => math.sqrt(normSq(r._3)))
-            for {
-              i <- lefts.indices.iterator
-              j <- rights.indices.iterator
-              if !diag || lefts(i)._2 < rights(j)._2
-              raw = dot(lefts(i)._3, rights(j)._3) / (ln(i) * rn(j))
-              if raw >= tau - 1e-6 // NaN (zero vector) compares false, like round+filter
-              sim = round6(raw)
-              if sim >= tau
-            } yield (math.min(lefts(i)._2, rights(j)._2),
-              math.max(lefts(i)._2, rights(j)._2), sim)
-          }
-          private def advance(): Unit =
-            while (!pending.hasNext && buf.hasNext) {
-              val tile = buf.head._1
-              val rows = scala.collection.mutable.ArrayBuffer.empty[(Boolean, Long, Array[Float])]
-              while (buf.hasNext && buf.head._1 == tile) {
-                val r = buf.next(); rows += ((r._2, r._3, r._4))
-              }
-              pending = tilePairs(tile, rows)
-            }
-          def hasNext: Boolean = { advance(); pending.hasNext }
-          def next(): (Long, Long, Double) = { advance(); pending.next() }
-        }
-      }
+    BucketPairs(routed, Seq("tile"))((r: (Int, Boolean, Long, Array[Float])) => r._1)(tilePairs(B, tau))
       .toDF("vec_id_1", "vec_id_2", "sim")
+  }
+
+  /** The pairs of one tile's run of routed (tile, is_left, vec_id,
+    * embedding) rows with cosine >= tau. Norms are computed once per vector,
+    * and the BigDecimal round is gated to near-threshold pairs (round can
+    * raise a sim by < 5e-7, so raw < tau - 1e-6 can never round to >= tau).
+    */
+  private def tilePairs(B: Int, tau: Double)(
+      rows: ArrayBuffer[(Int, Boolean, Long, Array[Float])]): Iterator[(Long, Long, Double)] = {
+    val tile = rows.head._1
+    val diag = tile / B == tile % B
+    val lefts = rows.filter(r => r._2 || diag)
+    val rights = if (diag) lefts else rows.filter(!_._2)
+    val ln = lefts.map(r => math.sqrt(normSq(r._4)))
+    val rn = if (diag) ln else rights.map(r => math.sqrt(normSq(r._4)))
+    for {
+      i <- lefts.indices.iterator
+      j <- rights.indices.iterator
+      if !diag || lefts(i)._3 < rights(j)._3
+      raw = dot(lefts(i)._4, rights(j)._4) / (ln(i) * rn(j))
+      if raw >= tau - 1e-6 // NaN (zero vector) compares false, like round+filter
+      sim = round6(raw)
+      if sim >= tau
+    } yield (math.min(lefts(i)._3, rights(j)._3), math.max(lefts(i)._3, rights(j)._3), sim)
   }
 
   /** Same fold order as GraftCosine.compute's dot loop (common prefix). */

@@ -48,18 +48,26 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastHashJoin"), p.take(2000))
   }
 
-  test("q24 blocked pairs: tile-partitioned pair loop, no broadcast cartesian") {
-    // round-1 finding: cosinePairs was a BroadcastNestedLoopJoin over all
-    // pairs (driver-side materialization, scale-killer). round-6: the tile
-    // equi-join itself materialized every candidate pair through join
-    // machinery in ONE probe task; the rewrite shuffles the replicated
-    // streams BY TILE (explicit partition count, immune to AQE coalescing)
-    // and runs each tile's pair loop inside mapPartitions.
-    val p = plan("q24_embed_pairs")
-    assert(!p.contains("BroadcastNestedLoopJoin"), p.take(3000))
-    assert(!p.contains("CartesianProduct"), p.take(3000))
-    assert(p.contains("hashpartitioning(tile"), p.take(3000))
-    assert(p.contains("MapPartitions"), p.take(3000))
+  // The bucket pair loops (BucketPairs): one exchange by the bucket keys
+  // with an explicit partition count (REPARTITION_BY_NUM, which AQE does not
+  // coalesce into one task at small sizes), pairs made inside MapPartitions,
+  // and no join of the bucket relation with itself (a self-join or a
+  // broadcast cartesian materializes every candidate pair through join
+  // machinery, in one probe task at these sizes).
+  Seq(
+    ("q24 blocked pairs: tile-partitioned pair loop, no broadcast cartesian", "q24_embed_pairs", Seq("tile")),
+    ("q18 jaccard pairs: shingle-partitioned pair loop, no self-join", "q18_jaccard_pairs", Seq("sh")),
+    ("q20 minhash pairs: band-partitioned pair loop, no self-join", "q20_dedup_minhash", Seq("band", "key")),
+    ("q21 simhash pairs: chunk-partitioned pair loop, no self-join", "q21_dedup_simhash", Seq("chunk", "key"))
+  ).foreach { case (name, query, keys) =>
+    test(name) {
+      val p = plan(query)
+      val exchange = keys.map(k => s"$k#\\d+L?").mkString("hashpartitioning\\(", ", ", ", \\d+\\), REPARTITION_BY_NUM")
+      assert(exchange.r.findFirstIn(p).isDefined, s"no $exchange in\n${p.take(3000)}")
+      assert(p.contains("MapPartitions"), p.take(3000))
+      for (join <- Seq("SortMergeJoin", "BroadcastNestedLoopJoin", "CartesianProduct"))
+        assert(!p.contains(join), p.take(3000))
+    }
   }
 
   test("q23 lsh: no Scala UDF in the plan (native graft_rhp_signatures)") {

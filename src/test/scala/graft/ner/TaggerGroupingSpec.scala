@@ -47,7 +47,7 @@ class TaggerGroupingSpec extends AnyFunSuite {
 
   test("triplesAndMentions tags the corpus exactly once for the whole q35 shape") {
     // round-2 review finding: q35 re-ran the tagger up to 4x (triples,
-    // mentions, surfaceMap's count, final join). The shared-pass + pinned
+    // mentions, the surface map's count, final join). The shared-pass + pinned
     // intermediates version must scan the input turns exactly once, counted
     // by an accumulator on the input rows.
     import spark.implicits._
@@ -60,12 +60,7 @@ class TaggerGroupingSpec extends AnyFunSuite {
     scans.reset()
     val (tps, ments) = graft.kg.KgPipeline.triplesAndMentions(instrumented, model)
     val linked = graft.kg.EntityLink.link(ments).localCheckpoint()
-    val surfMap = graft.kg.GraphMaterializer.surfaceMap(linked).drop("canonical_surface")
-    val edges = tps.toDF()
-      .join(surfMap.withColumnRenamed("etype", "subj_type").withColumnRenamed("surface", "subj")
-        .withColumnRenamed("entity_id", "subj_id"), Seq("subj_type", "subj"))
-      .join(surfMap.withColumnRenamed("etype", "obj_type").withColumnRenamed("surface", "obj")
-        .withColumnRenamed("entity_id", "obj_id"), Seq("obj_type", "obj"))
+    val edges = graft.kg.GraphMaterializer.joinEndpoints(tps.toDF(), linked)
       .groupBy(col("subj_id"), col("pred"), col("obj_id"))
       .agg(count(lit(1)).as("weight"))
     assert(edges.count() > 0)
