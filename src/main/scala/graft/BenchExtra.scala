@@ -12,6 +12,9 @@ import org.apache.spark.sql.SparkSession
   *       `plans/r06/<query>_<tag>.txt` (tag = SPARK_GRAFT_PLAN_TAG, default
   *       "before"), the evidence files OPTIMIZATION_r06.md cites.
   *
+  * Each query is warmed on the sf it measures before its reps (see
+  * `warmUp`), and its warm-up run count is reported with its times.
+  *
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
   * (default 32), SPARK_GRAFT_REPS (default 3), SPARK_GRAFT_PLAN_TAG,
   * SPARK_GRAFT_ONLY (comma-separated query subset), SPARK_GRAFT_PLANS=0 to
@@ -34,12 +37,30 @@ object BenchExtra {
     if (s.size % 2 == 1) s(m) else (s(m - 1) + s(m)) / 2
   }
 
+  /** Untimed warm-up: calls `run` (one execution's seconds, NaN if it
+    * failed) until two consecutive runs agree within 10% of the slower, or
+    * five runs were made; returns the number of runs. A JIT-cold query
+    * at a large sf is still falling after one run (q18 read 4.99 s then
+    * 1.79 s), and the runs of a small-sf warm-up settle different code paths.
+    */
+  private[graft] def warmUp(run: () => Double): Int = {
+    var prev = run()
+    var n = 1
+    var settled = false
+    while (!settled && n < 5) {
+      val cur = run()
+      n += 1
+      settled = math.abs(cur - prev) <= 0.1 * math.max(cur, prev)
+      prev = cur
+    }
+    n
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "before")
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     val writePlans = sys.env.getOrElse("SPARK_GRAFT_PLANS", "1") == "1"
     val names = sys.env.get("SPARK_GRAFT_ONLY") match {
       case Some(s) if s.nonEmpty => s.split(",").toSeq.map(_.trim).filter(_.nonEmpty)
@@ -59,14 +80,15 @@ object BenchExtra {
     val planDir = java.nio.file.Paths.get("plans/r06")
     java.nio.file.Files.createDirectories(planDir)
 
-    // steady-state warmup (same as Bench): every query once at the small sf
-    if (new java.io.File(warmDir).isDirectory) names.foreach { name =>
-      try SparkEntry.queries(name)(spark, warmDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
-
     val results = names.map { name =>
       val fn = SparkEntry.queries(name)
+      // one noop-sink execution's seconds, NaN if it failed
+      def once(): Double = {
+        val t0 = System.nanoTime()
+        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); (System.nanoTime() - t0) / 1e9 }
+        catch { case e: Throwable => System.err.println(s"[benchextra] $name failed: $e"); Double.NaN }
+      }
+      val warm = warmUp(() => once())
       if (writePlans) {
         try {
           val plan = fn(spark, sfDir).queryExecution.explainString(
@@ -76,22 +98,19 @@ object BenchExtra {
       }
       val all = (0 until reps).map { r =>
         spark.sparkContext.setJobDescription(s"$name rep=$r")
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable => System.err.println(s"[benchextra] $name failed: $e"); false }
-        val sec = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+        val sec = once()
         spark.sparkContext.setJobDescription(null)
         sec
       }
-      val times = all.filter(_ >= 0)
+      val times = all.filterNot(_.isNaN)
       val failed = all.size - times.size
       val mn = if (times.nonEmpty) times.min else -1.0
       val md = if (times.nonEmpty) median(times) else -1.0
-      System.err.println(f"[benchextra] $name min=$mn%.3f median=$md%.3f failed=$failed reps=${times.map(t => f"$t%.3f").mkString(",")}")
-      name -> (mn, md, failed, times)
+      System.err.println(f"[benchextra] $name warmup=$warm min=$mn%.3f median=$md%.3f failed=$failed reps=${times.map(t => f"$t%.3f").mkString(",")}")
+      name -> (warm, mn, md, failed, times)
     }
-    val json = results.map { case (n, (mn, md, failed, ts)) =>
-      s""""$n":{"min":${f"$mn%.3f"},"median":${f"$md%.3f"},"failed":$failed,"reps":[${ts.map(t => f"$t%.3f").mkString(",")}]}"""
+    val json = results.map { case (n, (warm, mn, md, failed, ts)) =>
+      s""""$n":{"warmup":$warm,"min":${f"$mn%.3f"},"median":${f"$md%.3f"},"failed":$failed,"reps":[${ts.map(t => f"$t%.3f").mkString(",")}]}"""
     }.mkString("{", ",", "}")
     println(s"""{"benchextra":$json,"sf":"$sfDir","cpus":$cpus,"tag":"$tag"}""")
     spark.stop()

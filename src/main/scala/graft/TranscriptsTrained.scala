@@ -16,12 +16,13 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * a documents-vocabulary synthetic corpus) and the q30-q35 production queries
   * (real transcripts, but rows-only): here the corpus, the tokenizer, the
   * 4-class label set (O/PERSON/ORGANIZATION/LOCATION) and the learned weights
-  * are all the production shape, and the DuckDB oracle recomputes everything
-  * independently — it regenerates the token stream from the generator's
-  * splitmix64 formulas (the q54 pattern; the engine side consumes the
-  * DETOKENIZED text and re-tokenizes with the real tokenizer, so agreement
-  * also certifies the tokenizer round-trip), embeds the learned weights as
-  * CAST-string VALUES, and replays shape → emission → weight join → Viterbi.
+  * are all the production shape, and the DuckDB oracle (graft.oracle)
+  * recomputes everything independently — it regenerates the token stream
+  * from the generator's splitmix64 formulas (the q54 pattern; the engine side
+  * consumes the DETOKENIZED text and re-tokenizes with the real tokenizer, so
+  * agreement also certifies the tokenizer round-trip), embeds the learned
+  * weights as CAST-string VALUES, and replays shape → emission → weight join
+  * → Viterbi.
   *
   * Determinism contract: same as TrainedCrf — train-once memoization makes
   * the gate bit-exact regardless of L-BFGS float-summation order, because the
@@ -72,631 +73,4 @@ object TrainedTranscriptsCrf {
       SparkSession.builder().master("local[4]").appName("graft-q56-train")
         .config("spark.sql.shuffle.partitions", "4")
         .config("spark.ui.enabled", "false").getOrCreate()))
-}
-
-/** DuckDB oracle SQL for the trained-transcripts queries: regenerates the
-  * transcript token stream from the generator's pure splitmix64 formulas
-  * (Transcripts.scala — turn counts, tool-turn skips, template picks, slot
-  * expansion, all in SQL over HUGEINT mod-2^64 arithmetic), then replays
-  * dan2 shapes, the timex word fix, the learned-weight emission joins and a
-  * K-state Viterbi forward max. Self-contained: the only table it reads is
-  * `customer` (its row count = 150000·sf recovers the conversation count,
-  * `SparkEntry.nConvs` = max(200, sf·200000) = max(200, count·4/3)).
-  */
-object TranscriptsOracle {
-
-  private val M64 = "18446744073709551616" // 2^64
-  private def u64(x: Long) = java.lang.Long.toUnsignedString(x)
-  private def umul64(t: String, c: Long): String = {
-    val cu = u64(c)
-    val cl = u64(c & 0xffffffffL)
-    s"(($t) % 4294967296 * $cu + (($t) // 4294967296 * $cl % 4294967296) * 4294967296) % $M64::HUGEINT"
-  }
-
-  /** One staged splitmix64 as a CHAIN OF MATERIALIZED CTEs (the q54/q20-q26
-    * oracle house style, hardened): `pfx` names the final CTE holding
-    * `keep` + `out` = splitmix64(`in`). Each stage must be its own
-    * materialization barrier: DuckDB's optimizer inlines single-use CTE/
-    * subquery projections into their consumers, and because the wrap-around
-    * multiply references its operand more than once, an 8-deep inlined chain
-    * explodes exponentially (measured: a 9k-row filter took 50 s of
-    * redundant recomputation before this restructuring).
-    */
-  private def smixCtes(src: String, keep: String, in: String, out: String, pfx: String): String =
-    s"""${pfx}a AS MATERIALIZED (SELECT $keep, (($in) + 11400714819323198485) % $M64::HUGEINT AS s1c FROM $src),
-       |${pfx}b AS MATERIALIZED (SELECT $keep, ${umul64("xor(s1c, s1c // 1073741824)", 0xbf58476d1ce4e5b9L)} AS s2c FROM ${pfx}a),
-       |${pfx}c AS MATERIALIZED (SELECT $keep, ${umul64("xor(s2c, s2c // 134217728)", 0x94d049bb133111ebL)} AS s3c FROM ${pfx}b),
-       |$pfx AS MATERIALIZED (SELECT $keep, xor(s3c, s3c // 2147483648) AS $out FROM ${pfx}c)""".stripMargin
-
-  /** splitmix64(42 ^ 0x5851f42d4c957f2d) — the constant inner stage of the
-    * generator's h(seed=42, a, b, c) (Transcripts.scala h()).
-    */
-  private val S1: Long = Transcripts.splitmix64(42L ^ 0x5851f42d4c957f2dL)
-
-  /** h(42, aExpr, ·) with the b·31+c mix supplied pre-combined as `bcExpr`
-    * (already reduced mod 2^64): two chained splitmix64 stages around the
-    * FNV-prime multiply and the xor folds. Emits CTE definitions; the final
-    * CTE is named `pfx` and carries `keep` + `out`.
-    */
-  private def hCtes(src: String, keep: String, aExpr: String, bcExpr: String, out: String, pfx: String): String = {
-    val inner = smixCtes(src, keep,
-      s"xor(${u64(S1)}::HUGEINT, ${umul64(aExpr, 0x100000001b3L)})", "hmid", s"${pfx}m")
-    val outer = smixCtes(s"${pfx}m", keep, s"xor(hmid, $bcExpr)", out, pfx)
-    s"$inner,\n$outer"
-  }
-
-  private def lst(xs: Seq[String]): String =
-    xs.map(w => s"'${w.replace("'", "''")}'").mkString("[", ",", "]")
-
-  /** `pick(xs, r)` = xs[((r >>> 8) % len) + 1] (1-based list literal index);
-    * the Scala `.toInt.abs` is a no-op on the non-negative 56-bit value.
-    */
-  private def pick(xs: Seq[String], r: String): String =
-    s"${lst(xs)}[(($r // 256) % ${xs.length})::INT + 1]"
-
-  /** The generator's timex word fix (WordShape.fixWord): full-match
-    * case-insensitive month/day names lowercase; everything else unchanged.
-    */
-  private[graft] val monthDays = Seq("monday", "tuesday", "wednesday", "thursday", "friday",
-    "saturday", "sunday", "january", "february", "march", "april", "may", "june",
-    "july", "august", "september", "october", "november", "december")
-
-  /** dan2UseLC shape: char-class map then run-collapse. The collapse here is
-    * an index-aware `list_filter` (keep cls[j] when j=1 or cls[j] != cls[j-1])
-    * rather than the q38/q41 oracles' `list_reduce`: DuckDB 1.0.0's
-    * list_reduce returns a NEIGHBOR row's reduction when adjacent rows carry
-    * different list lengths in one vector (reproduced minimally: a 9-token
-    * unnest where 'mentions' came back with 'Umbrella''s shape). The
-    * documents-corpus oracles never see it because their lowercase vocabulary
-    * reduces every row to the same 'x', masking the row mix-up; transcript
-    * tokens (Xx vs x classes) expose it. The trailing '^~' replace mirrors
-    * dan2's leading-lastM quirk (a literal leading '~' run is dropped).
-    */
-  private[graft] val clsSql: String =
-    """list_transform(string_split(w, ''), ch ->
-      |        CASE WHEN ch BETWEEN '0' AND '9' THEN 'd'
-      |             WHEN (ch BETWEEN 'a' AND 'z') OR ch = '_' THEN 'x'
-      |             WHEN ch BETWEEN 'A' AND 'Z' THEN 'X'
-      |             ELSE ch END)""".stripMargin
-  private[graft] val shapeFromClsSql: String =
-    """'WT-' || regexp_replace(
-      |      array_to_string(list_filter(cls, (ch, j) -> j = 1 OR ch != cls[j-1]), ''),
-      |      '^~', '') ||
-      |    CASE WHEN length(w) <= 3 THEN ':' || length(w) ELSE '' END""".stripMargin
-
-  /** Token-regeneration CTE chain ending in
-    * `wrow(doc_id, i, w, n)` with doc_id = conv·100 + turn_idx.
-    * Mirrors Transcripts.synth exactly: numTurns (with the (>>>16).toInt
-    * 32-bit truncation and Scala abs/% sign semantics), tool-turn skips,
-    * template pick, slot expansion (person title / org second-base
-    * conditionals, the r>>>3 / r>>>5 sub-draws, the splitmix64(r) second
-    * draw for last names and second org bases).
-    */
-  private[graft] def tokenCtes: String = {
-    val tplRows = Transcripts.templates.zipWithIndex.flatMap { case (tpl, tid) =>
-      var slot = 0
-      tpl.zipWithIndex.map { case (t, pos) =>
-        val kind = t match { case "P" | "G" | "L" | "D" => t; case _ => "W" }
-        val sidx = if (kind != "W") { val s = slot; slot += 1; s } else -1
-        val lit = if (kind == "W") t.replace("'", "''") else ""
-        s"($tid,$pos,'$kind',$sidx,'$lit')"
-      }
-    }.mkString(",")
-    // b·31+c mixes: numTurns uses (b=-1, c=0) → -31 mod 2^64; the per-turn
-    // draws use small non-negative tix·31+c values.
-    val bcNumTurns = u64(-31L)
-    val hnt = hCtes("cvs", "cid", "cid::HUGEINT", s"$bcNumTurns::HUGEINT", "hv", "hnt")
-    val htl = hCtes("trn0", "cid, tix", "cid::HUGEINT", "(tix * 31 + 777)::HUGEINT", "hv", "htl")
-    val hr0 = hCtes("trn", "cid, tix", "cid::HUGEINT", "(tix * 31)::HUGEINT", "r0", "hr0")
-    val hsl = hCtes("srows0", "cid, tix, pos, kind, sidx", "cid::HUGEINT",
-      "(tix * 31 + 100 + sidx)::HUGEINT", "rs", "hsl")
-    val hsl2 = smixCtes("hsl", "cid, tix, pos, kind, rs", "rs", "rs2", "hsl2")
-    import Transcripts.{firstNames, lastNames, titles, orgBases, orgSuffixes, locations, weekdays}
-    s"""ncv AS (SELECT greatest(200, (SELECT count(*) FROM customer) * 4 // 3) AS n),
-       |cvs AS MATERIALIZED (SELECT unnest(range(0, (SELECT n FROM ncv))) AS cid),
-       |$hnt,
-       |ntr AS (SELECT cid, 2 + (CASE WHEN t32i = -2147483648 THEN t32i ELSE abs(t32i) END % 6) AS ntur FROM (
-       |  SELECT cid, (CASE WHEN t32 >= 2147483648 THEN t32 - 4294967296 ELSE t32 END)::BIGINT AS t32i FROM (
-       |    SELECT cid, (hv // 65536) % 4294967296 AS t32 FROM hnt))),
-       |trn0 AS MATERIALIZED (SELECT cid, unnest(range(0, ntur)) AS tix FROM ntr),
-       |$htl,
-       |trn AS MATERIALIZED (SELECT cid, tix FROM htl WHERE hv % 16 <> 0),
-       |$hr0,
-       |tsel AS (SELECT cid, tix, ((r0 // 256) % 16)::INT AS tid FROM hr0),
-       |tpl(tid, pos, kind, sidx, lit) AS (VALUES $tplRows),
-       |trows AS MATERIALIZED (SELECT t.cid, t.tix, p.pos, p.kind, p.sidx, p.lit
-       |  FROM tsel t JOIN tpl p ON p.tid = t.tid),
-       |srows0 AS (SELECT cid, tix, pos, kind, sidx FROM trows WHERE kind <> 'W'),
-       |$hsl,
-       |$hsl2,
-       |slotw AS MATERIALIZED (SELECT cid, tix, pos,
-       |  CASE kind
-       |    WHEN 'P' THEN CASE WHEN rs % 8 = 0
-       |      THEN [${pick(titles, "rs // 8")}, ${pick(firstNames, "rs")}, ${pick(lastNames, "rs2")}]
-       |      ELSE [${pick(firstNames, "rs")}, ${pick(lastNames, "rs2")}] END
-       |    WHEN 'G' THEN CASE WHEN rs % 4 = 0
-       |      THEN [${pick(orgBases, "rs")}, ${pick(orgBases, "rs2")}, ${pick(orgSuffixes, "rs // 32")}]
-       |      ELSE [${pick(orgBases, "rs")}, ${pick(orgSuffixes, "rs // 32")}] END
-       |    WHEN 'L' THEN [${pick(locations, "rs")}]
-       |    ELSE [${pick(weekdays, "rs")}] END AS ws
-       |  FROM hsl2),
-       |litw AS (SELECT cid, tix, pos, [lit] AS ws FROM trows WHERE kind = 'W'),
-       |tokl AS (SELECT cid, tix, flatten(list(ws ORDER BY pos)) AS t
-       |  FROM (SELECT * FROM slotw UNION ALL SELECT * FROM litw) GROUP BY cid, tix),
-       |posn AS (SELECT cid, tix, unnest(range(1, len(t)+1)) AS i, t FROM tokl),
-       |wrow AS MATERIALIZED (SELECT cid * 100 + tix AS doc_id, i, t[i] AS w, len(t) AS n FROM posn)""".stripMargin
-  }
-
-  /** Learned-weight emission joins + K-class potentials over `wrow`:
-    * unary u(cur) = w(fixedWord-WORD|C) + w(shape-TYPE|C), pair
-    * tr(prev,cur) = w(PSEQ|CpC) + w(prevShape-shape-TYPES|CpC), pot(col) =
-    * u(col % K) + tr(col) with col = prev·K + cur — at most two hit weights
-    * per factor, added in the engine's idsAt order, misses coalesced to 0
-    * (the unseen-feature drop, CRFClassifier.java:200-207).
-    */
-  private def potsCtes(m: NerModel): String = {
-    val k = m.classIndex.length
-    def esc(s: String) = s.replace("'", "''")
-    val names = new Array[String](m.featureIndex.size)
-    m.featureIndex.forEach((key, v) => names(v.intValue) = key)
-    def rows(group: Int): String = {
-      val sb = new StringBuilder
-      for (id <- names.indices) {
-        val f = names(id)
-        val g = f.substring(f.lastIndexOf('|') + 1) match {
-          case "C" => 0
-          case "CpC" => 1
-          case _ => 2
-        }
-        if (g == group) {
-          val w = m.weights(id)
-          for (c <- w.indices) {
-            if (sb.nonEmpty) sb.append(",")
-            sb.append(s"('${esc(f)}',$c,CAST('${w(c)}' AS DOUBLE))")
-          }
-        }
-      }
-      sb.toString
-    }
-    val colsK = (0 until k).map(c => s"($c)").mkString(",")
-    val colsKK = (0 until k * k).map(c => s"($c)").mkString(",")
-    val fixList = monthDays.map(d => s"'$d'").mkString(", ")
-    s"""w0(f, c, wt) AS (VALUES ${rows(0)}),
-       |w1(f, c, wt) AS (VALUES ${rows(1)}),
-       |colsu(col) AS (VALUES $colsK),
-       |colsp(col) AS (VALUES $colsKK),
-       |cls0 AS (SELECT doc_id, i, w, n, $clsSql AS cls FROM wrow),
-       |shp AS (SELECT doc_id, i, w, n, $shapeFromClsSql AS s FROM cls0),
-       |pshp AS (SELECT doc_id, i, w, n, s,
-       |    coalesce(lag(s) OVER (PARTITION BY doc_id ORDER BY i), '') AS ps FROM shp),
-       |fxw AS (SELECT doc_id, i, n, s, ps,
-       |    CASE WHEN lower(w) IN ($fixList) THEN lower(w) ELSE w END AS fw FROM pshp),
-       |uac AS (SELECT p.doc_id, p.i, cu.col, coalesce(a.wt, 0) + coalesce(b.wt, 0) AS uu
-       |  FROM fxw p CROSS JOIN colsu cu
-       |  LEFT JOIN w0 a ON a.f = p.fw || '-WORD|C' AND a.c = cu.col
-       |  LEFT JOIN w0 b ON b.f = p.s || '-TYPE|C' AND b.c = cu.col),
-       |tac AS (SELECT p.doc_id, p.i, cp.col, coalesce(a.wt, 0) + coalesce(b.wt, 0) AS tr
-       |  FROM fxw p CROSS JOIN colsp cp
-       |  LEFT JOIN w1 a ON a.f = 'PSEQ|CpC' AND a.c = cp.col
-       |  LEFT JOIN w1 b ON b.f = p.ps || '-' || p.s || '-TYPES|CpC' AND b.c = cp.col),
-       |pk AS (SELECT t.doc_id, t.i, t.col, u.uu + t.tr AS pot
-       |  FROM tac t JOIN uac u ON u.doc_id = t.doc_id AND u.i = t.i AND u.col = t.col % $k),
-       |pots AS MATERIALIZED (SELECT pk.doc_id, pk.i, any_value(w.n) AS n,
-       |    list(pot ORDER BY col) AS potk
-       |  FROM pk JOIN wrow w ON w.doc_id = pk.doc_id AND w.i = pk.i
-       |  GROUP BY pk.doc_id, pk.i)""".stripMargin
-  }
-
-  /** K-state Viterbi forward max over `pots(doc_id, i, n, potk)`: the DP
-    * score vector + best label paths as lists, engine first-index tie order
-    * (a CASE chain of >= comparisons keeps the first maximum, matching the
-    * strict-> argmax scan). Initial row: prev = the background pad state.
-    */
-  private def viterbiK(labels: Seq[String], bg: Int): String = {
-    val k = labels.length
-    def cand(pp: Int, l: Int) = s"(v.scores[${pp + 1}] + p.potk[${pp * k + l + 1}])"
-    def bestVal(l: Int) = s"greatest(${(0 until k).map(cand(_, l)).mkString(", ")})"
-    def bestPath(l: Int) = {
-      val whens = (0 until k - 1).map { pp =>
-        val conds = (pp + 1 until k).map(q => s"${cand(pp, l)} >= ${cand(q, l)}").mkString(" AND ")
-        s"WHEN $conds THEN v.paths[${pp + 1}]"
-      }.mkString(" ")
-      s"(CASE $whens ELSE v.paths[$k] END || [$l])"
-    }
-    val init = (0 until k).map(l => s"potk[${bg * k + l + 1}]").mkString("[", ", ", "]")
-    val initPaths = (0 until k).map(l => s"[$l]").mkString("[", ", ", "]")
-    val finWhens = (0 until k - 1).map { j =>
-      val conds = (j + 1 until k).map(q => s"scores[${j + 1}] >= scores[${q + 1}]").mkString(" AND ")
-      s"WHEN $conds THEN paths[${j + 1}]"
-    }.mkString(" ")
-    val tagCase = labels.init.zipWithIndex.map { case (lab, i) => s"WHEN $i THEN '$lab'" }.mkString(" ")
-    s"""vit AS (
-       |  SELECT doc_id, i, n, $init AS scores, $initPaths AS paths FROM pots WHERE i = 1
-       |  UNION ALL
-       |  SELECT p.doc_id, p.i, p.n,
-       |    [${(0 until k).map(bestVal).mkString(", ")}],
-       |    [${(0 until k).map(bestPath).mkString(", ")}]
-       |  FROM vit v JOIN pots p ON p.doc_id = v.doc_id AND p.i = v.i + 1),
-       |fin AS (SELECT doc_id, CASE $finWhens ELSE paths[$k] END AS path FROM vit WHERE i = n),
-       |tags AS (SELECT w.doc_id, w.i, w.w,
-       |    CASE f.path[w.i] $tagCase ELSE '${labels.last}' END AS tag
-       |  FROM wrow w JOIN fin f USING (doc_id))""".stripMargin
-  }
-
-  /** The shared CTE prefix for every trained-transcripts oracle: token
-    * regeneration + learned potentials + Viterbi tags.
-    */
-  private def tagsCtes(m: NerModel): String =
-    s"""WITH RECURSIVE
-       |$tokenCtes,
-       |${potsCtes(m)},
-       |${viterbiK(m.classIndex.toIndexedSeq, m.backgroundIndex)}""".stripMargin
-
-  /** q56 oracle: per-token trained-model tags over the real transcript
-    * table's turns.
-    */
-  def tagsSql(m: NerModel): String =
-    s"""${tagsCtes(m)}
-       |SELECT 'conv' || lpad((doc_id // 100)::VARCHAR, 8, '0') AS conv_id,
-       |  (doc_id % 100)::INT AS turn_idx, CAST(i - 1 AS INT) AS pos, w AS token, tag
-       |FROM tags""".stripMargin
-
-  /** Character-offset reconstruction over the tagged token stream: the
-    * detokenizer's rendering (PTB bracket/quote tokens back to their 1-char
-    * text forms) and spacing rules (Transcripts.detokenize) replayed as a
-    * running sum — the engine side reads these offsets from the REAL
-    * tokenizer's invertible spans, so agreement certifies the tokenizer's
-    * offset math too. `spans` is the label-change fold
-    * (Tagger.spansOfSentence): surfaces cut from the re-rendered turn text
-    * exactly like the engine's text.substring(begin, end).
-    */
-  private[graft] val spanCtes: String =
-    s"""rend AS (SELECT doc_id, i, w, tag,
-       |    CASE w WHEN '-LRB-' THEN '(' WHEN '-RRB-' THEN ')' WHEN '-LSB-' THEN '['
-       |           WHEN '-RSB-' THEN ']' WHEN '``' THEN '"' WHEN '''''' THEN '"' ELSE w END AS rw,
-       |    CASE WHEN i = 1 THEN 0
-       |         WHEN w IN ('.', ',', '?', '!', ';', ':', '''''', '-RRB-', '-RSB-', 'n''t')
-       |           OR w LIKE '''%' THEN 0
-       |         WHEN lag(w) OVER (PARTITION BY doc_id ORDER BY i) IN ('``', '-LRB-', '-LSB-') THEN 0
-       |         ELSE 1 END AS sp
-       |  FROM tags),
-       |offs AS MATERIALIZED (SELECT doc_id, i, w, tag, length(rw) AS rl, sp,
-       |    CAST(sum(length(rw) + sp) OVER (PARTITION BY doc_id ORDER BY i
-       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - length(rw) AS INT) AS b
-       |  FROM rend),
-       |txts AS (SELECT doc_id, string_agg(repeat(' ', sp) || rw, '' ORDER BY i) AS txt
-       |  FROM rend GROUP BY doc_id),
-       |runs AS (SELECT doc_id, i, tag, b, rl,
-       |    i - row_number() OVER (PARTITION BY doc_id, tag ORDER BY i) AS grp
-       |  FROM offs WHERE tag != 'O'),
-       |spans AS MATERIALIZED (SELECT r.doc_id, r.tag AS etype,
-       |    CAST(min(r.b) AS INT) AS begin_char, CAST(max(r.b + r.rl) AS INT) AS end_char,
-       |    substring(any_value(t.txt), min(r.b) + 1, max(r.b + r.rl) - min(r.b)) AS surface
-       |  FROM runs r JOIN txts t USING (doc_id) GROUP BY r.doc_id, r.tag, r.grp)""".stripMargin
-
-  private[graft] def docCols: String =
-    """'conv' || lpad((doc_id // 100)::VARCHAR, 8, '0') AS conv_id,
-      |  (doc_id % 100)::INT AS turn_idx""".stripMargin
-
-  /** q57 oracle: mention spans with character offsets over the turn text. */
-  def spansSql(m: NerModel): String =
-    s"""${tagsCtes(m)},
-       |$spanCtes
-       |SELECT $docCols, CAST(0 AS INT) AS sent_idx, etype, begin_char, end_char, surface
-       |FROM spans""".stripMargin
-
-  /** q58 oracle: (subj, pred, obj) triples — the north rule's headline
-    * output over the REAL transcript table with trained weights. The trigger
-    * tail is shared verbatim with the q43/q50 oracles
-    * (SparkEntry.tripleTailCtes reads `spans` + `offs`).
-    */
-  def triplesSql(m: NerModel): String =
-    s"""${tagsCtes(m)},
-       |$spanCtes,
-       |${SparkEntry.tripleTailCtes}
-       |SELECT $docCols, subj, subj_type, pred, obj, obj_type FROM trips""".stripMargin
-
-  /** q59 oracle: the FULL EntityLink pipeline over the transcript mention
-    * stream (SparkEntry.linkCtes verbatim — normalize + title strip, MinHash
-    * blocking, exact Jaccard, transitive closure, canonical pick). Unlike the
-    * documents-vocabulary q44/q51, the PERSON title strip does real work
-    * here: 'Dr. Alice Johnson' and 'Alice Johnson' normalize together.
-    */
-  def linkSql(m: NerModel): String =
-    s"""${tagsCtes(m)},
-       |$spanCtes,
-       |${SparkEntry.linkCtes}
-       |SELECT etype, surface, surface_id, n_mentions, entity_id, canonical_surface FROM linkedo""".stripMargin
-
-  /** q60 oracle: graph-node rollup over the linked entities. */
-  def nodesSql(m: NerModel): String =
-    s"""${tagsCtes(m)},
-       |$spanCtes,
-       |${SparkEntry.linkCtes}
-       |SELECT entity_id, etype, CAST(sum(n_mentions) AS BIGINT) AS n_mentions,
-       |  (max(struct_pack(c := n_mentions, s := canonical_surface))).s AS canonical_surface,
-       |  CAST(count(*) AS BIGINT) AS n_surfaces
-       |FROM linkedo GROUP BY 1, 2""".stripMargin
-
-  /** q61 oracle: canonicalized graph edges — triples joined to entity ids. */
-  def edgesSql(m: NerModel): String =
-    s"""${tagsCtes(m)},
-       |$spanCtes,
-       |${SparkEntry.tripleTailCtes},
-       |${SparkEntry.linkCtes}
-       |SELECT sm1.entity_id AS subj_id, t.pred, sm2.entity_id AS obj_id,
-       |  CAST(count(*) AS BIGINT) AS weight
-       |FROM trips t
-       |JOIN linkedo sm1 ON sm1.etype = t.subj_type AND sm1.surface = t.subj
-       |JOIN linkedo sm2 ON sm2.etype = t.obj_type AND sm2.surface = t.obj
-       |GROUP BY 1, 2, 3""".stripMargin
-}
-
-/** DuckDB oracle for the DEFAULT production model — q30's own weights under
-  * the hash gate. The engine side is literally the q30 query (the on-disk
-  * `models/ner-conllnotags-v1.gz` model through `Tagger.tagTurns`); the
-  * oracle regenerates the transcript token stream (TranscriptsOracle's
-  * splitmix64 chain), re-derives EVERY conllNoTags feature family in SQL —
-  * n-grams (noMidNGrams substring enumeration of `<word>`), word/prev/next
-  * word pairs, dan2 shapes WITH the knownLCWords 'k' suffix, the shape
-  * conjunction templates (PW_CTYPE…PCNTYPE, the length-gated PPW/NNW
-  * variants), disjunctive word windows, and the CpC/CpCp2C sequence
-  * templates — in the engine's exact `idsAt` emission order with
-  * first-occurrence dedup, embeds all feature weight rows plus the
-  * observed-window column maps, folds per-factor weight sums in emission
-  * order (bit-exact left folds: `list_reduce` over DOUBLE[] accumulators —
-  * validated unaffected by the VARCHAR list_reduce defect), builds the full
-  * 64-entry (prev2, prev, cur) potential tables with -infinity for
-  * unobserved label windows (`useObservedSequencesOnly`), and decodes with a
-  * 16-state second-order Viterbi (states = prev + 4·prev2, engine
-  * first-index tie order).
-  */
-object DefaultModelOracle {
-
-  private def esc(s: String) = s.replace("'", "''")
-
-  /** One VALUES row per feature: (feature, weight-row as a '[…]'::DOUBLE[]
-    * cast string — Double.toString round-trips exactly through DuckDB's
-    * VARCHAR→DOUBLE cast, the generalized q47 lesson).
-    */
-  private def weightRows(m: NerModel): String = {
-    val names = new Array[String](m.featureIndex.size)
-    m.featureIndex.forEach((k, v) => names(v.intValue) = k)
-    val sb = new StringBuilder
-    for (id <- names.indices) {
-      if (sb.nonEmpty) sb.append(",\n")
-      sb.append(s"('${esc(names(id))}','${m.weights(id).mkString("[", ",", "]")}'::DOUBLE[])")
-    }
-    sb.toString
-  }
-
-  /** The 64-entry potential-table expression list: for each full window
-    * encoding enc = cur + 4·prev + 16·prev2, either the engine's
-    * ((g0 + g1) + g2) sum over the groups' observed-column values, or
-    * -infinity when any group's window is unobserved
-    * (Crf.logPotentials: weightCol(g)(enc % 4^(g+1)) < 0 → NegInf).
-    */
-  private def potExprs(m: NerModel): String = {
-    val wc = m.layout.weightCol
-    (0 until 64).map { enc =>
-      val c0 = wc(0)(enc % 4); val c1 = wc(1)(enc % 16); val c2 = wc(2)(enc)
-      if (c0 < 0 || c1 < 0 || c2 < 0) "'-infinity'::DOUBLE"
-      else s"((g0v[${c0 + 1}] + g1v[${c1 + 1}]) + g2v[${c2 + 1}])"
-    }.mkString(",\n    ")
-  }
-
-  /** A group's all-zero column vector (the engine's empty-feature-set sum). */
-  private def zeros(m: NerModel, grp: Int): String =
-    Seq.fill(m.layout.weightCol(grp).max + 1)("0.0").mkString("[", ",", "]") + "::DOUBLE[]"
-
-  /** Element-wise left-fold of the ordered weight rows of one group:
-    * acc[k] = ((0 + w1[k]) + w2[k]) + … — the exact association of the
-    * engine's per-column scalar loop (Crf.logPotentials: s = 0.0; s += w…).
-    */
-  private def foldCte(grp: Int, nCols: Int, out: String): String = {
-    val zeros = Seq.fill(nCols)("0.0").mkString("[", ",", "]")
-    val add = (1 to nCols).map(k => s"a[$k]+b[$k]").mkString("[", ",", "]")
-    s"""g${grp}s AS (SELECT doc_id, i,
-       |    list_reduce(list_prepend($zeros::DOUBLE[], list(warr ORDER BY seq)), (a,b) -> $add::DOUBLE[]) AS $out
-       |  FROM matched WHERE grp = $grp GROUP BY doc_id, i)""".stripMargin
-  }
-
-  /** Per-token attribute CTEs over TranscriptsOracle's `wrow`: original word,
-    * timex-fixed word, dan2 shape WITH the model's frozen knownLCWords 'k'
-    * suffix (all-letter words whose lowercase form is in the set), and the
-    * ±2 windowed views with the reference's pad semantics (word "" /
-    * shape null → get "null", getString "").
-    */
-  private def attCtes(m: NerModel): String = {
-    val klc = m.knownLC.toSeq.sorted.map(w => s"'${esc(w)}'").mkString(", ")
-    val fixList = TranscriptsOracle.monthDays.map(d => s"'$d'").mkString(", ")
-    s"""cls0 AS (SELECT doc_id, i, w, n, ${TranscriptsOracle.clsSql} AS cls FROM wrow),
-       |shp AS MATERIALIZED (SELECT doc_id, i, w, n,
-       |    concat(${TranscriptsOracle.shapeFromClsSql},
-       |      CASE WHEN len(list_filter(cls, c -> c NOT IN ('x','X'))) = 0
-       |            AND lower(w) IN ($klc) THEN 'k' ELSE '' END) AS s,
-       |    CASE WHEN lower(w) IN ($fixList) THEN lower(w) ELSE w END AS fw
-       |  FROM cls0),
-       |win AS (SELECT doc_id, i, n, w, s, fw,
-       |    lag(fw)     OVER dw AS pfw,  lag(fw, 2)  OVER dw AS p2fw,
-       |    lag(fw, 3)  OVER dw AS p3fw, lag(fw, 4)  OVER dw AS p4fw,
-       |    lead(fw)    OVER dw AS nfw,  lead(fw, 2) OVER dw AS n2fw,
-       |    lead(fw, 3) OVER dw AS n3fw, lead(fw, 4) OVER dw AS n4fw,
-       |    lag(s)      OVER dw AS psr,  lag(s, 2)   OVER dw AS p2sr,
-       |    lead(s)     OVER dw AS nsr
-       |  FROM shp WINDOW dw AS (PARTITION BY doc_id ORDER BY i)),
-       |att AS MATERIALIZED (SELECT doc_id, i, n, s AS cs, fw AS cw,
-       |    coalesce(pfw, '') pw, coalesce(p2fw, '') p2w,
-       |    coalesce(p3fw, '') p3w, coalesce(p4fw, '') p4w,
-       |    coalesce(nfw, '') nw, coalesce(n2fw, '') n2w,
-       |    coalesce(n3fw, '') n3w, coalesce(n4fw, '') n4w,
-       |    coalesce(psr, 'null') psg, coalesce(psr, '') pss,
-       |    coalesce(nsr, 'null') nsg, coalesce(p2sr, 'null') p2sg
-       |  FROM win)""".stripMargin
-  }
-
-  /** Feature emission, in `NerFeaturesFast.idsAt` code order (seq). Group 0:
-    * n-grams (i asc, j asc; seq = i·100 + j, word length bounded far below
-    * 100), then the fixed conllNoTags templates from seq 10000, then the
-    * interleaved DISJN/DISJP width-4 window. Groups 1-2: the fixed sequence
-    * templates. First-occurrence dedup = min(seq) per feature string.
-    */
-  private val featCtes: String = {
-    val g0Fixed = Seq(
-      "cw || '-WORD|C'",
-      "pw || '-PW|C'",
-      "nw || '-NW|C'",
-      "cw || '-' || pw || '-W-PW|C'",
-      "cw || '-' || nw || '-W-NW|C'",
-      "cs || '-TYPE|C'",
-      "psg || '-PTYPE|C'",
-      "nsg || '-NTYPE|C'",
-      "pw || '...' || cs || '-PW_CTYPE|C'",
-      "cs || '...' || nw || '-NW_CTYPE|C'",
-      "psg || '...' || cs || '-PCTYPE|C'",
-      "cs || '...' || nsg || '-CNTYPE|C'",
-      "psg || '...' || cs || '...' || nsg || '-PCNTYPE|C'",
-      "CASE WHEN length(pw) <= 3 THEN p2w || '...' || cs || '-PPW_CTYPE|C' END",
-      "CASE WHEN length(nw) <= 3 THEN n2w || '...' || cs || '-NNW_CTYPE|C' END",
-      "nw  || '-DISJN|C'", "pw  || '-DISJP|C'",
-      "n2w || '-DISJN|C'", "p2w || '-DISJP|C'",
-      "n3w || '-DISJN|C'", "p3w || '-DISJP|C'",
-      "n4w || '-DISJN|C'", "p4w || '-DISJP|C'")
-      .zipWithIndex.map { case (e, k) => s"(${10000 + k}, $e)" }.mkString(",\n      ")
-    val g1Fixed = Seq(
-      "'PSEQ|CpC'",
-      "cw || '-PSEQW|CpC'",
-      "pw || '-' || cw || '-PSEQW2|CpC'",
-      "pw || '-PSEQpW|CpC'",
-      "'-PSEQpDS|CpC'",
-      "'-PSEQcDS|CpC'",
-      "'--PSEQpcDS|CpC'",
-      "pss || '-PSEQpS|CpC'",
-      "cs || '-PSEQcS|CpC'",
-      "pss || '-' || cs || '-PSEQpcS|CpC'",
-      "pss || '-' || cs || '-TYPES|CpC'",
-      "cs || '-TPS2|CpC'",
-      "nsg || '-TNS1|CpC'")
-      .zipWithIndex.map { case (e, k) => s"(${k + 1}, $e)" }.mkString(",\n      ")
-    val g2Fixed = Seq(
-      "'PPSEQ|CpCp2C'",
-      "p2sg || '-' || psg || '-' || cs || '-TYPETYPES|CpCp2C'")
-      .zipWithIndex.map { case (e, k) => s"(${k + 1}, $e)" }.mkString(",\n      ")
-    s"""ngr AS (SELECT doc_id, i, u.sq AS seq, u.f AS f FROM (
-       |    SELECT doc_id, i, unnest(flatten([[struct_pack(
-       |        sq := ii * 100 + jj,
-       |        f  := '#' || substring(wn, ii + 1, jj - ii) || '#|C')
-       |      FOR jj IN range(ii + 2, length(wn) + 1) IF ii = 0 OR jj = length(wn)]
-       |      FOR ii IN range(0, length(wn))])) AS u
-       |    FROM (SELECT doc_id, i, '<' || cw || '>' AS wn FROM att))),
-       |feats AS (
-       |  SELECT doc_id, i, 0 AS grp, seq, f FROM ngr
-       |  UNION ALL
-       |  SELECT doc_id, i, 0, t.sq, t.f FROM att,
-       |    LATERAL (SELECT * FROM (VALUES
-       |      $g0Fixed) v(sq, f)) t
-       |  UNION ALL
-       |  SELECT doc_id, i, 1, t.sq, t.f FROM att,
-       |    LATERAL (SELECT * FROM (VALUES
-       |      $g1Fixed) v(sq, f)) t
-       |  UNION ALL
-       |  SELECT doc_id, i, 2, t.sq, t.f FROM att,
-       |    LATERAL (SELECT * FROM (VALUES
-       |      $g2Fixed) v(sq, f)) t),
-       |fdd AS MATERIALIZED (SELECT doc_id, i, grp, f, min(seq) AS seq
-       |  FROM feats WHERE f IS NOT NULL GROUP BY doc_id, i, grp, f),
-       |matched AS MATERIALIZED (SELECT d.doc_id, d.i, d.grp, d.seq, wv.warr
-       |  FROM fdd d JOIN wv ON wv.f = d.f)""".stripMargin
-  }
-
-  /** 16-state second-order Viterbi over `pots(doc_id, i, n, pot64)`:
-    * DP states sx-1 = cur + 4·prev; candidates for a target (cur, prev)
-    * come from prior states prev + 4·prev2 with prev2 ascending (the
-    * engine's strict-> scan keeps the first maximum); initial row = the
-    * all-background pre-document state (only prev=O states reachable).
-    */
-  private def viterbi16(labels: Seq[String]): String = {
-    def cand(t: Int, p2: Int) = {
-      val c = t % 4; val prev = t / 4
-      s"(v.scores[${prev + 4 * p2 + 1}] + p.pot64[${c + 4 * prev + 16 * p2 + 1}])"
-    }
-    def bestVal(t: Int) = s"greatest(${(0 until 4).map(cand(t, _)).mkString(", ")})"
-    def bestPath(t: Int) = {
-      val prev = t / 4
-      val whens = (0 until 3).map { p2 =>
-        val conds = (p2 + 1 until 4).map(q => s"${cand(t, p2)} >= ${cand(t, q)}").mkString(" AND ")
-        s"WHEN $conds THEN v.paths[${prev + 4 * p2 + 1}]"
-      }.mkString(" ")
-      s"(CASE $whens ELSE v.paths[${prev + 12 + 1}] END || [${t % 4}])"
-    }
-    val init = (0 until 16).map { sx =>
-      if (sx / 4 == 0) s"pot64[${sx + 1}]" else "'-infinity'::DOUBLE"
-    }.mkString("[", ", ", "]")
-    val initPaths = (0 until 16).map(sx => s"[${sx % 4}]").mkString("[", ", ", "]")
-    val finWhens = (0 until 15).map { j =>
-      val conds = (j + 1 until 16).map(q => s"scores[${j + 1}] >= scores[${q + 1}]").mkString(" AND ")
-      s"WHEN $conds THEN paths[${j + 1}]"
-    }.mkString("\n      ")
-    val tagCase = labels.init.zipWithIndex.map { case (lab, i) => s"WHEN $i THEN '$lab'" }.mkString(" ")
-    s"""vit AS (
-       |  SELECT doc_id, i, n, $init AS scores, $initPaths AS paths FROM pots WHERE i = 1
-       |  UNION ALL
-       |  SELECT p.doc_id, p.i, p.n,
-       |    [${(0 until 16).map(bestVal).mkString(",\n     ")}],
-       |    [${(0 until 16).map(bestPath).mkString(",\n     ")}]
-       |  FROM vit v JOIN pots p ON p.doc_id = v.doc_id AND p.i = v.i + 1),
-       |fin AS (SELECT doc_id, CASE $finWhens ELSE paths[16] END AS path FROM vit WHERE i = n),
-       |tags AS (SELECT w.doc_id, w.i, w.w,
-       |    CASE f.path[w.i] $tagCase ELSE '${labels.last}' END AS tag
-       |  FROM wrow w JOIN fin f USING (doc_id))""".stripMargin
-  }
-
-  /** The shared CTE prefix ending in per-token `tags` for the default model. */
-  private def tagsCtes(m: NerModel): String = {
-    require(m.classIndex.length == 4 && m.layout.windowSize == 3 && m.backgroundIndex == 0,
-      s"DefaultModelOracle expects the 4-class windowSize-3 conllNoTags model, " +
-        s"got ${m.classIndex.mkString(",")} w=${m.layout.windowSize} bg=${m.backgroundIndex}")
-    s"""WITH RECURSIVE
-       |${TranscriptsOracle.tokenCtes},
-       |wv(f, warr) AS (VALUES ${weightRows(m)}),
-       |${attCtes(m)},
-       |$featCtes,
-       |${foldCte(0, m.layout.weightCol(0).max + 1, "g0v")},
-       |${foldCte(1, m.layout.weightCol(1).max + 1, "g1v")},
-       |${foldCte(2, m.layout.weightCol(2).max + 1, "g2v")},
-       |gall AS (SELECT a.doc_id, a.i, a.n,
-       |    coalesce(g0s.g0v, ${zeros(m, 0)}) AS g0v,
-       |    coalesce(g1s.g1v, ${zeros(m, 1)}) AS g1v,
-       |    coalesce(g2s.g2v, ${zeros(m, 2)}) AS g2v
-       |  FROM att a
-       |  LEFT JOIN g0s ON g0s.doc_id = a.doc_id AND g0s.i = a.i
-       |  LEFT JOIN g1s ON g1s.doc_id = a.doc_id AND g1s.i = a.i
-       |  LEFT JOIN g2s ON g2s.doc_id = a.doc_id AND g2s.i = a.i),
-       |pots AS MATERIALIZED (SELECT doc_id, i, n, [
-       |    ${potExprs(m)}] AS pot64
-       |  FROM gall),
-       |${viterbi16(m.classIndex.toIndexedSeq)}""".stripMargin
-  }
-
-  /** q62 oracle: the DEFAULT model's per-token tags over the transcript
-    * table — q30 itself under the hash gate.
-    */
-  def tagsSql(m: NerModel): String =
-    s"""${tagsCtes(m)}
-       |SELECT ${TranscriptsOracle.docCols}, CAST(i - 1 AS INT) AS pos, w AS token, tag
-       |FROM tags""".stripMargin
-
-  /** q63 oracle: default-model triples — q32 itself under the hash gate. */
-  def triplesSql(m: NerModel): String =
-    s"""${tagsCtes(m)},
-       |${TranscriptsOracle.spanCtes},
-       |${SparkEntry.tripleTailCtes}
-       |SELECT ${TranscriptsOracle.docCols}, subj, subj_type, pred, obj, obj_type FROM trips""".stripMargin
-
-  /** q64 oracle: default-model entity linking — q33 itself under the gate. */
-  def linkSql(m: NerModel): String =
-    s"""${tagsCtes(m)},
-       |${TranscriptsOracle.spanCtes},
-       |${SparkEntry.linkCtes}
-       |SELECT etype, surface, surface_id, n_mentions, entity_id, canonical_surface FROM linkedo""".stripMargin
 }

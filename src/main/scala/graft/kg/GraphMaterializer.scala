@@ -101,46 +101,13 @@ object GraphMaterializer {
   /** Sink abstraction for the graph tables: write `df` partitioned by
     * `partCols` under `stage`'s table location, with per-partition lineage
     * keyed by `fingerprint`; return the per-partition row counts written (or
-    * previously recorded, on exact resume). The parquet implementation is the
-    * sandbox stand-in; an Iceberg implementation writes the same logical
-    * layout through the V2 writer when a catalog + runtime jar are present.
-    * GraphSpec asserts the bucket-layout contract through this trait.
+    * previously recorded, on exact resume). `ParquetBucketSink` is the one
+    * implementation; GraphSpec asserts the bucket-layout contract through
+    * this trait.
     */
   trait GraphSink {
     def write(df: DataFrame, tableDir: String, partCols: Seq[String],
         outDir: String, stage: String, fingerprint: String): Map[String, Long]
-  }
-
-  /** Iceberg sink: identical logical layout via the DataFrameWriterV2 path
-    * (`df.writeTo(table).using("iceberg").partitionedBy(...)`,
-    * createOrReplace). The production DDL per the north rule is
-    * `PARTITIONED BY (etype, bucket(16, entity_id))` on the raw id; the
-    * engine pre-computes the bucket column so the parquet stand-in and the
-    * Iceberg table produce the same partition tree, and identity transforms
-    * on the given columns reproduce it here. No Iceberg runtime jar ships in
-    * this sandbox, so this class is compile-verified but unexercised: the
-    * write fails at runtime without an Iceberg catalog on the session.
-    */
-  final class IcebergSink(catalogAndNamespace: String) extends GraphSink {
-    def write(df: DataFrame, tableDir: String, partCols: Seq[String],
-        outDir: String, stage: String, fingerprint: String): Map[String, Long] = {
-      val table = s"$catalogAndNamespace.$stage"
-      if (!Lineage.shouldRun(outDir, stage, fingerprint))
-        return Lineage.read(outDir, stage).map(_._2).getOrElse(Map.empty)
-      val obs = org.apache.spark.sql.Observation(s"lineage-$stage-${System.nanoTime()}")
-      df.observe(obs, count(lit(1)).as("rows"))
-        .writeTo(table).using("iceberg")
-        .partitionedBy(col(partCols.head), partCols.tail.map(col): _*)
-        .createOrReplace()
-      val counts = df.sparkSession.table(table)
-        .groupBy(partCols.map(col): _*).count()
-        .collect()
-        .map(r => partCols.indices.map(i => s"${partCols(i)}=${r.get(i)}").mkString("/") ->
-          r.getLong(partCols.length))
-        .toMap
-      Lineage.record(outDir, stage, fingerprint, counts)
-      counts
-    }
   }
 
   /** A partition is complete when its directory holds at least one parquet

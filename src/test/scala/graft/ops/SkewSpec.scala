@@ -2,7 +2,6 @@ package graft.ops
 
 import graft.kg.EntityLink
 import graft.pipeline.{Mention, SparkTestSession}
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Skew-stress fixtures (SURVEY.md M6): one pathologically hot entity and one
@@ -12,24 +11,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class SkewSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
-
-  test("salted count equals plain count under a hot key") {
-    val df = spark.range(100000)
-      .select(when($"id" % 2 === 0, lit("HOT")).otherwise(concat(lit("k"), $"id" % 100)).as("k"))
-    val plain = df.groupBy($"k").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val salted = Skew.saltedCount(df, Seq("k")).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(salted == plain)
-    assert(plain("HOT") == 50000)
-  }
-
-  test("salted join equals plain join under a hot key") {
-    val left = spark.range(50000)
-      .select(when($"id" % 2 === 0, lit(0L)).otherwise($"id" % 50).as("k"), $"id".as("v"))
-    val right = (0L until 50L).map(k => (k, s"dim$k")).toDF("k", "name")
-    val plain = left.join(right, "k").agg(count(lit(1)), sum($"v")).as[(Long, Long)].head()
-    val salted = Skew.saltedJoin(left, right, "k").agg(count(lit(1)), sum($"v")).as[(Long, Long)].head()
-    assert(salted == plain)
-  }
 
   test("entity linking survives a hot entity (50% of mentions) with capped buckets") {
     // 20k mentions of one surface + a tail of distinct surfaces

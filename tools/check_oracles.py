@@ -58,16 +58,20 @@ def main(sf_dir, out_dir):
                 i = rows.idxmax()
                 print(f"  first diff row {i}:\n  spark: {spark_df.loc[i].to_dict()}\n  duck:  {duck_df.loc[i].to_dict()}")
             n_fail += 1
-    # rows-only queries
+    # rows-only queries: no oracle, so an empty or unreadable result fails
+    n_rows = 0
     for pq in sorted(glob.glob(f"{out_dir}/q*")):
         name = os.path.basename(pq)
         if name not in oracles and os.path.isdir(pq):
+            n_rows += 1
             try:
                 n = sum(len(pd.read_parquet(f)) for f in glob.glob(f"{pq}/*.parquet"))
                 print(f"ROWSONLY {name}: {n} rows {'OK' if n > 0 else 'EMPTY!'}")
+                if n == 0:
+                    n_fail += 1
             except Exception as e:
-                print(f"ROWSONLY {name}: read error {e}")
-    print(f"\n{n_pass} pass / {n_fail} fail")
+                print(f"ROWSONLY {name}: read error {e}"); n_fail += 1
+    print(f"\n{n_pass} pass / {n_fail} fail ({len(oracles)} oracles, {n_rows} rows-only)")
     return 1 if n_fail else 0
 
 if __name__ == "__main__":
