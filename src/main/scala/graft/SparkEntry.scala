@@ -1,11 +1,12 @@
 package graft
 
-import graft.kg.{ConnectedComponents, EntityLink, GraphMaterializer, KgPipeline, TripleRules}
-import graft.ner.{NerModels, Tagger}
+import graft.kg.{ConnectedComponents, Corpus, KgPipeline}
+import graft.ner.{NerModel, NerModels, Tagger}
 import graft.ops.{Dedup, Hashing, Multimodal, Similarity, TextAnalysis}
 import graft.pipeline.Transcripts
 import graft.streaming.StreamingIngest
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -75,7 +76,9 @@ object SparkEntry {
     KgPipeline.triples(Transcripts.synth(spark, 200L), model).toDF()
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  type Query = (SparkSession, String) => DataFrame
+
+  def queries: Map[String, Query] = Map[String, Query](
     // ===== relational layer (SURVEY.md §2.6 Spark-primitive checklist) =====
     "q01_pricing_summary" -> ((s, d) => {
       t(s, d, "lineitem")
@@ -244,28 +247,9 @@ object SparkEntry {
           col("event_type"), col("n"), col("total_value"))
     }),
 
-    // ===== NER / KG pipeline (no SQL equivalent -> rows-only checks) =====
+    // ===== NER / KG pipeline: q30 here; q31-q35, q41-q46, q48-q53 and
+    // q56-q64 are stages of the KgQueries table (see `kgQueries`) =====
     "q30_ner_tags" -> ((s, d) => Tagger.tagTurns(turns(s, d), NerModels.default(s)).toDF()),
-    "q31_mentions" -> ((s, d) => Tagger.mentions(turns(s, d), NerModels.default(s)).toDF()),
-    "q32_triples" -> ((s, d) => KgPipeline.triples(turns(s, d), NerModels.default(s)).toDF()),
-    "q33_entity_link" -> ((s, d) =>
-      EntityLink.link(Tagger.mentions(turns(s, d), NerModels.default(s)))),
-    "q34_graph_nodes" -> ((s, d) => {
-      GraphMaterializer.rollupNodes(EntityLink.link(Tagger.mentions(turns(s, d), NerModels.default(s))))
-    }),
-    "q35_graph_edges" -> ((s, d) => {
-      val model = NerModels.default(s)
-      // ONE tagging pass feeds both triples and mentions (pinned per-turn
-      // rows, KgPipeline.triplesAndMentions); the linking result is pinned
-      // too, so the surface map's size guard and both joins replay blocks
-      // instead of re-running tag -> link (round-2 review finding: 4x
-      // recompute)
-      val (tps, ments) = KgPipeline.triplesAndMentions(turns(s, d), model)
-      val linked = EntityLink.link(ments).localCheckpoint()
-      GraphMaterializer.joinEndpoints(tps.toDF(), linked)
-        .groupBy(col("subj_id"), col("pred"), col("obj_id"))
-        .agg(count(lit(1)).as("weight"))
-    }),
 
     // ===== multimodal + fingerprints (rows-only) =====
     // feature vector rendered as a deterministic string digest: the driver's
@@ -302,70 +286,6 @@ object SparkEntry {
         .orderBy(col("n").desc, col("shape"))
     }),
 
-    // ===== q41: the CRF math itself under the driver's hash gate =====
-    // A reduced-dictionary CRF (word + dan2-shape unary features; PSEQ +
-    // shape-pair transition features — all four SQL-expressible) whose
-    // weights derive deterministically from splitmix64(fnv(feature) ^
-    // col-mix), tags every document's token stream through the REAL engine
-    // path (NerModel.tag -> featuresAt/idsAt -> Crf.logPotentials ->
-    // Crf.viterbi). The oracle reproduces the whole thing — feature strings,
-    // weight derivation, factor sums, and the Viterbi forward-max with
-    // first-index tie-breaks — in ONE DuckDB statement (the q26 unrolling
-    // idea, with the per-position recursion as a recursive CTE carrying the
-    // DP vector and best paths as lists). Unseen-feature dropping makes the
-    // dictionary immaterial to the oracle: both sides emit features for the
-    // same corpus, so membership coincides by construction.
-    "q41_crf_viterbi" -> ((s, d) => {
-      import s.implicits._
-      val (docs, bc) = hashCrfOver(s, d)
-      docs.flatMap { case (id, tk) =>
-        val tags = bc.value.tag(tk.toIndexedSeq)
-        tk.indices.map(i => (id, i, tk(i), tags(i)))
-      }.toDF("doc_id", "pos", "token", "tag")
-    }),
-    // q42: the REAL span fold (Tagger.spansOfSentence — the seed of every
-    // KG mention/triple) over the q41 hash-CRF tags, with invertible char
-    // offsets into a deterministic single-space join of the tokens; the
-    // oracle reproduces tags + offsets + the label-change/type-adjacency
-    // segmentation in SQL (gaps-and-islands over consecutive equal tags)
-    "q42_crf_spans" -> ((s, d) => {
-      import s.implicits._
-      hashCrfMentions(s, d)
-        .map(m => (m.conv_id.toLong, m.etype, m.begin_char, m.end_char, m.surface))
-        .toDF("doc_id", "etype", "begin_char", "end_char", "surface")
-    }),
-    // q43: the full text -> tags -> spans -> (subj, pred, obj) KG seed path
-    // through the REAL code (Tagger.spansOfSentence + TripleRules
-    // .fromSentence) — the north rule's core output shape, now under the
-    // driver's hash gate instead of rows-only
-    "q43_crf_triples" -> ((s, d) => hashCrfTriples(s, d)),
-    // q44: the REAL EntityLink.link — minhash-LSH blocking over normalized
-    // surfaces, capped-bucket candidate join, exact-jaccard scoring,
-    // connected-components canonicalization, highest-mention-count
-    // representative — over the deterministic hash-CRF mention stream; the
-    // oracle reproduces the whole pipeline in SQL (the q20 minhash algebra +
-    // the q19 recursive closure + window canonicalization)
-    "q44_entity_link" -> ((s, d) => {
-      EntityLink.link(hashCrfMentions(s, d))
-        .select(col("etype"), col("surface"), col("surface_id"), col("n_mentions"),
-          col("entity_id"), col("canonical_surface"))
-    }),
-    // q45/q46: the graph-materialization aggregations (the q34/q35 shapes —
-    // per-entity node rollup with the max-struct canonical pick; triples
-    // joined to the surface map on both endpoints into weighted edges) over
-    // the hash-CRF streams, via the REAL EntityLink/GraphMaterializer code —
-    // the last KG stage under the driver's hash gate
-    "q45_graph_nodes" -> ((s, d) => {
-      GraphMaterializer.rollupNodes(EntityLink.link(hashCrfMentions(s, d)))
-    }),
-    "q46_graph_edges" -> ((s, d) => {
-      val tps = hashCrfTriples(s, d)
-      val linked = EntityLink.link(hashCrfMentions(s, d)).localCheckpoint()
-      GraphMaterializer.joinEndpoints(tps.toDF(), linked)
-        .groupBy(col("subj_id"), col("pred"), col("obj_id"))
-        .agg(count(lit(1)).as("weight"))
-    }),
-
     // q47: K-BEST Viterbi (KBestSequenceFinder semantics — per-state top-k
     // with stable score-desc ordering, candidate order (prepended-class asc,
     // prev-rank asc), global top-k over final states in (state asc, rank
@@ -400,135 +320,11 @@ object SparkEntry {
     "q55_search_graph" -> ((s, d) => {
       import s.implicits._
       val docs = tokDocs(s, d)
-      val words = docs.flatMap(_._2).distinct().collect().sorted
-      val shapes = words.map(w => graft.text.WordShape.dan2NoLC(w)).distinct.sorted
-      val pairs = docs.flatMap { case (_, tk) =>
-        tk.indices.iterator.map { i =>
-          val p = if (i == 0) "" else graft.text.WordShape.dan2NoLC(tk(i - 1))
-          (p, graft.text.WordShape.dan2NoLC(tk(i)))
-        }
-      }.distinct().collect().sorted
-      val bc = s.sparkContext.broadcast(hashCrfModel(words, shapes, pairs, windowSize = 2))
+      val bc = s.sparkContext.broadcast(hashCrfModel(docs, windowSize = 2))
       docs.filter(_._2.length >= 2).flatMap { case (id, tk) =>
         graft.ner.SearchGraph.attLattice(bc.value, tk.toIndexedSeq)
           .iterator.zipWithIndex.map { case (line, ln) => (id, ln, line) }
       }.toDF("doc_id", "ln", "line").orderBy("doc_id", "ln")
-    }),
-
-    // q48: LEARNED-weight CRF inference under the driver's hash gate — the
-    // q41 machinery with TRAINED weights instead of hash-derived ones.
-    // TrainedCrf is a real L-BFGS fit (full Trainer path: distributed
-    // dictionary, Ehat, treeAggregate gradient, Breeze L-BFGS) over a
-    // deterministic corpus, dictionary restricted to the four
-    // SQL-expressible families; tagging runs the identical engine path
-    // (featuresAt -> idsAt -> logPotentials -> viterbi) and the oracle
-    // embeds featureIndex + weights as CAST('<repr>' AS DOUBLE) VALUES rows
-    // and replays emission -> weight join -> potentials -> Viterbi in one
-    // DuckDB statement. Closes the trained-weights leg q30-q35's analogs
-    // could not certify.
-    "q48_crf_trained" -> ((s, d) => {
-      import s.implicits._
-      val (docs, bc) = trainedOver(s, d)
-      docs.flatMap { case (id, tk) =>
-        val tags = bc.value.tag(tk.toIndexedSeq)
-        tk.indices.map(i => (id, i, tk(i), tags(i)))
-      }.toDF("doc_id", "pos", "token", "tag")
-    }),
-    // q49-q53: the whole KG pipeline over the TRAINED model — the same REAL
-    // code paths the hash-CRF rows certify (Tagger.spansOfSentence,
-    // TripleRules.fromSentence, EntityLink.link, the GraphMaterializer
-    // rollups), now with learned weights, each stage hash-gated.
-    // q56: the q30 production shape under the hash gate — REAL transcript
-    // turns (detokenized text) through the REAL serving path (tagTurns:
-    // PTB tokenize -> sentence split -> broadcast-model Viterbi) with a
-    // 4-class model trained on gold transcript turns; the oracle regenerates
-    // the token stream from the generator's splitmix64 formulas (the q54
-    // pattern — agreement therefore also certifies the tokenizer round trip)
-    // and replays shapes -> learned-weight joins -> 4-state Viterbi.
-    "q56_trained_transcripts_tags" -> ((s, d) => {
-      val bc = s.sparkContext.broadcast(TrainedTranscriptsCrf.model(s))
-      Tagger.tagTurns(turns(s, d), bc)
-        .select(col("conv_id"), col("turn_idx"), col("token_idx").as("pos"),
-          col("word").as("token"), col("answer").as("tag"))
-    }),
-    // q57/q58: the north rule's headline outputs — mention spans (with REAL
-    // tokenizer character offsets) and (subj, pred, obj) triples over the
-    // transcript table — through the REAL shuffle-free pipeline
-    // (Tagger.mentions / KgPipeline.triples), hash-gated against the
-    // detokenize-offset + trigger-scan oracle.
-    "q57_trained_transcripts_spans" -> ((s, d) => {
-      val bc = s.sparkContext.broadcast(TrainedTranscriptsCrf.model(s))
-      Tagger.mentions(turns(s, d), bc).toDF()
-    }),
-    "q58_trained_transcripts_triples" -> ((s, d) => {
-      val bc = s.sparkContext.broadcast(TrainedTranscriptsCrf.model(s))
-      KgPipeline.triples(turns(s, d), bc).toDF()
-    }),
-    // q59-q61: linking + graph rollups over the trained-transcripts stream —
-    // the q33-q35 production shapes, hash-gated (the PERSON title strip does
-    // real work here: 'Dr. Alice Johnson' links to 'Alice Johnson').
-    // q62-q64: the DEFAULT on-disk production model (q30/q32/q33's own
-    // weights) under the hash gate — the engine side is the q30/q32/q33
-    // code path verbatim; the oracle re-derives the complete conllNoTags
-    // feature surface (n-grams, knownLC shapes, disjunctive windows, the
-    // sequence templates), the observed-window potential tables and a
-    // 16-state second-order Viterbi from the embedded weight matrix.
-    "q62_default_model_tags" -> ((s, d) =>
-      Tagger.tagTurns(turns(s, d), NerModels.default(s))
-        .select(col("conv_id"), col("turn_idx"), col("token_idx").as("pos"),
-          col("word").as("token"), col("answer").as("tag"))),
-    "q63_default_model_triples" -> ((s, d) =>
-      KgPipeline.triples(turns(s, d), NerModels.default(s)).toDF()),
-    "q64_default_model_link" -> ((s, d) =>
-      EntityLink.link(Tagger.mentions(turns(s, d), NerModels.default(s)))
-        .select(col("etype"), col("surface"), col("surface_id"), col("n_mentions"),
-          col("entity_id"), col("canonical_surface"))),
-    "q59_trained_transcripts_link" -> ((s, d) => {
-      val bc = s.sparkContext.broadcast(TrainedTranscriptsCrf.model(s))
-      EntityLink.link(Tagger.mentions(turns(s, d), bc))
-        .select(col("etype"), col("surface"), col("surface_id"), col("n_mentions"),
-          col("entity_id"), col("canonical_surface"))
-    }),
-    "q60_trained_transcripts_nodes" -> ((s, d) => {
-      val bc = s.sparkContext.broadcast(TrainedTranscriptsCrf.model(s))
-      GraphMaterializer.rollupNodes(EntityLink.link(Tagger.mentions(turns(s, d), bc)))
-    }),
-    "q61_trained_transcripts_edges" -> ((s, d) => {
-      val bc = s.sparkContext.broadcast(TrainedTranscriptsCrf.model(s))
-      val (tps, ments) = KgPipeline.triplesAndMentions(turns(s, d), bc)
-      val linked = EntityLink.link(ments).localCheckpoint()
-      GraphMaterializer.joinEndpoints(tps.toDF(), linked)
-        .groupBy(col("subj_id"), col("pred"), col("obj_id"))
-        .agg(count(lit(1)).as("weight"))
-    }),
-    "q49_crf_trained_spans" -> ((s, d) => {
-      import s.implicits._
-      val (docs, bc) = trainedOver(s, d)
-      crfMentionsOf(s, docs, bc)
-        .map(m => (m.conv_id.toLong, m.etype, m.begin_char, m.end_char, m.surface))
-        .toDF("doc_id", "etype", "begin_char", "end_char", "surface")
-    }),
-    "q50_crf_trained_triples" -> ((s, d) => {
-      val (docs, bc) = trainedOver(s, d)
-      crfTriplesOf(s, docs, bc)
-    }),
-    "q51_trained_entity_link" -> ((s, d) => {
-      val (docs, bc) = trainedOver(s, d)
-      EntityLink.link(crfMentionsOf(s, docs, bc))
-        .select(col("etype"), col("surface"), col("surface_id"), col("n_mentions"),
-          col("entity_id"), col("canonical_surface"))
-    }),
-    "q52_trained_graph_nodes" -> ((s, d) => {
-      val (docs, bc) = trainedOver(s, d)
-      GraphMaterializer.rollupNodes(EntityLink.link(crfMentionsOf(s, docs, bc)))
-    }),
-    "q53_trained_graph_edges" -> ((s, d) => {
-      val (docs, bc) = trainedOver(s, d)
-      val tps = crfTriplesOf(s, docs, bc)
-      val linked = EntityLink.link(crfMentionsOf(s, docs, bc)).localCheckpoint()
-      GraphMaterializer.joinEndpoints(tps.toDF(), linked)
-        .groupBy(col("subj_id"), col("pred"), col("obj_id"))
-        .agg(count(lit(1)).as("weight"))
     }),
 
     // ===== ObjectBank record-iterator sources (reference objectbank/
@@ -571,7 +367,27 @@ object SparkEntry {
           .select(col("record_idx"), col("record"))
       }
     })
-  )
+  ) ++ kgQueries
+
+  /** The KG queries, one stage of one family's chain each (KgQueries). */
+  private def kgQueries: Map[String, Query] =
+    KgQueries.table.map { case (name, family, stage) =>
+      name -> ((s, d) => {
+        val src = source(family, s, d)
+        KgPipeline.compose(src._1, src._2, stage)
+      }): (String, Query)
+    }.toMap
+
+  /** A KG family's corpus and broadcast model over the tables in `d`. */
+  private def source(family: KgQueries.Family, s: SparkSession, d: String): (Corpus[_], Broadcast[NerModel]) =
+    family match {
+      case KgQueries.Production | KgQueries.DefaultTurns => (Corpus.turns(turns(s, d)), NerModels.default(s))
+      case KgQueries.TrainedTurns => (Corpus.turns(turns(s, d)), TrainedTranscriptsCrf.model.broadcast(s))
+      case KgQueries.HashDocs =>
+        val (docs, model) = hashCrfOver(s, d)
+        (Corpus.docs(docs), model)
+      case KgQueries.TrainedDocs => (Corpus.docs(tokDocs(s, d)), TrainedCrf.model.broadcast(s))
+    }
 
   private implicit class SeqToDF(private val rows: Seq[(String, String)]) {
     def toDF(s: SparkSession)(c1: String, c2: String): DataFrame =
@@ -591,68 +407,6 @@ object SparkEntry {
     ((h >>> 11).toDouble / 9007199254740992.0) * 2.0 - 1.0
   }
 
-  /** Deterministic single-space join of a doc's tokens with cumulative char
-    * offsets — the invertible-offset shape the real span fold needs.
-    */
-  private def joinedTokens(tk: Seq[String]): (Seq[graft.text.RawToken], String) = {
-    var off = 0
-    val raws = tk.map { w =>
-      val b = off; off += w.length + 1; graft.text.RawToken(w, b, b + w.length)
-    }
-    (raws, tk.mkString(" "))
-  }
-
-  /** Mention stream over any (docs, broadcast model) pair: tag every doc, run
-    * the REAL Tagger.spansOfSentence fold. Shared by the hash-CRF (q42/q44-46)
-    * and trained-CRF (q49/q51-53) gate queries.
-    */
-  private def crfMentionsOf(s: SparkSession,
-      docs: org.apache.spark.sql.Dataset[(Long, Seq[String])],
-      bc: org.apache.spark.broadcast.Broadcast[graft.ner.NerModel]):
-      org.apache.spark.sql.Dataset[graft.pipeline.Mention] = {
-    import s.implicits._
-    docs.flatMap { case (id, tk) =>
-      val tags = bc.value.tag(tk.toIndexedSeq)
-      val (raws, text) = joinedTokens(tk)
-      graft.ner.Tagger.spansOfSentence(id.toString, 0, 0, raws.toIndexedSeq,
-        tags.toIndexedSeq, text, "O")
-    }
-  }
-
-  /** Triple stream over any (docs, broadcast model) pair: tag -> REAL span
-    * fold -> REAL TripleRules.fromSentence per doc.
-    */
-  private def crfTriplesOf(s: SparkSession,
-      docs: org.apache.spark.sql.Dataset[(Long, Seq[String])],
-      bc: org.apache.spark.broadcast.Broadcast[graft.ner.NerModel]): DataFrame = {
-    import s.implicits._
-    docs.flatMap { case (id, tk) =>
-      val tags = bc.value.tag(tk.toIndexedSeq)
-      val (raws, text) = joinedTokens(tk)
-      val ments = graft.ner.Tagger.spansOfSentence(id.toString, 0, 0, raws.toIndexedSeq,
-        tags.toIndexedSeq, text, "O")
-      TripleRules.fromSentence(ments, raws.map(r => (r.word, r.begin)))
-        .map(t => (id, t.subj, t.subj_type, t.pred, t.obj, t.obj_type))
-    }.toDF("doc_id", "subj", "subj_type", "pred", "obj", "obj_type")
-  }
-
-  private def hashCrfMentions(s: SparkSession, d: String):
-      org.apache.spark.sql.Dataset[graft.pipeline.Mention] = {
-    val (docs, bc) = hashCrfOver(s, d)
-    crfMentionsOf(s, docs, bc)
-  }
-
-  private def hashCrfTriples(s: SparkSession, d: String): DataFrame = {
-    val (docs, bc) = hashCrfOver(s, d)
-    crfTriplesOf(s, docs, bc)
-  }
-
-  /** Tokenized documents + the broadcast TRAINED model (q48-q53). */
-  private def trainedOver(s: SparkSession, d: String): (
-      org.apache.spark.sql.Dataset[(Long, Seq[String])],
-      org.apache.spark.broadcast.Broadcast[graft.ner.NerModel]) =
-    (tokDocs(s, d), s.sparkContext.broadcast(TrainedCrf.model(s)))
-
   /** Tokenized documents + the broadcast hash-CRF over their vocabulary
     * (shared by q41-q46). The dictionary build is a vocabulary-sized driver
     * collect, same shape as the reference's in-RAM Index
@@ -664,50 +418,32 @@ object SparkEntry {
   // (session, dir), so one entry captures all the reuse; on a key change the
   // evicted broadcast is destroyed so a long-lived driver iterating many dirs
   // or sessions cannot accumulate broadcasts (round-4 verdict/advice)
-  private var hashCrfMemo: ((SparkSession, String), (org.apache.spark.sql.Dataset[(Long, Seq[String])],
-      org.apache.spark.broadcast.Broadcast[graft.ner.NerModel])) = null
+  private var hashCrfMemo: ((SparkSession, String), (Dataset[(Long, Seq[String])], Broadcast[NerModel])) = null
 
-  private def hashCrfOver(s: SparkSession, d: String): (
-      org.apache.spark.sql.Dataset[(Long, Seq[String])],
-      org.apache.spark.broadcast.Broadcast[graft.ner.NerModel]) = synchronized {
-    val key = (s, d)
-    if (hashCrfMemo == null || hashCrfMemo._1 != key) {
-      if (hashCrfMemo != null) {
-        try hashCrfMemo._2._2.destroy() catch { case _: Throwable => () }
+  private def hashCrfOver(s: SparkSession, d: String): (Dataset[(Long, Seq[String])], Broadcast[NerModel]) =
+    synchronized {
+      val key = (s, d)
+      if (hashCrfMemo == null || hashCrfMemo._1 != key) {
+        if (hashCrfMemo != null) {
+          try hashCrfMemo._2._2.destroy() catch { case _: Throwable => () }
+        }
+        val docs = tokDocs(s, d)
+        hashCrfMemo = (key, (docs, s.sparkContext.broadcast(hashCrfModel(docs))))
       }
-      hashCrfMemo = (key, buildHashCrf(s, d))
+      hashCrfMemo._2
     }
-    hashCrfMemo._2
-  }
 
   /** Tokenized documents table (the shared tag-corpus shape of q41-q53).
     * r6: Par.fan first — the downstream per-doc CRF decode otherwise runs in
     * ONE task (single parquet split); graft_tokens = the native scanner,
     * output-identical to `toks` (ExpressionsSpec).
     */
-  private def tokDocs(s: SparkSession, d: String):
-      org.apache.spark.sql.Dataset[(Long, Seq[String])] = {
+  private def tokDocs(s: SparkSession, d: String): Dataset[(Long, Seq[String])] = {
     import s.implicits._
     graft.functions.GraftFunctions.register(s)
     graft.ops.Par.fan(t(s, d, "documents").select(col("doc_id"), col("text")))
       .select(col("doc_id"), graft.functions.GraftFunctions.graft_tokens(col("text")).as("tk"))
       .as[(Long, Seq[String])]
-  }
-
-  private def buildHashCrf(s: SparkSession, d: String): (
-      org.apache.spark.sql.Dataset[(Long, Seq[String])],
-      org.apache.spark.broadcast.Broadcast[graft.ner.NerModel]) = {
-    import s.implicits._
-    val docs = tokDocs(s, d)
-    val words = docs.flatMap(_._2).distinct().collect().sorted
-    val shapes = words.map(w => graft.text.WordShape.dan2NoLC(w)).distinct.sorted
-    val pairs = docs.flatMap { case (_, tk) =>
-      tk.indices.iterator.map { i =>
-        val p = if (i == 0) "" else graft.text.WordShape.dan2NoLC(tk(i - 1))
-        (p, graft.text.WordShape.dan2NoLC(tk(i)))
-      }
-    }.distinct().collect().sorted
-    (docs, s.sparkContext.broadcast(hashCrfModel(words, shapes, pairs)))
   }
 
   /** 3-class (O/LOC/PER), windowSize-3, full-product-layout CRF whose
@@ -717,8 +453,16 @@ object SparkEntry {
     * All other features the engine emits hash-miss and drop — the
     * reference's own unseen-feature rule (CRFClassifier.java:200-207).
     */
-  private def hashCrfModel(words: Array[String], shapes: Array[String],
-      pairs: Array[(String, String)], windowSize: Int = 3): graft.ner.NerModel = {
+  private def hashCrfModel(docs: Dataset[(Long, Seq[String])], windowSize: Int = 3): NerModel = {
+    import docs.sparkSession.implicits._
+    val words = docs.flatMap(_._2).distinct().collect().sorted
+    val shapes = words.map(w => graft.text.WordShape.dan2NoLC(w)).distinct.sorted
+    val pairs = docs.flatMap { case (_, tk) =>
+      tk.indices.iterator.map { i =>
+        val p = if (i == 0) "" else graft.text.WordShape.dan2NoLC(tk(i - 1))
+        (p, graft.text.WordShape.dan2NoLC(tk(i)))
+      }
+    }.distinct().collect().sorted
     val g0 = words.map(w => graft.text.WordShape.fixWord(w) + "-WORD|C") ++
       shapes.map(_ + "-TYPE|C")
     val g1 = Array("PSEQ|CpC") ++ pairs.map { case (p, c) => s"$p-$c-TYPES|CpC" }

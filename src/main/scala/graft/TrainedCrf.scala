@@ -1,8 +1,8 @@
 package graft
 
+import graft.ner.ModelMemo
 import graft.pipeline.Transcripts
 import graft.train.{LabeledDoc, Trainer}
-import org.apache.spark.sql.SparkSession
 
 /** The q48 trained-weights CRF: a REAL L-BFGS fit (the same Trainer path every
   * model in this repo trains through — distributed dictionary build, Ehat,
@@ -84,31 +84,12 @@ object TrainedCrf {
     maxKnownLCWords = 0,
     dictionaryFilter = Some(dictFilter))
 
-  @volatile private var cached: graft.ner.NerModel = null
-
   /** Train-once memo: both the q48 query and the q48 oracle-SQL generator read
     * the same in-memory model (see object doc for why that makes the gate
     * bit-exact).
     */
-  def model(spark: SparkSession): graft.ner.NerModel = {
-    var m = cached
-    if (m == null) synchronized {
-      m = cached
-      if (m == null) {
-        import spark.implicits._
-        m = Trainer.train(spark, spark.createDataset(corpus), trainConfig)
-        cached = m
-      }
-    }
-    m
-  }
-
-  /** Session-less entry for the oracle generator (Verify calls oracleSql while
-    * its session is active; a bare call builds a small local one).
-    */
-  def model(): graft.ner.NerModel = model(
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).getOrElse(
-      SparkSession.builder().master("local[4]").appName("graft-q48-train")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false").getOrCreate()))
+  val model = new ModelMemo("graft-q48-train", spark => {
+    import spark.implicits._
+    Trainer.train(spark, spark.createDataset(corpus), trainConfig)
+  })
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ner.NerModel
+import graft.ner.ModelMemo
 import graft.pipeline.Transcripts
 import graft.train.{LabeledDoc, Trainer}
 import org.apache.spark.sql.{Dataset, SparkSession}
@@ -54,23 +54,5 @@ object TrainedTranscriptsCrf {
     maxKnownLCWords = 0,
     dictionaryFilter = Some(TrainedCrf.dictFilter))
 
-  @volatile private var cached: NerModel = null
-
-  def model(spark: SparkSession): NerModel = {
-    var m = cached
-    if (m == null) synchronized {
-      m = cached
-      if (m == null) {
-        m = Trainer.train(spark, corpus(spark), trainConfig)
-        cached = m
-      }
-    }
-    m
-  }
-
-  def model(): NerModel = model(
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).getOrElse(
-      SparkSession.builder().master("local[4]").appName("graft-q56-train")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false").getOrCreate()))
+  val model = new ModelMemo("graft-q56-train", spark => Trainer.train(spark, corpus(spark), trainConfig))
 }

@@ -24,11 +24,9 @@ object ConnectedComponents {
     * overhead for graphs whose union-find takes microseconds. 1M edges
     * (16 MB of longs) is the same driver-size class as the engine's existing
     * vocabulary/dictionary collects (r5 audit); above it the log-round
-    * distributed path runs unchanged. Env-overridable, never hard-coded to
-    * the local core count.
+    * distributed path runs unchanged.
     */
-  private def defaultLocalMaxEdges: Long =
-    sys.env.getOrElse("SPARK_GRAFT_CC_LOCAL_MAX_EDGES", "1000000").toLong
+  private val DefaultLocalMaxEdges = 1000000L
 
   /** @param edges (src, dst) pairs, any orientation, self-loops ok.
     * @param localMaxEdges override of the local-path ceiling (tests pass -1
@@ -37,7 +35,7 @@ object ConnectedComponents {
     *         minimum node id reachable from id; covers every endpoint.
     */
   def run(edges: Dataset[(Long, Long)], maxIter: Int = 20,
-      localMaxEdges: Long = defaultLocalMaxEdges): DataFrame = {
+      localMaxEdges: Long = DefaultLocalMaxEdges): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
 

@@ -2,7 +2,7 @@ package graft.kg
 
 import graft.io.NioLocalFileSystem
 import graft.pipeline.Triple
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -97,6 +97,16 @@ object GraphMaterializer {
       $"entity_id".as(s"${end}_id"), $"canonical_surface".as(s"${end}_canonical"))
     triples.join(side("subj"), Seq("subj_type", "subj")).join(side("obj"), Seq("obj_type", "obj"))
   }
+
+  /** Edge rollup of triples over a linking result: `joinEndpoints`, then one
+    * row per (subj_id, pred, obj_id) with the triple count as `weight`,
+    * followed by the `more` aggregates. `linked` should be pinned, as for
+    * `joinEndpoints`.
+    */
+  def rollupEdges(triples: DataFrame, linked: DataFrame, more: Column*): DataFrame =
+    joinEndpoints(triples, linked)
+      .groupBy(col("subj_id"), col("pred"), col("obj_id"))
+      .agg(count(lit(1)).as("weight"), more: _*)
 
   /** Sink abstraction for the graph tables: write `df` partitioned by
     * `partCols` under `stage`'s table location, with per-partition lineage
@@ -199,10 +209,7 @@ object GraphMaterializer {
 
     sink.write(nodes, s"$outDir/nodes", Seq("etype", "bucket"), outDir, "nodes", fingerprint)
 
-    val edges = joinEndpoints(triples.toDF(), linkedM)
-      .groupBy($"subj_id", $"pred", $"obj_id")
-      .agg(
-        count(lit(1)).as("weight"),
+    val edges = rollupEdges(triples.toDF(), linkedM,
         first($"subj_canonical").as("subj_canonical"),
         first($"obj_canonical").as("obj_canonical"),
         min($"conv_id").as("sample_conv_id"))

@@ -2,6 +2,7 @@ package graft.ner
 
 import graft.pipeline.Transcripts
 import graft.train.{LabeledDoc, Trainer}
+import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 
@@ -14,25 +15,50 @@ object NerModels {
   def defaultPath: String =
     sys.env.getOrElse("GRAFT_MODEL_PATH", "/root/repo/models/ner-conllnotags-v1.gz")
 
-  // keyed by SparkContext: Bench restarts sessions at different parallelism
-  // and a broadcast from a stopped context must not be reused
-  @volatile private var cached: (org.apache.spark.SparkContext, Broadcast[NerModel]) = _
-
-  def default(spark: SparkSession): Broadcast[NerModel] = synchronized {
-    if (cached == null || (cached._1 ne spark.sparkContext)) {
-      val path = defaultPath
-      val model =
-        if (java.nio.file.Files.exists(java.nio.file.Paths.get(path))) NerModel.load(path)
-        else {
-          import spark.implicits._
-          val gold = Transcripts.synthGold(spark, nConvs = 400L, seed = 42L)
-            .map(g => LabeledDoc(g.words, g.labels))
-          val m = Trainer.train(spark, gold, Trainer.Config(maxIterations = 120))
-          NerModel.save(m, path)
-          m
-        }
-      cached = (spark.sparkContext, spark.sparkContext.broadcast(model))
+  private val defaultModel = new ModelMemo("graft-default-model", spark => {
+    val path = defaultPath
+    if (java.nio.file.Files.exists(java.nio.file.Paths.get(path))) NerModel.load(path)
+    else {
+      import spark.implicits._
+      val gold = Transcripts.synthGold(spark, nConvs = 400L, seed = 42L)
+        .map(g => LabeledDoc(g.words, g.labels))
+      val m = Trainer.train(spark, gold, Trainer.Config(maxIterations = 120))
+      NerModel.save(m, path)
+      m
     }
-    cached._2
+  })
+
+  def default(spark: SparkSession): Broadcast[NerModel] = defaultModel.broadcast(spark)
+}
+
+/** A model built once per JVM on first use and broadcast once per
+  * SparkContext (Bench restarts sessions at different parallelism, and a
+  * broadcast from a stopped context must not be reused). Queries and the
+  * oracle generator read the same in-memory model; a caller without a
+  * session (the oracle generator outside Verify) builds in a small local one.
+  */
+final class ModelMemo(appName: String, build: SparkSession => NerModel) {
+  @volatile private var model: NerModel = _
+  private var shared: (SparkContext, Broadcast[NerModel]) = _
+
+  def apply(spark: SparkSession): NerModel = {
+    var m = model
+    if (m == null) synchronized {
+      m = model
+      if (m == null) { m = build(spark); model = m }
+    }
+    m
+  }
+
+  def apply(): NerModel = apply(
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).getOrElse(
+      SparkSession.builder().master("local[4]").appName(appName)
+        .config("spark.sql.shuffle.partitions", "4")
+        .config("spark.ui.enabled", "false").getOrCreate()))
+
+  def broadcast(spark: SparkSession): Broadcast[NerModel] = synchronized {
+    val sc = spark.sparkContext
+    if (shared == null || (shared._1 ne sc)) shared = (sc, sc.broadcast(apply(spark)))
+    shared._2
   }
 }

@@ -1,6 +1,9 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 
 /** Scale-adaptive parallelism floor (optimization guide §2.5 "input skew" /
   * §6 small files). The sandbox sf tables are single parquet files with ONE
@@ -19,6 +22,20 @@ import org.apache.spark.sql.DataFrame
 object Par {
   def fan(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < p) df.repartition(p) else df
+    if (width(df.queryExecution.executedPlan) < p) df.repartition(p) else df
+  }
+
+  /** The partition count `plan` declares, read without executing it (under
+    * AQE, `df.rdd` would run every exchange below it): the nearest
+    * exchange's width, else a file scan's split count.
+    */
+  private def width(plan: SparkPlan): Int = plan match {
+    case a: AdaptiveSparkPlanExec => width(a.inputPlan)
+    case e: ShuffleExchangeLike => e.numPartitions
+    case f: FileSourceScanExec => f.inputRDD.getNumPartitions
+    case p => p.outputPartitioning.numPartitions match {
+      case 0 if p.children.nonEmpty => p.children.map(width).max
+      case n => n
+    }
   }
 }

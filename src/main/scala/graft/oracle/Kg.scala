@@ -1,6 +1,7 @@
 package graft.oracle
 
-import graft.kg.TripleRules
+import graft.kg.{Stage, TripleRules}
+import graft.kg.Stage._
 import graft.oracle.Sql.{fnvSql, toSigned, umul64}
 
 /** The KG stages after tagging, as CTE tails over `tags(doc_id, i, w, tag)`,
@@ -164,22 +165,6 @@ object Kg {
        |    ORDER BY n_mentions DESC, surface ASC) canonical_surface
        |FROM massign)""".stripMargin
   }
-
-  /** The stage an oracle ends in, with the engine query shape it checks. */
-  sealed trait Stage
-  /** Per-token tags. */
-  case object Tags extends Stage
-  /** Mention spans (Tagger.spansOfSentence). */
-  case object Spans extends Stage
-  /** (subj, pred, obj) triples (TripleRules.fromSentence). */
-  case object Triples extends Stage
-  /** The surface map (EntityLink.link). */
-  case object Link extends Stage
-  /** Node rollup (GraphMaterializer.rollupNodes): per-entity aggregation
-    * with the max-struct canonical pick. */
-  case object Nodes extends Stage
-  /** Weighted edges: triples joined to the surface map on both endpoints. */
-  case object Edges extends Stage
 
   /** One oracle: the tag prefix `tags` (a `WITH RECURSIVE` chain ending in
     * `tags`), then the CTE tails `stage` needs, then its final SELECT.

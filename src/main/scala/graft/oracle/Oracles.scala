@@ -1,6 +1,6 @@
 package graft.oracle
 
-import graft.{TrainedCrf, TrainedTranscriptsCrf}
+import graft.{KgQueries, TrainedCrf, TrainedTranscriptsCrf}
 import graft.SparkEntry.TokPat
 import graft.ner.{NerModel, NerModels}
 import graft.ops.Similarity
@@ -26,34 +26,32 @@ object Oracles {
   private def learned(tokens: String, m: NerModel): String =
     tagged(tokens, Potentials.learned(m), m.classIndex.toIndexedSeq, 1, m.backgroundIndex)
 
-  private def kg(tags: String, corpus: Corpus, stages: (String, Stage)*): Seq[(String, String)] =
-    stages.map { case (name, stage) => name -> compose(tags, corpus, stage) }
+  /** A gated KG family's tag prefix and corpus; none for the rows-only
+    * production family. The trained-weight prefixes embed the in-memory
+    * weights of the memoized TrainedCrf / TrainedTranscriptsCrf models
+    * (trained on first use) and of the on-disk default model.
+    */
+  def kgPrefix(family: KgQueries.Family): Option[(String, Corpus)] = family match {
+    case KgQueries.Production => None
+    case KgQueries.HashDocs => Some((hashTags, Docs))
+    case KgQueries.TrainedDocs => Some((learned(Tokens.documents, TrainedCrf.model()), Docs))
+    case KgQueries.TrainedTurns => Some((learned(Tokens.transcripts, TrainedTranscriptsCrf.model()), Turns))
+    case KgQueries.DefaultTurns =>
+      val m = NerModel.load(NerModels.defaultPath)
+      Some((tagged(Tokens.transcripts, Potentials.defaultModel(m), m.classIndex.toIndexedSeq,
+        m.layout.windowSize - 1, m.backgroundIndex), Turns))
+  }
 
-  /** All 53 oracles. The trained-weight entries embed the in-memory weights
-    * of the memoized TrainedCrf / TrainedTranscriptsCrf models (trained on
-    * first use) and of the on-disk default model.
+  private def hashTags = tagged(Tokens.documents, Potentials.hashed, Seq("O", "LOCATION", "PERSON"), 1, 0)
+
+  /** All 53 oracles: the relational and text ones, q47, and one per gated
+    * entry of the KgQueries table.
     */
   def sql: Map[String, String] = {
-    val hashTags = tagged(Tokens.documents, Potentials.hashed, Seq("O", "LOCATION", "PERSON"), 1, 0)
-    val trained = TrainedCrf.model()
-    val turns = TrainedTranscriptsCrf.model()
-    val default = NerModel.load(NerModels.defaultPath)
-    val kgOracles =
-      kg(hashTags, Docs, "q41_crf_viterbi" -> Tags, "q42_crf_spans" -> Spans,
-        "q43_crf_triples" -> Triples, "q44_entity_link" -> Link,
-        "q45_graph_nodes" -> Nodes, "q46_graph_edges" -> Edges) ++
-      kg(learned(Tokens.documents, trained), Docs,
-        "q48_crf_trained" -> Tags, "q49_crf_trained_spans" -> Spans,
-        "q50_crf_trained_triples" -> Triples, "q51_trained_entity_link" -> Link,
-        "q52_trained_graph_nodes" -> Nodes, "q53_trained_graph_edges" -> Edges) ++
-      kg(learned(Tokens.transcripts, turns), Turns,
-        "q56_trained_transcripts_tags" -> Tags, "q57_trained_transcripts_spans" -> Spans,
-        "q58_trained_transcripts_triples" -> Triples, "q59_trained_transcripts_link" -> Link,
-        "q60_trained_transcripts_nodes" -> Nodes, "q61_trained_transcripts_edges" -> Edges) ++
-      kg(tagged(Tokens.transcripts, Potentials.defaultModel(default),
-          default.classIndex.toIndexedSeq, default.layout.windowSize - 1, default.backgroundIndex), Turns,
-        "q62_default_model_tags" -> Tags, "q63_default_model_triples" -> Triples,
-        "q64_default_model_link" -> Link)
+    val prefixes = KgQueries.table.map(_._2).distinct.map(f => f -> kgPrefix(f)).toMap
+    val kgOracles = KgQueries.table.flatMap { case (name, family, stage) =>
+      prefixes(family).map { case (tags, corpus) => name -> compose(tags, corpus, stage) }
+    }
     relational ++ kgOracles + ("q47_crf_kbest" -> s"$hashTags,\n${Viterbi.kBest}")
   }
 

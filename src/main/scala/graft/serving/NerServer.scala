@@ -1,8 +1,7 @@
 package graft.serving
 
-import graft.ner.{NerModel, OutputFormats}
+import graft.ner.{NerModel, OutputFormats, Tagger}
 import graft.pipeline.TaggedToken
-import graft.text.{SentenceSplitter, Tokenizer}
 import java.io.{BufferedReader, InputStreamReader, OutputStreamWriter, PrintWriter}
 import java.net.{ServerSocket, Socket, SocketException}
 
@@ -27,13 +26,7 @@ object NerServer {
     */
   def classifyToString(model: NerModel, text: String,
       format: String = "slashTags", spacing: Boolean = true): String = {
-    val sentences = SentenceSplitter.split(Tokenizer.tokenize(text))
-    val tokens = sentences.zipWithIndex.flatMap { case (sent, si) =>
-      val answers = model.tag(sent.map(_.word))
-      sent.zipWithIndex.map { case (tok, i) =>
-        TaggedToken("", 0, si, i, tok.word, tok.begin, tok.end, answers(i))
-      }
-    }
+    val tokens = Tagger.sentencesOf("", 0, text, model).flatMap(_.tokens).toVector
     format match {
       case "slashTags" =>
         if (spacing) renderPreservingSpacing(text, tokens)(t => s"${t.word}/${t.answer}")

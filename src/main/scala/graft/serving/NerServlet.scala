@@ -1,7 +1,6 @@
 package graft.serving
 
-import graft.ner.NerModel
-import graft.text.{SentenceSplitter, Tokenizer}
+import graft.ner.{NerModel, Tagger}
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets
@@ -98,11 +97,7 @@ object NerServlet {
     * reference's per-doc loop.
     */
   def renderOffsets(model: NerModel, text: String): String = {
-    val spans = SentenceSplitter.split(Tokenizer.tokenize(text)).flatMap { sent =>
-      val answers = model.tag(sent.map(_.word))
-      graft.ner.Tagger.spansOfSentence("", 0, 0, sent.toIndexedSeq,
-        answers.toIndexedSeq, text, model.classIndex(model.backgroundIndex))
-    }
+    val spans = Tagger.sentencesOf("", 0, text, model).flatMap(_.spans)
     spans.map(m => s"(${m.etype},${m.begin_char},${m.end_char})").mkString("[", ", ", "]")
   }
 }

@@ -6,7 +6,9 @@ import graft.core.Crf
 import graft.io.NioLocalFileSystem
 import graft.ner.{Gazette, NerFeatures, NerModel}
 import graft.text.WordShape
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
+import scala.reflect.ClassTag
 
 /** One training document: token words + gold labels (IO encoding, background
   * "O"), pre-tokenized — the unit the reference's column reader produces
@@ -21,14 +23,15 @@ final case class LabeledDoc(words: Seq[String], labels: Seq[String],
     generics: Seq[String] = Seq.empty)
 
 /** Distributed CRF training: dictionary-build jobs + L-BFGS on the driver over
-  * a `treeAggregate`d (value, gradient) — the classic Spark convex-optimization
-  * shape (same as mllib.optimization.LBFGS). Semantics follow
+  * per-partition (value, gradient) partials merged in partition order — the
+  * classic Spark convex-optimization shape (mllib.optimization.LBFGS),
+  * made reproducible. Semantics follow
   * CRFClassifier.train (/root/reference/src/edu/stanford/nlp/ie/crf/CRFClassifier.java:936-1108)
   * with the quadratic prior (sigma) of CRFLogConditionalObjectiveFunction.java:237-253.
   *
   * Scale notes (100 TB corpus): every per-iteration pass is a single map over
-  * the cached encoded Dataset with a depth-2 tree reduction of the flat
-  * gradient; the feature dictionary is built with a distributed
+  * the cached encoded Dataset whose one gradient per partition is merged in
+  * partition order (at most min(cores, docs / 50 + 1) of them); the feature dictionary is built with a distributed
   * distinct/count aggregation and only the distinct feature strings are
   * collected. That collect is NOT the binding constraint at scale: the model
   * itself (featureIndex + a dense weight row per feature) must fit in one JVM
@@ -244,6 +247,35 @@ object Trainer {
       })
       ProcessedMeta(flags, lc, ci, feats, obs)
     } finally in.close()
+  }
+
+  /** Merges the one partial each partition of `partials` yields, in
+    * partition-index order, whatever order the tasks finish in. A
+    * completion-order merge (`treeReduce`) groups floating-point sums
+    * differently from run to run, so the same training ended in weights
+    * apart in their last bits. A partial that finishes early is held until
+    * the lower partitions' partials are merged.
+    */
+  private def mergeInOrder[T: ClassTag](partials: RDD[T])(merge: (T, T) => T): T = {
+    val waiting = scala.collection.mutable.Map.empty[Int, T]
+    var next = 0
+    var acc = Option.empty[T]
+    partials.sparkContext.runJob(partials, (it: Iterator[T]) => it.next(), (i: Int, p: T) => {
+      waiting(i) = p
+      while (waiting.contains(next)) {
+        val q = waiting.remove(next).get
+        acc = Some(acc.fold(q)(merge(_, q)))
+        next += 1
+      }
+    })
+    acc.get
+  }
+
+  private val addCounted: ((Array[Double], Long), (Array[Double], Long)) => (Array[Double], Long) = {
+    case ((g1, n1), (g2, n2)) =>
+      var i = 0
+      while (i < g1.length) { g1(i) += g2(i); i += 1 }
+      (g1, n1 + n2)
   }
 
   def train(spark: SparkSession, docs0: Dataset[LabeledDoc], cfg: Config = Config()): NerModel = {
@@ -474,13 +506,11 @@ object Trainer {
             it.foreach { case (doc, lab) => v += CrfObjective.docValueGrad(doc, lab, p, lay, g) }
             Iterator.single((v, g))
           }
-          val (value, grad) = partials.treeReduce(
-            { case ((v1, g1), (v2, g2)) =>
-              var i = 0
-              while (i < g1.length) { g1(i) += g2(i); i += 1 }
-              (v1 + v2, g1)
-            },
-            depth = 2)
+          val (value, grad) = mergeInOrder(partials) { case ((v1, g1), (v2, g2)) =>
+            var i = 0
+            while (i < g1.length) { g1(i) += g2(i); i += 1 }
+            (v1 + v2, g1)
+          }
           bw.destroy()
           val g = if (grad == null) new Array[Double](n) else grad
           // quadratic prior
@@ -507,7 +537,7 @@ object Trainer {
             val layoutRef = bLayout
             val batch = encoded.rdd.sample(withReplacement = false,
               cfg.sgdBatchFraction, seed = 0x5bdL + epoch)
-            val (gSum, nSeen) = batch.mapPartitions { it =>
+            val (gSum, nSeen) = mergeInOrder(batch.mapPartitions { it =>
               val lay = layoutRef.value
               val p = lay.params(bw.value)
               val g = new Array[Double](lay.totalSize)
@@ -516,11 +546,7 @@ object Trainer {
                 CrfObjective.docValueGrad(doc, lab, p, lay, g); cnt += 1
               }
               Iterator.single((g, cnt))
-            }.treeReduce({ (a, b) =>
-              var i = 0
-              while (i < a._1.length) { a._1(i) += b._1(i); i += 1 }
-              (a._1, a._2 + b._2)
-            }, depth = 2)
+            })(addCounted)
             bw.destroy()
             val scale = if (nSeen == 0) 0.0 else total / nSeen // unbias the sample
             val gain = cfg.sgdGain / (1.0 + epoch / 10.0) / total
@@ -542,7 +568,7 @@ object Trainer {
         val layoutRef = bLayout
         val batch = encoded.rdd.sample(withReplacement = false,
           cfg.sgdBatchFraction, seed = 0x5ca1edL + epoch)
-        val (gSum, nSeen) = batch.mapPartitions { it =>
+        val (gSum, nSeen) = mergeInOrder(batch.mapPartitions { it =>
           val lay = layoutRef.value
           val p = lay.params(bw.value)
           val g = new Array[Double](lay.totalSize)
@@ -551,11 +577,7 @@ object Trainer {
             CrfObjective.docValueGrad(doc, lab, p, lay, g); cnt += 1
           }
           Iterator.single((g, cnt))
-        }.treeReduce({ (a, b) =>
-          var i = 0
-          while (i < a._1.length) { a._1(i) += b._1(i); i += 1 }
-          (a._1, a._2 + b._2)
-        }, depth = 2)
+        })(addCounted)
         bw.destroy()
         val scale = if (nSeen == 0) 0.0 else 1.0 / nSeen // per-example mean
         Array.tabulate(n)(i => scale * gSum(i) + at(i) / (sigmaSq * nEncoded.toDouble))
@@ -657,13 +679,11 @@ object Trainer {
             }
             Iterator.single((acc.v, e, ehat))
           }
-          val (prob, e, ehat) = partials.treeReduce(
-            { case ((p1, e1, h1), (p2, e2, h2)) =>
-              var i = 0
-              while (i < e1.length) { e1(i) += e2(i); h1(i) += h2(i); i += 1 }
-              (p1 + p2, e1, h1)
-            },
-            depth = 2)
+          val (prob, e, ehat) = mergeInOrder(partials) { case ((p1, e1, h1), (p2, e2, h2)) =>
+            var i = 0
+            while (i < e1.length) { e1(i) += e2(i); h1(i) += h2(i); i += 1 }
+            (p1 + p2, e1, h1)
+          }
           bw.destroy()
           val (v, g) = FloatObjective.finish(prob, e, ehat, xf, cfg.sigma.toFloat)
           (v.toDouble, DenseVector(g.map(_.toDouble)))

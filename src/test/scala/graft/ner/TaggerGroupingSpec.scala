@@ -66,5 +66,15 @@ class TaggerGroupingSpec extends AnyFunSuite {
     assert(edges.count() > 0)
     assert(scans.value == nTurns,
       s"expected exactly one scan of $nTurns turns, saw ${scans.value} row reads")
+
+    // the docs-corpus Edges shape (q46, q53) shares the same one-pass fold
+    val docs = (0L until 60L).map(c => (c, Transcripts.turnTokens(42L, c, 0)._1: Seq[String]))
+    val docScans = spark.sparkContext.longAccumulator("docScans")
+    val instrumentedDocs = docs.toDS().map { d => docScans.add(1); d }
+    val docEdges = graft.kg.KgPipeline.compose(graft.kg.Corpus.docs(instrumentedDocs), model,
+      graft.kg.Stage.Edges)
+    assert(docEdges.count() > 0)
+    assert(docScans.value == docs.length,
+      s"expected exactly one scan of ${docs.length} docs, saw ${docScans.value} row reads")
   }
 }
