@@ -453,7 +453,7 @@ object SparkEntry {
     * All other features the engine emits hash-miss and drop — the
     * reference's own unseen-feature rule (CRFClassifier.java:200-207).
     */
-  private def hashCrfModel(docs: Dataset[(Long, Seq[String])], windowSize: Int = 3): NerModel = {
+  private[graft] def hashCrfModel(docs: Dataset[(Long, Seq[String])], windowSize: Int = 3): NerModel = {
     import docs.sparkSession.implicits._
     val words = docs.flatMap(_._2).distinct().collect().sorted
     val shapes = words.map(w => graft.text.WordShape.dan2NoLC(w)).distinct.sorted

@@ -1,7 +1,7 @@
 package graft
 
 import graft.ner.ModelMemo
-import graft.pipeline.Transcripts
+import graft.ops.Hashing
 import graft.train.{LabeledDoc, Trainer}
 
 /** The q48 trained-weights CRF: a REAL L-BFGS fit (the same Trainer path every
@@ -52,9 +52,9 @@ object TrainedCrf {
     * q49-q53 trained-pipeline oracles.
     */
   def corpus: Seq[LabeledDoc] = (0 until 48).map { d =>
-    val n = (10 + (Transcripts.splitmix64(0x48c0L + d) & 7)).toInt
+    val n = (10 + (Hashing.splitmix64(0x48c0L + d) & 7)).toInt
     val words = (0 until n).map { i =>
-      Vocab(((Transcripts.splitmix64(d * 131L + i * 7L + 1L) >>> 8) % Vocab.length).toInt)
+      Vocab(((Hashing.splitmix64(d * 131L + i * 7L + 1L) >>> 8) % Vocab.length).toInt)
     }
     val labels = words.zipWithIndex.map { case (w, i) =>
       val prev = if (i == 0) "" else words(i - 1)

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -347,21 +348,18 @@ object GraftFunctions {
   def graft_rhp_signatures(c: Column, nTables: Int, bitsPerTable: Int): Column =
     org.apache.spark.sql.functions.call_function(s"graft_rhp_${nTables}_$bitsPerTable", c)
 
-  /** Register for SQL: SELECT graft_shape(word), graft_fnv64(text) ... */
+  /** Register for SQL: SELECT graft_shape(word), graft_fnv64(text) ...
+    * Every query calls this, so a name the session's registry already holds
+    * is left as it is: the first call registers, later calls replace nothing.
+    */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shape", exprs => GraftShape(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_fnv64", exprs => GraftFnv64(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine", exprs => GraftCosine(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_tokens", exprs => GraftTokens(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_token_stats", exprs => GraftTokenStats(exprs.head), "built-in")
+    registerOnce(spark, "graft_shape")(exprs => GraftShape(exprs.head))
+    registerOnce(spark, "graft_fnv64")(exprs => GraftFnv64(exprs.head))
+    registerOnce(spark, "graft_cosine")(exprs => GraftCosine(exprs(0), exprs(1)))
+    registerOnce(spark, "graft_tokens")(exprs => GraftTokens(exprs.head))
+    registerOnce(spark, "graft_token_stats")(exprs => GraftTokenStats(exprs.head))
     for (n <- 1 to 8) // one registered name per shingle width (n is static)
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        s"graft_shingles_$n", exprs => GraftShingles(exprs.head, n), "built-in")
+      registerOnce(spark, s"graft_shingles_$n")(exprs => GraftShingles(exprs.head, n))
     // one registered name per (tables, bits) pair actually used (static
     // params); callers with other shapes use registerRhp below
     for ((t, b) <- Seq((16, 6), (8, 8))) registerRhp(spark, t, b)
@@ -373,7 +371,14 @@ object GraftFunctions {
     * two static pairs were registered, a regression vs the old UDF).
     */
   def registerRhp(spark: SparkSession, nTables: Int, bitsPerTable: Int): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      s"graft_rhp_${nTables}_$bitsPerTable",
-      exprs => GraftRhpSignatures(exprs.head, nTables, bitsPerTable), "built-in")
+    registerOnce(spark, s"graft_rhp_${nTables}_$bitsPerTable")(
+      exprs => GraftRhpSignatures(exprs.head, nTables, bitsPerTable))
+
+  private def registerOnce(spark: SparkSession, name: String)(build: Seq[Expression] => Expression): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    registry.synchronized {
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, build, "built-in")
+    }
+  }
 }

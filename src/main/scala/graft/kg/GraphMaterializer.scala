@@ -54,9 +54,6 @@ object GraphMaterializer {
       }
       fp.map(f => (f, parts))
     }
-
-    def shouldRun(outDir: String, stage: String, fingerprint: String): Boolean =
-      !read(outDir, stage).exists(_._1 == fingerprint)
   }
 
   private val NodeBuckets = 16

@@ -15,8 +15,8 @@ import scala.collection.mutable
   * Canonical state = the two lookup maps (exactly what the reference
   * serializes inside its feature factory — wordToGazetteEntries /
   * wordToGazetteInfos — so binary bundles reconstruct losslessly even when
-  * sloppy-only, where the original phrases are unrecoverable). Precomputed
-  * FNV hashes for the allocation-free fast path are transient.
+  * sloppy-only, where the original phrases are unrecoverable). A model with
+  * a gazette encodes through the string path (`NerFeatures.featuresAt`).
   */
 final class Gazette(
     val sloppy: Map[String, Array[String]], // word -> distinct "TYPE-GAZn"
@@ -31,12 +31,6 @@ final class Gazette(
       clean.toSeq.sortBy(_._1).iterator.map { case (w, es) =>
         s"c $w ${es.map(e => s"${e.loc}:${e.words.mkString(" ")}:${e.feature}").mkString(",")}"
       }
-
-  /** fnv64(feature + "|C") per sloppy feature, for the fast path. */
-  @transient lazy val sloppyHashes: Map[String, Array[Long]] =
-    sloppy.map { case (w, fs) => w -> fs.map(f => NerFeaturesFast.fnv(f + "|C")) }
-  @transient lazy val cleanHashes: Map[String, Array[(Gazette.CleanEntry, Long)]] =
-    clean.map { case (w, es) => w -> es.map(e => (e, NerFeaturesFast.fnv(e.feature + "|C"))) }
 }
 
 object Gazette {

@@ -86,12 +86,10 @@ object NerFeatures {
     false
   }
 
-  /** Full occurrence-pattern feature emission (NERFeatureFactory.java:1953-2018),
-    * shared by both feature paths (the emitted strings are a closed set of 9
-    * constants, so the fast path maps them to precomputed hashes). All
-    * emitted strings carry the "|C" suffix.
+  /** Full occurrence-pattern feature emission (NERFeatureFactory.java:1953-2018).
+    * All emitted strings carry the "|C" suffix.
     */
-  private[ner] def occurrenceFeatures(toks: IndexedSeq[Tok], loc: Int, reverse: Boolean,
+  private def occurrenceFeatures(toks: IndexedSeq[Tok], loc: Int, reverse: Boolean,
       emit: String => Unit): Unit = {
     @inline def r(i: Int): Int = if (reverse) -i else i
     @inline def at(i: Int): Tok = if (i >= 0 && i < toks.length) toks(i) else Pad
@@ -174,8 +172,8 @@ object NerFeatures {
       parenMatching = false)
 
   // paren-matching token classes (NERFeatureFactory.java:1593-1604)
-  @inline private[ner] def isOpen(w: String): Boolean = w == "(" || w == "[" || w == "-LRB-"
-  @inline private[ner] def isClose(w: String): Boolean = w == ")" || w == "]" || w == "-RRB-"
+  @inline private def isOpen(w: String): Boolean = w == "(" || w == "[" || w == "-LRB-"
+  @inline private def isClose(w: String): Boolean = w == ")" || w == "]" || w == "-RRB-"
 
   /** useNGrams options (NERFeatureFactory.java:1173-1197): substring features
     * of "<word>" with optional transforms and bounds. Defaults = the
@@ -358,9 +356,9 @@ object NerFeatures {
 
   /** Cold misc-family emissions of group 0, part A (useUnknown through
     * useGenericFeatures) — extracted to keep `featuresAt` under HotSpot's
-    * 8000-bytecode-byte DontCompileHugeMethods limit (it sat at 7,655 bytes;
-    * the fast path's idsAt actually crossed it — see NerFeaturesFast).
-    * Emission order preserved exactly.
+    * 8000-bytecode-byte DontCompileHugeMethods limit (it sat at 7,655
+    * bytes). Emission order preserved exactly. The misc families encode
+    * only here: NerFeaturesFast hashes the conllNoTags preset alone.
     */
   private def addMiscG0A(misc: MiscOpts, c: Tok, p: Tok, nt: Tok, cWord: String,
       useTags: Boolean, useDistSim: Boolean, g0: java.util.LinkedHashSet[String]): Unit = {

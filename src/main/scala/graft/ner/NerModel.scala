@@ -81,6 +81,17 @@ final class NerModel(
 
   val classOf: Map[String, Int] = classIndex.zipWithIndex.toMap
 
+  /** True when the model reads only the conllNoTags preset's templates, so
+    * `encodeFast` hashes them (NerFeaturesFast). Any optional family sends
+    * it through the string path, `encode(preprocess(words))`, which gives
+    * the same ids in the same order. `useReverse` and `normalizeTerms` only
+    * change word order and preprocessing, so they keep the hashing path.
+    */
+  val hashesFeatures: Boolean =
+    gazette.isEmpty && !useOccurrencePatterns && distSim.isEmpty && !useTags &&
+      !useTaggySequences && !useParenMatching && ngramOpts == NerFeatures.NgramOpts.default &&
+      disjunctionWidth == 4 && miscOpts == NerFeatures.MiscOpts.default && genericKey.isEmpty
+
   /** FNV-hash → feature-id table for the allocation-free inference path.
     * Built once per executor (lazy transient) from the string dictionary.
     */
@@ -101,16 +112,15 @@ final class NerModel(
   }
 
   /** Each word's single-token feature hashes and their ids in THIS model's
-    * dictionary (n-grams under the default NgramOpts, WORD, PW, NW, TYPE,
-    * ...; see NerFeaturesFast), computed once per distinct word, and the
-    * word → preprocessed token cache whose tokens key them (shape strings are
-    * pure functions of the word under a frozen knownLCWords set, so they are
-    * vocabulary-cacheable — the reference memoizes ngrams the same way,
-    * NERFeatureFactory.java:1198-1200). Both empty together rather than pass
-    * `NerFeaturesFast.UnaryMemo.MaxBytes` of heap.
+    * dictionary (n-grams, WORD, PW, NW, TYPE, ...; see NerFeaturesFast),
+    * computed once per distinct word, and the word → preprocessed token cache
+    * whose tokens key them (shape strings are pure functions of the word
+    * under a frozen knownLCWords set, so they are vocabulary-cacheable — the
+    * reference memoizes ngrams the same way, NERFeatureFactory.java:1198-1200).
+    * Both empty together rather than pass `NerFeaturesFast.UnaryMemo.MaxBytes`
+    * of heap.
     */
-  @transient lazy val unaryMemo =
-    new NerFeaturesFast.UnaryMemo(hashIndex, ngramOpts == NerFeatures.NgramOpts.default)
+  @transient lazy val unaryMemo = new NerFeaturesFast.UnaryMemo(hashIndex)
   @transient private lazy val scratch = new ThreadLocal[NerFeaturesFast.Scratch] {
     override def initialValue(): NerFeaturesFast.Scratch = new NerFeaturesFast.Scratch
   }
@@ -127,28 +137,21 @@ final class NerModel(
 
   private def tok(w: String): NerFeatures.Tok = unaryMemo.tok(w, mkTokF)
 
-  /** Fast encode: feature hashing, no string materialization (parity with
-    * `encode` pinned by FeatureParitySpec).
+  /** Encode raw words, the encoder of every raw-word entry point: feature
+    * hashing with no string materialization under the preset
+    * (`hashesFeatures`), else `encode(preprocess(words))`. The two agree
+    * id for id (FeatureParitySpec).
     */
   def encodeFast(words: IndexedSeq[String]): Crf.EncodedDoc = {
+    if (!hashesFeatures) return encode(preprocess(words))
     val toks = words.map(tok)
-    encodeToks(toks, toks)
-  }
-
-  /** The fast encode loop of every entry point. `toks(i)` is the token the
-    * templates read; `keys(i)` is its word-only token from `tok` (same word,
-    * shape and cluster), which keys the unary memo.
-    */
-  private def encodeToks(toks: IndexedSeq[NerFeatures.Tok],
-      keys: IndexedSeq[NerFeatures.Tok]): Crf.EncodedDoc = {
     val memo = unaryMemo
-    val un = memo.row(keys)
+    val un = memo.row(toks)
     val s = scratch.get()
     val out = new Array[Array[Array[Int]]](toks.length)
     var pos = 0
     while (pos < out.length) {
-      out(pos) = NerFeaturesFast.idsAt(toks, un, pos, memo, s, gazette, useOccurrencePatterns,
-        distSim.isDefined, useTags, useTaggySequences, useReverse, useParenMatching, ngramOpts, disjunctionWidth, miscOpts)
+      out(pos) = NerFeaturesFast.idsAt(toks, un, pos, memo, s)
       pos += 1
     }
     out
@@ -224,7 +227,8 @@ final class NerModel(
 
   /** Viterbi-tag a POS-tagged document (column data `word=0,tag=1,answer=2`,
     * ColumnDocumentReaderAndWriter semantics): tags feed the useTags /
-    * useTaggySequences templates.
+    * useTaggySequences templates. The extra columns are read only by
+    * optional families, so this entry point encodes through the string path.
     */
   def tag(words: IndexedSeq[String], tags: IndexedSeq[String],
       lemmas: IndexedSeq[String] = IndexedSeq.empty,
@@ -247,15 +251,15 @@ final class NerModel(
     val inU = if (useReverse) unknowns.reverse else unknowns
     val inG = if (useReverse) generics.reverse else generics
     val gKey = genericKey.orNull
-    val keys = inW.map(tok)
-    val toks = keys.indices.map { i =>
-      keys(i).copy(tag = inT(i),
+    val base = preprocess(inW)
+    val toks = base.indices.map { i =>
+      base(i).copy(tag = inT(i),
         lemma = if (inL.isEmpty) null else inL(i),
         chunk = if (inC.isEmpty) null else inC(i),
         unknown = if (inU.isEmpty) null else inU(i),
         generic = if (inG.isEmpty) null else inG(i) + "-" + gKey)
     }
-    decode(encodeToks(toks, keys))
+    decode(encode(toks))
   }
 
   /** Viterbi-tag one document of raw words; returns a label per token. */
@@ -297,18 +301,6 @@ final class NerModel(
   def cliqueTreeRef(words: IndexedSeq[String]): Crf.RefCliqueTree.Tables = {
     require(!useReverse, "cliqueTree positions are undefined under useReverse")
     Crf.RefCliqueTree.calibrate(Crf.logPotentials(encodeFast(words), params), params)
-  }
-
-  /** Beam-limited decode (BeamBestSequenceFinder surface; reference default
-    * beamSize = 30, SeqClassifierFlags.java:141). Faster than exact Viterbi
-    * when numStates is large; exact in the beamSize -> inf limit.
-    */
-  def tagBeam(words: IndexedSeq[String], beamSize: Int = 30): Array[String] = {
-    if (words.isEmpty) return Array.empty
-    val in = if (useReverse) words.reverse else words
-    val pots = Crf.logPotentials(encodeFast(in), params)
-    val out = Crf.beamViterbi(pots, params, beamSize).map(classIndex)
-    if (useReverse) out.reverse else out
   }
 
   /** Annealed-Gibbs decode with an optional document-consistency prior (the

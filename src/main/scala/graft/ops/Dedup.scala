@@ -160,10 +160,4 @@ object Dedup {
       .where(col("hamming") <= maxHamming)
       .select(col("doc_id_1"), col("doc_id_2"), col("hamming"))
   }
-
-  /** Embedding cosine near-dup pairs >= tau, exact via the blocked tile
-    * pair loop (see Similarity.cosinePairsBlocked for the scale analysis).
-    */
-  def embeddingPairs(embeddings: DataFrame, tau: Double = 0.95): DataFrame =
-    Similarity.cosinePairsBlocked(embeddings, tau)
 }

@@ -18,21 +18,6 @@ object TextAnalysis {
 
   def tokensCol(text: Column): Column = regexp_extract_all(text, lit(TokenPattern), lit(0))
 
-  /** Per-document token stats: token count, alpha-token count, mean token
-    * length — all expressible over the token array without exploding it.
-    */
-  def tokenStats(docs: DataFrame): DataFrame = {
-    val toks = tokensCol(col("text"))
-    docs.select(
-      col("doc_id"),
-      size(toks).as("n_tokens"),
-      size(filter(toks, t => t.rlike("^[A-Za-z]+$"))).as("n_alpha"),
-      length(col("text")).as("n_chars"),
-      round(
-        aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast("double") /
-          greatest(size(toks).cast("double"), lit(1.0)), 4).as("mean_token_len"))
-  }
-
   private val stopwords = Seq("the", "a", "an", "of", "and", "or", "to", "in", "is", "it",
     "on", "for", "with", "as", "at", "by", "this", "that")
 

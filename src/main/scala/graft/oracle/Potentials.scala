@@ -207,8 +207,9 @@ object Potentials {
       |    coalesce(nsr, 'null') nsg, coalesce(p2sr, 'null') p2sg
       |  FROM win)""".stripMargin
 
-  /** Feature emission in `NerFeaturesFast.idsAt` code order (seq). Group 0:
-    * n-grams (i asc, j asc; seq = i·100 + j, word length bounded far below
+  /** Feature emission in `NerFeaturesFast.idsAt` code order (seq), the
+    * preset-only hashing path every SQL-checked model encodes through. Group
+    * 0: n-grams (i asc, j asc; seq = i·100 + j, word length bounded far below
     * 100), then the fixed conllNoTags templates from seq 10000, then the
     * interleaved DISJN/DISJP width-4 window. Groups 1-2: the fixed sequence
     * templates. First-occurrence dedup = min(seq) per feature string.

@@ -19,7 +19,7 @@ object Tokens {
   /** splitmix64(42 ^ 0x5851f42d4c957f2d): the constant inner stage of the
     * generator's h(seed=42, a, b, c) (Transcripts.scala h()).
     */
-  private val S1: Long = Transcripts.splitmix64(42L ^ 0x5851f42d4c957f2dL)
+  private val S1: Long = graft.ops.Hashing.splitmix64(42L ^ 0x5851f42d4c957f2dL)
 
   /** h(42, aExpr, ·) with the b·31+c mix supplied pre-combined as `bcExpr`
     * (already reduced mod 2^64): two chained splitmix64 stages around the

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.ops.Hashing.splitmix64
 import java.sql.Timestamp
 import org.apache.spark.sql.{Dataset, SparkSession}
 
@@ -15,12 +16,6 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 object Transcripts {
 
   // ---- deterministic hashing ----
-  def splitmix64(z0: Long): Long = {
-    var z = z0 + 0x9e3779b97f4a7c15L
-    z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
-    z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
-    z ^ (z >>> 31)
-  }
   private def h(seed: Long, a: Long, b: Long, c: Long): Long =
     splitmix64(splitmix64(splitmix64(seed ^ 0x5851f42d4c957f2dL) ^ a * 0x100000001b3L) ^ b * 31L + c)
   private def pick[T](xs: IndexedSeq[T], r: Long): T = xs(((r >>> 8) % xs.length).toInt.abs)

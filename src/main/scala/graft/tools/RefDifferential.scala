@@ -78,7 +78,7 @@ object RefFixtures {
     while (i < w.length) {
       val c = w.charAt(i)
       if (i >= 1 && c >= 'a' && c <= 'z') {
-        val shift = 1 + (Transcripts.splitmix64(graft.ops.Hashing.fnv1a64(w) + i) & 15).toInt
+        val shift = 1 + (graft.ops.Hashing.splitmix64(graft.ops.Hashing.fnv1a64(w) + i) & 15).toInt
         sb.append((((c - 'a') + shift) % 26 + 'a').toChar)
       } else sb.append(c)
       i += 1

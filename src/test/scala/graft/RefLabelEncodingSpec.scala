@@ -61,9 +61,9 @@ class RefLabelEncodingSpec extends AnyFunSuite {
       d <- 0 until 60
       style = styles(d % styles.length)
     } yield {
-      val n = (5 + (pipeline.Transcripts.splitmix64(0x1abe1L + d) & 7)).toInt
+      val n = (5 + (graft.ops.Hashing.splitmix64(0x1abe1L + d) & 7)).toInt
       val ls = Vector.tabulate(n) { i =>
-        alphabet(((pipeline.Transcripts.splitmix64(d * 127L + i * 31L) >>> 8) % alphabet.length).toInt)
+        alphabet(((graft.ops.Hashing.splitmix64(d * 127L + i * 31L) >>> 8) % alphabet.length).toInt)
       }
       (style, ls)
     }
@@ -136,9 +136,9 @@ class RefLabelEncodingSpec extends AnyFunSuite {
     // first label bare (the reference's own pipeline guarantees the boundary
     // token there), rest random
     val vectors = (0 until 50).map { d =>
-      val n = (4 + (pipeline.Transcripts.splitmix64(0xdeedL + d) & 7)).toInt
+      val n = (4 + (graft.ops.Hashing.splitmix64(0xdeedL + d) & 7)).toInt
       Vector("O") ++ Vector.tabulate(n) { i =>
-        alphabet(((pipeline.Transcripts.splitmix64(d * 89L + i * 13L) >>> 8) % alphabet.length).toInt)
+        alphabet(((graft.ops.Hashing.splitmix64(d * 89L + i * 13L) >>> 8) % alphabet.length).toInt)
       }
     } :+ Vector("I-PER", "O") // the undefined case: reference NPEs, we throw
     val input = vectors.map(_.mkString(" ")).mkString("", "\n", "\n")

@@ -44,11 +44,11 @@ class RefPriorDifferentialSpec extends AnyFunSuite {
     val vocab = Vector("acme", "corp", "berlin", "bank", "of", "tokyo",
       "Acme", "BERLIN", "press", "Tokyo")
     val rand = (0 until 40).map { d =>
-      val n = (8 + (pipeline.Transcripts.splitmix64(xp(d) | 1L) & 7)).toInt
+      val n = (8 + (graft.ops.Hashing.splitmix64(xp(d) | 1L) & 7)).toInt
       val ws = Vector.tabulate(n)(i =>
-        vocab(((pipeline.Transcripts.splitmix64(d * 313L + i) >>> 9) % vocab.length).toInt))
+        vocab(((graft.ops.Hashing.splitmix64(d * 313L + i) >>> 9) % vocab.length).toInt))
       val ls = Array.tabulate(n)(i =>
-        ((pipeline.Transcripts.splitmix64(d * 131L + i * 17L) >>> 7) % 5).toInt)
+        ((graft.ops.Hashing.splitmix64(d * 131L + i * 17L) >>> 7) % 5).toInt)
       (ws, ls)
     }
     val hand = Seq(

@@ -39,9 +39,9 @@ class RefWordShapeSpec extends AnyFunSuite {
     val known = Set("monday", "tuesday", "press", "acme", "ab")
     val chars = "aAzZ09-.,'~αΩǅ€$%/&ß:" // incl. titlecase ǅ, Greek, symbols, the '~' quirk char
     val rand = (0 until 400).map { d =>
-      val n = (1 + (pipeline.Transcripts.splitmix64(0x5a9eL + d) & 7)).toInt
+      val n = (1 + (graft.ops.Hashing.splitmix64(0x5a9eL + d) & 7)).toInt
       (0 until n).map { i =>
-        chars(((pipeline.Transcripts.splitmix64(d * 53L + i * 7L) >>> 9) % chars.length).toInt)
+        chars(((graft.ops.Hashing.splitmix64(d * 53L + i * 7L) >>> 9) % chars.length).toInt)
       }.mkString
     }
     val hand = Seq("Monday", "monday", "MONDAY", "Ab", "ab", "A1-b2", "~~~x", "~", "3.14",

@@ -1,6 +1,7 @@
 package graft.functions
 
 import graft.pipeline.SparkTestSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -90,5 +91,23 @@ class ExpressionsSpec extends AnyFunSuite {
     val plan = docs.queryExecution.executedPlan.toString
     assert(plan.contains("*("), s"expected codegen stage, got:\n$plan")
     assert(!plan.toLowerCase.contains("fallback"), plan)
+  }
+
+  test("a second register leaves the session's function registry untouched") {
+    GraftFunctions.register(spark)
+    val registry = spark.sessionState.functionRegistry
+    val names = registry.listFunction().filter(_.funcName.startsWith("graft_")).sortBy(_.funcName)
+    def builders = names.map(n => registry.lookupFunctionBuilder(n).get)
+    val before = builders
+    assert(names.map(_.funcName).contains("graft_rhp_16_6") && names.length >= 15, names)
+    GraftFunctions.register(spark)
+    GraftFunctions.registerRhp(spark, 16, 6)
+    before.zip(builders).zip(names).foreach { case ((b, a), n) =>
+      assert(a eq b, s"$n was registered again")
+    }
+    assert(registry.listFunction().count(_.funcName.startsWith("graft_")) == names.length)
+    // SQL keeps resolving the registered functions
+    assert(spark.sql("SELECT graft_shape('Alice')").head.getString(0) ==
+      graft.text.WordShape.dan2NoLC("Alice"))
   }
 }

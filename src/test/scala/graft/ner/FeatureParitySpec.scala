@@ -7,8 +7,47 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins byte-identity between the string feature path (training) and the
   * hashing fast path (inference): same feature ids, same order, same tags.
+  * The hashing path serves the conllNoTags preset only; a model with any
+  * optional family must encode through the string path.
   */
 class FeatureParitySpec extends AnyFunSuite {
+
+  private val Classes = Array("O", "PERSON", "LOCATION")
+
+  /** The dictionary of (feature, clique group) pairs in first-seen order,
+    * its full-product 3-class layout and weights that are a pure function of
+    * the id: the parts of a small option model. */
+  private def dictModel(feats: Seq[(String, Int)])
+      : (java.util.HashMap[String, Integer], WeightLayout, Array[Array[Double]]) = {
+    val dict = new java.util.HashMap[String, Integer]()
+    val groups = Array.newBuilder[Int]
+    for ((f, g) <- feats if !dict.containsKey(f)) { dict.put(f, Integer.valueOf(dict.size)); groups += g }
+    val featGroup = groups.result()
+    val weights = Array.tabulate(featGroup.length) { id =>
+      Array.tabulate(Crf.pow(Classes.length, featGroup(id) + 1))(c =>
+        (graft.ops.Hashing.splitmix64(id * 31L + c) % 1000) / 1000.0)
+    }
+    (dict, WeightLayout.fullProduct(Classes.length, 3, 0, featGroup), weights)
+  }
+
+  /** The features the string path emits over `toks` with `at`, group by group. */
+  private def featsOf(toks: IndexedSeq[NerFeatures.Tok])(
+      at: Int => Array[Array[String]]): Seq[(String, Int)] =
+    for (pos <- toks.indices; g <- 0 until 3; f <- at(pos)(g)) yield (f, g)
+
+  private def viterbi(m: NerModel, enc: Crf.EncodedDoc): Seq[String] =
+    Crf.viterbi(Crf.logPotentials(enc, m.params), m.params).map(m.classIndex).toSeq
+
+  /** An option model's raw-word entry points run the string path:
+    * `encodeFast` equals `encode(preprocess(words))` position by position
+    * and group by group, `tag` is Viterbi over it, and the unary memo stays
+    * empty. */
+  private def assertStringPath(m: NerModel, words: IndexedSeq[String]): Unit = {
+    assert(!m.hashesFeatures)
+    assertParity(m, words)
+    assert(m.tag(words).toSeq == viterbi(m, m.encode(m.preprocess(words))))
+    assert(m.unaryMemo.size == 0, "an option model filled the unary memo")
+  }
 
   /** A fresh instance of `m` (empty memos); `permute` reverses its feature
     * ids (rows and groups follow), so it tags like `m` with other ids. */
@@ -106,7 +145,8 @@ class FeatureParitySpec extends AnyFunSuite {
     assert(ngrams == Set("#<a#|C", "#<ab#|C", "#ab#|C", "#abc#|C", "#bc#|C", "#bc>#|C",
       "#c>#|C"), s"got $ngrams")
 
-    // string path == fast path under options, over mixed-case/hyphen words
+    // an option model encodes through the string path under every option,
+    // over mixed-case/hyphen words
     val words = Vector("Alice", "e-mail", "ACME-Corp", "x", "a-b-c-d", "tnf-alpha", ".")
     val toks2 = words.map(w => NerFeatures.Tok(WordShape.fixWord(w), WordShape.dan2(w, Set.empty)))
     for (opt <- Seq(
@@ -118,35 +158,10 @@ class FeatureParitySpec extends AnyFunSuite {
       NerFeatures.NgramOpts(maxLen = 4, greekify = true, conjoinShapes = true),
       NerFeatures.NgramOpts(noMid = false, conjoinShapes = true))) {
       // dictionary from the string path's own output
-      val dict = new java.util.HashMap[String, Integer]()
-      val allFeats = Vector.newBuilder[String]
-      for (pos <- words.indices) {
-        val byG = NerFeatures.featuresAt(toks2, pos, Gazette.empty, false, false, false, false, false, false, opt)
-        byG.foreach(_.foreach(allFeats += _))
-      }
-      allFeats.result().distinct.sorted.zipWithIndex.foreach { case (f, i) =>
-        dict.put(f, Integer.valueOf(i))
-      }
-      val hash = new NerFeaturesFast.LongIntHash(dict.size)
-      dict.forEach((k, v) => hash.put(NerFeaturesFast.fnv(k), v.intValue))
-      val scratch = new NerFeaturesFast.Scratch
-      // a model with these options builds its memo without n-grams
-      // (ngrams = false); a memo that holds them must give the same ids
-      for (ngrams <- Seq(false, true)) {
-        val memo = new NerFeaturesFast.UnaryMemo(hash, ngrams)
-        val un = memo.row(toks2)
-        for (pos <- words.indices) {
-          val slow = NerFeatures.featuresAt(toks2, pos, Gazette.empty, false, false, false, false, false, false, opt)
-            .map(_.map(f => dict.get(f).intValue))
-          val fast = NerFeaturesFast.idsAt(toks2, un, pos, memo, scratch, Gazette.empty,
-            occPatterns = false, useDistSim = false, useTags = false, useTaggySeq = false,
-            reverse = false, parenMatching = false, ngram = opt)
-          for (g <- 0 until 3)
-            assert(slow(g).toSeq == fast(g).toSeq, s"opt=$opt ngrams=$ngrams pos=$pos g=$g word=${words(pos)}")
-        }
-      }
-      assert(new NerFeaturesFast.UnaryMemo(hash, false).pad.hs.length <
-        new NerFeaturesFast.UnaryMemo(hash).pad.hs.length, "n-grams hashed without use")
+      val (dict, layout, weights) = dictModel(featsOf(toks2)(pos =>
+        NerFeatures.featuresAt(toks2, pos, Gazette.empty, false, false, false, false, false, false, opt)))
+      val m = new NerModel(Classes, 0, dict, layout, weights, Set.empty, ngramOpts = opt)
+      assertStringPath(m, words)
     }
   }
 
@@ -200,11 +215,9 @@ class FeatureParitySpec extends AnyFunSuite {
       useEntityTypeSequences = true, useURLSequences = true,
       useMUCFeatures = true, useClassFeature = true, useGenericFeatures = true,
       useNPHead = true, useNPGovernor = true, useHeadGov = true)
-    val dict = new java.util.HashMap[String, Integer]()
-    for (pos <- words.indices; g <- 0 until 3;
-         f <- NerFeatures.featuresAt(toks, pos, Gazette.empty, false, true, true, true,
-           false, false, NerFeatures.NgramOpts.default, 4, misc)(g))
-      if (!dict.containsKey(f)) dict.put(f, Integer.valueOf(dict.size))
+    val (dict, layout, weights) = dictModel(featsOf(toks)(pos =>
+      NerFeatures.featuresAt(toks, pos, Gazette.empty, false, true, true, true,
+        false, false, NerFeatures.NgramOpts.default, 4, misc)))
     assert(dict.containsKey("true-UNKNOWN|C") && dict.containsKey("false-NUNKNOWN|C") &&
       dict.containsKey("null-PUNKNOWN|C")) // useUnknown raw-get incl. the pad "null"
     assert(dict.containsKey("v0-mycol|C") && !dict.containsKey("v1-mycol|C"),
@@ -269,20 +282,20 @@ class FeatureParitySpec extends AnyFunSuite {
     assert(dict.containsKey("null-NDISJSHAPE|C"), "pad shape reads as the literal null (get)")
     assert(dict.keySet.toArray.exists(_.toString.endsWith("-DISJN-CS|C")) &&
       dict.keySet.toArray.exists(_.toString.endsWith("-DISJP-CS|C")))
-    val hash = new NerFeaturesFast.LongIntHash(dict.size)
-    dict.forEach((k, v) => hash.put(NerFeaturesFast.fnv(k), v.intValue))
-    val scratch = new NerFeaturesFast.Scratch
-    val memo = new NerFeaturesFast.UnaryMemo(hash)
-    val un = memo.row(toks)
-    for (pos <- words.indices; g <- 0 until 3) {
-      val slow = NerFeatures.featuresAt(toks, pos, Gazette.empty, false, true, true, true,
-        false, false, NerFeatures.NgramOpts.default, 4, misc)(g).map(f => dict.get(f).intValue).toSeq
-      val fast = NerFeaturesFast.idsAt(toks, un, pos, memo, scratch, Gazette.empty,
-        occPatterns = false, useDistSim = true, useTags = true, useTaggySeq = true,
-        reverse = false, parenMatching = false, ngram = NerFeatures.NgramOpts.default,
-        disjWidth = 4, misc = misc)(g).toSeq
-      assert(slow == fast, s"pos=$pos g=$g word=${words(pos)}")
+    // the option model: raw words through the string path, and the POS
+    // entry point's extra columns through `encode` on the full tokens
+    val clusters = new DistSim(words.indices.collect { case i if i % 2 == 0 => words(i).toLowerCase -> s"C_$i" }.toMap)
+    val m = new NerModel(Classes, 0, dict, layout, weights, Set.empty, distSim = Some(clusters),
+      useTags = true, useTaggySequences = true, miscOpts = misc, genericKey = Some("mycol"))
+    assertStringPath(m, words)
+    val generics = words.indices.map(i => s"v$i")
+    val full = m.preprocess(words).zipWithIndex.map { case (t, i) =>
+      t.copy(tag = tags(i), lemma = toks(i).lemma, chunk = toks(i).chunk, unknown = toks(i).unknown,
+        generic = generics(i) + "-mycol")
     }
+    assert(m.tag(words, tags, toks.map(_.lemma), toks.map(_.chunk), toks.map(_.unknown), generics).toSeq ==
+      viterbi(m, m.encode(full)))
+    assert(m.unaryMemo.size == 0)
   }
 
   test("gazette features: fast path == string path; sloppy vs clean semantics") {
@@ -292,24 +305,14 @@ class FeatureParitySpec extends AnyFunSuite {
     def toksOf(words: Seq[String]) =
       words.toIndexedSeq.map(w => NerFeatures.Tok(WordShape.fixWord(w), WordShape.dan2(w, Set.empty)))
 
-    // emission-order + hash parity between the two paths, with a dictionary
+    // a gazette model encodes through the string path, with a dictionary
     // built from the string path's own output
     val gaz = Gazette.parse(lines)
     val words = Vector("Dr.", "Carla", "Garcia", "met", "Acme", "Corp.", "in", "Berlin", ".")
     val toks = toksOf(words)
-    val dict = new java.util.HashMap[String, Integer]()
-    for (pos <- toks.indices; g <- 0 until 3; f <- NerFeatures.featuresAt(toks, pos, gaz)(g))
-      if (!dict.containsKey(f)) dict.put(f, Integer.valueOf(dict.size))
-    val hash = new NerFeaturesFast.LongIntHash(dict.size)
-    dict.forEach((k, v) => hash.put(NerFeaturesFast.fnv(k), v.intValue))
-    val scratch = new NerFeaturesFast.Scratch
-    val memo = new NerFeaturesFast.UnaryMemo(hash)
-    val un = memo.row(toks)
-    for (pos <- toks.indices; g <- 0 until 3) {
-      val slow = NerFeatures.featuresAt(toks, pos, gaz)(g).map(f => dict.get(f).intValue).toSeq
-      val fast = NerFeaturesFast.idsAt(toks, un, pos, memo, scratch, gaz)(g).toSeq
-      assert(slow == fast, s"pos=$pos g=$g")
-    }
+    val (dict, layout, weights) = dictModel(featsOf(toks)(pos => NerFeatures.featuresAt(toks, pos, gaz)))
+    assert(dict.containsKey("PERSON-GAZ3|C") && dict.containsKey("LOCATION-GAZ1|C"))
+    assertStringPath(new NerModel(Classes, 0, dict, layout, weights, Set.empty, gaz), words)
 
     // sloppy: any phrase word fires TYPE-GAZn even without the full phrase
     val sloppyOnly = Gazette.parse(lines, sloppyMode = true, cleanMode = false)
@@ -349,6 +352,27 @@ class FeatureParitySpec extends AnyFunSuite {
       for (i <- words.indices) { if (got(i) == labels(i)) correct += 1; total += 1 }
     }
     assert(correct.toDouble / total >= 0.97, s"$correct/$total")
+  }
+
+  test("every live model family tags through the hashing path") {
+    // a silent fall to the string path would slow every tagging query and
+    // the tag benchmark: each model that a query tags must hash
+    val spark = SparkTestSession.spark
+    import spark.implicits._
+    val docs = Seq((1L, Seq("the", "fast", "join")), (2L, Seq("spark", "table", "scan", "."))).toDS()
+    val families = Seq(
+      "default" -> NerModels.default(spark).value,
+      "TrainedCrf" -> graft.TrainedCrf.model(spark),
+      "TrainedTranscriptsCrf" -> graft.TrainedTranscriptsCrf.model(spark),
+      "q41 hash CRF" -> graft.SparkEntry.hashCrfModel(docs),
+      "q55 hash CRF" -> graft.SparkEntry.hashCrfModel(docs, windowSize = 2))
+    val words = Vector("the", "fast", "join", "Alice", "Johnson", "met", "Acme", "Corp.", ".")
+    for ((name, m0) <- families) {
+      assert(m0.hashesFeatures, name)
+      val m = copyOf(m0) // empty memo: only this tag call can fill it
+      assert(m.tag(words).toSeq == viterbi(m, m.encode(m.preprocess(words))), name)
+      assert(m.unaryMemo.size > 0, s"$name tagged without the unary memo")
+    }
   }
 
   test("unary memo: two models that see the same words each get their own ids") {

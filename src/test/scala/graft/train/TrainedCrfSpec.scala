@@ -74,9 +74,9 @@ class TrainedCrfSpec extends AnyFunSuite {
     // deterministic pseudo-documents over vocab words the model has seen plus
     // unseen words (feature-drop path), short enough for 3^n enumeration
     val docs = (0 until 12).map { d =>
-      val n = 5 + (graft.pipeline.Transcripts.splitmix64(0xe11L + d) & 3).toInt
+      val n = 5 + (graft.ops.Hashing.splitmix64(0xe11L + d) & 3).toInt
       (0 until n).map { i =>
-        val r = graft.pipeline.Transcripts.splitmix64(d * 977L + i)
+        val r = graft.ops.Hashing.splitmix64(d * 977L + i)
         if ((r & 7) == 0) "zunseen" + (r & 3)
         else TrainedCrf.Vocab(((r >>> 8) % TrainedCrf.Vocab.length).toInt)
       }
