@@ -47,6 +47,13 @@ object Crf {
       while (i < windowSize - 1) { s = s * numClasses + backgroundIndex; i += 1 }
       s
     }
+    /** scoredCells(g): the group-g label windows the model scores
+      * (`weightCol(g)(e) >= 0`) in increasing order; scoredCols(g) their
+      * columns. Built on first use in each JVM, O(C^w). */
+    @transient lazy val scoredCells: Array[Array[Int]] =
+      weightCol.map(cols => cols.indices.filter(cols(_) >= 0).toArray)
+    @transient lazy val scoredCols: Array[Array[Int]] =
+      weightCol.map(_.filter(_ >= 0))
   }
 
   def pow(base: Int, exp: Int): Int = {
@@ -73,6 +80,11 @@ object Crf {
     * table(pos)(fullEnc) = sum over groups g of the weights of active group-g
     * features at pos for the suffix `fullEnc % C^(g+1)`.
     * (Reference semantic: CRFCliqueTree.getFactorTable, CRFCliqueTree.java:497-531.)
+    *
+    * A group's scored cells (`Params.scoredCells`) are filled four per pass
+    * over its features, in four independent sums; each cell still adds
+    * 0.0 + w(f0) + w(f1) + ... in feature order, so every table is
+    * bit-identical to one sum per cell. Disallowed windows are -infinity.
     */
   def logPotentials(doc: EncodedDoc, p: Params): Array[Array[Double]] = {
     val C = p.numClasses
@@ -80,6 +92,9 @@ object Crf {
     val full = p.fullSize
     val n = doc.length
     val out = new Array[Array[Double]](n)
+    val weights = p.weights
+    val cells = p.scoredCells
+    val cellCols = p.scoredCols
     // scratch per-group suffix score vectors
     val groupScore = Array.tabulate(w)(g => new Array[Double](pow(C, g + 1)))
     var pos = 0
@@ -87,19 +102,25 @@ object Crf {
       var g = 0
       while (g < w) {
         val gs = groupScore(g)
-        java.util.Arrays.fill(gs, 0.0)
+        java.util.Arrays.fill(gs, NegInf) // disallowed label windows stay
         val feats = doc(pos)(g)
-        val cols = p.weightCol(g)
-        var e = 0
-        while (e < gs.length) {
-          val col = cols(e)
-          if (col >= 0) {
-            var k = 0
-            var s = 0.0
-            while (k < feats.length) { s += p.weights(feats(k))(col); k += 1 }
-            gs(e) = s
-          } else gs(e) = NegInf // disallowed label window
-          e += 1
+        val es = cells(g)
+        val cols = cellCols(g)
+        val last = es.length - 1
+        var j = 0
+        while (j <= last) {
+          // a last pass of fewer than four cells repeats its last cell
+          val j1 = math.min(j + 1, last); val j2 = math.min(j + 2, last); val j3 = math.min(j + 3, last)
+          val c0 = cols(j); val c1 = cols(j1); val c2 = cols(j2); val c3 = cols(j3)
+          var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
+          var k = 0
+          while (k < feats.length) {
+            val row = weights(feats(k))
+            s0 += row(c0); s1 += row(c1); s2 += row(c2); s3 += row(c3)
+            k += 1
+          }
+          gs(es(j)) = s0; gs(es(j1)) = s1; gs(es(j2)) = s2; gs(es(j3)) = s3
+          j += 4
         }
         g += 1
       }

@@ -227,10 +227,6 @@ object Gibbs {
     val numIterations: Int = n + 1 // hits zero (pure argmax) on the last sweep
     def temperature(i: Int): Double = start - rate * i
   }
-  def exponentialCooling(start: Double, rate: Double, n: Int): Cooling = new Cooling {
-    val numIterations: Int = n
-    def temperature(i: Int): Double = start * math.pow(rate, i)
-  }
 
   /** One Gibbs update at `pos` (samplePosition, SequenceGibbsSampler.java:245-272):
     * temperature 0 = argmax; otherwise log-scores scaled by 1/T, softmax-sampled.

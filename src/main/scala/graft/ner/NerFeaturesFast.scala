@@ -23,12 +23,24 @@ package graft.ner
   * a `Unary`, kept in a per-dictionary `UnaryMemo` (bounded by the heap its
   * entries take; emptied when full). `idsAt` emits each cached hash and id at
   * the same point of its sequence as the template it stands for, so ids and
-  * their order match the string path. The memo pays off when words repeat
+  * their order match the string path. A `Unary` also keeps the FNV states of
+  * the token's leading parts of the multi-token templates (its word, shape
+  * or cluster followed by `-` or `...`), so those templates hash only the
+  * rest of their string. The memo pays off when words repeat
   * ACROSS documents: on the benchmark's conversations (a closed vocabulary
   * of a few hundred words, about nine tokens a turn) over 99.9% of lookups
   * hit it, while only 0.3% of tokens repeat within their own document, and a
   * per-document memo tagged no faster than hashing per position.
   * Open-vocabulary traffic has not been measured.
+  *
+  * Only the DISJN/DISJP emits are deduplicated (against each other), besides
+  * the n-gram block (deduplicated in its `Unary`). Every other template's
+  * string ends in its own name, and no name is the tail of another's except
+  * -PW/-W-PW, -NW/-W-NW and PPSEQ/BNDRY-SPAN-PPSEQ: a W-PW string is longer
+  * than the PW string of the same position, and the PPSEQ pair are distinct
+  * constants. So no two other emits of one position can be equal, and the
+  * string path's set semantics hold without a scan (FeatureParitySpec checks
+  * the names and adversarial words).
   */
 object NerFeaturesFast {
   import NerFeatures.Tok
@@ -84,9 +96,11 @@ object NerFeaturesFast {
   }
 
   /** Per-thread scratch to avoid re-allocating buffers per position.
-    * 4096 covers typical tokens; buffers GROW on demand because the ngram
-    * family emits ~2x(token length) hashes and the tokenizer places no bound
-    * on alphanumeric run length (a >2030-char token — long base64/hash IDs —
+    * `idsAt` reserves one group's most emits up front: the token's n-gram
+    * block plus `G0Emits`, so no emit checks the capacity. 4096 covers
+    * typical tokens; the buffers GROW on demand because the ngram family
+    * emits ~2x(token length) hashes and the tokenizer places no bound on
+    * alphanumeric run length (a >2030-char token — long base64/hash IDs —
     * must not crash the tagging path; parity forbids capping ngram length
     * since the reference preset leaves maxNGramLeng unset).
     */
@@ -127,33 +141,42 @@ object NerFeaturesFast {
 
   /** One token's single-token template hashes and their dictionary ids
     * (-1 = unseen), in the slots above; the n-grams follow, deduplicated in
-    * emission order. Immutable, so safely shared across task threads.
+    * emission order. The other fields are FNV states after the token's
+    * leading part of a multi-token template: its word (`word`), its shape
+    * with getString (`shape`, null reads "") or get (`shapeGet`, null reads
+    * "null") semantics, or its cluster (`ds`, getString), then `-` (`…Dash`)
+    * or `...` (`…Dots`). Immutable, so safely shared across task threads.
     */
-  final class Unary private[NerFeaturesFast] (val hs: Array[Long], val ids: Array[Int])
+  final class Unary private[NerFeaturesFast] (val hs: Array[Long], val ids: Array[Int],
+      val wordDash: Long, val wordDots: Long, val shapeDash: Long, val shapeDots: Long,
+      val shapeGetDash: Long, val shapeGetDots: Long, val dsDash: Long)
 
   /** Hashes every single-token template of `t` (the bytes of the string
     * path's feature), plus its n-grams, and resolves them in `dict`.
     */
   private def unary(t: Tok, dict: LongIntHash): Unary = {
     val w = t.word
-    val shapeGS = if (t.shape == null) "" else t.shape
+    val hw = h(FnvOffset, w)
+    val hShape = h(FnvOffset, if (t.shape == null) "" else t.shape)
+    val hShapeG = hShapeGet(FnvOffset, t)
+    val hDs = hDsGS(FnvOffset, t)
     var hs = new Array[Long](NgramStart + 2 * w.length + 1)
-    hs(UWord) = h(h(h(FnvOffset, w), "-WORD"), suffixC)
-    hs(UPw) = h(h(h(FnvOffset, w), "-PW"), suffixC)
-    hs(UNw) = h(h(h(FnvOffset, w), "-NW"), suffixC)
-    hs(UType) = h(h(h(FnvOffset, shapeGS), "-TYPE"), suffixC)
-    hs(UPType) = h(h(hShapeGet(FnvOffset, t), "-PTYPE"), suffixC)
-    hs(UNType) = h(h(hShapeGet(FnvOffset, t), "-NTYPE"), suffixC)
-    hs(UDisjN) = h(h(h(FnvOffset, w), "-DISJN"), suffixC)
-    hs(UDisjP) = h(h(h(FnvOffset, w), "-DISJP"), suffixC)
-    hs(UPseqW) = h(h(h(FnvOffset, w), "-PSEQW"), suffixCpC)
-    hs(UPseqPW) = h(h(h(FnvOffset, w), "-PSEQpW"), suffixCpC)
-    hs(UPseqPS) = h(h(h(FnvOffset, shapeGS), "-PSEQpS"), suffixCpC)
-    hs(UPseqCS) = h(h(h(FnvOffset, shapeGS), "-PSEQcS"), suffixCpC)
-    hs(UPseqPDS) = h(h(hDsGS(FnvOffset, t), "-PSEQpDS"), suffixCpC)
-    hs(UPseqCDS) = h(h(hDsGS(FnvOffset, t), "-PSEQcDS"), suffixCpC)
-    hs(UTps2) = h(h(hShapeGet(FnvOffset, t), "-TPS2"), suffixCpC)
-    hs(UTns1) = h(h(hShapeGet(FnvOffset, t), "-TNS1"), suffixCpC)
+    hs(UWord) = h(hw, "-WORD|C")
+    hs(UPw) = h(hw, "-PW|C")
+    hs(UNw) = h(hw, "-NW|C")
+    hs(UType) = h(hShape, "-TYPE|C")
+    hs(UPType) = h(hShapeG, "-PTYPE|C")
+    hs(UNType) = h(hShapeG, "-NTYPE|C")
+    hs(UDisjN) = h(hw, "-DISJN|C")
+    hs(UDisjP) = h(hw, "-DISJP|C")
+    hs(UPseqW) = h(hw, "-PSEQW|CpC")
+    hs(UPseqPW) = h(hw, "-PSEQpW|CpC")
+    hs(UPseqPS) = h(hShape, "-PSEQpS|CpC")
+    hs(UPseqCS) = h(hShape, "-PSEQcS|CpC")
+    hs(UPseqPDS) = h(hDs, "-PSEQpDS|CpC")
+    hs(UPseqCDS) = h(hDs, "-PSEQcDS|CpC")
+    hs(UTps2) = h(hShapeG, "-TPS2|CpC")
+    hs(UTns1) = h(hShapeG, "-TNS1|CpC")
     // the preset's n-grams over <word> (virtual < > padding): prefixes and
     // suffixes only (noMidNGrams), deduplicated like `idsAt`'s emit
     var n = NgramStart
@@ -169,7 +192,7 @@ object NerFeaturesFast {
             x = hc(x, if (k == 0) '<' else if (k == wLen - 1) '>' else w.charAt(k - 1))
             k += 1
           }
-          x = h(hc(x, '#'), suffixC)
+          x = h(x, "#|C")
           var dup = false
           k = NgramStart
           while (k < n && !dup) { dup = hs(k) == x; k += 1 }
@@ -183,7 +206,8 @@ object NerFeaturesFast {
     val ids = new Array[Int](n)
     var k = 0
     while (k < n) { ids(k) = dict.get(hs(k)); k += 1 }
-    new Unary(hs, ids)
+    new Unary(hs, ids, hc(hw, '-'), h(hw, "..."), hc(hShape, '-'), h(hShape, "..."),
+      hc(hShapeG, '-'), h(hShapeG, "..."), hc(hDs, '-'))
   }
 
   /** Token → `Unary` memo for ONE dictionary (a model holds its own, so ids
@@ -250,15 +274,16 @@ object NerFeaturesFast {
 
   object UnaryMemo {
     /** Heap of one `Unary` entry besides its slots, as measured on JDK 17
-      * with compressed oops: the map node, the `Unary` and its two arrays'
-      * headers. Its key is charged with its word (`tokCost`). */
-    final val EntryBytes = 124L
+      * with compressed oops: the map node, the `Unary` (56 bytes of it the
+      * seven prefix states) and its two arrays' headers. Its key is charged
+      * with its word (`tokCost`). */
+    final val EntryBytes = 180L
     /** Heap of one cached token besides its strings' characters: the map
       * node, the `Tok` and the word and shape strings' headers. Measured on
       * JDK 17, a 9-char word's token retains 176-194 bytes (charged 196). */
     final val TokBytes = 150L
-    /** 64 MiB: about 90k words of 9 chars (35 slots; 740 bytes charged for
-      * the entry and its token). */
+    /** 64 MiB: about 84k words of 9 chars (35 slots; 800 bytes charged for
+      * the entry and its token, 801 retained). */
     final val MaxBytes: Long = 64L << 20
     /** Heap charged to `u`: `EntryBytes` plus 12 bytes a slot (a hash and an
       * id; measured 11.8). */
@@ -269,14 +294,14 @@ object NerFeaturesFast {
       TokBytes + 2L * (w.length + t.word.length + t.shape.length)
   }
 
-  private val suffixC = "|C"
-  private val suffixCpC = "|CpC"
-  private val suffixCpCp2C = "|CpCp2C"
   private val hPseq = fnv("PSEQ|CpC")
   private val hPpseq = fnv("PPSEQ|CpCp2C")
   private val hBndryPpseq = fnv("BNDRY-SPAN-PPSEQ|CpCp2C")
   // the preset's disjunctionWidth
   private final val DisjWidth = 4
+  /** Most emits of one position's group besides the n-gram block: the 23 of
+    * group 0 (groups 1 and 2 emit 13 and 3). */
+  private final val G0Emits = 23
 
   /** Compute deduplicated feature IDS per clique group at `loc`, mirroring
     * NerFeatures.featuresAt under the preset + dictionary lookup. Unseen
@@ -288,32 +313,21 @@ object NerFeaturesFast {
       scratch: Scratch): Array[Array[Int]] = {
     @inline def at(i: Int): Tok = if (i >= 0 && i < toks.length) toks(i) else NerFeatures.Pad
     @inline def u(i: Int): Unary = if (i >= 0 && i < un.length) un(i) else memo.pad
-    val c = at(loc); val p = at(loc - 1); val p2 = at(loc - 2)
-    val nt = at(loc + 1); val n2 = at(loc + 2)
+    val c = at(loc); val p = at(loc - 1); val nt = at(loc + 1)
     val cWord = c.word; val pWord = p.word; val nWord = nt.word
     val cU = u(loc); val pU = u(loc - 1); val nU = u(loc + 1)
 
     // the first emissions of group 0 are the token's memoized n-gram block,
     // already deduplicated
     var hn = cU.hs.length - NgramStart
-    scratch.reserve(hn)
-    var hb = scratch.hashes
-    var hi = scratch.hids
+    scratch.reserve(hn + G0Emits)
+    val hb = scratch.hashes
+    val hi = scratch.hids
     System.arraycopy(cU.hs, NgramStart, hb, 0, hn)
     System.arraycopy(cU.ids, NgramStart, hi, 0, hn)
-    def push(x: Long, id: Int): Unit = {
-      // dedup: linear scan (feature sets are small); preserves set semantics
-      var i = 0
-      var dup = false
-      while (i < hn && !dup) { if (hb(i) == x) dup = true; i += 1 }
-      if (!dup) {
-        if (hn == hb.length) {
-          hb = java.util.Arrays.copyOf(hb, hb.length << 1); scratch.hashes = hb
-          hi = java.util.Arrays.copyOf(hi, hi.length << 1); scratch.hids = hi
-        }
-        hb(hn) = x; hi(hn) = id; hn += 1
-      }
-    }
+    // no template's string can equal another's (see the header), so an emit
+    // appends without a scan
+    def push(x: Long, id: Int): Unit = { hb(hn) = x; hi(hn) = id; hn += 1 }
     def emit(x: Long): Unit = push(x, Unresolved)
     def emitU(e: Unary, slot: Int): Unit = push(e.hs(slot), e.ids(slot))
 
@@ -321,43 +335,51 @@ object NerFeaturesFast {
     emitU(cU, UWord)
     emitU(pU, UPw)
     emitU(nU, UNw)
-    emit(h(h(h(hc(h(FnvOffset, cWord), '-'), pWord), "-W-PW"), suffixC))
-    emit(h(h(h(hc(h(FnvOffset, cWord), '-'), nWord), "-W-NW"), suffixC))
+    emit(h(h(cU.wordDash, pWord), "-W-PW|C"))
+    emit(h(h(cU.wordDash, nWord), "-W-NW|C"))
     val cShapeGS = if (c.shape == null) "" else c.shape
     emitU(cU, UType)
     emitU(pU, UPType)
     emitU(nU, UNType)
-    emit(h(h(h(h(h(FnvOffset, pWord), "..."), cShapeGS), "-PW_CTYPE"), suffixC))
-    emit(h(h(h(h(h(FnvOffset, cShapeGS), "..."), nWord), "-NW_CTYPE"), suffixC))
-    emit(h(h(h(h(hShapeGet(FnvOffset, p), "..."), cShapeGS), "-PCTYPE"), suffixC))
-    emit(h(h(hShapeGet(h(h(FnvOffset, cShapeGS), "..."), nt), "-CNTYPE"), suffixC))
-    emit(h(h(hShapeGet(h(h(h(hShapeGet(FnvOffset, p), "..."), cShapeGS), "..."), nt), "-PCNTYPE"), suffixC))
-    if (pWord.length <= 3)
-      emit(h(h(h(h(h(FnvOffset, p2.word), "..."), cShapeGS), "-PPW_CTYPE"), suffixC))
-    if (nWord.length <= 3)
-      emit(h(h(h(h(h(FnvOffset, n2.word), "..."), cShapeGS), "-NNW_CTYPE"), suffixC))
+    emit(h(h(pU.wordDots, cShapeGS), "-PW_CTYPE|C"))
+    emit(h(h(cU.shapeDots, nWord), "-NW_CTYPE|C"))
+    val pcShapes = h(pU.shapeGetDots, cShapeGS)
+    emit(h(pcShapes, "-PCTYPE|C"))
+    emit(h(hShapeGet(cU.shapeDots, nt), "-CNTYPE|C"))
+    emit(h(hShapeGet(h(pcShapes, "..."), nt), "-PCNTYPE|C"))
+    if (pWord.length <= 3) emit(h(h(u(loc - 2).wordDots, cShapeGS), "-PPW_CTYPE|C"))
+    if (nWord.length <= 3) emit(h(h(u(loc + 2).wordDots, cShapeGS), "-NNW_CTYPE|C"))
+    // DISJN/DISJP repeat when a word (or the pad) repeats within the width:
+    // the one block that needs the string path's dedup, against itself only
+    val disj = hn
+    def emitDisj(e: Unary, slot: Int): Unit = {
+      val x = e.hs(slot)
+      var i = disj
+      while (i < hn && hb(i) != x) i += 1
+      if (i == hn) push(x, e.ids(slot))
+    }
     var d = 1
     while (d <= DisjWidth) {
-      emitU(u(loc + d), UDisjN)
-      emitU(u(loc - d), UDisjP)
+      emitDisj(u(loc + d), UDisjN)
+      emitDisj(u(loc - d), UDisjP)
       d += 1
     }
     val g0n = resolve(0, memo.dict, scratch, hn)
 
     // ---- group 1: CpC ----
     hn = 0
-    val pShapeGS = if (p.shape == null) "" else p.shape
     emit(hPseq)
     emitU(cU, UPseqW)
-    emit(h(h(h(hc(h(FnvOffset, pWord), '-'), cWord), "-PSEQW2"), suffixCpC))
+    emit(h(h(pU.wordDash, cWord), "-PSEQW2|CpC"))
     emitU(pU, UPseqPW)
     emitU(pU, UPseqPDS)
     emitU(cU, UPseqCDS)
-    emit(h(h(hDsGS(hc(hDsGS(FnvOffset, p), '-'), c), "-PSEQpcDS"), suffixCpC))
+    emit(h(hDsGS(pU.dsDash, c), "-PSEQpcDS|CpC"))
     emitU(pU, UPseqPS)
     emitU(cU, UPseqCS)
-    emit(h(h(h(hc(h(FnvOffset, pShapeGS), '-'), cShapeGS), "-PSEQpcS"), suffixCpC))
-    emit(h(h(h(hc(h(FnvOffset, pShapeGS), '-'), cShapeGS), "-TYPES"), suffixCpC))
+    val pcShape = h(pU.shapeDash, cShapeGS)
+    emit(h(pcShape, "-PSEQpcS|CpC"))
+    emit(h(pcShape, "-TYPES|CpC"))
     emitU(cU, UTps2)
     emitU(nU, UTns1)
     val g1n = resolve(1, memo.dict, scratch, hn)
@@ -366,7 +388,7 @@ object NerFeaturesFast {
     hn = 0
     emit(hPpseq)
     if (pWord == NerFeatures.Boundary) emit(hBndryPpseq)
-    emit(h(h(hShapeGet(hc(hShapeGet(hc(hShapeGet(FnvOffset, p2), '-'), p), '-'), c), "-TYPETYPES"), suffixCpCp2C))
+    emit(h(hShapeGet(hc(hShapeGet(u(loc - 2).shapeGetDash, p), '-'), c), "-TYPETYPES|CpCp2C"))
     val g2n = resolve(2, memo.dict, scratch, hn)
 
     Array(

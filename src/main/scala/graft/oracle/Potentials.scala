@@ -144,7 +144,8 @@ object Potentials {
     def zeros(n: Int) = Seq.fill(n)("0.0").mkString("[", ",", "]") + "::DOUBLE[]"
     def nCols(grp: Int) = wc(grp).max + 1
     // acc[c] = ((0 + w1[c]) + w2[c]) + … : the association of the engine's
-    // per-column scalar loop (Crf.logPotentials: s = 0.0; s += w…)
+    // per-cell sums (Crf.logPotentials fills four cells a pass over the
+    // features, each still s = 0.0; s += w… in feature order)
     def fold(grp: Int): String = {
       val add = (1 to nCols(grp)).map(c => s"a[$c]+b[$c]").mkString("[", ",", "]")
       s"""g${grp}s AS (SELECT doc_id, i,

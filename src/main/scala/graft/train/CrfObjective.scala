@@ -43,9 +43,6 @@ final class WeightLayout(
 
   def params(flat: Array[Double]): Crf.Params =
     new Crf.Params(numClasses, windowSize, backgroundIndex, weightCol, toRagged(flat))
-
-  /** Full-product layout: every label window of every size is allowed. */
-  def suffixPow(g: Int): Int = Crf.pow(numClasses, g + 1)
 }
 
 object WeightLayout {

@@ -206,33 +206,43 @@ class CrfSpec extends AnyFunSuite {
     assert(math.abs(total - 1.0) < 1e-9)
   }
 
-  test("potential tables are bit-identical to the per-cell modulo build") {
-    // reference build: every cell adds the groups' scores at enc % C^(g+1)
-    def moduloTables(doc: Crf.EncodedDoc, p: Crf.Params): Array[Array[Double]] = {
-      val C = p.numClasses
-      doc.map { byGroup =>
-        val gs = Array.tabulate(p.windowSize) { g =>
-          Array.tabulate(Crf.pow(C, g + 1)) { e =>
-            val col = p.weightCol(g)(e)
-            if (col < 0) Double.NegativeInfinity
-            else {
-              var s = 0.0
-              for (f <- byGroup(g)) s += p.weights(f)(col)
-              s
-            }
+  /** Reference build of the potential tables: one sum per cell, every cell
+    * adding the groups' scores at enc % C^(g+1). */
+  private def moduloTables(doc: Crf.EncodedDoc, p: Crf.Params): Array[Array[Double]] = {
+    val C = p.numClasses
+    doc.map { byGroup =>
+      val gs = Array.tabulate(p.windowSize) { g =>
+        Array.tabulate(Crf.pow(C, g + 1)) { e =>
+          val col = p.weightCol(g)(e)
+          if (col < 0) Double.NegativeInfinity
+          else {
+            var s = 0.0
+            for (f <- byGroup(g)) s += p.weights(f)(col)
+            s
           }
         }
-        Array.tabulate(p.fullSize) { enc =>
-          var s = 0.0
-          var mod = C
-          for (g <- 0 until p.windowSize) { s += gs(g)(enc % mod); mod *= C }
-          s
-        }
+      }
+      Array.tabulate(p.fullSize) { enc =>
+        var s = 0.0
+        var mod = C
+        for (g <- 0 until p.windowSize) { s += gs(g)(enc % mod); mod *= C }
+        s
       }
     }
+  }
+
+  private def assertSameBits(got: Array[Array[Double]], want: Array[Array[Double]], what: => String): Unit = {
+    assert(got.length == want.length, what)
+    for (pos <- got.indices; enc <- got(pos).indices)
+      assert(java.lang.Double.doubleToRawLongBits(got(pos)(enc)) ==
+        java.lang.Double.doubleToRawLongBits(want(pos)(enc)), s"$what pos=$pos enc=$enc")
+  }
+
+  test("potential tables are bit-identical to the per-cell modulo build") {
     val rng = new scala.util.Random(17)
     var disallowed = 0
-    for (w <- 2 to 4; c <- 2 to 5; rep <- 0 until 3) {
+    val tails = scala.collection.mutable.Set[Int]()
+    for (w <- 1 to 4; c <- 2 to 5; rep <- 0 until 3) {
       // roughly one window in six disallowed (column -1), never a whole group
       val weightCol = Array.tabulate(w) { g =>
         var next = 0
@@ -241,18 +251,30 @@ class CrfSpec extends AnyFunSuite {
         }
       }
       val nCols = weightCol.map(_.max + 1).max
-      val nFeat = 12
+      val nFeat = 60
       val weights = Array.fill(nFeat, nCols)(rng.nextGaussian() * math.pow(10, rng.nextInt(7) - 3))
       val p = new Crf.Params(c, w, 0, weightCol, weights)
+      p.scoredCells.foreach(cells => tails += cells.length % 4)
+      // 0-40 features a group (the default model's group 0 averages 30)
       val doc: Crf.EncodedDoc = Array.fill(1 + rng.nextInt(6)) {
-        Array.fill(w)(Array.fill(rng.nextInt(5))(rng.nextInt(nFeat)))
+        Array.fill(w)(Array.fill(rng.nextInt(41))(rng.nextInt(nFeat)))
       }
-      val got = Crf.logPotentials(doc, p)
-      val want = moduloTables(doc, p)
-      for (pos <- doc.indices; enc <- 0 until p.fullSize)
-        assert(java.lang.Double.doubleToRawLongBits(got(pos)(enc)) ==
-          java.lang.Double.doubleToRawLongBits(want(pos)(enc)), s"w=$w c=$c pos=$pos enc=$enc")
+      assertSameBits(Crf.logPotentials(doc, p), moduloTables(doc, p), s"w=$w c=$c")
     }
     assert(disallowed > 0)
+    assert(tails == Set(0, 1, 2, 3), "scored-cell counts of every residue mod 4")
+  }
+
+  test("potential tables of the default model are bit-identical over 500 generated turns") {
+    import graft.pipeline.{SparkTestSession, Transcripts}
+    val model = graft.ner.NerModels.default(SparkTestSession.spark).value
+    val p = model.params
+    var turns = 0
+    for (conv <- 0L until 200L; t <- 0 until Transcripts.numTurns(5L, conv) if turns < 500) {
+      val enc = model.encodeFast(Transcripts.turnTokens(5L, conv, t)._1)
+      assertSameBits(Crf.logPotentials(enc, p), moduloTables(enc, p), s"conv=$conv t=$t")
+      turns += 1
+    }
+    assert(turns == 500)
   }
 }

@@ -97,6 +97,64 @@ class FeatureParitySpec extends AnyFunSuite {
     assert(positions > 1000)
   }
 
+  /** The tail every preset template's string ends in, per clique group: its
+    * name with the group suffix ("#|C" for the n-grams; the three constants
+    * whole). */
+  private val PresetTails = Seq(
+    Seq("#|C", "-WORD|C", "-PW|C", "-NW|C", "-W-PW|C", "-W-NW|C", "-TYPE|C", "-PTYPE|C",
+      "-NTYPE|C", "-PW_CTYPE|C", "-NW_CTYPE|C", "-PCTYPE|C", "-CNTYPE|C", "-PCNTYPE|C",
+      "-PPW_CTYPE|C", "-NNW_CTYPE|C", "-DISJN|C", "-DISJP|C"),
+    Seq("PSEQ|CpC", "-PSEQW|CpC", "-PSEQW2|CpC", "-PSEQpW|CpC", "-PSEQpDS|CpC", "-PSEQcDS|CpC",
+      "-PSEQpcDS|CpC", "-PSEQpS|CpC", "-PSEQcS|CpC", "-PSEQpcS|CpC", "-TYPES|CpC", "-TPS2|CpC",
+      "-TNS1|CpC"),
+    Seq("PPSEQ|CpCp2C", "BNDRY-SPAN-PPSEQ|CpCp2C", "-TYPETYPES|CpCp2C"))
+
+  /** Sentences whose words spell template punctuation and names, repeat
+    * within the disjunction width, or are so short that the pad repeats. */
+  private val Adversarial: Seq[IndexedSeq[String]] = Seq(
+    Vector("a-b", "W-PW", "-PW", "x-W", "-W-PW", "PW", "-NW", "W-NW", "."),
+    Vector("...", "a...b", "Xx...", "...-PW_CTYPE", "Xx", "-CTYPE", "CTYPE", "PCTYPE"),
+    Vector("#", "#<a#", "|C", "a|C", "#|C", "-WORD|C", "WORD", "|CpC", "-"),
+    Vector("PSEQ", "-PSEQ", "PSEQ|CpC", "PPSEQ", NerFeatures.Boundary, "BNDRY-SPAN", "x"),
+    Vector(NerFeatures.Boundary, NerFeatures.Boundary, "-", "--", "-", "DISJN", "-DISJP", "-"),
+    Vector("the", "cat", "the", "dog", "the", "the", "a", "cat", "a", "the"),
+    Vector("Alice", "Alice", "Alice", "Alice", "Alice", "Alice", "Alice", "Alice", "Alice", "Alice"),
+    Vector("x"), Vector(""), Vector("the", "the"), Vector("-", "...", "-"),
+    Vector(NerFeatures.Boundary), Vector("Johnson", NerFeatures.Boundary, "Johnson"))
+
+  test("template tails: none ends another's apart from PW, NW and PPSEQ; the string path emits no other") {
+    val allowed = Set("-PW|C" -> "-W-PW|C", "-NW|C" -> "-W-NW|C", "PPSEQ|CpCp2C" -> "BNDRY-SPAN-PPSEQ|CpCp2C")
+    for (tails <- PresetTails; a <- tails; b <- tails if a != b && b.endsWith(a))
+      assert(allowed(a -> b), s"$a ends $b")
+    // every feature the string path emits on adversarial and generated
+    // words ends in a tail of its group: the list is the preset's
+    val gen = for (conv <- 0L until 20L; t <- 0 until Transcripts.numTurns(3L, conv))
+      yield Transcripts.turnTokens(3L, conv, t)._1
+    val pre = NerModels.default(SparkTestSession.spark).value
+    for (words <- Adversarial ++ gen; toks = pre.preprocess(words); pos <- toks.indices;
+         (feats, g) <- NerFeatures.featuresAt(toks, pos).zipWithIndex; f <- feats)
+      assert(PresetTails(g).exists(f.endsWith), s"group $g feature $f")
+  }
+
+  test("encodeFast equals encode on adversarial words, with every feature in the dictionary") {
+    // a preset model whose dictionary holds every string the adversarial
+    // sentences emit, so no duplicate or missing hash can hide as unseen
+    val d = copyOf(NerModels.default(SparkTestSession.spark).value)
+    val toks = Adversarial.map(d.preprocess)
+    val (dict, layout, weights) = dictModel(toks.flatMap(t => featsOf(t)(pos => NerFeatures.featuresAt(t, pos))))
+    val m = new NerModel(Classes, 0, dict, layout, weights, d.knownLC)
+    assert(m.hashesFeatures)
+    for (words <- Adversarial) {
+      assertParity(m, words)
+      val all = m.encodeFast(words)
+      for (pos <- all.indices; g <- 0 until 3)
+        assert(all(pos)(g).length == NerFeatures.featuresAt(m.preprocess(words), pos)(g).length,
+          s"an emitted feature went unresolved: pos=$pos g=$g words=$words")
+    }
+    // and through the default model's own dictionary
+    Adversarial.foreach(assertParity(d, _))
+  }
+
   test("giant tokens (>2048 chars) tag without scratch-buffer overflow and keep parity") {
     // Round-1 review finding: fixed 4096-entry scratch buffers overflowed on
     // tokens >= ~2030 chars (the ngram family emits ~2x token-length hashes;
