@@ -1,5 +1,8 @@
 package graft.ner
 
+import graft.core.Crf
+import graft.text.WordShape
+
 /** Feature templates of the reference's conllNoTags preset
   * (/root/reference/src/edu/stanford/nlp/sequences/SeqClassifierFlags.java:686-733):
   * useNGrams+noMidNGrams, usePrev, useNext, useWordPairs, wordShape=dan2UseLC,
@@ -63,9 +66,6 @@ object NerFeatures {
   @inline private def shapeGet(t: Tok): String = if (t.shape == null) "null" else t.shape
   @inline private def shapeGetString(t: Tok): String = if (t.shape == null) "" else t.shape
 
-  /** Features for all clique groups at `loc`. Returns one array of suffixed,
-    * de-duplicated feature strings per group (length = WindowSize).
-    */
   // string-quality predicates (NERFeatureFactory.java:576-614)
   @inline private[ner] def isNameCase(s: String): Boolean = {
     if (s.length < 2) return false
@@ -147,29 +147,6 @@ object NerFeatures {
       }
     }
   }
-
-  def featuresAt(toks: IndexedSeq[Tok], loc: Int): Array[Array[String]] =
-    featuresAt(toks, loc, Gazette.empty)
-
-  def featuresAt(toks: IndexedSeq[Tok], loc: Int, gaz: Gazette): Array[Array[String]] =
-    featuresAt(toks, loc, gaz, occPatterns = false)
-
-  def featuresAt(toks: IndexedSeq[Tok], loc: Int, gaz: Gazette, occPatterns: Boolean): Array[Array[String]] =
-    featuresAt(toks, loc, gaz, occPatterns, useDistSim = false)
-
-  def featuresAt(toks: IndexedSeq[Tok], loc: Int, gaz: Gazette, occPatterns: Boolean,
-      useDistSim: Boolean): Array[Array[String]] =
-    featuresAt(toks, loc, gaz, occPatterns, useDistSim, useTags = false, useTaggySeq = false)
-
-  def featuresAt(toks: IndexedSeq[Tok], loc: Int, gaz: Gazette, occPatterns: Boolean,
-      useDistSim: Boolean, useTags: Boolean, useTaggySeq: Boolean): Array[Array[String]] =
-    featuresAt(toks, loc, gaz, occPatterns, useDistSim, useTags, useTaggySeq, reverse = false)
-
-  def featuresAt(toks: IndexedSeq[Tok], loc: Int, gaz: Gazette, occPatterns: Boolean,
-      useDistSim: Boolean, useTags: Boolean, useTaggySeq: Boolean,
-      reverse: Boolean): Array[Array[String]] =
-    featuresAt(toks, loc, gaz, occPatterns, useDistSim, useTags, useTaggySeq, reverse,
-      parenMatching = false)
 
   // paren-matching token classes (NERFeatureFactory.java:1593-1604)
   @inline private def isOpen(w: String): Boolean = w == "(" || w == "[" || w == "-LRB-"
@@ -297,6 +274,137 @@ object NerFeatures {
       useNPHead: Boolean = false, useNPGovernor: Boolean = false,
       useHeadGov: Boolean = false)
   object MiscOpts { val default: MiscOpts = MiscOpts() }
+
+  /** The values that shape a model's features: the feature part of the
+    * reference's SeqClassifierFlags, carried from `Trainer.Config` to the
+    * model, its file and the reference loaders. `default` is the
+    * conllNoTags preset.
+    */
+  final case class Spec(
+      // useGazettes: TYPE-GAZn features, sloppy/clean per the Gazette's
+      // modes (NERFeatureFactory.java:675-727,1211-1232)
+      gazette: Gazette = Gazette.empty,
+      // normalizeTerms (SeqClassifierFlags.java:99): preprocessing also
+      // Americanizes each word (ObjectBankWrapper.fix, :117-128); shape stays
+      // computed on the ORIGINAL word, like the timex fix
+      normalizeTerms: Boolean = false,
+      // useOccurrencePatterns (NERFeatureFactory.java:1953-2018): long-range
+      // repeated-word features; the encode input must then be the WHOLE
+      // document (the +-150-token window spans it)
+      useOccurrencePatterns: Boolean = false,
+      // useReverse (the `macro` preset's distinguishing flag,
+      // SeqClassifierFlags.java:617): the reference physically reverses each
+      // document before feature extraction and inference and un-reverses the
+      // answers (CRFClassifier.makeAnswerArraysAndTagIndex / classify); the
+      // Trainer and the tag() entry points do the same, and the
+      // occurrence-pattern scans flip their reverse(i) indexors accordingly.
+      useReverse: Boolean = false,
+      // useDistSim (NERFeatureFactory.java:497-530,763-772,966,982,1553-1555):
+      // distributional-similarity cluster features from a lexicon that is part
+      // of the model state (the reference serializes it inside the factory)
+      distSim: Option[DistSim] = None,
+      // useTags / useTaggySequences (goodCoNLL families): POS-tag templates
+      // (t-TAG, pt-PTAG, nt-NTAG; pt-t-TS; p2t-pt-t-TTS). Tags come from the
+      // caller's column data (`word=0,tag=1,answer=2`); documents tagged
+      // WITHOUT tags degrade to empty-string values exactly like the reference
+      // (getString semantics).
+      useTags: Boolean = false,
+      useTaggySequences: Boolean = false,
+      // useParenMatching (NERFeatureFactory.java:1591-1605,1669-1683): matched
+      // open/close paren features on the CpC and Cp2C cliques
+      useParenMatching: Boolean = false,
+      // useNGrams options: maxNGramLeng / noMidNGrams / lowercaseNGrams /
+      // dehyphenateNGrams (NERFeatureFactory.java:1173-1197)
+      ngramOpts: NgramOpts = NgramOpts.default,
+      // useDisjunctive width (flags.disjunctionWidth; NERFeatureFactory.java:1267-1279)
+      disjunctionWidth: Int = 4,
+      // the families outside the presets (useTitle, usePosition, ...)
+      miscOpts: MiscOpts = MiscOpts.default,
+      // useGenericFeatures: the model's single EFFECTIVE generic column name.
+      // The reference's CoreLabel.initFromStrings collapses every generic map
+      // key onto one anonymous annotation class (CoreLabel.java:128-136), so a
+      // model trained with N generic columns effectively reads only the LAST
+      // one — loaders reduce the map accordingly (RefMapKeys.effectiveGenericKey)
+      // and store that one key here; requires miscOpts.useGenericFeatures.
+      genericKey: Option[String] = None) {
+
+    /** True when the spec reads only the conllNoTags preset's templates, so
+      * `NerModel.encodeFast` hashes them (NerFeaturesFast). Any optional
+      * family sends a model through the string path, `encode(preprocess(words))`,
+      * which gives the same ids in the same order. `useReverse` and
+      * `normalizeTerms` only change word order and preprocessing, so they
+      * keep the hashing path.
+      */
+    def hashes: Boolean = gazette.isEmpty &&
+      copy(gazette = Gazette.empty, normalizeTerms = false, useReverse = false) == Spec.default
+
+    /** The word-`fix` preprocessing step (ObjectBankWrapper.fix): timex
+      * lowercasing always (normalizeTimex is on in every 3-class preset),
+      * plus Americanize under normalizeTerms.
+      */
+    def fix(w: String): String =
+      if (normalizeTerms) graft.text.Americanize.fixWordNormalizeTerms(w) else WordShape.fixWord(w)
+
+    /** Preprocess one raw word: shape from the ORIGINAL word (with frozen
+      * knownLCWords), then the word fix — matching ObjectBankWrapper.doBasicStuff
+      * ordering (ObjectBankWrapper.java:131-155).
+      */
+    def tok(w: String, knownLC: Set[String]): Tok = {
+      val fixed = fix(w)
+      Tok(fixed, WordShape.dan2(w, knownLC.contains), distSim.map(_.clusterOf(fixed)).orNull)
+    }
+
+    def preprocess(words: IndexedSeq[String], knownLC: Set[String]): IndexedSeq[Tok] =
+      words.map(tok(_, knownLC))
+
+    /** Attach per-token column data to freshly preprocessed tokens: POS tags, lemmas
+      * and chunk labels (ColumnDocumentReaderAndWriter / 4- and 5-column
+      * CoNLL data, CoNLLDocumentReaderAndWriter.java:223-231),
+      * UnknownAnnotation values ("true"/"false", the true-casing reader's
+      * seen-once flags, TrueCasingDocumentReaderAndWriter.java:159) and the
+      * generic column, pre-joined as "<value>-<genericKey>"
+      * (NERFeatureFactory.java:1466-1476). An empty column leaves its field
+      * null, and so does the generic column without a genericKey.
+      */
+    def attach(toks: IndexedSeq[Tok], tags: Seq[String], lemmas: Seq[String], chunks: Seq[String],
+        unknowns: Seq[String], generics: Seq[String]): IndexedSeq[Tok] = {
+      val gens = if (genericKey.isEmpty) Seq.empty else generics.map(_ + "-" + genericKey.get)
+      val cols = Seq("tags" -> tags, "lemmas" -> lemmas, "chunks" -> chunks,
+        "unknowns" -> unknowns, "generics" -> gens)
+      for ((name, c) <- cols)
+        require(c.isEmpty || c.length == toks.length, s"${toks.length} words vs ${c.length} $name")
+      if (cols.forall(_._2.isEmpty)) toks
+      else toks.indices.map { i =>
+        def at(c: Seq[String]) = if (c.isEmpty) null else c(i)
+        toks(i).copy(tag = at(tags), lemma = at(lemmas), chunk = at(chunks), unknown = at(unknowns),
+          generic = at(gens))
+      }
+    }
+
+    /** Encode preprocessed tokens against a string dictionary; features
+      * unseen at train time are dropped (CRFClassifier.java:200-207). Ids
+      * follow emission order. `refOrder` gives the reference's DATA-ARRAY
+      * order instead: getCliqueFeatures collects each clique's features into
+      * a `java.util.HashSet<String>` (NERFeatureFactory.java:412), so the id
+      * arrays CRFClassifier trains on follow HashSet iteration order and are
+      * deduplicated. Training objectives sum weights in data order, so a
+      * bit-exact objective mirror (FloatObjective / RefFloatObjectiveSpec)
+      * needs that order; inference is order-insensitive.
+      */
+    def encode(toks: IndexedSeq[Tok], dict: java.util.Map[String, Integer],
+        refOrder: Boolean = false): Crf.EncodedDoc =
+      Array.tabulate(toks.length) { pos =>
+        featuresAt(toks, pos, this).map { feats =>
+          val keys: java.lang.Iterable[String] =
+            if (!refOrder) java.util.Arrays.asList(feats: _*)
+            else { val set = new java.util.HashSet[String](); feats.foreach(set.add); set }
+          val ids = new scala.collection.mutable.ArrayBuilder.ofInt
+          keys.forEach { f => val id = dict.get(f); if (id != null) ids += id.intValue }
+          ids.result()
+        }
+      }
+  }
+  object Spec { val default: Spec = Spec() }
 
   private val TitlePat = java.util.regex.Pattern.compile("(Mr|Ms|Mrs|Dr|Miss|Sen|Judge|Sir)\\.?")
   private[ner] def isTitleWord(w: String): Boolean = TitlePat.matcher(w).matches()
@@ -568,12 +676,16 @@ object NerFeatures {
 
   }
 
-  def featuresAt(toks: IndexedSeq[Tok], loc: Int, gaz: Gazette, occPatterns: Boolean,
-      useDistSim: Boolean, useTags: Boolean, useTaggySeq: Boolean,
-      reverse: Boolean, parenMatching: Boolean,
-      ngram: NgramOpts = NgramOpts.default,
-      disjWidth: Int = 4,
-      misc: MiscOpts = MiscOpts.default): Array[Array[String]] = {
+  /** Features for all clique groups at `loc` under `spec`. Returns one array
+    * of suffixed, de-duplicated feature strings per group (length =
+    * WindowSize).
+    */
+  def featuresAt(toks: IndexedSeq[Tok], loc: Int, spec: Spec = Spec.default): Array[Array[String]] = {
+    val gaz = spec.gazette; val occPatterns = spec.useOccurrencePatterns
+    val useDistSim = spec.distSim.isDefined; val useTags = spec.useTags
+    val useTaggySeq = spec.useTaggySequences; val reverse = spec.useReverse
+    val parenMatching = spec.useParenMatching; val ngram = spec.ngramOpts
+    val disjWidth = spec.disjunctionWidth; val misc = spec.miscOpts
     @inline def at(i: Int): Tok = if (i >= 0 && i < toks.length) toks(i) else Pad
     val c = at(loc); val p = at(loc - 1); val p2 = at(loc - 2)
     val nt = at(loc + 1); val n2 = at(loc + 2)

@@ -1,12 +1,10 @@
 package graft.ner
 
 import graft.core.Crf
-import graft.text.{RawToken, WordShape}
 import graft.train.WeightLayout
 import java.io.{BufferedReader, BufferedWriter, InputStreamReader, OutputStreamWriter}
 import java.nio.file.{Files, Paths}
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
-import scala.collection.mutable
 
 /** A trained NER model bundle: label dictionary, feature dictionary, clique
   * layout, weights, and corpus-derived known-lowercase words.
@@ -22,75 +20,21 @@ final class NerModel(
     val layout: WeightLayout,
     val weights: Array[Array[Double]],
     val knownLC: Set[String],
-    val gazette: Gazette = Gazette.empty,
-    // normalizeTerms (SeqClassifierFlags.java:99): preprocessing also
-    // Americanizes each word (ObjectBankWrapper.fix, :117-128); shape stays
-    // computed on the ORIGINAL word, like the timex fix
-    val normalizeTerms: Boolean = false,
-    // useOccurrencePatterns (NERFeatureFactory.java:1953-2018): long-range
-    // repeated-word features; the encode input must then be the WHOLE
-    // document (the +-150-token window spans it)
-    val useOccurrencePatterns: Boolean = false,
-    // useReverse (the `macro` preset's distinguishing flag,
-    // SeqClassifierFlags.java:617): the reference physically reverses each
-    // document before feature extraction and inference and un-reverses the
-    // answers (CRFClassifier.makeAnswerArraysAndTagIndex / classify); we do
-    // the same at the tag() entry points, and the occurrence-pattern scans
-    // flip their reverse(i) indexors accordingly.
-    val useReverse: Boolean = false,
-    // useDistSim (NERFeatureFactory.java:497-530,763-772,966,982,1553-1555):
-    // distributional-similarity cluster features from a lexicon that is part
-    // of the model state (the reference serializes it inside the factory)
-    val distSim: Option[DistSim] = None,
-    // useTags / useTaggySequences (goodCoNLL families): POS-tag templates
-    // (t-TAG, pt-PTAG, nt-NTAG; pt-t-TS; p2t-pt-t-TTS). Tags come from the
-    // caller's column data (`word=0,tag=1,answer=2`); documents tagged
-    // WITHOUT tags degrade to empty-string values exactly like the reference
-    // (getString semantics).
-    val useTags: Boolean = false,
-    val useTaggySequences: Boolean = false,
-    // useParenMatching (NERFeatureFactory.java:1591-1605,1669-1683): matched
-    // open/close paren features on the CpC and Cp2C cliques
-    val useParenMatching: Boolean = false,
-    // useNGrams options: maxNGramLeng / noMidNGrams / lowercaseNGrams /
-    // dehyphenateNGrams (NERFeatureFactory.java:1173-1197)
-    val ngramOpts: NerFeatures.NgramOpts = NerFeatures.NgramOpts.default,
-    // useDisjunctive width (flags.disjunctionWidth; NERFeatureFactory.java:1267-1279)
-    val disjunctionWidth: Int = 4,
-    // small self-contained families: useTitle / usePosition / useBeginSent /
-    // useSymWordPairs / useFirstWord / useOrdinal
-    val miscOpts: NerFeatures.MiscOpts = NerFeatures.MiscOpts.default,
-    // useGenericFeatures: the model's single EFFECTIVE generic column name.
-    // The reference's CoreLabel.initFromStrings collapses every generic map
-    // key onto one anonymous annotation class (CoreLabel.java:128-136), so a
-    // model trained with N generic columns effectively reads only the LAST
-    // one — loaders reduce the map accordingly and store that one key here.
-    val genericKey: Option[String] = None
+    val features: NerFeatures.Spec = NerFeatures.Spec.default
 ) extends Serializable {
 
-  /** The word-`fix` preprocessing step (ObjectBankWrapper.fix): timex
-    * lowercasing always (normalizeTimex is on in every 3-class preset),
-    * plus Americanize under normalizeTerms.
+  /** Whether documents are tagged reversed (`NerFeatures.Spec.useReverse`);
+    * every tag entry point reads it once per document.
     */
-  @inline private[ner] def fix(w: String): String =
-    if (normalizeTerms) graft.text.Americanize.fixWordNormalizeTerms(w)
-    else WordShape.fixWord(w)
+  val useReverse: Boolean = features.useReverse
 
   @transient lazy val params: Crf.Params =
     new Crf.Params(classIndex.length, layout.windowSize, backgroundIndex, layout.weightCol, weights)
 
   val classOf: Map[String, Int] = classIndex.zipWithIndex.toMap
 
-  /** True when the model reads only the conllNoTags preset's templates, so
-    * `encodeFast` hashes them (NerFeaturesFast). Any optional family sends
-    * it through the string path, `encode(preprocess(words))`, which gives
-    * the same ids in the same order. `useReverse` and `normalizeTerms` only
-    * change word order and preprocessing, so they keep the hashing path.
-    */
-  val hashesFeatures: Boolean =
-    gazette.isEmpty && !useOccurrencePatterns && distSim.isEmpty && !useTags &&
-      !useTaggySequences && !useParenMatching && ngramOpts == NerFeatures.NgramOpts.default &&
-      disjunctionWidth == 4 && miscOpts == NerFeatures.MiscOpts.default && genericKey.isEmpty
+  /** Chooses `encodeFast`'s path once per model (see `NerFeatures.Spec.hashes`). */
+  val hashesFeatures: Boolean = features.hashes
 
   /** FNV-hash → feature-id table for the allocation-free inference path.
     * Built once per executor (lazy transient) from the string dictionary.
@@ -125,17 +69,9 @@ final class NerModel(
     override def initialValue(): NerFeaturesFast.Scratch = new NerFeaturesFast.Scratch
   }
 
-  /** Preprocess one raw word: shape from the ORIGINAL word (with frozen
-    * knownLCWords), then timex word fix — matching ObjectBankWrapper.doBasicStuff
-    * ordering (ObjectBankWrapper.java:131-155).
-    */
-  private def mkTok(w: String): NerFeatures.Tok = {
-    val fixed = fix(w)
-    NerFeatures.Tok(fixed, WordShape.dan2(w, knownLC.contains), distSim.map(_.clusterOf(fixed)).orNull)
-  }
-  @transient private lazy val mkTokF: String => NerFeatures.Tok = mkTok
+  @transient private lazy val mkTok: String => NerFeatures.Tok = features.tok(_, knownLC)
 
-  private def tok(w: String): NerFeatures.Tok = unaryMemo.tok(w, mkTokF)
+  private def tok(w: String): NerFeatures.Tok = unaryMemo.tok(w, mkTok)
 
   /** Encode raw words, the encoder of every raw-word entry point: feature
     * hashing with no string materialization under the preset
@@ -163,67 +99,19 @@ final class NerModel(
     if (useReverse) out.reverse else out
   }
 
-  /** Preprocess raw token words (see `mkTok`). */
-  def preprocess(words: IndexedSeq[String]): IndexedSeq[NerFeatures.Tok] = words.map(mkTok)
+  /** Preprocess raw token words (`NerFeatures.Spec.tok`). */
+  def preprocess(words: IndexedSeq[String]): IndexedSeq[NerFeatures.Tok] = features.preprocess(words, knownLC)
 
-  /** Encode a preprocessed document; features unseen at train time are dropped
-    * (reference semantic: CRFClassifier.java:200-207).
+  /** Encode a preprocessed document against this model's dictionary
+    * (`NerFeatures.Spec.encode`).
     */
-  def encode(toks: IndexedSeq[NerFeatures.Tok]): Crf.EncodedDoc = {
-    val n = toks.length
-    val out = new Array[Array[Array[Int]]](n)
-    var pos = 0
-    while (pos < n) {
-      val byGroup = NerFeatures.featuresAt(toks, pos, gazette, useOccurrencePatterns,
-        distSim.isDefined, useTags, useTaggySequences, useReverse, useParenMatching, ngramOpts, disjunctionWidth, miscOpts)
-      out(pos) = byGroup.map { feats =>
-        val ids = new mutable.ArrayBuilder.ofInt
-        var k = 0
-        while (k < feats.length) {
-          val id = featureIndex.get(feats(k))
-          if (id != null) ids += id.intValue
-          k += 1
-        }
-        ids.result()
-      }
-      pos += 1
-    }
-    out
-  }
+  def encode(toks: IndexedSeq[NerFeatures.Tok]): Crf.EncodedDoc = features.encode(toks, featureIndex)
 
-  /** Encode with the reference's DATA-ARRAY ordering: getCliqueFeatures
-    * collects each clique's features into a `java.util.HashSet<String>`
-    * (NERFeatureFactory.java:412), so the id arrays CRFClassifier trains on
-    * follow HashSet iteration order and are DEDUPLICATED — emission order is
-    * lost. Training objectives sum weights in data order, so a bit-exact
-    * objective mirror (FloatObjective / RefFloatObjectiveSpec) needs this
-    * exact order; inference is order-insensitive, so `encode`/`encodeFast`
-    * keep the cheaper emission order.
+  /** Encode raw words in the reference's data-array order (`refOrder` of
+    * `NerFeatures.Spec.encode`), for a bit-exact training-objective mirror.
     */
-  def encodeRefOrder(words: IndexedSeq[String]): Crf.EncodedDoc = {
-    val toks = preprocess(words)
-    val n = toks.length
-    val out = new Array[Array[Array[Int]]](n)
-    var pos = 0
-    while (pos < n) {
-      val byGroup = NerFeatures.featuresAt(toks, pos, gazette, useOccurrencePatterns,
-        distSim.isDefined, useTags, useTaggySequences, useReverse, useParenMatching, ngramOpts, disjunctionWidth, miscOpts)
-      out(pos) = byGroup.map { feats =>
-        val set = new java.util.HashSet[String]()
-        var k = 0
-        while (k < feats.length) { set.add(feats(k)); k += 1 }
-        val ids = new mutable.ArrayBuilder.ofInt
-        val it = set.iterator()
-        while (it.hasNext) {
-          val id = featureIndex.get(it.next())
-          if (id != null) ids += id.intValue
-        }
-        ids.result()
-      }
-      pos += 1
-    }
-    out
-  }
+  def encodeRefOrder(words: IndexedSeq[String]): Crf.EncodedDoc =
+    features.encode(preprocess(words), featureIndex, refOrder = true)
 
   /** Viterbi-tag a POS-tagged document (column data `word=0,tag=1,answer=2`,
     * ColumnDocumentReaderAndWriter semantics): tags feed the useTags /
@@ -236,30 +124,11 @@ final class NerModel(
       unknowns: IndexedSeq[String] = IndexedSeq.empty,
       generics: IndexedSeq[String] = IndexedSeq.empty): Array[String] = {
     require(words.length == tags.length, s"${words.length} words vs ${tags.length} tags")
-    require(lemmas.isEmpty || lemmas.length == words.length,
-      s"${words.length} words vs ${lemmas.length} lemmas")
-    require(chunks.isEmpty || chunks.length == words.length,
-      s"${words.length} words vs ${chunks.length} chunks")
-    require(unknowns.isEmpty || unknowns.length == words.length,
-      s"${words.length} words vs ${unknowns.length} unknowns")
-    require(generics.isEmpty || (generics.length == words.length && genericKey.isDefined),
-      s"${words.length} words vs ${generics.length} generics (genericKey=$genericKey)")
-    if (words.isEmpty) return Array.empty
-    val (inW, inT) = if (useReverse) (words.reverse, tags.reverse) else (words, tags)
-    val inL = if (useReverse) lemmas.reverse else lemmas
-    val inC = if (useReverse) chunks.reverse else chunks
-    val inU = if (useReverse) unknowns.reverse else unknowns
-    val inG = if (useReverse) generics.reverse else generics
-    val gKey = genericKey.orNull
-    val base = preprocess(inW)
-    val toks = base.indices.map { i =>
-      base(i).copy(tag = inT(i),
-        lemma = if (inL.isEmpty) null else inL(i),
-        chunk = if (inC.isEmpty) null else inC(i),
-        unknown = if (inU.isEmpty) null else inU(i),
-        generic = if (inG.isEmpty) null else inG(i) + "-" + gKey)
-    }
-    decode(encode(toks))
+    require(generics.isEmpty || features.genericKey.isDefined,
+      s"${words.length} words vs ${generics.length} generics (genericKey=${features.genericKey})")
+    def in(c: IndexedSeq[String]) = if (useReverse) c.reverse else c
+    val toks = features.attach(preprocess(in(words)), in(tags), in(lemmas), in(chunks), in(unknowns), in(generics))
+    if (toks.isEmpty) Array.empty else decode(encode(toks))
   }
 
   /** Viterbi-tag one document of raw words; returns a label per token. */
@@ -333,7 +202,7 @@ final class NerModel(
     // time (ObjectBankWrapper runs before the prior is built; under
     // normalizeTerms that includes Americanize — review finding: raw words
     // here made occurrence matching diverge for normalizeTerms models)
-    lazy val fixedIn = in.map(fix)
+    lazy val fixedIn = in.map(features.fix)
     val priors = Seq.newBuilder[graft.core.Gibbs.SequenceScorer]
     if (consistencyPenalty > 0)
       priors += new graft.core.Gibbs.ConsistencyPrior(
@@ -454,27 +323,28 @@ object NerModel {
       w.write(s"${m.knownLC.size}\n")
       m.knownLC.toSeq.sorted.foreach { s => w.write(s); w.write("\n") }
       // v3 trailers (all optional; absent = defaults — v2 files stay loadable)
-      if (m.normalizeTerms) w.write("opt\tnormalizeTerms\ttrue\n")
-      if (m.useOccurrencePatterns) w.write("opt\tuseOccurrencePatterns\ttrue\n")
-      if (m.useReverse) w.write("opt\tuseReverse\ttrue\n")
-      if (m.useTags) w.write("opt\tuseTags\ttrue\n")
-      if (m.useParenMatching) w.write("opt\tuseParenMatching\ttrue\n")
-      if (m.useTaggySequences) w.write("opt\tuseTaggySequences\ttrue\n")
-      if (m.ngramOpts != NerFeatures.NgramOpts.default) {
-        val ng = m.ngramOpts
+      val spec = m.features
+      if (spec.normalizeTerms) w.write("opt\tnormalizeTerms\ttrue\n")
+      if (spec.useOccurrencePatterns) w.write("opt\tuseOccurrencePatterns\ttrue\n")
+      if (spec.useReverse) w.write("opt\tuseReverse\ttrue\n")
+      if (spec.useTags) w.write("opt\tuseTags\ttrue\n")
+      if (spec.useParenMatching) w.write("opt\tuseParenMatching\ttrue\n")
+      if (spec.useTaggySequences) w.write("opt\tuseTaggySequences\ttrue\n")
+      if (spec.ngramOpts != NerFeatures.NgramOpts.default) {
+        val ng = spec.ngramOpts
         w.write(s"ngram\t${ng.maxLen}\t${ng.noMid}\t${ng.lowercase}\t${ng.dehyphenate}\t${ng.greekify}\t${ng.conjoinShapes}\n")
       }
-      if (m.disjunctionWidth != 4) w.write(s"opt\tdisjunctionWidth\t${m.disjunctionWidth}\n")
-      m.genericKey.foreach(k => w.write(s"opt\tgenericKey\t$k\n"))
-      if (m.miscOpts != NerFeatures.MiscOpts.default) {
-        val mo = m.miscOpts
+      if (spec.disjunctionWidth != 4) w.write(s"opt\tdisjunctionWidth\t${spec.disjunctionWidth}\n")
+      spec.genericKey.foreach(k => w.write(s"opt\tgenericKey\t$k\n"))
+      if (spec.miscOpts != NerFeatures.MiscOpts.default) {
+        val mo = spec.miscOpts
         w.write(s"misc\t${mo.useTitle}\t${mo.usePosition}\t${mo.useBeginSent}\t${mo.useSymWordPairs}\t${mo.useFirstWord}\t${mo.useOrdinal}\t${mo.useMoreTags}\t${mo.useEitherSideWord}\t${mo.useWordTag}\t${mo.useEitherSideDisjunctive}\t${mo.useExtraTaggySequences}\t${mo.useTypeSeqs3}\t${mo.useTaggySequencesShapeInteraction}\t${mo.useSymTags}\t${mo.usePrevVB}\t${mo.useNextVB}\t${mo.useVB}\t${mo.useShapeConjunctions}\t${mo.useNextSequences}\t${mo.useWideDisjunctive}\t${mo.wideDisjunctionWidth}\t${mo.useDisjShape}\t${mo.useDisjunctiveShapeInteraction}\t${mo.useLemmas}\t${mo.usePrevNextLemmas}\t${mo.useChunks}\t${mo.useChunkySequences}\t${mo.useUnknown}\t${mo.useAbbr}\t${mo.useMinimalAbbr}\t${mo.useABGENE}\t${mo.useABSTR}\t${mo.useABSTRFreq}\t${mo.useABSTRFreqDict}\t${mo.useGENIA}\t${mo.useWEB}\t${mo.useWEBFreqDict}\t${mo.useIsURL}\t${mo.useEntityRule}\t${mo.useEntityTypes}\t${mo.useIsDateRange}\t${mo.useFREQ}\t${mo.useEntityTypeSequences}\t${mo.useURLSequences}\t${mo.useMUCFeatures}\t${mo.useClassFeature}\t${mo.useMoreAbbr}\t${mo.useGenericFeatures}\t${mo.useNPHead}\t${mo.useNPGovernor}\t${mo.useHeadGov}\n")
       }
-      m.distSim.foreach { ds =>
+      spec.distSim.foreach { ds =>
         w.write(s"distsim\t${ds.lexicon.size}\n")
         ds.lexicon.toSeq.sorted.foreach { case (k, v) => w.write(s"$k\t$v\n") }
       }
-      if (!m.gazette.isEmpty) Gazette.writeTrailer(m.gazette, w)
+      if (!spec.gazette.isEmpty) Gazette.writeTrailer(spec.gazette, w)
     } finally w.close()
   }
 
@@ -513,61 +383,49 @@ object NerModel {
       }
       val nLC = r.readLine().toInt
       val knownLC = (0 until nLC).map(_ => r.readLine()).toSet
-      var gazette = Gazette.empty
-      var normalizeTerms = false
-      var occPatterns = false
-      var reverse = false
-      var distSim: Option[DistSim] = None
-      var tagsFlag = false
-      var taggySeq = false
-      var paren = false
-      var ngram = NerFeatures.NgramOpts.default
-      var disjWidth = 4
-      var genKey: Option[String] = None
-      var misc = NerFeatures.MiscOpts.default
+      var spec = NerFeatures.Spec.default
       var line = r.readLine()
       while (line != null) {
-        if (line.startsWith("gazette\t")) gazette = Gazette.readTrailer(line, r)
-        else if (line == "opt\tnormalizeTerms\ttrue") normalizeTerms = true
-        else if (line == "opt\tuseOccurrencePatterns\ttrue") occPatterns = true
-        else if (line == "opt\tuseReverse\ttrue") reverse = true
-        else if (line == "opt\tuseTags\ttrue") tagsFlag = true
-        else if (line == "opt\tuseTaggySequences\ttrue") taggySeq = true
-        else if (line == "opt\tuseParenMatching\ttrue") paren = true
-        else if (line.startsWith("opt\tdisjunctionWidth\t"))
-          disjWidth = line.split("\t")(2).toInt
-        else if (line.startsWith("opt\tgenericKey\t"))
-          genKey = Some(line.split("\t")(2))
-        else if (line.startsWith("misc\t")) {
-          val p = line.split("\t")
-          def b(i: Int) = p.length > i && p(i).toBoolean
-          misc = NerFeatures.MiscOpts(b(1), b(2), b(3), b(4), b(5), b(6), b(7), b(8), b(9), b(10),
-            b(11), b(12), b(13), b(14), b(15), b(16), b(17), b(18), b(19),
-            b(20), if (p.length > 21) p(21).toInt else 10, b(22), b(23), b(24), b(25), b(26), b(27), b(28), b(29),
-            b(30), b(31), b(32), b(33), b(34), b(35), b(36), b(37), b(38), b(39),
-            b(40), b(41), b(42), b(43), b(44), b(45), b(46), b(47), b(48),
-            b(49), b(50), b(51))
-        }
-        else if (line.startsWith("ngram\t")) {
-          val p = line.split("\t")
-          ngram = NerFeatures.NgramOpts(p(1).toInt, p(2).toBoolean, p(3).toBoolean, p(4).toBoolean,
-            if (p.length > 5) p(5).toBoolean else false,
-            if (p.length > 6) p(6).toBoolean else false)
-        }
-        else if (line.startsWith("distsim\t")) {
-          val n = line.split("\t")(1).toInt
-          distSim = Some(new DistSim((0 until n).map { _ =>
-            val l = r.readLine(); val t = l.indexOf('\t')
-            l.substring(0, t) -> l.substring(t + 1)
-          }.toMap))
-        }
-        else throw new IllegalArgumentException(s"unexpected model trailer: $line")
+        spec =
+          if (line.startsWith("gazette\t")) spec.copy(gazette = Gazette.readTrailer(line, r))
+          else if (line == "opt\tnormalizeTerms\ttrue") spec.copy(normalizeTerms = true)
+          else if (line == "opt\tuseOccurrencePatterns\ttrue") spec.copy(useOccurrencePatterns = true)
+          else if (line == "opt\tuseReverse\ttrue") spec.copy(useReverse = true)
+          else if (line == "opt\tuseTags\ttrue") spec.copy(useTags = true)
+          else if (line == "opt\tuseTaggySequences\ttrue") spec.copy(useTaggySequences = true)
+          else if (line == "opt\tuseParenMatching\ttrue") spec.copy(useParenMatching = true)
+          else if (line.startsWith("opt\tdisjunctionWidth\t"))
+            spec.copy(disjunctionWidth = line.split("\t")(2).toInt)
+          else if (line.startsWith("opt\tgenericKey\t"))
+            spec.copy(genericKey = Some(line.split("\t")(2)))
+          else if (line.startsWith("misc\t")) {
+            val p = line.split("\t")
+            def b(i: Int) = p.length > i && p(i).toBoolean
+            spec.copy(miscOpts = NerFeatures.MiscOpts(b(1), b(2), b(3), b(4), b(5), b(6), b(7), b(8), b(9), b(10),
+              b(11), b(12), b(13), b(14), b(15), b(16), b(17), b(18), b(19),
+              b(20), if (p.length > 21) p(21).toInt else 10, b(22), b(23), b(24), b(25), b(26), b(27), b(28), b(29),
+              b(30), b(31), b(32), b(33), b(34), b(35), b(36), b(37), b(38), b(39),
+              b(40), b(41), b(42), b(43), b(44), b(45), b(46), b(47), b(48),
+              b(49), b(50), b(51)))
+          }
+          else if (line.startsWith("ngram\t")) {
+            val p = line.split("\t")
+            spec.copy(ngramOpts = NerFeatures.NgramOpts(p(1).toInt, p(2).toBoolean, p(3).toBoolean, p(4).toBoolean,
+              if (p.length > 5) p(5).toBoolean else false,
+              if (p.length > 6) p(6).toBoolean else false))
+          }
+          else if (line.startsWith("distsim\t")) {
+            val n = line.split("\t")(1).toInt
+            spec.copy(distSim = Some(new DistSim((0 until n).map { _ =>
+              val l = r.readLine(); val t = l.indexOf('\t')
+              l.substring(0, t) -> l.substring(t + 1)
+            }.toMap)))
+          }
+          else throw new IllegalArgumentException(s"unexpected model trailer: $line")
         line = r.readLine()
       }
       val layout = new WeightLayout(numClasses, windowSize, backgroundIndex, featGroup, weightCol, numCols)
-      new NerModel(classIndex, backgroundIndex, featureIndex, layout, weights, knownLC,
-        gazette, normalizeTerms, occPatterns, reverse, distSim, tagsFlag, taggySeq, paren, ngram,
-        disjWidth, misc, genKey)
+      new NerModel(classIndex, backgroundIndex, featureIndex, layout, weights, knownLC, spec)
     } finally r.close()
   }
 }

@@ -125,8 +125,8 @@ object RefBinaryModel {
             .flatMap(RefMapKeys.effectiveGenericKey)
         else None
       RefModelAssembly.build(labelWindows, classIndex, featStrings, windowSize,
-        weights, knownLC ++ extraKnownLC, gazetteOf(factory), normalizeTerms, occPatterns,
-        reverse, distSim, useTags, useTaggySeq, paren, ngram, disjWidth, misc, genKey)
+        weights, knownLC ++ extraKnownLC, NerFeatures.Spec(gazetteOf(factory), normalizeTerms,
+          occPatterns, reverse, distSim, useTags, useTaggySeq, paren, ngram, disjWidth, misc, genKey))
     } finally in.close()
   }
 

@@ -99,9 +99,9 @@ object RefTextModel {
         f += 1
       }
       RefModelAssembly.build(labelWindows, classIndex, featStrings, windowSize, weights,
-        knownLC, gazette, fl.normalizeTerms, fl.useOccurrencePatterns, fl.useReverse,
-        distSim = None, fl.useTags, fl.useTaggySequences, fl.useParenMatching,
-        fl.ngramOpts, fl.disjunctionWidth, fl.miscOpts, fl.genericKey)
+        knownLC, NerFeatures.Spec(gazette, fl.normalizeTerms, fl.useOccurrencePatterns, fl.useReverse,
+          distSim = None, fl.useTags, fl.useTaggySequences, fl.useParenMatching,
+          fl.ngramOpts, fl.disjunctionWidth, fl.miscOpts, fl.genericKey))
     } finally r.close()
   }
 }
@@ -153,18 +153,7 @@ private[ner] object RefModelAssembly {
       windowSize: Int,
       weights: Array[Array[Double]],
       knownLC: Set[String],
-      gazette: Gazette = Gazette.empty,
-      normalizeTerms: Boolean = false,
-      useOccurrencePatterns: Boolean = false,
-      useReverse: Boolean = false,
-      distSim: Option[DistSim] = None,
-      useTags: Boolean = false,
-      useTaggySequences: Boolean = false,
-      useParenMatching: Boolean = false,
-      ngramOpts: NerFeatures.NgramOpts = NerFeatures.NgramOpts.default,
-      disjunctionWidth: Int = 4,
-      miscOpts: NerFeatures.MiscOpts = NerFeatures.MiscOpts.default,
-      genericKey: Option[String] = None): NerModel = {
+      features: NerFeatures.Spec = NerFeatures.Spec.default): NerModel = {
     val numGroups = labelWindows.length
     val numClasses = classIndex.length
     require(windowSize == numGroups, s"windowSize $windowSize != labelIndices groups $numGroups")
@@ -200,10 +189,7 @@ private[ner] object RefModelAssembly {
     }
     val layout = new WeightLayout(numClasses, windowSize,
       classIndex.indexOf("O"), featGroup, weightCol, numCols)
-    new NerModel(classIndex, classIndex.indexOf("O"), featureIndex, layout, weights, knownLC,
-      gazette, normalizeTerms, useOccurrencePatterns, useReverse, distSim,
-      useTags, useTaggySequences, useParenMatching, ngramOpts, disjunctionWidth, miscOpts,
-      genericKey)
+    new NerModel(classIndex, classIndex.indexOf("O"), featureIndex, layout, weights, knownLC, features)
   }
 }
 

@@ -62,7 +62,7 @@ object SearchGraph {
     // (months/days lowercased). Pre-fixing the words here reproduces that:
     // tok() then shapes the fixed word and re-fixing is idempotent. Pinned by
     // RefLatticeSpec (drift was up to 2.92 nats on timex docs without this).
-    val in = (if (model.useReverse) words.reverse else words).map(model.fix)
+    val in = (if (model.useReverse) words.reverse else words).map(model.features.fix)
     val n = in.length
     require(n >= 2,
       "searchGraph requires >= 2 tokens; the reference's builder indexes " +

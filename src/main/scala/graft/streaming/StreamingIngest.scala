@@ -1,8 +1,6 @@
 package graft.streaming
 
-import graft.ner.NerModel
-import graft.pipeline.{Mention, Turn}
-import org.apache.spark.broadcast.Broadcast
+import graft.pipeline.Turn
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -30,12 +28,6 @@ object StreamingIngest {
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("total_value"))
       .select(col("window.start").as("window_start"), col("event_type"), col("n"), col("total_value"))
   }
-
-  /** Streaming NER: stateless mapPartitions tagging applies to a turn stream
-    * as-is — same broadcast model, same closure as the batch Tagger.
-    */
-  def streamingMentions(turns: Dataset[Turn], model: Broadcast[NerModel]): Dataset[Mention] =
-    graft.ner.Tagger.mentions(turns, model)
 
   final case class DedupState(seen: Set[Long])
   final case class DedupedDoc(doc_id: Long, dup_key: Long, text: String)

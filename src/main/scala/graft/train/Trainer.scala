@@ -4,8 +4,7 @@ import breeze.linalg.DenseVector
 import breeze.optimize.{DiffFunction, LBFGS}
 import graft.core.Crf
 import graft.io.NioLocalFileSystem
-import graft.ner.{Gazette, NerFeatures, NerModel}
-import graft.text.WordShape
+import graft.ner.{NerFeatures, NerModel}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import scala.reflect.ClassTag
@@ -19,7 +18,7 @@ final case class LabeledDoc(words: Seq[String], labels: Seq[String],
     chunks: Seq[String] = Seq.empty, unknowns: Seq[String] = Seq.empty,
     // useGenericFeatures: raw values of the SINGLE effective generic column
     // (the CoreLabel collapse quirk, RefMapKeys) — joined with
-    // Config.genericKey at featurization
+    // Config.features.genericKey at featurization
     generics: Seq[String] = Seq.empty)
 
 /** Distributed CRF training: dictionary-build jobs + L-BFGS on the driver over
@@ -56,9 +55,9 @@ object Trainer {
       // matching the reference's NEGATIVE_INFINITY-initialized FactorTable) and
       // carry no weight columns.
       observedSequencesOnly: Boolean = true,
-      // useGazettes: TYPE-GAZn features from a broadcast gazette, sloppy/clean
-      // per the Gazette's modes (NERFeatureFactory.java:675-727,1211-1232)
-      gazette: Gazette = Gazette.empty,
+      // the values that shape features (NerFeatures.Spec; default = the
+      // conllNoTags preset)
+      features: NerFeatures.Spec = NerFeatures.Spec.default,
       // drop C/CpC features whose ONLY corpus occurrence is at a background
       // position (CRFClassifier.java:430-451; flag default false,
       // SeqClassifierFlags.java:354) — the big memory lever at web-corpus
@@ -70,32 +69,6 @@ object Trainer {
       // retrain
       numTimesPruneFeatures: Int = 0,
       featureDiffThresh: Double = 0.0,
-      // normalizeTerms: Americanize during the word fix (off in every
-      // 3-class preset; ObjectBankWrapper.fix, :117-128)
-      normalizeTerms: Boolean = false,
-      // useOccurrencePatterns (goodCoNLL-only family): long-range repeated-
-      // word features over the whole document window
-      useOccurrencePatterns: Boolean = false,
-      // useReverse (macro preset): documents train and decode reversed
-      useReverse: Boolean = false,
-      // useDistSim: cluster features from a broadcast lexicon (model state)
-      distSim: Option[graft.ner.DistSim] = None,
-      // useTags / useTaggySequences: POS-tag templates over LabeledDoc.tags
-      useTags: Boolean = false,
-      useTaggySequences: Boolean = false,
-      // useParenMatching: matched open/close paren features (CpC + Cp2C)
-      useParenMatching: Boolean = false,
-      // useNGrams options (maxNGramLeng / noMidNGrams / lowercaseNGrams /
-      // dehyphenateNGrams — NERFeatureFactory.java:1173-1197)
-      ngramOpts: NerFeatures.NgramOpts = NerFeatures.NgramOpts.default,
-      // useDisjunctive width (flags.disjunctionWidth, preset default 4)
-      disjunctionWidth: Int = 4,
-      // small families: useTitle/usePosition/useBeginSent/useSymWordPairs/
-      // useFirstWord/useOrdinal
-      miscOpts: NerFeatures.MiscOpts = NerFeatures.MiscOpts.default,
-      // useGenericFeatures: the single effective generic column name (see
-      // RefMapKeys.effectiveGenericKey); requires miscOpts.useGenericFeatures
-      genericKey: Option[String] = None,
       // Ceiling on the knownLCWords vocabulary (model state used for the
       // dan2 'k' shape suffix). The reference grows it unboundedly
       // (CRFClassifier.java:1560 / ObjectBankWrapper.java:46-68) — fine at
@@ -122,7 +95,7 @@ object Trainer {
       // supports exactly this shape of reduction — an arbitrary subset of the
       // template set loads and runs because unseen features hash-miss and
       // drop (CRFClassifier.java:200-207) — and training against the reduced
-      // dictionary is a genuine CRF fit over that feature set (encodeWith
+      // dictionary is a genuine CRF fit over that feature set (the encoder
       // drops non-dictionary features before the objective ever sees them).
       // Used by the q48 trained-weights oracle, whose SQL side can only emit
       // the four SQL-expressible families. None (default) = keep all.
@@ -165,7 +138,8 @@ object Trainer {
   private[graft] def knownLCWords(spark: SparkSession, docs: Dataset[LabeledDoc],
       normTerms: Boolean, limit: Int): Set[String] = {
     import spark.implicits._
-    val lc = docs.flatMap(_.words.iterator.map(w => fixWord(w, normTerms))
+    val spec = NerFeatures.Spec(normalizeTerms = normTerms)
+    val lc = docs.flatMap(_.words.iterator.map(spec.fix)
       .filter(w => w.nonEmpty && Character.isLowerCase(w.charAt(0))))
     if (limit == Int.MaxValue) lc.distinct().collect().toSet
     else {
@@ -194,17 +168,20 @@ object Trainer {
     // attached gazette)
     def fnvAll(parts: Iterator[String]): Long =
       parts.foldLeft(0xcbf29ce484222325L)((h, p) => graft.ops.Hashing.fnv1a64(p) ^ (h * 31))
-    val gazHash = fnvAll(cfg.gazette.fingerprintParts)
-    val dsHash = fnvAll(cfg.distSim.iterator.flatMap(_.lexicon.toSeq.sorted.iterator
+    // genericKey joins the list only when set, so an artifact built without
+    // one keeps the fingerprint it was written with
+    val spec = cfg.features
+    val gazHash = fnvAll(spec.gazette.fingerprintParts)
+    val dsHash = fnvAll(spec.distSim.iterator.flatMap(_.lexicon.toSeq.sorted.iterator
       .map { case (k, v) => s"$k\u0000$v" }))
-    Seq(cfg.background, cfg.normalizeTerms, cfg.useOccurrencePatterns,
-      cfg.useTags, cfg.useTaggySequences, cfg.useReverse, cfg.useParenMatching,
+    (Seq(cfg.background, spec.normalizeTerms, spec.useOccurrencePatterns,
+      spec.useTags, spec.useTaggySequences, spec.useReverse, spec.useParenMatching,
       cfg.observedSequencesOnly, cfg.removeBackgroundSingletonFeatures,
       dsHash, gazHash, cfg.maxKnownLCWords,
-      cfg.ngramOpts.maxLen, cfg.ngramOpts.noMid, cfg.ngramOpts.lowercase,
-      cfg.ngramOpts.dehyphenate, cfg.ngramOpts.greekify, cfg.ngramOpts.conjoinShapes,
-      cfg.disjunctionWidth, cfg.miscOpts, cfg.featureCountThreshold,
-      cfg.dictionaryFilter.isDefined).mkString("|")
+      spec.ngramOpts.maxLen, spec.ngramOpts.noMid, spec.ngramOpts.lowercase,
+      spec.ngramOpts.dehyphenate, spec.ngramOpts.greekify, spec.ngramOpts.conjoinShapes,
+      spec.disjunctionWidth, spec.miscOpts, cfg.featureCountThreshold,
+      cfg.dictionaryFilter.isDefined) ++ spec.genericKey).mkString("|")
   }
 
   private def metaPath(dir: String) = java.nio.file.Paths.get(dir, "meta.gz")
@@ -297,7 +274,7 @@ object Trainer {
     // copy(...) so newly added LabeledDoc fields cannot be silently dropped
     // again (r5 advice: unknowns/generics were lost here, degrading those
     // families to their 'null' constants under useReverse with no require)
-    val docs = if (!cfg.useReverse) docs0
+    val docs = if (!cfg.features.useReverse) docs0
       else docs0.map(d => d.copy(words = d.words.reverse, labels = d.labels.reverse,
         tags = d.tags.reverse, lemmas = d.lemmas.reverse, chunks = d.chunks.reverse,
         unknowns = d.unknowns.reverse, generics = d.generics.reverse))
@@ -307,19 +284,8 @@ object Trainer {
     // Subtlety: the reference's pre-pass iterates through processDocument, so
     // it sees TIMEX-FIXED words — "Monday" is collected as "monday" and the
     // later shape pass emits "WT-Xxk" for weekday tokens. Collect fixed words.
-    val normTerms = cfg.normalizeTerms
-    val occPat = cfg.useOccurrencePatterns
-    val useTg = cfg.useTags
-    val useTgSeq = cfg.useTaggySequences
-    val useRev = cfg.useReverse
-    val useParen = cfg.useParenMatching
-    val ngOpts = cfg.ngramOpts
-    val disjW = cfg.disjunctionWidth
-    val miscO = cfg.miscOpts
-    val genKey = cfg.genericKey.orNull
-    val bcastDs = sc.broadcast(cfg.distSim)
     val knownLC: Set[String] = loadedMeta.map(_.knownLC)
-      .getOrElse(knownLCWords(spark, docs, normTerms, cfg.maxKnownLCWords))
+      .getOrElse(knownLCWords(spark, docs, cfg.features.normalizeTerms, cfg.maxKnownLCWords))
 
     // Class index: background first (index 0), then remaining labels sorted.
     val classIndex = loadedMeta.map(_.classIndex).getOrElse {
@@ -328,7 +294,7 @@ object Trainer {
     }
     val classOf = classIndex.zipWithIndex.toMap
     val bcastKnownLC = sc.broadcast(knownLC)
-    val bcastGaz = sc.broadcast(cfg.gazette)
+    val bSpec = sc.broadcast(cfg.features)
 
     // Pass 2: distinct (group, feature) strings -> driver-assembled dictionary.
     // With removeBackgroundSingletonFeatures, C/CpC features are kept only if
@@ -345,9 +311,9 @@ object Trainer {
       if (loadedMeta.isDefined) loadedMeta.get.features
       else if (!cfg.removeBackgroundSingletonFeatures) {
         val pairs = docs.flatMap { d =>
-          val toks = withGenerics(withUnknowns(withChunks(withLemmas(withTags(preprocess(d.words.toIndexedSeq, bcastKnownLC.value, normTerms, bcastDs.value), d.tags), d.lemmas), d.chunks), d.unknowns), d.generics, genKey)
+          val toks = toksOf(d, bSpec.value, bcastKnownLC.value)
           (0 until toks.length).iterator.flatMap { pos =>
-            val byGroup = NerFeatures.featuresAt(toks, pos, bcastGaz.value, occPat, bcastDs.value.isDefined, useTg, useTgSeq, useRev, useParen, ngOpts, disjW, miscO)
+            val byGroup = NerFeatures.featuresAt(toks, pos, bSpec.value)
             byGroup.iterator.zipWithIndex.flatMap { case (fs, g) => fs.iterator.map(f => (g, f)) }
           }
         }
@@ -365,10 +331,10 @@ object Trainer {
       } else {
         import org.apache.spark.sql.functions.{col, count, lit, sum, when}
         docs.flatMap { d =>
-          val toks = withGenerics(withUnknowns(withChunks(withLemmas(withTags(preprocess(d.words.toIndexedSeq, bcastKnownLC.value, normTerms, bcastDs.value), d.tags), d.lemmas), d.chunks), d.unknowns), d.generics, genKey)
+          val toks = toksOf(d, bSpec.value, bcastKnownLC.value)
           val lab = d.labels.toIndexedSeq
           (0 until toks.length).iterator.flatMap { pos =>
-            val byGroup = NerFeatures.featuresAt(toks, pos, bcastGaz.value, occPat, bcastDs.value.isDefined, useTg, useTgSeq, useRev, useParen, ngOpts, disjW, miscO)
+            val byGroup = NerFeatures.featuresAt(toks, pos, bSpec.value)
             byGroup.iterator.zipWithIndex.flatMap { case (fs, g) =>
               val isBg =
                 if (g == 0) lab(pos) == bg
@@ -466,10 +432,8 @@ object Trainer {
         case None => docs
           .repartition(parts)
           .map { d =>
-            val toks = withGenerics(withUnknowns(withChunks(withLemmas(withTags(preprocess(d.words.toIndexedSeq, bcastKnownLC.value, normTerms, bcastDs.value), d.tags), d.lemmas), d.chunks), d.unknowns), d.generics, genKey)
-            val dict = bcastDict.value
-            val enc = encodeWith(toks, dict, bcastGaz.value, occPat, bcastDs.value.isDefined, useTg, useTgSeq, useRev, useParen, ngOpts, disjW, miscO)
-            (enc, d.labels.map(classOf).toArray)
+            val spec = bSpec.value
+            (spec.encode(toksOf(d, spec, bcastKnownLC.value), bcastDict.value), d.labels.map(classOf).toArray)
           }
           .cache()
       }
@@ -735,98 +699,12 @@ object Trainer {
       iter += 1
     }
     docs.unpersist()
-    new NerModel(classIndex, 0, featureIndex, layout, weights, knownLC, cfg.gazette,
-      cfg.normalizeTerms, cfg.useOccurrencePatterns, cfg.useReverse, cfg.distSim,
-      cfg.useTags, cfg.useTaggySequences, cfg.useParenMatching, cfg.ngramOpts,
-      cfg.disjunctionWidth, cfg.miscOpts, cfg.genericKey)
+    new NerModel(classIndex, 0, featureIndex, layout, weights, knownLC, cfg.features)
   }
 
-  /** Attach per-token POS tags (when the doc has them) to preprocessed toks. */
-  def withTags(toks: IndexedSeq[NerFeatures.Tok], tags: Seq[String]): IndexedSeq[NerFeatures.Tok] =
-    if (tags.isEmpty) toks
-    else {
-      require(tags.length == toks.length, s"${toks.length} toks vs ${tags.length} tags")
-      toks.indices.map(i => toks(i).copy(tag = tags(i)))
-    }
-
-  /** Attach per-token lemmas (5-column CoNLL data,
-    * CoNLLDocumentReaderAndWriter.java:223-231) to preprocessed toks. */
-  def withLemmas(toks: IndexedSeq[NerFeatures.Tok], lemmas: Seq[String]): IndexedSeq[NerFeatures.Tok] =
-    if (lemmas.isEmpty) toks
-    else {
-      require(lemmas.length == toks.length, s"${toks.length} toks vs ${lemmas.length} lemmas")
-      toks.indices.map(i => toks(i).copy(lemma = lemmas(i)))
-    }
-
-  /** Attach per-token chunk labels (4/5-column CoNLL data) to preprocessed toks. */
-  def withChunks(toks: IndexedSeq[NerFeatures.Tok], chunks: Seq[String]): IndexedSeq[NerFeatures.Tok] =
-    if (chunks.isEmpty) toks
-    else {
-      require(chunks.length == toks.length, s"${toks.length} toks vs ${chunks.length} chunks")
-      toks.indices.map(i => toks(i).copy(chunk = chunks(i)))
-    }
-
-  /** Attach per-token UnknownAnnotation values ("true"/"false", the
-    * true-casing reader's seen-once flags — TrueCasingDocumentReaderAndWriter
-    * .java:159) to preprocessed toks. */
-  def withUnknowns(toks: IndexedSeq[NerFeatures.Tok], unknowns: Seq[String]): IndexedSeq[NerFeatures.Tok] =
-    if (unknowns.isEmpty) toks
-    else {
-      require(unknowns.length == toks.length, s"${toks.length} toks vs ${unknowns.length} unknowns")
-      toks.indices.map(i => toks(i).copy(unknown = unknowns(i)))
-    }
-
-  /** Attach per-token generic-column values as pre-joined "<value>-<key>"
-    * strings (NERFeatureFactory.java:1466-1476; single effective key per the
-    * CoreLabel collapse quirk, RefMapKeys). */
-  def withGenerics(toks: IndexedSeq[NerFeatures.Tok], generics: Seq[String],
-      key: String): IndexedSeq[NerFeatures.Tok] =
-    if (generics.isEmpty || key == null) toks
-    else {
-      require(generics.length == toks.length, s"${toks.length} toks vs ${generics.length} generics")
-      toks.indices.map(i => toks(i).copy(generic = generics(i) + "-" + key))
-    }
-
-  /** Shared preprocessing: shape from the original word (frozen knownLC), then
-    * the word fix — identical to NerModel.preprocess but usable pre-model.
+  /** A training document's tokens as the tagger sees them: preprocessed,
+    * then its columns attached.
     */
-  def preprocess(words: IndexedSeq[String], knownLC: Set[String],
-      normalizeTerms: Boolean = false,
-      distSim: Option[graft.ner.DistSim] = None): IndexedSeq[NerFeatures.Tok] =
-    words.map { w =>
-      val fixed = fixWord(w, normalizeTerms)
-      NerFeatures.Tok(fixed, WordShape.dan2(w, knownLC.contains),
-        distSim.map(_.clusterOf(fixed)).orNull)
-    }
-
-  @inline private def fixWord(w: String, normalizeTerms: Boolean): String =
-    if (normalizeTerms) graft.text.Americanize.fixWordNormalizeTerms(w)
-    else WordShape.fixWord(w)
-
-  def encodeWith(toks: IndexedSeq[NerFeatures.Tok], dict: java.util.HashMap[String, Integer],
-      gaz: Gazette = Gazette.empty, occPatterns: Boolean = false,
-      useDistSim: Boolean = false, useTags: Boolean = false,
-      useTaggySeq: Boolean = false, reverse: Boolean = false,
-      parenMatching: Boolean = false,
-      ngram: NerFeatures.NgramOpts = NerFeatures.NgramOpts.default,
-      disjWidth: Int = 4,
-      misc: NerFeatures.MiscOpts = NerFeatures.MiscOpts.default): Crf.EncodedDoc = {
-    val out = new Array[Array[Array[Int]]](toks.length)
-    var pos = 0
-    while (pos < toks.length) {
-      out(pos) = NerFeatures.featuresAt(toks, pos, gaz, occPatterns, useDistSim,
-        useTags, useTaggySeq, reverse, parenMatching, ngram, disjWidth, misc).map { feats =>
-        val b = new scala.collection.mutable.ArrayBuilder.ofInt
-        var k = 0
-        while (k < feats.length) {
-          val id = dict.get(feats(k))
-          if (id != null) b += id.intValue
-          k += 1
-        }
-        b.result()
-      }
-      pos += 1
-    }
-    out
-  }
+  private def toksOf(d: LabeledDoc, spec: NerFeatures.Spec, knownLC: Set[String]): IndexedSeq[NerFeatures.Tok] =
+    spec.attach(spec.preprocess(d.words.toIndexedSeq, knownLC), d.tags, d.lemmas, d.chunks, d.unknowns, d.generics)
 }

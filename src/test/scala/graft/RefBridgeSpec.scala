@@ -162,9 +162,9 @@ class RefBridgeSpec extends AnyFunSuite {
       .filter(_.nonEmpty).map(l => graft.text.WordShape.fixWord(l.split("\t")(0)))
       .filter(w => w.nonEmpty && Character.isLowerCase(w.charAt(0))).toSet
     val model = graft.ner.RefBinaryModel.load(s"$dir/refgaz.ser.gz", extraKnownLC = lcWords("test.tsv"))
-    assert(!model.gazette.isEmpty, "gazette maps not reconstructed from the bundle")
+    assert(!model.features.gazette.isEmpty, "gazette maps not reconstructed from the bundle")
     info(s"gazette model: ${model.numFeatures} features, " +
-      s"${model.gazette.sloppy.size} sloppy words, ${model.gazette.clean.size} clean words")
+      s"${model.features.gazette.sloppy.size} sloppy words, ${model.features.gazette.clean.size} clean words")
     // gazette features actually made it into the trained dictionary
     assert(model.featureIndex.containsKey("ORGANIZATION-GAZ2|C"), "no gazette feature in dictionary")
 
@@ -241,7 +241,7 @@ class RefBridgeSpec extends AnyFunSuite {
       .filter(_.nonEmpty).map(l => graft.text.Americanize.fixWordNormalizeTerms(l.split("\t")(0)))
       .filter(w => w.nonEmpty && Character.isLowerCase(w.charAt(0))).toSet
     val model = graft.ner.RefBinaryModel.load(s"$dir/refnorm.ser.gz", extraKnownLC = lcWords("test.tsv"))
-    assert(model.normalizeTerms, "normalizeTerms flag not carried out of the bundle")
+    assert(model.features.normalizeTerms, "normalizeTerms flag not carried out of the bundle")
     // americanized forms in the dictionary, British forms absent
     assert(model.featureIndex.containsKey("#<color>#|C"), "expected americanized ngram in dictionary")
     assert(!model.featureIndex.containsKey("#<colour>#|C"), "british ngram should have been normalized away")
@@ -316,7 +316,7 @@ class RefBridgeSpec extends AnyFunSuite {
       .filter(_.nonEmpty).map(l => graft.text.WordShape.fixWord(l.split("\t")(0)))
       .filter(w => w.nonEmpty && Character.isLowerCase(w.charAt(0))).toSet
     val model = graft.ner.RefBinaryModel.load(s"$dir/refocc.ser.gz", extraKnownLC = lcWords("test.tsv"))
-    assert(model.useOccurrencePatterns, "useOccurrencePatterns flag not carried out of the bundle")
+    assert(model.features.useOccurrencePatterns, "useOccurrencePatterns flag not carried out of the bundle")
     assert(model.featureIndex.containsKey("X-NEXT-OCCURRENCE-X|C"), "family never fired in training?!")
     assert(model.featureIndex.containsKey("X-PREV-OCCURRENCE-X|C"))
     assert(model.featureIndex.containsKey("NO-OCCURRENCE-PATTERN|C"))
@@ -434,8 +434,8 @@ class RefBridgeSpec extends AnyFunSuite {
       .filter(_.nonEmpty).map(l => graft.text.WordShape.fixWord(l.split("\t")(0)))
       .filter(w => w.nonEmpty && Character.isLowerCase(w.charAt(0))).toSet
     val model = graft.ner.RefBinaryModel.load(s"$dir/refds.ser.gz", extraKnownLC = lcWords("test.tsv"))
-    assert(model.distSim.isDefined, "distsim lexicon not reconstructed from the bundle")
-    info(s"distsim model: ${model.numFeatures} features, lexicon ${model.distSim.get.size} words")
+    assert(model.features.distSim.isDefined, "distsim lexicon not reconstructed from the bundle")
+    info(s"distsim model: ${model.numFeatures} features, lexicon ${model.features.distSim.get.size} words")
     assert(model.featureIndex.containsKey("C_CITY-DISTSIM|C"), "cluster feature missing from dictionary")
     assert(model.featureIndex.containsKey("null-DISTSIM|C"), "unknown-word 'null' cluster missing")
 
@@ -518,7 +518,7 @@ class RefBridgeSpec extends AnyFunSuite {
       .filter(_.nonEmpty).map(l => graft.text.WordShape.fixWord(l.split("\t")(0)))
       .filter(w => w.nonEmpty && Character.isLowerCase(w.charAt(0))).toSet
     val model = graft.ner.RefBinaryModel.load(s"$dir/reftags.ser.gz", extraKnownLC = lcWords("test.tsv"))
-    assert(model.useTags && model.useTaggySequences, "tag flags not carried out of the bundle")
+    assert(model.features.useTags && model.features.useTaggySequences, "tag flags not carried out of the bundle")
     assert(model.featureIndex.containsKey("NNP-TAG|C"), "tag feature missing from dictionary")
     assert(model.featureIndex.containsKey("NNP-NNP-TS|CpC"), "taggy-sequence feature missing")
 
@@ -625,7 +625,7 @@ class RefBridgeSpec extends AnyFunSuite {
       .filter(_.nonEmpty).map(l => graft.text.WordShape.fixWord(l.split("\t")(0)))
       .filter(w => w.nonEmpty && Character.isLowerCase(w.charAt(0))).toSet
     val model = graft.ner.RefBinaryModel.load(s"$dir/ref.ser.gz", extraKnownLC = lcWords("test.tsv"))
-    assert(model.useTags && model.useOccurrencePatterns)
+    assert(model.features.useTags && model.features.useOccurrencePatterns)
     assert(model.useReverse == reverseOurs)
     def parseLastCol(path: java.nio.file.Path): Vector[Vector[String]] = {
       val docs = Vector.newBuilder[Vector[String]]
@@ -717,7 +717,7 @@ class RefBridgeSpec extends AnyFunSuite {
       .filter(_.nonEmpty).map(l => graft.text.WordShape.fixWord(l.split("\t")(0)))
       .filter(w => w.nonEmpty && Character.isLowerCase(w.charAt(0))).toSet
     val model = graft.ner.RefBinaryModel.load(s"$dir/refparen.ser.gz", extraKnownLC = lcWords("test.tsv"))
-    assert(model.useParenMatching, "paren flag not carried out of the bundle")
+    assert(model.features.useParenMatching, "paren flag not carried out of the bundle")
     assert(model.featureIndex.containsKey("PAREN-MATCH|CpC"), "CpC paren feature missing")
     assert(model.featureIndex.containsKey("PAREN-MATCH|Cp2C"), "Cp2C paren feature missing")
 
@@ -798,7 +798,7 @@ class RefBridgeSpec extends AnyFunSuite {
       .filter(_.nonEmpty).map(l => graft.text.WordShape.fixWord(l.split("\t")(0)))
       .filter(w => w.nonEmpty && Character.isLowerCase(w.charAt(0))).toSet
     val model = graft.ner.RefBinaryModel.load(s"$dir/refmacro.ser.gz", extraKnownLC = lcWords("test.tsv"))
-    assert(model.useReverse && model.useTags && model.useOccurrencePatterns)
+    assert(model.useReverse && model.features.useTags && model.features.useOccurrencePatterns)
     assert(!model.featureIndex.containsKey("Alice-DISJN|C"), "macro trains no disjunctive features")
     def parseLastCol(path: java.nio.file.Path): Vector[Vector[String]] = {
       val docs = Vector.newBuilder[Vector[String]]
@@ -859,9 +859,7 @@ class RefBridgeSpec extends AnyFunSuite {
     for (words <- docs) {
       val toks = model.preprocess(words)
       for (pos <- words.indices)
-        graft.ner.NerFeatures.featuresAt(toks, pos, model.gazette, model.useOccurrencePatterns,
-          model.distSim.isDefined, model.useTags, model.useTaggySequences, model.useReverse,
-          model.useParenMatching, model.ngramOpts, model.disjunctionWidth)
+        graft.ner.NerFeatures.featuresAt(toks, pos, model.features)
           .foreach(_.foreach(emitted.add(_)))
     }
     val missing = model.featureIndex.keySet().asScala.toSeq.filterNot(emitted.contains).sorted
@@ -958,7 +956,7 @@ class RefBridgeSpec extends AnyFunSuite {
     // the semi-constants must be real dictionary entries in the
     // reference-trained model (the leg is not vacuous)
     val model = graft.ner.RefBinaryModel.load("/tmp/refnphead/ref.ser.gz")
-    assert(model.miscOpts.useNPHead && model.miscOpts.useNPGovernor && model.miscOpts.useHeadGov)
+    assert(model.features.miscOpts.useNPHead && model.features.miscOpts.useNPGovernor && model.features.miscOpts.useHeadGov)
     for (f <- Seq("null-HW|C", "null-GW|C", "null-null-HW_GW|C",
         "null-NNP-HW-T|C", "null-NNP-GW-T|C", "null-C_CITY-HW-DISTSIM|C",
         "null-C_CITY-DISTSIM-T1|C"))
@@ -1177,10 +1175,7 @@ class RefBridgeSpec extends AnyFunSuite {
     meta.filter(_._3 <= 8).take(20).foreach { case (conv, turnIdx, n) =>
       val ws = words(conv, turnIdx)
       val toks = model.preprocess(ws)
-      val enc = graft.train.Trainer.encodeWith(toks, model.featureIndex, model.gazette,
-        model.useOccurrencePatterns, model.distSim.isDefined, model.useTags,
-        model.useTaggySequences, model.useReverse, model.useParenMatching,
-        model.ngramOpts, model.disjunctionWidth, model.miscOpts)
+      val enc = model.encode(toks)
       val p = model.params
       val pots = Crf.logPotentials(enc, p)
       val nc = p.numClasses
@@ -1317,10 +1312,7 @@ class RefBridgeSpec extends AnyFunSuite {
       val convId = conv.stripPrefix("conv").toLong
       val (ws, _) = graft.pipeline.Transcripts.turnTokens(RefFixtures.TestSeed, convId, turnIdx)
       val toks = model.preprocess(ws)
-      val enc = graft.train.Trainer.encodeWith(toks, model.featureIndex, model.gazette,
-        model.useOccurrencePatterns, model.distSim.isDefined, model.useTags,
-        model.useTaggySequences, model.useReverse, model.useParenMatching,
-        model.ngramOpts, model.disjunctionWidth, model.miscOpts)
+      val enc = model.encode(toks)
       val p = model.params
       val pots = Crf.logPotentials(enc, p)
       val nc = p.numClasses
@@ -1528,10 +1520,7 @@ class RefBridgeSpec extends AnyFunSuite {
       val fixed = ws.map(graft.text.WordShape.fixWord)
       assert(fixed.mkString(" ") == d.words, s"doc ${d.docIdx}: wrapper-fixed words diverge")
       val toks = model.preprocess(ws)
-      val enc = graft.train.Trainer.encodeWith(toks, model.featureIndex, model.gazette,
-        model.useOccurrencePatterns, model.distSim.isDefined, model.useTags,
-        model.useTaggySequences, model.useReverse, model.useParenMatching,
-        model.ngramOpts, model.disjunctionWidth, model.miscOpts)
+      val enc = model.encode(toks)
       val p = model.params
       val pots = Crf.logPotentials(enc, p)
       assert(Crf.viterbi(pots, p).toSeq == d.init.toSeq, s"doc ${d.docIdx}: viterbi init diverges")
@@ -1682,7 +1671,7 @@ class RefBridgeSpec extends AnyFunSuite {
       .filter(_.nonEmpty).map(l => graft.text.WordShape.fixWord(l.split("\t")(0)))
       .filter(w => w.nonEmpty && Character.isLowerCase(w.charAt(0))).toSet
     val model = graft.ner.RefBinaryModel.load(s"$dir/ref.ser.gz", extraKnownLC = lcWords("test.tsv"))
-    assert(model.miscOpts.useLemmas && model.miscOpts.usePrevNextLemmas,
+    assert(model.features.miscOpts.useLemmas && model.features.miscOpts.usePrevNextLemmas,
       "lemma flags not recovered from the binary bundle")
     // the dictionary must actually contain lemma features (the leg is not vacuous)
     val nLem = model.featureIndex.keySet().asScala.count(f =>
@@ -1785,14 +1774,14 @@ class RefBridgeSpec extends AnyFunSuite {
       .filter(_.nonEmpty).map(l => graft.text.WordShape.fixWord(l.split("\t")(0)))
       .filter(w => w.nonEmpty && Character.isLowerCase(w.charAt(0))).toSet
     val model = graft.ner.RefBinaryModel.load(s"$dir/ref.ser.gz", extraKnownLC = lcWords("test.tsv"))
-    assert(model.miscOpts.useChunks && model.miscOpts.useChunkySequences,
+    assert(model.features.miscOpts.useChunks && model.features.miscOpts.useChunkySequences,
       "chunk flags not recovered from the binary bundle")
-    assert(model.miscOpts.useAbbr && model.miscOpts.useMinimalAbbr &&
-      model.miscOpts.useMoreAbbr && model.miscOpts.useABGENE &&
-      model.miscOpts.useGENIA && model.miscOpts.useMUCFeatures &&
-      model.miscOpts.useClassFeature && model.miscOpts.useURLSequences &&
-      model.miscOpts.useNPHead && model.miscOpts.useNPGovernor &&
-      model.miscOpts.useHeadGov,
+    assert(model.features.miscOpts.useAbbr && model.features.miscOpts.useMinimalAbbr &&
+      model.features.miscOpts.useMoreAbbr && model.features.miscOpts.useABGENE &&
+      model.features.miscOpts.useGENIA && model.features.miscOpts.useMUCFeatures &&
+      model.features.miscOpts.useClassFeature && model.features.miscOpts.useURLSequences &&
+      model.features.miscOpts.useNPHead && model.features.miscOpts.useNPGovernor &&
+      model.features.miscOpts.useHeadGov,
       "constant-family flags not recovered from the binary bundle")
     for (f <- Seq("null-ABBR|C", "null-null-PABBRANS|CpC",
         "null-null-null-2PABBRANS|CpCp2C", "null-null-P2AP2CABB|Cp2C",
@@ -1920,10 +1909,10 @@ class RefBridgeSpec extends AnyFunSuite {
       .filter(_.nonEmpty).map(l => graft.text.WordShape.fixWord(l.split("\t")(0)))
       .filter(w => w.nonEmpty && Character.isLowerCase(w.charAt(0))).toSet
     val model = graft.ner.RefBinaryModel.load(s"$dir/ref.ser.gz", extraKnownLC = lcWords("test.tsv"))
-    assert(model.miscOpts.useGenericFeatures,
+    assert(model.features.miscOpts.useGenericFeatures,
       "useGenericFeatures not recovered from the binary bundle")
-    assert(model.genericKey.contains("genval"),
-      s"effective generic key ${model.genericKey} != Some(genval) — the collapse quirk picks the LAST generic column")
+    assert(model.features.genericKey.contains("genval"),
+      s"effective generic key ${model.features.genericKey} != Some(genval) — the collapse quirk picks the LAST generic column")
     // the collapse quirk, pinned against the reference's own dictionary:
     // features exist for the LAST generic key only
     val nGen = model.featureIndex.keySet().asScala.count(_.endsWith("-genval|C"))
@@ -2045,9 +2034,9 @@ class RefBridgeSpec extends AnyFunSuite {
       .filter(w => w.nonEmpty && Character.isLowerCase(w.charAt(0))).toSet
     val model = RefTextModel.load(s"$dir/ref.txt.gz", lcWords("train.tsv") ++ lcWords("test.tsv"))
     // the options must come from the flags block, not caller defaults
-    assert(model.useParenMatching, "useParenMatching not recovered from the flags block")
-    assert(model.miscOpts.useSymTags, "useSymTags not recovered from the flags block")
-    assert(model.miscOpts.useNextSequences, "useNextSequences not recovered from the flags block")
+    assert(model.features.useParenMatching, "useParenMatching not recovered from the flags block")
+    assert(model.features.miscOpts.useSymTags, "useSymTags not recovered from the flags block")
+    assert(model.features.miscOpts.useNextSequences, "useNextSequences not recovered from the flags block")
     val refTags = RefCompare.parseRefOutput(Paths.get(s"$dir/ref_out.tsv"))
     val meta = Files.readAllLines(Paths.get(s"$dir/meta.tsv")).asScala
       .filter(_.nonEmpty).map { l => val p = l.split("\t"); (p(0), p(1).toInt, p(2).toInt) }.toVector

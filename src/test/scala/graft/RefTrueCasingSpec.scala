@@ -94,7 +94,7 @@ class RefTrueCasingSpec extends AnyFunSuite {
     // our side: load the binary model (shapeless + useUnknown accepted),
     // replay the reader, tag with the unknown column, render printAnswers
     val model = graft.ner.RefBinaryModel.load(s"$dir/tc.ser.gz")
-    assert(model.miscOpts.useUnknown, "useUnknown must flow from the flags bundle")
+    assert(model.features.miscOpts.useUnknown, "useUnknown must flow from the flags bundle")
     val docs = graft.ner.TrueCasing.readCorpus(Files.readString(Paths.get(s"$dir/test.txt")))
     assert(docs.nonEmpty)
     val rendered = docs.map { d =>

@@ -62,9 +62,7 @@ class FeatureParitySpec extends AnyFunSuite {
     val l = m.layout
     new NerModel(m.classIndex, m.backgroundIndex, fi,
       new WeightLayout(l.numClasses, l.windowSize, l.backgroundIndex, featGroup, l.weightCol, l.numCols),
-      weights, m.knownLC, m.gazette, m.normalizeTerms, m.useOccurrencePatterns, m.useReverse,
-      m.distSim, m.useTags, m.useTaggySequences, m.useParenMatching, m.ngramOpts,
-      m.disjunctionWidth, m.miscOpts, m.genericKey)
+      weights, m.knownLC, m.features)
   }
 
   private def assertParity(m: NerModel, words: IndexedSeq[String]): Unit = {
@@ -194,9 +192,7 @@ class FeatureParitySpec extends AnyFunSuite {
     // ngram emission goldens: maxLen + noMid + lowercase on "<Ab-c>"
     val ng = NerFeatures.NgramOpts(maxLen = 3, noMid = false, lowercase = true, dehyphenate = true)
     val toks = Vector("Ab-c").map(w => NerFeatures.Tok(w, WordShape.dan2(w, Set.empty)))
-    val g0 = NerFeatures.featuresAt(toks, 0, Gazette.empty, occPatterns = false,
-      useDistSim = false, useTags = false, useTaggySeq = false,
-      reverse = false, parenMatching = false, ng)(0)
+    val g0 = NerFeatures.featuresAt(toks, 0, NerFeatures.Spec(ngramOpts = ng))(0)
     val ngrams = g0.filter(f => f.startsWith("#") && f.endsWith("|C")).toSet
     // "<Ab-c>" -> lowercase "<ab-c>" -> dehyphenate "<abc>"; all substrings
     // of length 2..3 (noMid off)
@@ -217,8 +213,8 @@ class FeatureParitySpec extends AnyFunSuite {
       NerFeatures.NgramOpts(noMid = false, conjoinShapes = true))) {
       // dictionary from the string path's own output
       val (dict, layout, weights) = dictModel(featsOf(toks2)(pos =>
-        NerFeatures.featuresAt(toks2, pos, Gazette.empty, false, false, false, false, false, false, opt)))
-      val m = new NerModel(Classes, 0, dict, layout, weights, Set.empty, ngramOpts = opt)
+        NerFeatures.featuresAt(toks2, pos, NerFeatures.Spec(ngramOpts = opt))))
+      val m = new NerModel(Classes, 0, dict, layout, weights, Set.empty, NerFeatures.Spec(ngramOpts = opt))
       assertStringPath(m, words)
     }
   }
@@ -273,9 +269,10 @@ class FeatureParitySpec extends AnyFunSuite {
       useEntityTypeSequences = true, useURLSequences = true,
       useMUCFeatures = true, useClassFeature = true, useGenericFeatures = true,
       useNPHead = true, useNPGovernor = true, useHeadGov = true)
-    val (dict, layout, weights) = dictModel(featsOf(toks)(pos =>
-      NerFeatures.featuresAt(toks, pos, Gazette.empty, false, true, true, true,
-        false, false, NerFeatures.NgramOpts.default, 4, misc)))
+    val clusters = new DistSim(words.indices.collect { case i if i % 2 == 0 => words(i).toLowerCase -> s"C_$i" }.toMap)
+    val spec = NerFeatures.Spec(distSim = Some(clusters), useTags = true, useTaggySequences = true,
+      miscOpts = misc, genericKey = Some("mycol"))
+    val (dict, layout, weights) = dictModel(featsOf(toks)(pos => NerFeatures.featuresAt(toks, pos, spec)))
     assert(dict.containsKey("true-UNKNOWN|C") && dict.containsKey("false-NUNKNOWN|C") &&
       dict.containsKey("null-PUNKNOWN|C")) // useUnknown raw-get incl. the pad "null"
     assert(dict.containsKey("v0-mycol|C") && !dict.containsKey("v1-mycol|C"),
@@ -342,9 +339,7 @@ class FeatureParitySpec extends AnyFunSuite {
       dict.keySet.toArray.exists(_.toString.endsWith("-DISJP-CS|C")))
     // the option model: raw words through the string path, and the POS
     // entry point's extra columns through `encode` on the full tokens
-    val clusters = new DistSim(words.indices.collect { case i if i % 2 == 0 => words(i).toLowerCase -> s"C_$i" }.toMap)
-    val m = new NerModel(Classes, 0, dict, layout, weights, Set.empty, distSim = Some(clusters),
-      useTags = true, useTaggySequences = true, miscOpts = misc, genericKey = Some("mycol"))
+    val m = new NerModel(Classes, 0, dict, layout, weights, Set.empty, spec)
     assertStringPath(m, words)
     val generics = words.indices.map(i => s"v$i")
     val full = m.preprocess(words).zipWithIndex.map { case (t, i) =>
@@ -368,17 +363,17 @@ class FeatureParitySpec extends AnyFunSuite {
     val gaz = Gazette.parse(lines)
     val words = Vector("Dr.", "Carla", "Garcia", "met", "Acme", "Corp.", "in", "Berlin", ".")
     val toks = toksOf(words)
-    val (dict, layout, weights) = dictModel(featsOf(toks)(pos => NerFeatures.featuresAt(toks, pos, gaz)))
+    val (dict, layout, weights) = dictModel(featsOf(toks)(pos => NerFeatures.featuresAt(toks, pos, NerFeatures.Spec(gaz))))
     assert(dict.containsKey("PERSON-GAZ3|C") && dict.containsKey("LOCATION-GAZ1|C"))
-    assertStringPath(new NerModel(Classes, 0, dict, layout, weights, Set.empty, gaz), words)
+    assertStringPath(new NerModel(Classes, 0, dict, layout, weights, Set.empty, NerFeatures.Spec(gaz)), words)
 
     // sloppy: any phrase word fires TYPE-GAZn even without the full phrase
-    val sloppyOnly = Gazette.parse(lines, sloppyMode = true, cleanMode = false)
+    val sloppyOnly = NerFeatures.Spec(Gazette.parse(lines, sloppyMode = true, cleanMode = false))
     val partial = toksOf(Vector("Acme", "Holdings", "hired", "Garcia", "."))
     assert(NerFeatures.featuresAt(partial, 0, sloppyOnly)(0).contains("ORGANIZATION-GAZ2|C"))
     assert(NerFeatures.featuresAt(partial, 3, sloppyOnly)(0).contains("PERSON-GAZ3|C"))
     // clean: fires only when the WHOLE phrase matches around the word
-    val cleanOnly = Gazette.parse(lines, sloppyMode = false, cleanMode = true)
+    val cleanOnly = NerFeatures.Spec(Gazette.parse(lines, sloppyMode = false, cleanMode = true))
     assert(!NerFeatures.featuresAt(partial, 0, cleanOnly)(0).exists(_.contains("-GAZ")))
     val full = toksOf(Vector("Dr.", "Carla", "Garcia", "left", "."))
     for (pos <- 0 to 2) // every phrase word fires at its offset
@@ -390,13 +385,13 @@ class FeatureParitySpec extends AnyFunSuite {
     // model save/load round-trips the gazette trailer (v3)
     val m0 = NerModels.default(SparkTestSession.spark).value
     val withGaz = new NerModel(m0.classIndex, m0.backgroundIndex, m0.featureIndex,
-      m0.layout, m0.weights, m0.knownLC, gaz)
+      m0.layout, m0.weights, m0.knownLC, NerFeatures.Spec(gaz))
     val tmp = java.nio.file.Files.createTempFile("gazmodel", ".gz").toString
     NerModel.save(withGaz, tmp)
     val re = NerModel.load(tmp)
-    assert(re.gazette.sloppy.view.mapValues(_.toSeq).toMap ==
+    assert(re.features.gazette.sloppy.view.mapValues(_.toSeq).toMap ==
       gaz.sloppy.view.mapValues(_.toSeq).toMap)
-    assert(re.gazette.clean.view.mapValues(_.toSeq).toMap ==
+    assert(re.features.gazette.clean.view.mapValues(_.toSeq).toMap ==
       gaz.clean.view.mapValues(_.toSeq).toMap)
     java.nio.file.Files.delete(java.nio.file.Paths.get(tmp))
   }
@@ -431,6 +426,32 @@ class FeatureParitySpec extends AnyFunSuite {
       assert(m.tag(words).toSeq == viterbi(m, m.encode(m.preprocess(words))), name)
       assert(m.unaryMemo.size > 0, s"$name tagged without the unary memo")
     }
+  }
+
+  test("hashesFeatures: the preset hashes, up to useReverse and normalizeTerms; any other field does not") {
+    val d = NerFeatures.Spec.default
+    val m0 = NerModels.default(SparkTestSession.spark).value
+    def model(spec: NerFeatures.Spec) =
+      new NerModel(m0.classIndex, m0.backgroundIndex, m0.featureIndex, m0.layout, m0.weights, m0.knownLC, spec)
+    for (spec <- Seq(d, d.copy(useReverse = true), d.copy(normalizeTerms = true),
+        d.copy(useReverse = true, normalizeTerms = true), d.copy(gazette = Gazette.parse(Nil))))
+      assert(spec.hashes && model(spec).hashesFeatures, spec)
+    // one row per field but useReverse and normalizeTerms, each away from
+    // its default alone
+    val others = Seq(
+      "gazette" -> d.copy(gazette = Gazette.parse(Seq("PERSON Alice Johnson"))),
+      "useOccurrencePatterns" -> d.copy(useOccurrencePatterns = true),
+      "distSim" -> d.copy(distSim = Some(new DistSim(Map.empty))),
+      "useTags" -> d.copy(useTags = true),
+      "useTaggySequences" -> d.copy(useTaggySequences = true),
+      "useParenMatching" -> d.copy(useParenMatching = true),
+      "ngramOpts" -> d.copy(ngramOpts = NerFeatures.NgramOpts(maxLen = 6)),
+      "disjunctionWidth" -> d.copy(disjunctionWidth = 2),
+      "miscOpts" -> d.copy(miscOpts = NerFeatures.MiscOpts(useTitle = true)),
+      "genericKey" -> d.copy(genericKey = Some("col")))
+    assert(others.length + 2 == d.productArity, "a Spec field has no row")
+    for ((field, spec) <- others; s <- Seq(spec, spec.copy(useReverse = true, normalizeTerms = true)))
+      assert(!s.hashes && !model(s).hashesFeatures, field)
   }
 
   test("unary memo: two models that see the same words each get their own ids") {

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.kg.KgPipeline
-import graft.ner.NerModel
+import graft.ner.{DistSim, Gazette, NerFeatures, NerModel}
 import graft.text.Tokenizer
 import graft.train.{LabeledDoc, Trainer}
 import org.apache.spark.sql.SparkSession
@@ -115,18 +115,22 @@ class PipelineSpec extends AnyFunSuite {
     assert(model.layout.numCols(2) < 64, s"numCols=${model.layout.numCols.toSeq}")
     assert(loaded.layout.numCols.toSeq == model.layout.numCols.toSeq)
     // ngram-options + disjunctionWidth trailers round-trip (v3 additions)
-    val opt = new graft.ner.NerModel(model.classIndex, model.backgroundIndex,
-      model.featureIndex, model.layout, model.weights, model.knownLC,
-      ngramOpts = graft.ner.NerFeatures.NgramOpts(maxLen = 4, noMid = false, lowercase = true),
-      disjunctionWidth = 2)
-    val path2 = java.nio.file.Files.createTempDirectory("nermodel").resolve("m2.gz").toString
-    NerModel.save(opt, path2)
-    val loaded2 = NerModel.load(path2)
-    assert(loaded2.ngramOpts == opt.ngramOpts)
-    assert(loaded2.disjunctionWidth == 2)
+    def withSpec(spec: NerFeatures.Spec) = new NerModel(model.classIndex, model.backgroundIndex,
+      model.featureIndex, model.layout, model.weights, model.knownLC, spec)
+    def roundTrip(m: NerModel): NerModel = {
+      val p = java.nio.file.Files.createTempDirectory("nermodel").resolve("m.gz").toString
+      NerModel.save(m, p)
+      NerModel.load(p)
+    }
+    val opt = withSpec(NerFeatures.Spec(
+      ngramOpts = NerFeatures.NgramOpts(maxLen = 4, noMid = false, lowercase = true),
+      disjunctionWidth = 2))
+    val loaded2 = roundTrip(opt)
+    assert(loaded2.features.ngramOpts == opt.features.ngramOpts)
+    assert(loaded2.features.disjunctionWidth == 2)
     // the full misc trailer round-trips, incl. the round-5 additions (lemma/
     // chunk/abbr families, the no-producer constants, useClassFeature)
-    val mo = graft.ner.NerFeatures.MiscOpts(useTitle = true, useOrdinal = true,
+    val mo = NerFeatures.MiscOpts(useTitle = true, useOrdinal = true,
       useNextSequences = true, useWideDisjunctive = true, wideDisjunctionWidth = 7,
       useLemmas = true, usePrevNextLemmas = true, useChunks = true,
       useChunkySequences = true, useUnknown = true, useAbbr = true, useMinimalAbbr = true,
@@ -135,13 +139,29 @@ class PipelineSpec extends AnyFunSuite {
       useEntityTypeSequences = true, useURLSequences = true,
       useMUCFeatures = true, useClassFeature = true, useGenericFeatures = true,
       useNPHead = true, useHeadGov = true)
-    val mm = new graft.ner.NerModel(model.classIndex, model.backgroundIndex,
-      model.featureIndex, model.layout, model.weights, model.knownLC, miscOpts = mo,
-      genericKey = Some("mycol"))
-    val path3 = java.nio.file.Files.createTempDirectory("nermodel").resolve("m3.gz").toString
-    NerModel.save(mm, path3)
-    val re3 = NerModel.load(path3)
-    assert(re3.miscOpts == mo, "misc trailer round-trip")
-    assert(re3.genericKey.contains("mycol"), "genericKey trailer round-trip")
+    val re3 = roundTrip(withSpec(NerFeatures.Spec(miscOpts = mo, genericKey = Some("mycol"))))
+    assert(re3.features.miscOpts == mo, "misc trailer round-trip")
+    assert(re3.features.genericKey.contains("mycol"), "genericKey trailer round-trip")
+    // every Spec field at once, each away from its default: the loaded spec
+    // equals the saved one (gazette and lexicon compared by content)
+    val all = NerFeatures.Spec(
+      gazette = Gazette.parse(Seq("PERSON Alice Johnson", "LOCATION Berlin")),
+      normalizeTerms = true, useOccurrencePatterns = true, useReverse = true,
+      distSim = Some(new DistSim(Map("alice" -> "C1", "berlin" -> "C2"))),
+      useTags = true, useTaggySequences = true, useParenMatching = true,
+      ngramOpts = NerFeatures.NgramOpts(maxLen = 5, dehyphenate = true, greekify = true, conjoinShapes = true),
+      disjunctionWidth = 3, miscOpts = mo, genericKey = Some("col"))
+    val re4 = roundTrip(withSpec(all)).features
+    val plain = (s: NerFeatures.Spec) => s.copy(gazette = Gazette.empty, distSim = None)
+    assert(plain(re4) == plain(all), s"${plain(re4)} != ${plain(all)}")
+    assert(re4.gazette.fingerprintParts.toSeq == all.gazette.fingerprintParts.toSeq)
+    assert(re4.distSim.map(_.lexicon) == all.distSim.map(_.lexicon))
+    // the committed default model loads and saves back to the same text
+    def text(p: java.nio.file.Path) = new String(new java.util.zip.GZIPInputStream(
+      java.nio.file.Files.newInputStream(p)).readAllBytes(), "UTF-8")
+    val committed = java.nio.file.Paths.get("models", "ner-conllnotags-v1.gz")
+    val resaved = java.nio.file.Files.createTempDirectory("nermodel").resolve("d.gz")
+    NerModel.save(NerModel.load(committed.toString), resaved.toString)
+    assert(text(resaved) == text(committed), "the committed model re-saved to other text")
   }
 }

@@ -30,7 +30,9 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Turn]
     val model = graft.ner.NerModels.default(spark)
-    val q = StreamingIngest.streamingMentions(input.toDS(), model)
+    // stateless mapPartitions tagging applies to a turn stream as-is: same
+    // broadcast model, same closure as the batch Tagger
+    val q = graft.ner.Tagger.mentions(input.toDS(), model)
       .writeStream.format("memory").queryName("mention_out").outputMode("append").start()
     try {
       input.addData(Transcripts.turn(42L, 1L, 0), Transcripts.turn(42L, 1L, 1), Transcripts.turn(42L, 2L, 0))

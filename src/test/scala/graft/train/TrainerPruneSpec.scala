@@ -1,5 +1,6 @@
 package graft.train
 
+import graft.ner.{DistSim, Gazette, NerFeatures}
 import graft.pipeline.{SparkTestSession, Transcripts}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -158,8 +159,61 @@ class TrainerPruneSpec extends AnyFunSuite {
     }
     // an artifact built under different feature flags must be rejected
     intercept[IllegalArgumentException] {
-      Trainer.train(spark, spark.emptyDataset[LabeledDoc], cfg.copy(useParenMatching = true))
+      Trainer.train(spark, spark.emptyDataset[LabeledDoc], cfg.copy(features = cfg.features.copy(useParenMatching = true)))
     }
+  }
+
+  test("train-time featurization equals the model's preprocess, attach and encode under a non-default spec") {
+    // the Trainer's processed-data artifact stores each document as it was
+    // encoded for training; the model's own string path must give the same
+    // ids for the same document, in the (reversed) word order the Trainer saw
+    import spark.implicits._
+    val spec = NerFeatures.Spec(
+      gazette = Gazette.parse(Seq("PERSON Alice Johnson", "LOCATION Berlin")),
+      normalizeTerms = true, useOccurrencePatterns = true, useReverse = true,
+      distSim = Some(new DistSim(Map("alice" -> "C1", "berlin" -> "C2", "color" -> "C3"))),
+      useTags = true, useTaggySequences = true, useParenMatching = true,
+      ngramOpts = NerFeatures.NgramOpts(maxLen = 5, noMid = false, lowercase = true),
+      disjunctionWidth = 2,
+      miscOpts = NerFeatures.MiscOpts(useLemmas = true, usePrevNextLemmas = true, useChunks = true,
+        useChunkySequences = true, useUnknown = true, useGenericFeatures = true),
+      genericKey = Some("src"))
+    def withColumns(words: Seq[String], labels: Seq[String]) = LabeledDoc(words, labels,
+      tags = words.map(w => if (w.nonEmpty && w.head.isUpper) "NNP" else if (w.endsWith("ed")) "VBD" else "NN"),
+      lemmas = words.map(_.toLowerCase),
+      chunks = words.indices.map(i => if (i % 3 == 0) "B-NP" else "I-NP"),
+      unknowns = words.map(w => (w.length % 2 == 0).toString),
+      generics = words.map(w => s"g${w.length % 3}"))
+    // parens, a repeated name and a British spelling fire the paren,
+    // occurrence and normalizeTerms paths
+    val handmade = Seq(
+      withColumns(Seq("Alice", "Johnson", "(", ")", "met", "Alice", "in", "Berlin", "and", "saw",
+        "Alice", "there", "."),
+        Seq("PERSON", "PERSON", "O", "O", "O", "PERSON", "O", "LOCATION", "O", "O", "PERSON", "O", "O")),
+      withColumns(Seq("the", "colour", "(", "Bob", ")", "visited", "Berlin", "twice"),
+        Seq("O", "O", "O", "PERSON", "O", "O", "LOCATION", "O")))
+    val docs = handmade ++ Transcripts.synthGold(spark, 30L, seed = 21L).collect()
+      .map(g => withColumns(g.words, g.labels))
+    val dir = java.nio.file.Files.createTempDirectory("graft_spec_").toString
+    val m = Trainer.train(spark, docs.toDS(),
+      Trainer.Config(maxIterations = 3, features = spec, processedDataDir = Some(dir)))
+    assert(m.features == spec)
+    def norm(e: Seq[Seq[Seq[Int]]], l: Seq[Int]) = (e.map(_.map(_.toList).toList).toList, l.toList)
+    val stored = spark.read.parquet(s"$dir/encoded.parquet").as[(Seq[Seq[Seq[Int]]], Seq[Int])]
+      .collect().map { case (e, l) => norm(e, l) }
+    val ours = docs.map { d =>
+      def r(c: Seq[String]) = c.reverse.toIndexedSeq
+      val toks = m.features.attach(m.preprocess(r(d.words)), r(d.tags), r(d.lemmas), r(d.chunks),
+        r(d.unknowns), r(d.generics))
+      norm(m.encode(toks).map(_.map(_.toSeq).toSeq).toSeq, d.labels.reverse.map(m.classOf))
+    }
+    val (a, b) = (stored.map(_.toString).sorted.toSeq, ours.map(_.toString).sorted)
+    assert(a == b, s"${a.diff(b).size} of ${a.size} stored documents differ from the model's encoding")
+    // every optional family reached the dictionary, so the comparison covers it
+    val keys = m.featureIndex.keySet.toArray.map(_.toString)
+    for (t <- Seq("-GAZ", "-DISTSIM|C", "-TAG|C", "-TS|CpC", "PAREN-MATCH|", "X-NEXT-OCCURRENCE",
+        "-LEM|C", "-PCCHUNK|C", "-PCNCHUNK|CpC", "-UNKNOWN|C", "-src|C", "color-WORD|C"))
+      assert(keys.exists(_.contains(t)), t)
   }
 
   test("featureCountThreshold: distributed frequency floor keeps accuracy, bounds the dictionary") {
