@@ -26,9 +26,4 @@ object DistSim {
       val bits = l.split("\\s+")
       bits(0).toLowerCase -> bits(1)
     }.toMap)
-
-  def fromFile(path: String): DistSim = {
-    import scala.jdk.CollectionConverters._
-    parse(java.nio.file.Files.readAllLines(java.nio.file.Paths.get(path)).asScala)
-  }
 }

@@ -70,11 +70,6 @@ object Gazette {
       clean.view.mapValues(_.toArray).toMap)
   }
 
-  def fromFile(path: String, sloppyMode: Boolean = true, cleanMode: Boolean = true): Gazette = {
-    import scala.jdk.CollectionConverters._
-    parse(java.nio.file.Files.readAllLines(java.nio.file.Paths.get(path)).asScala, sloppyMode, cleanMode)
-  }
-
   // ---- model-file trailer (NerModel v3) ----
   // gazette\t<nSloppyWords>\t<nCleanWords>
   // <word>\t<feat>...                               x nSloppyWords

@@ -359,14 +359,10 @@ object NerModel {
       val backgroundIndex = header(3).toInt
       val classIndex = r.readLine().split("\t")
       require(classIndex.length == numClasses)
-      val weightCol = Array.tabulate(windowSize) { g =>
-        val cols = Array.fill(graft.core.Crf.pow(numClasses, g + 1))(-1)
+      val encsByGroup = Array.fill(windowSize) {
         val line = r.readLine().trim
-        if (line.nonEmpty)
-          line.split(" ").map(_.toInt).zipWithIndex.foreach { case (enc, k) => cols(enc) = k }
-        cols
+        if (line.isEmpty) Array.emptyIntArray else line.split(" ").map(_.toInt)
       }
-      val numCols = weightCol.map(_.count(_ >= 0))
       val nFeat = r.readLine().toInt
       val featureIndex = new java.util.HashMap[String, Integer](nFeat * 2)
       val featGroup = new Array[Int](nFeat)
@@ -424,7 +420,7 @@ object NerModel {
           else throw new IllegalArgumentException(s"unexpected model trailer: $line")
         line = r.readLine()
       }
-      val layout = new WeightLayout(numClasses, windowSize, backgroundIndex, featGroup, weightCol, numCols)
+      val layout = WeightLayout.observed(numClasses, windowSize, backgroundIndex, featGroup, encsByGroup)
       new NerModel(classIndex, backgroundIndex, featureIndex, layout, weights, knownLC, spec)
     } finally r.close()
   }

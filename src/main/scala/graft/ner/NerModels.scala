@@ -8,12 +8,14 @@ import org.apache.spark.sql.SparkSession
 
 /** Default-model management: the NER model is a build artifact derived purely
   * from the deterministic synthetic corpus (seed 42, 400 conversations), so it
-  * is trained once and cached on disk; queries load + broadcast it. Set
-  * GRAFT_MODEL_PATH to override; delete the file to force retraining.
+  * is trained once and cached on disk; queries load + broadcast it. The file
+  * is `models/ner-conllnotags-v1.gz` under the working directory (the
+  * checkout's root when run through sbt); set GRAFT_MODEL_PATH to override;
+  * delete the file to force retraining.
   */
 object NerModels {
   def defaultPath: String =
-    sys.env.getOrElse("GRAFT_MODEL_PATH", "/root/repo/models/ner-conllnotags-v1.gz")
+    sys.env.getOrElse("GRAFT_MODEL_PATH", "models/ner-conllnotags-v1.gz")
 
   private val defaultModel = new ModelMemo("graft-default-model", spark => {
     val path = defaultPath

@@ -188,7 +188,7 @@ private[ner] object RefModelAssembly {
         s"feature $i '${featStrings(i)}' group $g: row ${weights(i).length} != ${numCols(g)}")
     }
     val layout = new WeightLayout(numClasses, windowSize,
-      classIndex.indexOf("O"), featGroup, weightCol, numCols)
+      classIndex.indexOf("O"), featGroup, weightCol)
     new NerModel(classIndex, classIndex.indexOf("O"), featureIndex, layout, weights, knownLC, features)
   }
 }

@@ -114,24 +114,6 @@ object Tagger {
     out.result()
   }
 
-  /** Conversation-grouped tagging: assemble each conversation's turns in
-    * stable (conv_id, turn_idx) order and tag them inside one group closure —
-    * the north-star `groupByKey(conv_id).flatMapSortedGroups` shape. The
-    * decode unit stays the sentence, so under the conllNoTags feature set the
-    * output is IDENTICAL to the shuffle-free `mentions` path (asserted in
-    * TaggerGroupingSpec); this path is where conversation-scoped state
-    * (occurrence-pattern features, cross-turn consistency priors) plugs in,
-    * at the cost of exactly one shuffle.
-    */
-  def mentionsByConversation(turns: Dataset[Turn], model: Broadcast[NerModel]): Dataset[Mention] = {
-    val spark = turns.sparkSession
-    import spark.implicits._
-    turns.groupByKey(_.conv_id).flatMapSortedGroups(Seq($"turn_idx".asc): _*) { (_, it) =>
-      val m = model.value
-      it.flatMap(turn => turnSentences(turn, m).flatMap(_.spans))
-    }
-  }
-
   /** Tag turns and emit mentions directly (single pass, still shuffle-free). */
   def mentions(turns: Dataset[Turn], model: Broadcast[NerModel]): Dataset[Mention] = {
     import turns.sparkSession.implicits._

@@ -205,21 +205,6 @@ object Similarity {
     out
   }
 
-  /** All pairs with cosine >= tau — broadcast-nested-loop formulation. Kept
-    * ONLY as the small-sf correctness baseline for cosinePairsBlocked (it puts
-    * one whole side in driver+executor memory: a scale-killer — round-1 review
-    * finding). Production entry points use cosinePairsBlocked.
-    */
-  def cosinePairs(embeddings: DataFrame, tau: Double): DataFrame = {
-    graft.functions.GraftFunctions.register(embeddings.sparkSession)
-    val l = embeddings.select(col("vec_id").as("vec_id_1"), col("embedding").as("e1"))
-    val r = embeddings.select(col("vec_id").as("vec_id_2"), col("embedding").as("e2"))
-    l.join(broadcast(r), col("vec_id_1") < col("vec_id_2"))
-      .withColumn("sim", round(cosine(col("e1"), col("e2")), 6))
-      .where(col("sim") >= tau)
-      .select(col("vec_id_1"), col("vec_id_2"), col("sim"))
-  }
-
   /** Spark's Round(double, 6): HALF_UP over BigDecimal.valueOf, NaN/Inf pass
     * through — replicated so closure-side sims stay bit-identical to the
     * previous `round(col, 6)` column (and to the DuckDB oracle).

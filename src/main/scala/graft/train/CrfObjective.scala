@@ -15,10 +15,10 @@ final class WeightLayout(
     /** featGroup(f) = clique group of feature f. */
     val featGroup: Array[Int],
     /** weightCol(g)(suffixEnc) -> column or -1 (observed-sequences-only support). */
-    val weightCol: Array[Array[Int]],
-    /** numCols(g) = number of allowed windows for group g. */
-    val numCols: Array[Int]
+    val weightCol: Array[Array[Int]]
 ) extends Serializable {
+  /** numCols(g) = number of allowed windows for group g. */
+  val numCols: Array[Int] = weightCol.map(_.count(_ >= 0))
   val featOffset: Array[Int] = {
     val off = new Array[Int](featGroup.length)
     var acc = 0
@@ -48,8 +48,22 @@ final class WeightLayout(
 object WeightLayout {
   def fullProduct(numClasses: Int, windowSize: Int, backgroundIndex: Int, featGroup: Array[Int]): WeightLayout = {
     val weightCol = Array.tabulate(windowSize)(g => Array.tabulate(Crf.pow(numClasses, g + 1))(identity))
-    val numCols = Array.tabulate(windowSize)(g => Crf.pow(numClasses, g + 1))
-    new WeightLayout(numClasses, windowSize, backgroundIndex, featGroup, weightCol, numCols)
+    new WeightLayout(numClasses, windowSize, backgroundIndex, featGroup, weightCol)
+  }
+
+  /** Weight columns for the observed label windows only
+    * (useObservedSequencesOnly, CRFClassifier.java:482-489): `encsByGroup(g)`
+    * lists group g's window encodings in column order; every other window of
+    * the group is forbidden (column -1).
+    */
+  def observed(numClasses: Int, windowSize: Int, backgroundIndex: Int, featGroup: Array[Int],
+      encsByGroup: Array[Array[Int]]): WeightLayout = {
+    val weightCol = Array.tabulate(windowSize) { g =>
+      val cols = Array.fill(Crf.pow(numClasses, g + 1))(-1)
+      encsByGroup(g).zipWithIndex.foreach { case (enc, k) => cols(enc) = k }
+      cols
+    }
+    new WeightLayout(numClasses, windowSize, backgroundIndex, featGroup, weightCol)
   }
 }
 

@@ -5,6 +5,7 @@ import breeze.optimize.{DiffFunction, LBFGS}
 import graft.core.Crf
 import graft.io.NioLocalFileSystem
 import graft.ner.{NerFeatures, NerModel}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import scala.reflect.ClassTag
@@ -20,6 +21,44 @@ final case class LabeledDoc(words: Seq[String], labels: Seq[String],
     // (the CoreLabel collapse quirk, RefMapKeys) — joined with
     // Config.features.genericKey at featurization
     generics: Seq[String] = Seq.empty)
+
+/** Which minimizer `Trainer.train` runs; the reference picks one in
+  * CRFClassifier.getMinimizer (:1114-1146). The stochastic ones run `epochs`
+  * steps from gain `gain`. The reference's per-example sequential updates
+  * don't distribute, so they are MINIBATCH steps: each takes the gradient of a
+  * deterministic sample of the corpus, plus the prior. Same objective,
+  * different optimizer — not a parity surface.
+  */
+sealed trait Optimizer
+
+object Optimizer {
+  /** L-BFGS (flags.useQN), the default. */
+  case object Qn extends Optimizer
+
+  /** L-BFGS against the reference's SINGLE-PRECISION objective (useFloat,
+    * CRFClassifier.java:987-1020; FloatObjective, a bit-level mirror pinned
+    * by RefFloatObjectiveSpec), the reference's memory lever for large
+    * feature spaces, and QN-only like the reference's dispatch. Distributed
+    * per-partition float accumulation (partial sums reassociate across
+    * partitions — training-only; the bit-exact surface is the sequential
+    * FloatObjective.valueAndGrad).
+    */
+  case object QnFloat extends Optimizer
+
+  /** Minibatch SGD (SGDMinimizer): corpus-scaled sample gradient, gain
+    * decaying as 1/(1+epoch/10). */
+  final case class Sgd(epochs: Int, gain: Double = 0.5) extends Optimizer
+
+  /** ScaledSGDMinimizer (method=1): per-coordinate diag-BFGS gains. */
+  final case class ScaledSgd(epochs: Int, gain: Double = 0.5) extends Optimizer
+
+  /** SMDMinimizer: stochastic meta-descent. */
+  final case class Smd(epochs: Int, gain: Double = 0.5) extends Optimizer
+
+  /** SGDToQNMinimizer (flags.useSGDtoQN): `epochs` SGD steps, then L-BFGS
+    * from that point. */
+  final case class SgdToQn(epochs: Int, gain: Double = 0.5) extends Optimizer
+}
 
 /** Distributed CRF training: dictionary-build jobs + L-BFGS on the driver over
   * per-partition (value, gradient) partials merged in partition order — the
@@ -44,12 +83,16 @@ final case class LabeledDoc(words: Seq[String], labels: Seq[String],
   */
 object Trainer {
 
+  private val Sigma = 20.0 // conllNoTags preset (SeqClassifierFlags.java:717)
+  private val Tolerance = 1e-4 // flags.tolerance default (SeqClassifierFlags.java:67)
+  private val LbfgsMemory = 15 // QNsize under conllNoTags (SeqClassifierFlags.java:732)
+  private val Background = "O" // flags.backgroundSymbol default
+  // share of the corpus each stochastic step samples (this engine's
+  // minibatch; the reference's stochastic minimizers step per example)
+  private val SgdBatchFraction = 0.25
+
   final case class Config(
-      sigma: Double = 20.0, // conllNoTags preset (SeqClassifierFlags.java:717)
-      tolerance: Double = 1e-4, // flags.tolerance default (SeqClassifierFlags.java:67)
       maxIterations: Int = 200,
-      lbfgsMemory: Int = 15, // QNsize under conllNoTags (SeqClassifierFlags.java:732)
-      background: String = "O",
       // conllNoTags sets useObservedSequencesOnly (SeqClassifierFlags.java:690):
       // label windows never seen in training are forbidden (-inf factor entries,
       // matching the reference's NEGATIVE_INFINITY-initialized FactorTable) and
@@ -112,24 +155,7 @@ object Trainer {
       // numTimesPruneFeatures == 0 (the reference's cached path has the same
       // restriction: pruning re-featurizes).
       processedDataDir: Option[String] = None,
-      // optimizer: "qn" (default; flags.useQN) or "sgd" — the SGD-family
-      // analogue (SGDMinimizer etc., selected by CRFClassifier.getMinimizer,
-      // :1114-1146). The reference's per-example sequential updates don't
-      // distribute, so this is MINIBATCH SGD: per step, the gradient of a
-      // deterministic sample scaled to the corpus, plus the prior; decaying
-      // gain. Same objective, different optimizer — not a parity surface.
-      optimizer: String = "qn", // "qn" | "sgd" | "scaledsgd" (diag-BFGS per-coordinate gains) | "sgdtoqn" (sgdEpochs stochastic passes, then L-BFGS from that point)
-      // useFloat (CRFClassifier.java:987-1020): train against the reference's
-      // SINGLE-PRECISION objective (FloatObjective — bit-level mirror pinned
-      // by RefFloatObjectiveSpec), the reference's memory lever for large
-      // feature spaces. QN only, like the reference's dispatch. Distributed
-      // per-partition float accumulation (partial sums reassociate across
-      // partitions — training-only; the bit-exact surface is the
-      // sequential FloatObjective.valueAndGrad).
-      useFloat: Boolean = false,
-      sgdEpochs: Int = 60,
-      sgdBatchFraction: Double = 0.25,
-      sgdGain: Double = 0.5)
+      optimizer: Optimizer = Optimizer.Qn)
 
   /** Corpus-derived known-lowercase vocabulary (ObjectBankWrapper.java:46-68;
     * timex-fixed words, see the pass-1 comment in train()). `limit` applies a
@@ -174,7 +200,7 @@ object Trainer {
     val gazHash = fnvAll(spec.gazette.fingerprintParts)
     val dsHash = fnvAll(spec.distSim.iterator.flatMap(_.lexicon.toSeq.sorted.iterator
       .map { case (k, v) => s"$k\u0000$v" }))
-    (Seq(cfg.background, spec.normalizeTerms, spec.useOccurrencePatterns,
+    (Seq(Background, spec.normalizeTerms, spec.useOccurrencePatterns,
       spec.useTags, spec.useTaggySequences, spec.useReverse, spec.useParenMatching,
       cfg.observedSequencesOnly, cfg.removeBackgroundSingletonFeatures,
       dsHash, gazHash, cfg.maxKnownLCWords,
@@ -248,11 +274,30 @@ object Trainer {
     acc.get
   }
 
-  private val addCounted: ((Array[Double], Long), (Array[Double], Long)) => (Array[Double], Long) = {
-    case ((g1, n1), (g2, n2)) =>
+  /** The negative log-likelihood, its gradient at `x` and the document
+    * count, summed over `rows`: one partial per partition, merged in
+    * partition order. Full-corpus and sampled callers alike add their own
+    * scaling and the prior.
+    */
+  private def gradient(rows: RDD[(Array[Array[Array[Int]]], Array[Int])],
+      layout: Broadcast[WeightLayout], x: Array[Double]): (Double, Array[Double], Long) = {
+    val bw = rows.sparkContext.broadcast(x)
+    val partials = rows.mapPartitions { it =>
+      val lay = layout.value
+      val p = lay.params(bw.value) // ragged view built once per partition
+      val g = new Array[Double](lay.totalSize)
+      var v = 0.0
+      var cnt = 0L
+      it.foreach { case (doc, lab) => v += CrfObjective.docValueGrad(doc, lab, p, lay, g); cnt += 1 }
+      Iterator.single((v, g, cnt))
+    }
+    val out = mergeInOrder(partials) { case ((v1, g1, n1), (v2, g2, n2)) =>
       var i = 0
       while (i < g1.length) { g1(i) += g2(i); i += 1 }
-      (g1, n1 + n2)
+      (v1 + v2, g1, n1 + n2)
+    }
+    bw.destroy()
+    out
   }
 
   def train(spark: SparkSession, docs0: Dataset[LabeledDoc], cfg: Config = Config()): NerModel = {
@@ -290,68 +335,50 @@ object Trainer {
     // Class index: background first (index 0), then remaining labels sorted.
     val classIndex = loadedMeta.map(_.classIndex).getOrElse {
       val labels = docs.flatMap(_.labels).distinct().collect().sorted
-      (cfg.background +: labels.filterNot(_ == cfg.background)).toArray
+      (Background +: labels.filterNot(_ == Background)).toArray
     }
     val classOf = classIndex.zipWithIndex.toMap
     val bcastKnownLC = sc.broadcast(knownLC)
     val bSpec = sc.broadcast(cfg.features)
 
-    // Pass 2: distinct (group, feature) strings -> driver-assembled dictionary.
-    // With removeBackgroundSingletonFeatures, C/CpC features are kept only if
-    // they occur at >= 1 non-background position or >= 2 background positions
-    // (the order-independent restatement of the reference's seenBackground
+    // Pass 2: (group, feature) occurrence counts -> driver-assembled
+    // dictionary. Every feature is kept that occurs at >= max(1,
+    // featureCountThreshold) positions. With removeBackgroundSingletonFeatures,
+    // an occurrence of a C/CpC feature counts as background (n_bg) or not
+    // (n_fg), and the feature is kept only if n_fg >= 1 or n_bg >= 2 (the
+    // order-independent restatement of the reference's seenBackground
     // promote/demote sets, CRFClassifier.java:430-451; a CpC position counts
     // as background only when positions j AND j-1 are both background).
-    val bg = cfg.background
+    // Only the surviving pairs are collected.
     // dictionaryFilter is a function value: it cannot be fingerprinted into a
     // processed-data artifact, so the two levers are mutually exclusive
     require(cfg.dictionaryFilter.isEmpty || cfg.processedDataDir.isEmpty,
       "dictionaryFilter cannot be combined with processedDataDir (the filter is not fingerprintable)")
-    val sorted0: Array[(Int, String)] =
-      if (loadedMeta.isDefined) loadedMeta.get.features
-      else if (!cfg.removeBackgroundSingletonFeatures) {
-        val pairs = docs.flatMap { d =>
-          val toks = toksOf(d, bSpec.value, bcastKnownLC.value)
-          (0 until toks.length).iterator.flatMap { pos =>
-            val byGroup = NerFeatures.featuresAt(toks, pos, bSpec.value)
-            byGroup.iterator.zipWithIndex.flatMap { case (fs, g) => fs.iterator.map(f => (g, f)) }
+    val bgRule = cfg.removeBackgroundSingletonFeatures
+    val sorted0: Array[(Int, String)] = loadedMeta.map(_.features).getOrElse {
+      import org.apache.spark.sql.functions.{col, sum, when}
+      docs.flatMap { d =>
+        val toks = toksOf(d, bSpec.value, bcastKnownLC.value)
+        val lab = d.labels.toIndexedSeq
+        (0 until toks.length).iterator.flatMap { pos =>
+          val byGroup = NerFeatures.featuresAt(toks, pos, bSpec.value)
+          byGroup.iterator.zipWithIndex.flatMap { case (fs, g) =>
+            val isBg = bgRule && (
+              if (g == 0) lab(pos) == Background
+              else if (g == 1) lab(pos) == Background && (pos == 0 || lab(pos - 1) == Background)
+              else false) // rule applies to k < 2 only (CRFClassifier.java:430)
+            fs.iterator.map(f => (g, f, isBg))
           }
         }
-        if (cfg.featureCountThreshold <= 1) pairs.distinct().collect().sortBy(t => (t._1, t._2))
-        else {
-          // frequency floor, evaluated distributed (partial aggregation
-          // map-side); only surviving features are collected
-          import org.apache.spark.sql.functions.{col, count, lit}
-          pairs.toDF("g", "f").groupBy(col("g"), col("f"))
-            .agg(count(lit(1)).as("n"))
-            .where(col("n") >= cfg.featureCountThreshold)
-            .select(col("g"), col("f")).as[(Int, String)]
-            .collect().sortBy(t => (t._1, t._2))
-        }
-      } else {
-        import org.apache.spark.sql.functions.{col, count, lit, sum, when}
-        docs.flatMap { d =>
-          val toks = toksOf(d, bSpec.value, bcastKnownLC.value)
-          val lab = d.labels.toIndexedSeq
-          (0 until toks.length).iterator.flatMap { pos =>
-            val byGroup = NerFeatures.featuresAt(toks, pos, bSpec.value)
-            byGroup.iterator.zipWithIndex.flatMap { case (fs, g) =>
-              val isBg =
-                if (g == 0) lab(pos) == bg
-                else if (g == 1) lab(pos) == bg && (pos == 0 || lab(pos - 1) == bg)
-                else false // rule applies to k < 2 only (CRFClassifier.java:430)
-              fs.iterator.map(f => (g, f, isBg))
-            }
-          }
-        }.toDF("g", "f", "is_bg")
-          .groupBy(col("g"), col("f"))
-          .agg(sum(when(col("is_bg"), 0L).otherwise(1L)).as("n_fg"),
-            sum(when(col("is_bg"), 1L).otherwise(0L)).as("n_bg"))
-          .where(col("g") >= 2 || col("n_fg") >= 1 || col("n_bg") >= 2)
-          .where(col("n_fg") + col("n_bg") >= math.max(1, cfg.featureCountThreshold))
-          .select(col("g"), col("f")).as[(Int, String)]
-          .collect().sortBy(t => (t._1, t._2))
-      }
+      }.toDF("g", "f", "is_bg")
+        .groupBy(col("g"), col("f"))
+        .agg(sum(when(col("is_bg"), 0L).otherwise(1L)).as("n_fg"),
+          sum(when(col("is_bg"), 1L).otherwise(0L)).as("n_bg"))
+        .where(col("g") >= 2 || col("n_fg") >= 1 || col("n_bg") >= 2)
+        .where(col("n_fg") + col("n_bg") >= math.max(1, cfg.featureCountThreshold))
+        .select(col("g"), col("f")).as[(Int, String)]
+        .collect().sortBy(t => (t._1, t._2))
+    }
     val sorted = cfg.dictionaryFilter match {
       case Some(keep) => sorted0.filter { case (g, s) => keep(g, s) }
       case None => sorted0
@@ -388,18 +415,10 @@ object Trainer {
           }
         }.distinct().collect()
       })
-    val windowCols: Option[(Array[Array[Int]], Array[Int])] = observedPairs.map { observed =>
-      val weightCol = Array.tabulate(w) { g =>
-        val cols = Array.fill(graft.core.Crf.pow(numClasses, g + 1))(-1)
-        observed.filter(_._1 == g).map(_._2).sorted.zipWithIndex
-          .foreach { case (enc, k) => cols(enc) = k }
-        cols
-      }
-      (weightCol, weightCol.map(_.count(_ >= 0)))
-    }
-    def mkLayout(fg: Array[Int]): WeightLayout = windowCols match {
+    val encsByGroup = observedPairs.map(obs => Array.tabulate(w)(g => obs.filter(_._1 == g).map(_._2).sorted))
+    def mkLayout(fg: Array[Int]): WeightLayout = encsByGroup match {
       case None => WeightLayout.fullProduct(numClasses, w, 0, fg)
-      case Some((weightCol, numCols)) => new WeightLayout(numClasses, w, 0, fg, weightCol, numCols)
+      case Some(encs) => WeightLayout.observed(numClasses, w, 0, fg, encs)
     }
 
     implicit val encEnc: Encoder[(Array[Array[Array[Int]]], Array[Int])] =
@@ -407,8 +426,8 @@ object Trainer {
     val nDocs = docs.count()
     val parts = math.max(1, math.min(sc.defaultParallelism, (nDocs / 50 + 1).toInt))
     val lbfgs = new LBFGS[DenseVector[Double]](
-      maxIter = cfg.maxIterations, m = cfg.lbfgsMemory, tolerance = cfg.tolerance)
-    val sigmaSq = cfg.sigma * cfg.sigma
+      maxIter = cfg.maxIterations, m = LbfgsMemory, tolerance = Tolerance)
+    val sigmaSq = Sigma * Sigma
 
     // train loop with optional prune-retrain rounds (reference loop shape:
     // CRFClassifier.train, :940-946,1102-1105 — each round re-encodes against
@@ -458,25 +477,7 @@ object Trainer {
       val n = layout.totalSize
       val diff = new DiffFunction[DenseVector[Double]] {
         def calculate(x: DenseVector[Double]): (Double, DenseVector[Double]) = {
-          val bw = sc.broadcast(x.data)
-          // locals only: referencing the enclosing DiffFunction's fields from the
-          // task closures would pull this (non-serializable) object into the task
-          val layoutRef = bLayout
-          val partials = encoded.rdd.mapPartitions { it =>
-            val lay = layoutRef.value
-            val p = lay.params(bw.value) // ragged view built once per partition
-            val g = new Array[Double](lay.totalSize)
-            var v = 0.0
-            it.foreach { case (doc, lab) => v += CrfObjective.docValueGrad(doc, lab, p, lay, g) }
-            Iterator.single((v, g))
-          }
-          val (value, grad) = mergeInOrder(partials) { case ((v1, g1), (v2, g2)) =>
-            var i = 0
-            while (i < g1.length) { g1(i) += g2(i); i += 1 }
-            (v1 + v2, g1)
-          }
-          bw.destroy()
-          val g = if (grad == null) new Array[Double](n) else grad
+          val (value, g, _) = gradient(encoded.rdd, bLayout, x.data)
           // quadratic prior
           var v = value
           var i = 0
@@ -492,57 +493,31 @@ object Trainer {
 
       // minibatch SGD (SGD-family analogue): deterministic per-epoch
       // samples, corpus-scaled gradient + prior, 1/(1+epoch/10) gain decay
-      def runSgd(epochs: Int): Array[Double] = {
-          val x = new Array[Double](n)
-          val total = nEncoded.toDouble
-          var epoch = 0
-          while (epoch < epochs) {
-            val bw = sc.broadcast(x)
-            val layoutRef = bLayout
-            val batch = encoded.rdd.sample(withReplacement = false,
-              cfg.sgdBatchFraction, seed = 0x5bdL + epoch)
-            val (gSum, nSeen) = mergeInOrder(batch.mapPartitions { it =>
-              val lay = layoutRef.value
-              val p = lay.params(bw.value)
-              val g = new Array[Double](lay.totalSize)
-              var cnt = 0L
-              it.foreach { case (doc, lab) =>
-                CrfObjective.docValueGrad(doc, lab, p, lay, g); cnt += 1
-              }
-              Iterator.single((g, cnt))
-            })(addCounted)
-            bw.destroy()
-            val scale = if (nSeen == 0) 0.0 else total / nSeen // unbias the sample
-            val gain = cfg.sgdGain / (1.0 + epoch / 10.0) / total
-            var i = 0
-            while (i < n) {
-              x(i) -= gain * (scale * gSum(i) + x(i) / sigmaSq)
-              i += 1
-            }
-            epoch += 1
+      def runSgd(epochs: Int, gain0: Double): Array[Double] = {
+        val x = new Array[Double](n)
+        val total = nEncoded.toDouble
+        var epoch = 0
+        while (epoch < epochs) {
+          val batch = encoded.rdd.sample(withReplacement = false, SgdBatchFraction, seed = 0x5bdL + epoch)
+          val (_, gSum, nSeen) = gradient(batch, bLayout, x)
+          val scale = if (nSeen == 0) 0.0 else total / nSeen // unbias the sample
+          val gain = gain0 / (1.0 + epoch / 10.0) / total
+          var i = 0
+          while (i < n) {
+            x(i) -= gain * (scale * gSum(i) + x(i) / sigmaSq)
+            i += 1
           }
-          x
+          epoch += 1
         }
+        x
+      }
       // per-example-mean gradient (incl. prior) of one deterministic batch:
       // the same seed per epoch gives the SAME batch across repeated
       // evaluations, which is what the secant pair (ScaledSGD) and the
       // finite-difference Hessian-vector product (SMD) both require
       def batchGradAt(at: Array[Double], epoch: Int): Array[Double] = {
-        val bw = sc.broadcast(at)
-        val layoutRef = bLayout
-        val batch = encoded.rdd.sample(withReplacement = false,
-          cfg.sgdBatchFraction, seed = 0x5ca1edL + epoch)
-        val (gSum, nSeen) = mergeInOrder(batch.mapPartitions { it =>
-          val lay = layoutRef.value
-          val p = lay.params(bw.value)
-          val g = new Array[Double](lay.totalSize)
-          var cnt = 0L
-          it.foreach { case (doc, lab) =>
-            CrfObjective.docValueGrad(doc, lab, p, lay, g); cnt += 1
-          }
-          Iterator.single((g, cnt))
-        })(addCounted)
-        bw.destroy()
+        val batch = encoded.rdd.sample(withReplacement = false, SgdBatchFraction, seed = 0x5ca1edL + epoch)
+        val (_, gSum, nSeen) = gradient(batch, bLayout, at)
         val scale = if (nSeen == 0) 0.0 else 1.0 / nSeen // per-example mean
         Array.tabulate(n)(i => scale * gSum(i) + at(i) / (sigmaSq * nEncoded.toDouble))
       }
@@ -553,7 +528,7 @@ object Trainer {
       // pair (s, y) including the prior term, and applies the reference's
       // updateDiagBFGS rule verbatim: newDiag_i = (1 - D_i s_i^2 / sDs) D_i
       // + y_i^2 / sy, accepted only when every entry stays positive.
-      def runScaledSgd(epochs: Int): Array[Double] = {
+      def runScaledSgd(epochs: Int, gain0: Double): Array[Double] = {
         val x = new Array[Double](n)
         val total = nEncoded.toDouble
         val diag = Array.fill(n)(1.0) // reference init: fixedGain/gain
@@ -565,7 +540,7 @@ object Trainer {
         while (epoch < epochs) {
           val g1 = gradAt(x, epoch)
           val decay = math.sqrt(50.0 / (50.0 + epoch)) // gainSchedule analogue
-          val gain = cfg.sgdGain * decay / total
+          val gain = gain0 * decay / total
           val newX = Array.tabulate(n)(i => x(i) - gain / diag(i) * g1(i))
           val g2 = gradAt(newX, epoch)
           val s = Array.tabulate(n)(i => newX(i) - x(i))
@@ -591,10 +566,10 @@ object Trainer {
       //   meta   = 1 - mu * grad_i * v_i ;  gains_i *= max(0.5, meta)
       //   v_i    = lam * v_i - gains_i * (grad_i + lam * Hv_i)
       //   newX_i = x_i - gains_i * grad_i
-      def runSmd(epochs: Int): Array[Double] = {
+      def runSmd(epochs: Int, gain0: Double): Array[Double] = {
         val mu = 0.01; val lam = 1.0; val h = 1e-4
         val x = new Array[Double](n)
-        val gains = Array.fill(n)(cfg.sgdGain)
+        val gains = Array.fill(n)(gain0)
         val v = new Array[Double](n)
         var epoch = 0
         while (epoch < epochs) {
@@ -624,7 +599,7 @@ object Trainer {
       // are truncated to float for every evaluation, so the optimized
       // function IS the single-precision objective; the trained weights are
       // widened at the end exactly like ArrayMath.floatArrayToDoubleArray.
-      val floatDiff = if (!cfg.useFloat) null else new DiffFunction[DenseVector[Double]] {
+      val floatDiff = new DiffFunction[DenseVector[Double]] {
         def calculate(x: DenseVector[Double]): (Double, DenseVector[Double]) = {
           val xf = new Array[Float](n)
           var i = 0
@@ -649,30 +624,26 @@ object Trainer {
             (p1 + p2, e1, h1)
           }
           bw.destroy()
-          val (v, g) = FloatObjective.finish(prob, e, ehat, xf, cfg.sigma.toFloat)
+          val (v, g) = FloatObjective.finish(prob, e, ehat, xf, Sigma.toFloat)
           (v.toDouble, DenseVector(g.map(_.toDouble)))
         }
       }
-      if (cfg.useFloat) require(cfg.optimizer == "qn",
-        "useFloat is a QN-only branch in the reference (CRFClassifier.java:987)")
       val xStar = cfg.optimizer match {
-        case "qn" if cfg.useFloat =>
+        case Optimizer.Qn => lbfgs.minimize(diff, DenseVector.zeros[Double](n)).data
+        case Optimizer.QnFloat =>
           // widen like ArrayMath.floatArrayToDoubleArray after minimize
-          val sol = lbfgs.minimize(floatDiff, DenseVector.zeros[Double](n))
-          DenseVector(sol.data.map(d => d.toFloat.toDouble))
-        case "qn" => lbfgs.minimize(diff, DenseVector.zeros[Double](n))
-        case "sgd" => DenseVector(runSgd(cfg.sgdEpochs))
-        case "scaledsgd" => DenseVector(runScaledSgd(cfg.sgdEpochs))
-        case "smd" => DenseVector(runSmd(cfg.sgdEpochs))
+          lbfgs.minimize(floatDiff, DenseVector.zeros[Double](n)).data.map(d => d.toFloat.toDouble)
+        case Optimizer.Sgd(epochs, gain) => runSgd(epochs, gain)
+        case Optimizer.ScaledSgd(epochs, gain) => runScaledSgd(epochs, gain)
+        case Optimizer.Smd(epochs, gain) => runSmd(epochs, gain)
         // SGDToQNMinimizer (optimization/SGDToQNMinimizer.java, selected by
         // CRFClassifier.getMinimizer under flags.useSGDtoQN): cheap stochastic
         // passes reach the basin, then quasi-Newton polishes from there —
         // same L-BFGS, non-zero start
-        case "sgdtoqn" => lbfgs.minimize(diff, DenseVector(runSgd(cfg.sgdEpochs)))
-        case other => throw new IllegalArgumentException(s"unknown optimizer $other")
+        case Optimizer.SgdToQn(epochs, gain) => lbfgs.minimize(diff, DenseVector(runSgd(epochs, gain))).data
       }
       encoded.unpersist(blocking = true)
-      weights = layout.toRagged(xStar.data)
+      weights = layout.toRagged(xStar)
 
       if (iter != cfg.numTimesPruneFeatures) {
         // dropFeaturesBelowThreshold (CRFClassifier.java:140-166): keep only

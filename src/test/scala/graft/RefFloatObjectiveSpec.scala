@@ -228,7 +228,7 @@ class RefFloatObjectiveSpec extends AnyFunSuite {
     val gold = graft.pipeline.Transcripts.synthGold(spark, nConvs = 250L, seed = 42L)
       .map(g => graft.train.LabeledDoc(g.words, g.labels))
     val model = graft.train.Trainer.train(spark, gold,
-      graft.train.Trainer.Config(maxIterations = 120, useFloat = true))
+      graft.train.Trainer.Config(maxIterations = 120, optimizer = graft.train.Optimizer.QnFloat))
     val heldOut = (1000L until 1100L).flatMap { conv =>
       (0 until graft.pipeline.Transcripts.numTurns(43L, conv))
         .map(t => graft.pipeline.Transcripts.turnTokens(43L, conv, t))

@@ -61,7 +61,7 @@ class FeatureParitySpec extends AnyFunSuite {
     for (f <- 0 until n) { featGroup(perm(f)) = m.layout.featGroup(f); weights(perm(f)) = m.weights(f) }
     val l = m.layout
     new NerModel(m.classIndex, m.backgroundIndex, fi,
-      new WeightLayout(l.numClasses, l.windowSize, l.backgroundIndex, featGroup, l.weightCol, l.numCols),
+      new WeightLayout(l.numClasses, l.windowSize, l.backgroundIndex, featGroup, l.weightCol),
       weights, m.knownLC, m.features)
   }
 

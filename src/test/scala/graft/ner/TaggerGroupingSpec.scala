@@ -6,20 +6,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class TaggerGroupingSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  test("conversation-grouped tagging equals the shuffle-free path") {
-    val model = NerModels.default(spark)
-    val turns = Transcripts.synth(spark, 120L)
-    val flat = Tagger.mentions(turns, model).collect().toSet
-    val grouped = Tagger.mentionsByConversation(turns, model).collect().toSet
-    assert(grouped == flat)
-    assert(flat.nonEmpty)
-    // the grouped plan contains exactly one exchange; the flat plan none
-    val gPlan = Tagger.mentionsByConversation(turns, model).queryExecution.executedPlan.toString
-    val fPlan = Tagger.mentions(turns, model).queryExecution.executedPlan.toString
-    assert(gPlan.contains("Exchange"))
-    assert(!fPlan.contains("Exchange"))
-  }
-
   test("maxDocSize split at the 10k limit; tagLongDoc == concatenated piece tags") {
     // ObjectBankWrapper.fixDocLengths semantics at the REAL default limit:
     // cut after the latest '.' in (maxSize/2, maxSize], else at maxSize

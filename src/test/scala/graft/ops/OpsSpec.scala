@@ -118,6 +118,20 @@ class SimilaritySpec extends AnyFunSuite {
   val sfDir = "/root/testdata/sf0.001"
   lazy val emb = spark.read.parquet(s"$sfDir/embeddings.parquet").cache()
 
+  /** All pairs with cosine >= tau, as a broadcast nested-loop join: the
+    * brute-force reference for `Similarity.cosinePairsBlocked` (it puts one
+    * whole side in driver and executor memory, so it runs at test sizes only).
+    */
+  private def cosinePairs(embeddings: org.apache.spark.sql.DataFrame, tau: Double) = {
+    graft.functions.GraftFunctions.register(embeddings.sparkSession)
+    val l = embeddings.select(col("vec_id").as("vec_id_1"), col("embedding").as("e1"))
+    val r = embeddings.select(col("vec_id").as("vec_id_2"), col("embedding").as("e2"))
+    l.join(broadcast(r), col("vec_id_1") < col("vec_id_2"))
+      .withColumn("sim", round(Similarity.cosine(col("e1"), col("e2")), 6))
+      .where(col("sim") >= tau)
+      .select(col("vec_id_1"), col("vec_id_2"), col("sim"))
+  }
+
   test("brute-force top-k: k rows per query, ranks 1..k, sims descending") {
     val res = Similarity.bruteForceTopK(emb, k = 5, queryMod = 50).cache()
     val q = emb.where(col("vec_id") % 50 === 0).count()
@@ -150,7 +164,7 @@ class SimilaritySpec extends AnyFunSuite {
   }
 
   test("blocked exact pairs == brute-force pairs (rows AND sims), any block count") {
-    val brute = Similarity.cosinePairs(emb, tau = 0.4)
+    val brute = cosinePairs(emb, tau = 0.4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     for (b <- Seq(3, 16)) {
       val blocked = Similarity.cosinePairsBlocked(emb, tau = 0.4, nBlocks = b)

@@ -55,7 +55,7 @@ class TrainerPruneSpec extends AnyFunSuite {
 
   test("minibatch SGD optimizer converges to a usable model (SGD-family analogue)") {
     val m = Trainer.train(spark, goldDocs(150),
-      Trainer.Config(optimizer = "sgd", sgdEpochs = 80))
+      Trainer.Config(optimizer = Optimizer.Sgd(80)))
     var ok = 0L; var total = 0L
     for (conv <- 5000L until 5100L; t <- 0 until Transcripts.numTurns(21L, conv)
          if !Transcripts.isToolTurn(21L, conv, t)) {
@@ -66,17 +66,21 @@ class TrainerPruneSpec extends AnyFunSuite {
     val acc = ok.toDouble / total
     info(f"SGD held-out token accuracy = $acc%.4f over $total tokens")
     assert(acc >= 0.93, s"acc $acc")
-    // deterministic: seeded samples -> identical weights
-    val m2 = Trainer.train(spark, goldDocs(150),
-      Trainer.Config(optimizer = "sgd", sgdEpochs = 80))
+    assertRetrainsIdentically(m, Trainer.Config(optimizer = Optimizer.Sgd(80)))
+  }
+
+  /** Seeded samples merged in partition order: training `cfg` again gives
+    * `m`'s weights bit for bit. */
+  private def assertRetrainsIdentically(m: graft.ner.NerModel, cfg: Trainer.Config): Unit = {
+    val m2 = Trainer.train(spark, goldDocs(150), cfg)
     assert((0 until m.numFeatures).forall(f => java.util.Arrays.equals(m.weights(f), m2.weights(f))))
   }
 
   test("SGDToQN optimizer: stochastic warmup + quasi-Newton polish reaches QN-level accuracy") {
     // SGDToQNMinimizer semantics: SGD passes reach the basin, then L-BFGS
     // finishes from the SGD point with a small iteration budget
-    val m = Trainer.train(spark, goldDocs(150),
-      Trainer.Config(optimizer = "sgdtoqn", sgdEpochs = 20, maxIterations = 25))
+    val cfg = Trainer.Config(optimizer = Optimizer.SgdToQn(20), maxIterations = 25)
+    val m = Trainer.train(spark, goldDocs(150), cfg)
     var ok = 0L; var total = 0L
     for (conv <- 5000L until 5100L; t <- 0 until Transcripts.numTurns(21L, conv)
          if !Transcripts.isToolTurn(21L, conv, t)) {
@@ -87,14 +91,12 @@ class TrainerPruneSpec extends AnyFunSuite {
     val acc = ok.toDouble / total
     info(f"SGDToQN held-out token accuracy = $acc%.4f over $total tokens (20 sgd + 25 qn iters)")
     assert(acc >= 0.97, s"acc $acc")
-    intercept[IllegalArgumentException] {
-      Trainer.train(spark, goldDocs(5), Trainer.Config(optimizer = "bogus"))
-    }
+    assertRetrainsIdentically(m, cfg)
   }
 
   test("ScaledSGD optimizer: diag-BFGS per-coordinate gains converge to a usable model") {
-    val m = Trainer.train(spark, goldDocs(150),
-      Trainer.Config(optimizer = "scaledsgd", sgdEpochs = 60))
+    val cfg = Trainer.Config(optimizer = Optimizer.ScaledSgd(60))
+    val m = Trainer.train(spark, goldDocs(150), cfg)
     var ok = 0L; var total = 0L
     for (conv <- 5000L until 5100L; t <- 0 until Transcripts.numTurns(21L, conv)
          if !Transcripts.isToolTurn(21L, conv, t)) {
@@ -105,11 +107,12 @@ class TrainerPruneSpec extends AnyFunSuite {
     val acc = ok.toDouble / total
     info(f"ScaledSGD held-out token accuracy = $acc%.4f over $total tokens")
     assert(acc >= 0.93, s"acc $acc")
+    assertRetrainsIdentically(m, cfg)
   }
 
   test("SMD optimizer: meta-descent with finite-difference H.v converges") {
-    val m = Trainer.train(spark, goldDocs(150),
-      Trainer.Config(optimizer = "smd", sgdEpochs = 60, sgdGain = 0.3))
+    val cfg = Trainer.Config(optimizer = Optimizer.Smd(60, 0.3))
+    val m = Trainer.train(spark, goldDocs(150), cfg)
     var ok = 0L; var total = 0L
     for (conv <- 5000L until 5100L; t <- 0 until Transcripts.numTurns(21L, conv)
          if !Transcripts.isToolTurn(21L, conv, t)) {
@@ -120,6 +123,7 @@ class TrainerPruneSpec extends AnyFunSuite {
     val acc = ok.toDouble / total
     info(f"SMD held-out token accuracy = $acc%.4f over $total tokens")
     assert(acc >= 0.93, s"acc $acc")
+    assertRetrainsIdentically(m, cfg)
   }
 
   test("prune-retrain loop drops low-range features and keeps accuracy") {
